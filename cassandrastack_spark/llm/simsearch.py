@@ -28,7 +28,10 @@ Three tiers, per the task's scale ladder:
   scale path beyond int8: each vector compresses to ``m_sub`` one-byte
   codes (dim x 4 bytes → m_sub bytes), the shortlist pass scans only
   codes, and the exact float vectors are touched for the shortlist
-  rows alone. See ``ann_pq_topk``.
+  rows alone. ``ann_pq_topk``, ``ann_ivf_pq_topk`` and
+  ``probe_ivfpq_index`` differ only in how candidate pairs are found;
+  all three elect, collapse and re-rank the per-query shortlist in
+  ``_shortlist_rerank``.
 """
 
 from __future__ import annotations
@@ -49,6 +52,49 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
         _widen(df)
         .withColumn("vec", as_double)
         .withColumn("norm", F.expr("sqrt(" + DOT.format(a="vec", b="vec") + ")"))
+    )
+
+
+def _normed_vecs(
+    df: DataFrame, id_col: str, vec_col: str,
+    out_id: str, out_vec: str, out_norm: str,
+) -> DataFrame:
+    """(out_id, out_vec, out_norm): ids, double vectors and their L2
+    norms — the shared projection of the dot/norms cosine paths."""
+    return with_norm(df.select(id_col, vec_col), vec_col).select(
+        F.col(id_col).alias(out_id),
+        F.col("vec").alias(out_vec),
+        F.col("norm").alias(out_norm),
+    )
+
+
+def _unit_vecs(
+    df: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: str
+) -> DataFrame:
+    """(out_id, out_vec): ids + unit-normalized double vectors — the
+    shared normalize step of the PQ family (zero vectors pass through
+    unnormalized; cosine of a zero vector is 0 either way)."""
+    unit = "transform(vec, x -> CASE WHEN norm > 0 THEN x / norm ELSE x END)"
+    return with_norm(df.select(id_col, vec_col), vec_col).select(
+        F.col(id_col).alias(out_id), F.expr(unit).alias(out_vec)
+    )
+
+
+def _topk(
+    scored: DataFrame,
+    score_col: str,
+    k: int,
+    cols=("query_id", "neighbor_id", "rank"),
+) -> DataFrame:
+    """Per-query top-``k`` by ``score_col`` descending, ties broken
+    toward the smaller neighbor_id: adds ``rank`` and keeps ``cols``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score_col), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*cols)
     )
 
 
@@ -82,27 +128,14 @@ def cosine_topk(
             f"side and scores corpus x queries pairs; use an ANN variant "
             f"(or raise the cap explicitly) for large query sets"
         )
-    corpus = with_norm(df.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("vec").alias("c_vec"),
-        F.col("norm").alias("c_norm"),
-    )
-    q = with_norm(queries.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("q_vec"),
-        F.col("norm").alias("q_norm"),
-    )
+    corpus = _normed_vecs(df, id_col, vec_col, "neighbor_id", "c_vec", "c_norm")
+    q = _normed_vecs(queries, id_col, vec_col, "query_id", "q_vec", "q_norm")
     pairs = corpus.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
     scored = pairs.withColumn(
         "cosine",
         F.expr(DOT.format(a="q_vec", b="c_vec")) / (F.col("q_norm") * F.col("c_norm")),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _topk(scored, "cosine", k, ["query_id", "neighbor_id", "cosine", "rank"])
 
 
 def quantize_int8(
@@ -178,14 +211,7 @@ def ann_quantized_topk(
     scored = pairs.withColumn(
         "qscore", F.expr(idot) * F.col("c_s") * F.col("q_s")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("qscore"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(scored, "qscore", k)
 
 
 def cosine_pairs_above(
@@ -261,9 +287,7 @@ def cosine_pairs_above(
         raise ValueError(
             f"centroids= only applies to method='cluster', got {method!r}"
         )
-    v = with_norm(df.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("id"), "vec", "norm"
-    )
+    v = _normed_vecs(df, id_col, vec_col, "id", "vec", "norm")
     if method == "lsh":
         planes, tables = _lsh_params(threshold, target_recall)
         b = lsh_buckets(v, "vec", planes, tables).select("id", "t", "bucket")
@@ -514,16 +538,8 @@ def ann_lsh_topk(
     ANN analogue of the reference's single-partition read
     (``server.py:98``).
     """
-    c_normed = with_norm(df.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("vec").alias("c_vec"),
-        F.col("norm").alias("c_norm"),
-    )
-    q_normed = with_norm(queries.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("q_vec"),
-        F.col("norm").alias("q_norm"),
-    )
+    c_normed = _normed_vecs(df, id_col, vec_col, "neighbor_id", "c_vec", "c_norm")
+    q_normed = _normed_vecs(queries, id_col, vec_col, "query_id", "q_vec", "q_norm")
     corpus_b = lsh_buckets(c_normed, "c_vec", planes, tables, dim).select(
         "neighbor_id", "t", "bucket"
     )
@@ -537,22 +553,15 @@ def ann_lsh_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    c_side = c_normed
-    q_side = q_normed
     scored = (
-        cand.join(c_side, "neighbor_id")
-        .join(F.broadcast(q_side), "query_id")
+        cand.join(c_normed, "neighbor_id")
+        .join(F.broadcast(q_normed), "query_id")
         .withColumn(
             "cosine",
             F.expr(DOT.format(a="q_vec", b="c_vec")) / (F.col("q_norm") * F.col("c_norm")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(scored, "cosine", k)
 
 
 # ---------------------------------------------------------------------------
@@ -567,6 +576,7 @@ def _training_sample(
     id_col: str = "id",
     probe: DataFrame | None = None,
     probe_cap: int = 0,
+    probe_owner: str = "",
 ):
     """ONE distributed job: the deterministic training sample (the
     ``sample`` rows with the smallest ``xxhash64(id)`` — a seedless
@@ -576,45 +586,53 @@ def _training_sample(
     identical ones. Fails loud on an empty corpus (an AxisError deep
     in numpy helps nobody). Zero vectors normalize under norm 1.
 
-    ``probe``: optional second frame whose row count (capped at
-    ``probe_cap + 1`` — the max_query_rows guard only needs to know
-    "over or under") rides the SAME action as a tagged union leg, so
-    a composite builder's guard count and sample draw cost one job
-    instead of two. With ``probe`` set the return becomes
-    ``(matrix_or_None, n_probe)`` and the empty-corpus failure is the
-    CALLER's to raise (``None`` matrix) — the caller owns the error
-    ORDER (cap violation first, then empty corpus, matching the
-    unfused sequence the contract tests pin)."""
+    Row order is fixed on the driver: each sampled vector ships with
+    its ``(xxhash64(id), id)`` draw key and the collected rows are
+    sorted by it, so the matrix (and the k-means seeded from its first
+    rows) never depends on the partition order of the collected frame.
+
+    ``probe``: optional query frame of ``probe_owner`` whose row count
+    (capped at ``probe_cap + 1`` — the max_query_rows guard only needs
+    to know "over or under") rides the SAME action as a tagged union
+    leg, so a composite builder's guard count and sample draw cost one
+    job instead of two. A count over ``probe_cap`` raises before the
+    empty-corpus check, matching the unfused sequence the contract
+    tests pin."""
     import numpy as np
 
+    h = F.xxhash64(F.col(id_col).cast("string"))
     samp = (
-        corpus.orderBy(F.xxhash64(F.col(id_col).cast("string")), F.col(id_col))
+        corpus.orderBy(h, F.col(id_col))
         .limit(sample)
-        .select(F.expr(f"transform({vec_col}, x -> cast(x AS double))").alias("v"))
+        .select(
+            F.lit(0).alias("_leg"),
+            h.alias("h"),
+            F.col(id_col).alias("id"),
+            F.expr(f"transform({vec_col}, x -> cast(x AS double))").alias("v"),
+        )
     )
     if probe is not None:
-        tagged = samp.select(F.lit(0).alias("_leg"), "v").unionByName(
+        samp = samp.unionByName(
             probe.limit(probe_cap + 1).select(
                 F.lit(1).alias("_leg"),
-                F.lit(None).cast(samp.schema["v"].dataType).alias("v"),
+                *(F.lit(None).cast(f.dataType).alias(f.name)
+                  for f in samp.schema.fields[1:]),
             )
         )
-        rows = tagged.collect()
-        n_probe = sum(1 for r in rows if r._leg == 1)
-        vecs = [r.v for r in rows if r._leg == 0]
-        if not vecs:
-            return None, n_probe
-        X = np.asarray(vecs, dtype=np.float64)
-        norms = np.linalg.norm(X, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        return X / norms, n_probe
     rows = samp.collect()
-    if not rows:
+    if sum(r._leg for r in rows) > probe_cap:
+        raise ValueError(
+            f"{probe_owner} query side exceeds max_query_rows={probe_cap}; "
+            f"bucket (IVF/LSH) or batch the queries, or raise the cap "
+            f"explicitly"
+        )
+    drawn = sorted((r for r in rows if r._leg == 0), key=lambda r: (r.h, r.id))
+    if not drawn:
         raise ValueError(
             "ANN training needs a non-empty corpus sample; the corpus "
             "has no rows"
         )
-    X = np.asarray([r.v for r in rows], dtype=np.float64)
+    X = np.asarray([r.v for r in drawn], dtype=np.float64)
     norms = np.linalg.norm(X, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return X / norms
@@ -740,6 +758,37 @@ def ivf_assign(
     return df.withColumn("cid", _assign(F.col(vec_col)))
 
 
+def _elect_probes(
+    q_normed: DataFrame, centroids: list, nprobe: int, q_vec: str = "q_unit"
+) -> DataFrame:
+    """Explode each query row into its ``nprobe`` best centroid lists:
+    the frame's columns plus ``cid``, elected on ``q_vec``.
+    Deterministic — centroids score as a literal array (bounded K x
+    dim), ties break on the lower list index via the (-sim, i) struct
+    sort."""
+    cent_arr = (
+        "array(" + ", ".join(
+            "array(" + ", ".join(f"{x!r}D" for x in c) + ")" for c in centroids
+        ) + ")"
+    )
+    sims = f"transform({cent_arr}, c -> " + DOT.format(a="c", b=q_vec) + ")"
+    return (
+        q_normed.withColumn("sims", F.expr(sims))
+        .withColumn(
+            "probe",
+            F.explode(
+                F.expr(
+                    f"slice(array_sort(transform(sims, (s, i) -> "
+                    f"struct(-s AS negs, i AS i))), 1, {nprobe})"
+                )
+            ),
+        )
+        .select(
+            *q_normed.columns, F.col("probe.i").cast("int").alias("cid")
+        )
+    )
+
+
 def ann_ivf_topk(
     df: DataFrame,
     queries: DataFrame,
@@ -757,53 +806,22 @@ def ann_ivf_topk(
     side is partition-pruned to nprobe of k_centroids lists, the IVF
     analogue of the reference's single-partition read (``server.py:98``).
     """
-    c_normed = with_norm(df.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("vec").alias("c_vec"),
-        F.col("norm").alias("c_norm"),
-    )
-    q_normed = with_norm(queries.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("q_vec"),
-        F.col("norm").alias("q_norm"),
-    )
+    c_normed = _normed_vecs(df, id_col, vec_col, "neighbor_id", "c_vec", "c_norm")
+    q_normed = _normed_vecs(queries, id_col, vec_col, "query_id", "q_vec", "q_norm")
     centroids = ivf_train_centroids(
         c_normed.select(F.col("neighbor_id").alias("id"), F.col("c_vec").alias("vec")),
         k_centroids=k_centroids,
         iters=iters,
     )
     corpus_l = ivf_assign(c_normed, centroids, "c_vec")
-    # queries probe their nprobe best lists: explode (cid, rank<=nprobe)
-    cent_arr = (
-        "array(" + ", ".join(
-            "array(" + ", ".join(f"{x!r}D" for x in c) + ")" for c in centroids
-        ) + ")"
-    )
-    sims = f"transform({cent_arr}, c -> " + DOT.format(a="c", b="q_vec") + ")"
-    probes = (
-        q_normed.withColumn("sims", F.expr(sims))
-        .withColumn(
-            "cid",
-            F.explode(
-                F.expr(
-                    f"slice(array_sort(transform(sims, (s, i) -> struct(-s AS negs, i AS i))), 1, {nprobe})"
-                )
-            ),
-        )
-        .select("query_id", "q_vec", "q_norm", F.col("cid.i").cast("int").alias("cid"))
-    )
+    probes = _elect_probes(q_normed, centroids, nprobe, "q_vec")
     scored = corpus_l.join(F.broadcast(probes), "cid").filter(
         F.col("neighbor_id") != F.col("query_id")
     ).withColumn(
         "cosine",
         F.expr(DOT.format(a="q_vec", b="c_vec")) / (F.col("q_norm") * F.col("c_norm")),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(scored, "cosine", k)
 
 
 # ---------------------------------------------------------------------------
@@ -1129,42 +1147,25 @@ def ann_pq_topk(
     vector (``pq_decode``: literal JVM gather at small codebooks, Arrow
     gather above ``PQ_LITERAL_MAX_DOUBLES`` — no K-proportional plan
     bloat at production sizes), then the shared DOT fold against the
-    broadcast query side. Re-rank joins
-    the float vectors back on the shortlist ids (equi-join, AQE-sized)
-    and re-scores exactly, which restores the ranking quality the
-    lossy codes gave up.
+    broadcast query side. Re-rank (``_shortlist_rerank``) joins the
+    float vectors back on the shortlist ids (equi-join, AQE-sized) and
+    re-scores exactly, which restores the ranking quality the lossy
+    codes gave up.
 
     Deterministic end-to-end (sample draw, Lloyd order, fold order) —
     same recall-invariant oracle pattern as IVF/LSH.
     """
-    c_normed = with_norm(df.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.expr("transform(vec, x -> CASE WHEN norm > 0 THEN x / norm ELSE x END)").alias("c_unit"),
-    )
-    q_normed = with_norm(queries.select(id_col, vec_col), vec_col).select(
-        F.col("vec_id").alias("query_id") if id_col == "vec_id" else F.col(id_col).alias("query_id"),
-        F.expr("transform(vec, x -> CASE WHEN norm > 0 THEN x / norm ELSE x END)").alias("q_unit"),
-    )
+    c_normed = _unit_vecs(df, id_col, vec_col, "neighbor_id", "c_unit")
+    q_normed = _unit_vecs(queries, id_col, vec_col, "query_id", "q_unit")
     train = c_normed.select(
         F.col("neighbor_id").alias("id"), F.col("c_unit").alias("vec")
     )
     # guard count + training-sample draw fused into ONE construction
-    # job (the _training_sample probe leg); error order preserved —
-    # cap violation raises before the empty-corpus check
-    sample_x, n_q = _training_sample(
-        train, probe=queries, probe_cap=max_query_rows
+    # job (the _training_sample probe leg)
+    sample_x = _training_sample(
+        train, probe=queries, probe_cap=max_query_rows,
+        probe_owner="ann_pq_topk",
     )
-    if n_q > max_query_rows:
-        raise ValueError(
-            f"ann_pq_topk query side exceeds max_query_rows="
-            f"{max_query_rows}; bucket the queries (IVF/LSH) or raise "
-            f"the cap explicitly"
-        )
-    if sample_x is None:
-        raise ValueError(
-            "ANN training needs a non-empty corpus sample; the corpus "
-            "has no rows"
-        )
     books = pq_train_codebooks(
         train,
         m_sub=m_sub,
@@ -1187,30 +1188,67 @@ def ann_pq_topk(
     )
     pairs = decoded.join(
         F.broadcast(q_normed), F.col("neighbor_id") != F.col("query_id")
-    ).withColumn("adc", F.expr(DOT.format(a="q_unit", b="r_vec")))
-    w_s = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    # ids-only through the shortlist exchange (guide §2.3: shuffle
-    # keys, not payloads): carrying q_unit (dim doubles) per CANDIDATE
-    # row multiplied the exchange bytes by the vector width; the query
-    # vectors re-attach after the window from the bounded broadcast
-    # side instead — shipped once per query, not once per candidate
-    short = (
-        pairs.withColumn("srank", F.row_number().over(w_s))
-        .filter(F.col("srank") <= shortlist)
-        .select("query_id", "neighbor_id")
     )
-    # exact re-rank: floats fetched for shortlist ids only
-    rerank = (
-        short.join(c_normed, "neighbor_id")
-        .join(F.broadcast(q_normed), "query_id")
-        .withColumn("cosine", F.expr(DOT.format(a="q_unit", b="c_unit")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        rerank.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _shortlist_rerank(pairs, c_normed, shortlist, k)
+
+
+def _shortlist_rerank(
+    pairs: DataFrame,
+    c_floats: DataFrame,
+    shortlist: int,
+    k: int,
+    on_missing_corpus: str | None = None,
+    cols=("query_id", "neighbor_id", "rank"),
+) -> DataFrame:
+    """The PQ family's filter-then-refine tail: ADC-score ``pairs``
+    (query_id, neighbor_id, q_unit, r_vec — r_vec the PQ
+    reconstruction), keep each query's top ``shortlist``, collapse
+    replayed ids, fetch exact unit floats from ``c_floats``
+    (neighbor_id, c_unit) and return the exact top ``k`` as ``cols``
+    (which may include ``cosine``).
+
+    ``q_unit`` rides the shortlist window from the one query frame the
+    ADC scored, so ranking and re-rank can never read two evaluations
+    of a nondeterministic query input, and the plan joins the query
+    side once.
+
+    An id coded more than once (an index extend replayed after a
+    crash, or a direct caller re-extending an id) yields duplicate
+    pairs; without the collapse the duplicate would surface as TWO
+    result rows for one neighbor. It is bounded by queries x
+    ``shortlist`` rows, so it is cheap; duplicates may still consume
+    shortlist slots (a recall nibble, never a wrong score — the
+    re-rank fetches the current floats by id).
+
+    ``on_missing_corpus``: None when ``c_floats`` is the frame that
+    was coded (every id has floats); otherwise ``c_floats`` is a
+    caller's corpus that must cover every indexed id, and a
+    shortlisted id without floats raises in-plan ("raise") or is
+    dropped ("skip") — see ``probe_ivfpq_index``."""
+    short = _topk(
+        pairs.withColumn("adc", F.expr(DOT.format(a="q_unit", b="r_vec"))),
+        "adc", shortlist, ["query_id", "neighbor_id", "q_unit"],
+    ).dropDuplicates(["query_id", "neighbor_id"])
+    how = "left" if on_missing_corpus == "raise" else "inner"
+    joined = short.join(c_floats, "neighbor_id", how)
+    if on_missing_corpus == "skip":
+        joined = joined.filter(F.col("c_unit").isNotNull())
+    cosine = F.expr(DOT.format(a="q_unit", b="c_unit"))
+    if on_missing_corpus == "raise":
+        cosine = F.when(
+            F.assert_true(
+                F.col("c_unit").isNotNull(),
+                F.concat(
+                    F.lit(
+                        "probe_ivfpq_index: indexed id absent from the "
+                        "supplied corpus (floats missing for re-rank): "
+                    ),
+                    F.col("neighbor_id").cast("string"),
+                ),
+            ).isNull(),
+            cosine,
+        )
+    return _topk(joined.withColumn("cosine", cosine), "cosine", k, cols)
 
 
 def mmr_rerank(
@@ -1335,48 +1373,6 @@ def mmr_rerank(
     return g.groupBy("query_id").applyInPandas(fn, out_schema)
 
 
-def _unit_vecs(
-    df: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: str
-) -> DataFrame:
-    """(out_id, out_vec): ids + unit-normalized double vectors — the
-    shared normalize step of the IVF+PQ family (zero vectors pass
-    through unnormalized; cosine of a zero vector is 0 either way)."""
-    unit = "transform(vec, x -> CASE WHEN norm > 0 THEN x / norm ELSE x END)"
-    return with_norm(df.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias(out_id), F.expr(unit).alias(out_vec)
-    )
-
-
-def _elect_probes(
-    q_normed: DataFrame, centroids: list, nprobe: int, q_vec: str = "q_unit"
-) -> DataFrame:
-    """Explode each query row into its ``nprobe`` best centroid lists:
-    (query_id, <q_vec>, cid). Deterministic — centroids score as a
-    literal array (bounded K x dim), ties break on the lower list
-    index via the (-sim, i) struct sort."""
-    cent_arr = (
-        "array(" + ", ".join(
-            "array(" + ", ".join(f"{x!r}D" for x in c) + ")" for c in centroids
-        ) + ")"
-    )
-    sims = f"transform({cent_arr}, c -> " + DOT.format(a="c", b=q_vec) + ")"
-    return (
-        q_normed.withColumn("sims", F.expr(sims))
-        .withColumn(
-            "probe",
-            F.explode(
-                F.expr(
-                    f"slice(array_sort(transform(sims, (s, i) -> "
-                    f"struct(-s AS negs, i AS i))), 1, {nprobe})"
-                )
-            ),
-        )
-        .select(
-            "query_id", q_vec, F.col("probe.i").cast("int").alias("cid")
-        )
-    )
-
-
 def ann_ivf_pq_topk(
     df: DataFrame,
     queries: DataFrame,
@@ -1420,22 +1416,11 @@ def ann_ivf_pq_topk(
     # one sampling scan feeds both trainers (they draw the identical
     # deterministic sample; collecting it twice doubled the training
     # I/O), and the max_query_rows guard count rides the SAME job as a
-    # tagged union leg — one construction action where there were two;
-    # error order preserved (cap first, then empty corpus)
-    sample_x, n_q = _training_sample(
-        train, probe=queries, probe_cap=max_query_rows
+    # tagged union leg — one construction action where there were two
+    sample_x = _training_sample(
+        train, probe=queries, probe_cap=max_query_rows,
+        probe_owner="ann_ivf_pq_topk",
     )
-    if n_q > max_query_rows:
-        raise ValueError(
-            f"ann_ivf_pq_topk query side exceeds max_query_rows="
-            f"{max_query_rows}; raise the cap explicitly or batch the "
-            f"queries"
-        )
-    if sample_x is None:
-        raise ValueError(
-            "ANN training needs a non-empty corpus sample; the corpus "
-            "has no rows"
-        )
     centroids = ivf_train_centroids(
         train, k_centroids=k_centroids, iters=iters, sample_matrix=sample_x
     )
@@ -1465,35 +1450,10 @@ def ann_ivf_pq_topk(
     # queries elect their nprobe best lists (q_unit is already unit so
     # dot = cosine)
     probes = _elect_probes(q_normed, centroids, nprobe)
-    pairs = (
-        decoded.join(F.broadcast(probes), "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("adc", F.expr(DOT.format(a="q_unit", b="r_vec")))
+    pairs = decoded.join(F.broadcast(probes), "cid").filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    w_s = Window.partitionBy("query_id").orderBy(
-        F.desc("adc"), F.asc("neighbor_id")
-    )
-    # ids-only through the shortlist exchange (guide §2.3): q_unit
-    # re-attaches from the bounded broadcast query side after the
-    # window — once per query, not once per candidate row
-    short = (
-        pairs.withColumn("srank", F.row_number().over(w_s))
-        .filter(F.col("srank") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    rerank = (
-        short.join(c_normed, "neighbor_id")
-        .join(F.broadcast(q_normed), "query_id")
-        .withColumn("cosine", F.expr(DOT.format(a="q_unit", b="c_unit")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        rerank.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _shortlist_rerank(pairs, c_normed, shortlist, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1521,11 +1481,7 @@ def build_ivf_index(
     analogue of the reference's single-partition read (server.py:98).
     Rebuild cadence is a data-drift decision, like any index.
     """
-    c = with_norm(corpus.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("vec").alias("c_vec"),
-        F.col("norm").alias("c_norm"),
-    )
+    c = _normed_vecs(corpus, id_col, vec_col, "neighbor_id", "c_vec", "c_norm")
     centroids = ivf_train_centroids(
         c.select(F.col("neighbor_id").alias("id"), F.col("c_vec").alias("vec")),
         k_centroids=k_centroids,
@@ -1563,32 +1519,12 @@ def probe_ivf_index(
         spark.read.parquet(path + "/_centroids").head().centroids
     )
     centroids = [list(c) for c in centroids]
-    q_normed = with_norm(queries.select(id_col, vec_col), vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("vec").alias("q_vec"),
-        F.col("norm").alias("q_norm"),
-    )
-    cent_arr = (
-        "array(" + ", ".join(
-            "array(" + ", ".join(f"{x!r}D" for x in c) + ")" for c in centroids
-        ) + ")"
-    )
-    sims = f"transform({cent_arr}, c -> " + DOT.format(a="c", b="q_vec") + ")"
-    probes = (
-        q_normed.withColumn("sims", F.expr(sims))
-        .withColumn(
-            "cid",
-            F.explode(
-                F.expr(
-                    f"slice(array_sort(transform(sims, (s, i) -> struct(-s AS negs, i AS i))), 1, {nprobe})"
-                )
-            ),
-        )
-        .select("query_id", "q_vec", "q_norm", F.col("cid.i").cast("int").alias("cid"))
-        # materialized once: the partition-prune list and the broadcast
-        # join side must come from the SAME evaluation (see
-        # probe_ivfpq_index for the failure mode this prevents)
-        .localCheckpoint(eager=True)
+    q_normed = _normed_vecs(queries, id_col, vec_col, "query_id", "q_vec", "q_norm")
+    # materialized once: the partition-prune list and the broadcast
+    # join side must come from the SAME evaluation (see
+    # probe_ivfpq_index for the failure mode this prevents)
+    probes = _elect_probes(q_normed, centroids, nprobe, "q_vec").localCheckpoint(
+        eager=True
     )
     probed_cids = sorted({r.cid for r in probes.select("cid").distinct().collect()})
     corpus_l = spark.read.parquet(path).filter(F.col("cid").isin(probed_cids))
@@ -1598,12 +1534,7 @@ def probe_ivf_index(
         "cosine",
         F.expr(DOT.format(a="q_vec", b="c_vec")) / (F.col("q_norm") * F.col("c_norm")),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(scored, "cosine", k)
 
 
 def build_ivfpq_index(
@@ -1882,81 +1813,12 @@ def probe_ivfpq_index(
         pairs = pairs.join(
             per_query_allowed, ["query_id", "neighbor_id"], "semi"
         )
-    pairs = pairs.withColumn(
-        "adc", F.expr(DOT.format(a="q_unit", b="r_vec"))
-    )
-    w_s = Window.partitionBy("query_id").orderBy(
-        F.desc("adc"), F.asc("neighbor_id")
-    )
-    # ids-only through the shortlist exchange (guide §2.3): dropping
-    # q_unit here also turns the replay-dedup below into a keys-only
-    # aggregate (the array payload forced a sort-based first()); the
-    # query vectors re-attach after the corpus join from the
-    # CHECKPOINTED probes frame — the same materialized rows the
-    # election read, so a nondeterministic `queries` input still
-    # cannot disagree with itself (the documented probes contract)
-    short = (
-        pairs.withColumn("srank", F.row_number().over(w_s))
-        .filter(F.col("srank") <= shortlist)
-        .select("query_id", "neighbor_id")
-        # an id indexed more than once (the extend->marker crash
-        # window replaying an extend, or a direct caller re-extending
-        # an id) yields duplicate code rows; without this collapse the
-        # duplicate would ride into the re-rank and surface as TWO
-        # result rows for one neighbor. Shortlist-bounded, so the
-        # dedup is cheap; duplicates may still consume shortlist
-        # slots (a recall nibble proportional to the duplication
-        # factor, never a correctness issue). Same-id re-extends with
-        # CHANGED vectors also resolve correctly downstream: the
-        # re-rank fetches floats from the CORPUS by id, so the
-        # current vector is the truth no matter which code row won.
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
     c_floats = _unit_vecs(corpus, id_col, vec_col, "neighbor_id", "c_unit")
-    # every probes row of a query carries the identical materialized
-    # q_unit, so first() is deterministic here
-    q_attach = F.broadcast(
-        probes.groupBy("query_id").agg(F.first("q_unit").alias("q_unit"))
-    )
-    # `corpus` must cover every indexed id (the index stores codes
-    # only; floats are fetched here). A left join + in-plan assertion
-    # fails LOUD when a shortlisted indexed id is absent from the
-    # float source (index built from a superset, or floats not yet
-    # landed) instead of silently shrinking results below k.
-    joined = short.join(c_floats, "neighbor_id", "left").join(
-        q_attach, "query_id"
-    )
-    if on_missing_corpus == "skip":
-        rerank = joined.filter(F.col("c_unit").isNotNull()).withColumn(
-            "cosine", F.expr(DOT.format(a="q_unit", b="c_unit"))
-        )
-    else:
-        rerank = joined.withColumn(
-            "cosine",
-            F.when(
-                F.assert_true(
-                    F.col("c_unit").isNotNull(),
-                    F.concat(
-                        F.lit(
-                            "probe_ivfpq_index: indexed id absent from the "
-                            "supplied corpus (floats missing for re-rank): "
-                        ),
-                        F.col("neighbor_id").cast("string"),
-                    ),
-                ).isNull(),
-                F.expr(DOT.format(a="q_unit", b="c_unit")),
-            ),
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
     cols = ["query_id", "neighbor_id", "rank"] + (
         ["cosine"] if include_score else []
     )
-    return (
-        rerank.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*cols)
+    return _shortlist_rerank(
+        pairs, c_floats, shortlist, k, on_missing_corpus, cols
     )
 
 
@@ -2070,26 +1932,14 @@ def max_cosine_vs_refs(
     # Spark's NaN ordering), matching histogram_fixed's and the sample
     # builders' non-finite discipline. A dropped corpus row simply
     # gets no verdict; callers needing the list anti-join the output.
-    _finite_dir = (F.col("norm") > 0) & (
-        F.col("norm") < F.lit(float("inf"))
+    def _finite_dir(v: DataFrame, norm: str) -> DataFrame:
+        return v.filter((F.col(norm) > 0) & (F.col(norm) < F.lit(float("inf"))))
+
+    corpus = _finite_dir(
+        _normed_vecs(df, id_col, vec_col, "_cid", "c_vec", "c_norm"), "c_norm"
     )
-    corpus = (
-        with_norm(df.select(id_col, vec_col), vec_col)
-        .filter(_finite_dir)
-        .select(
-            F.col(id_col).alias("_cid"),
-            F.col("vec").alias("c_vec"),
-            F.col("norm").alias("c_norm"),
-        )
-    )
-    r = (
-        with_norm(refs.select(id_col, vec_col), vec_col)
-        .filter(_finite_dir)
-        .select(
-            F.col(id_col).alias("_rid"),
-            F.col("vec").alias("r_vec"),
-            F.col("norm").alias("r_norm"),
-        )
+    r = _finite_dir(
+        _normed_vecs(refs, id_col, vec_col, "_rid", "r_vec", "r_norm"), "r_norm"
     )
     cos = F.expr(DOT.format(a="c_vec", b="r_vec")) / (
         F.col("c_norm") * F.col("r_norm")

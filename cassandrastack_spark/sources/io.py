@@ -145,11 +145,16 @@ def checkpoint_if_small(df: DataFrame) -> DataFrame:
     any executor loss. Gate: local ``file:`` inputs are stat-ed and
     summed; unknown sizes (remote URIs, stat failures, non-file plans)
     conservatively count as LARGE → no checkpoint (the caller's plan
-    must already be recompute-tolerant).
+    must already be recompute-tolerant). An empty ``inputFiles()`` is
+    unknown too, not zero: local relations, RDD or JDBC sources, and
+    plans whose scans a cached frame replaced all list no files.
     """
     total = 0
     try:
-        for u in df.inputFiles():
+        files = df.inputFiles()
+        if not files:
+            return df
+        for u in files:
             if not u.startswith("file:"):
                 return df
             total += os.stat(unquote(urlparse(u).path)).st_size

@@ -32,6 +32,22 @@ from cassandrastack_spark import schemas
 SF = "/root/testdata/sf0.001"
 
 
+def _frame_reads(df, frame) -> int:
+    """How many times ``df``'s optimized plan reads ``frame``, a
+    ``createDataFrame`` frame (one RDD-backed leaf)."""
+
+    def rdd_ids(d):
+        leaves = d._jdf.queryExecution().optimizedPlan().collectLeaves()
+        return [
+            leaves.apply(i).rdd().id()
+            for i in range(leaves.size())
+            if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+        ]
+
+    (leaf,) = rdd_ids(frame)
+    return rdd_ids(df).count(leaf)
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").cache()
@@ -419,11 +435,13 @@ def test_paragraph_dedup_reassembles_surviving_spans(spark):
     assert out[3]["text_deduped"] == ""
 
 
-def test_pq_recall_shortlist_and_guard(docs, emb):
+def test_pq_recall_shortlist_and_guard(spark, docs, emb):
     """Product quantization: the ADC shortlist + exact re-rank must
     reach mean recall@5 >= 0.4 vs exact on the near-random fixture (PQ's
-    worst case), be deterministic across runs, and reject an unbounded
-    query side like the other broadcast-shaped scorers."""
+    worst case), be deterministic across runs, read the query side
+    once (the query vector rides the shortlist into the re-rank), and
+    reject an unbounded query side like the other broadcast-shaped
+    scorers."""
     from cassandrastack_spark.llm.simsearch import ann_pq_topk
 
     q = emb.filter(F.col("vec_id") < 10)
@@ -435,6 +453,8 @@ def test_pq_recall_shortlist_and_guard(docs, emb):
     got2 = {(r.query_id, r.neighbor_id) for r in ann_pq_topk(emb, q, k=5).collect()}
     assert got1 == got2, "PQ pipeline must be deterministic"
     assert len(got1 & exact) / len(exact) >= 0.4
+    q_local = spark.createDataFrame(q.collect(), q.schema)
+    assert _frame_reads(ann_pq_topk(emb, q_local, k=5), q_local) == 1
     with pytest.raises(ValueError, match="max_query_rows"):
         ann_pq_topk(emb, emb.limit(10), k=3, max_query_rows=5)
 
@@ -738,6 +758,33 @@ def test_pq_training_rejects_tiny_corpus(spark):
         pq_train_codebooks(tiny, k_codes=16, sample=256)
 
 
+def test_training_sample_independent_of_partitioning(spark, emb):
+    """The training matrix (whose first rows seed k-means) is the same
+    whatever the corpus's partitioning, with or without the fused
+    query-count leg; an oversized query side is reported before an
+    empty corpus."""
+    import numpy as np
+
+    from cassandrastack_spark.llm.simsearch import _training_sample
+
+    train = emb.select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+    )
+    q = emb.filter(F.col("vec_id") < 4)
+    want = _training_sample(train, sample=64)
+    for frame in (train.repartition(7), train.coalesce(1)):
+        assert np.array_equal(_training_sample(frame, sample=64), want)
+        got = _training_sample(
+            frame, sample=64, probe=q, probe_cap=4, probe_owner="t"
+        )
+        assert np.array_equal(got, want)
+    empty = train.limit(0)
+    with pytest.raises(ValueError, match="max_query_rows"):
+        _training_sample(empty, probe=q, probe_cap=3, probe_owner="t")
+    with pytest.raises(ValueError, match="no rows"):
+        _training_sample(empty, probe=q, probe_cap=4, probe_owner="t")
+
+
 def test_pq_paths_propagate_null_vectors_identically(spark):
     """Round-4 advice regression: crossing the PQ size gate must not
     change null handling — the Arrow encode/decode paths emit null for
@@ -779,12 +826,12 @@ def test_pq_paths_propagate_null_vectors_identically(spark):
     assert da[2] is None and da[1] is not None
 
 
-def test_ivf_pq_composite_recall_determinism_and_guard(emb):
+def test_ivf_pq_composite_recall_determinism_and_guard(spark, emb):
     """IVF+PQ composite: deterministic across runs, recall@5 within the
     compound envelope (>= 0.35 on the near-random fixture; bounded
     above by IVF's own recall at the same nprobe), candidates only from
-    probed lists, and the same unbounded-query guard as the other
-    broadcast-shaped scorers."""
+    probed lists, the query side read once, and the same
+    unbounded-query guard as the other broadcast-shaped scorers."""
     from cassandrastack_spark.llm.simsearch import (
         ann_ivf_pq_topk,
         ann_ivf_topk,
@@ -804,6 +851,8 @@ def test_ivf_pq_composite_recall_determinism_and_guard(emb):
         for r in ann_ivf_pq_topk(emb, q, k=5, shortlist=64).collect()
     }
     assert got1 == got2, "IVF+PQ pipeline must be deterministic"
+    q_local = spark.createDataFrame(q.collect(), q.schema)
+    assert _frame_reads(ann_ivf_pq_topk(emb, q_local, k=5), q_local) == 1
     recall = len(got1 & exact) / len(exact)
     assert recall >= 0.35, f"composite recall {recall}"
     # compound approximation cannot beat its IVF stage by construction

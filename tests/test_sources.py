@@ -415,3 +415,23 @@ def test_widen_for_compute_key_cols_spreads_duplicate_heavy_frames(
     assert mx_key < 4000  # no single task holds the whole frame
     # and the spread approaches the session's parallelism
     assert n_key >= min(target, 4) // 2
+
+
+def test_checkpoint_if_small_fails_closed_on_unknown_size(spark, tmp_path):
+    """The size gate checkpoints only inputs it can size. A local
+    relation lists no input files — its size is unknown, not zero — so
+    it must come back un-checkpointed, while a small parquet-backed
+    frame is still materialized."""
+    from cassandrastack_spark.sources.io import checkpoint_if_small
+
+    local = spark.createDataFrame(ROWS, SCHEMA)
+    assert local.inputFiles() == []
+    assert checkpoint_if_small(local) is local
+
+    p = str(tmp_path / "small.parquet")
+    local.write.parquet(p)
+    small = spark.read.parquet(p)
+    done = checkpoint_if_small(small)
+    assert done is not small
+    assert done.inputFiles() == []  # scans replaced by checkpoint blocks
+    assert sorted(map(tuple, done.collect())) == ROWS
