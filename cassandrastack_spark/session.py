@@ -36,6 +36,15 @@ def get_spark(app_name: str = "cassandrastack-spark") -> SparkSession:
       well past sf1, avoiding shuffles on the fact-table side.
     - Arrow enabled: any Pandas-UDF operator (minhash, multimodal)
       moves data in columnar batches, never row-at-a-time pickle.
+    - ``spark.python.sql.dataFrameDebugging.enabled`` off: with it on
+      (PySpark's default), every Column function walks the Python stack
+      and makes about four extra py4j round-trips to record its call
+      site, which roughly doubles plan-building time for a point read
+      (the wide-column store's per-request cost). Trade-off: an error
+      raised by a failing Column no longer carries its Python call site
+      in the query context; the JVM error still names the expression.
+      PySpark reads this once per process, so it is set here on the
+      builder, not later through ``spark.conf.set``.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -69,6 +78,7 @@ def get_spark(app_name: str = "cassandrastack-spark") -> SparkSession:
         # for which the conf is a no-op).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 

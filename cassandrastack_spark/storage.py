@@ -9,7 +9,10 @@ Physical layout contract (SURVEY.md §1.4):
   is also Murmur3, so this is the same design. A partition-key-equality
   read computes the bucket driver-side and prunes to ONE directory
   (Catalyst partition pruning), the analogue of single-token-range
-  routing (``server.py:98``).
+  routing (``server.py:98``). The scan and the partial reconciliation
+  stay parallel; the reconciled rows are ONE Cassandra partition, so
+  they are sorted into clustering order inside a single task (no
+  range exchange, no sampling job).
 - **Clustering order → sortWithinPartitions.** ``CLUSTERING ORDER BY
   (message_id DESC)`` (``server.py:185``) becomes
   ``sortWithinPartitions(desc(clustering))`` at write: rows in each file
@@ -75,6 +78,16 @@ _write_counter = itertools.count()
 
 def _next_writetime() -> int:
     return int(time.time() * 1_000_000) * 1000 + (next(_write_counter) % 1000)
+
+
+def _q(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _s(text: str) -> str:
+    """A Python string as a SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 class WideColumnTable:
@@ -248,18 +261,9 @@ class WideColumnTable:
             )
         )
         self._warn_large_partitions(out, "append batch")
-        sort_cols = self._sort_cols()
-        writer = (
-            # _BUCKET leads the sort: the partitioned-file writer requires
-            # task rows ordered by the partition dirs and would otherwise
-            # insert its own (non-stable) sort, destroying the clustering
-            # order inside each file.
-            out.repartition(self.n_buckets, F.col(_BUCKET))
-            .sortWithinPartitions(F.col(_BUCKET), *sort_cols)
-            .write.mode("append")
-            .partitionBy(_BUCKET)
-        )
-        writer.parquet(self.path)
+        # one file per touched bucket; a small batch runs as one
+        # AQE-coalesced write task, not one task per bucket
+        self._write_buckets(out, "append")
         for view_name in self.keyspace.views.get(self.spec.name, ()):
             view = WideColumnTable(
                 self.spark,
@@ -498,13 +502,7 @@ class WideColumnTable:
             .withColumn(_EXPIRES, F.lit(None).cast("long"))
             .withColumn(_TOMBSTONE, F.lit(True))
         )
-        (
-            out.repartition(self.n_buckets, F.col(_BUCKET))
-            .sortWithinPartitions(F.col(_BUCKET), *self._sort_cols())
-            .write.mode("append")
-            .partitionBy(_BUCKET)
-            .parquet(self.path)
-        )
+        self._write_buckets(out, "append")
 
     def update_collection(self, df: DataFrame, column: str, op: str) -> None:
         """CQL collection mutation: ``UPDATE t SET c = c + ... WHERE pk``.
@@ -564,10 +562,28 @@ class WideColumnTable:
             .withColumn(_COLL_COL, F.lit(column))
             .withColumn(_COLL_OP, F.lit(op))
         )
+        self._write_buckets(out, "append")
+
+    def _write_buckets(self, out: DataFrame, mode: str) -> None:
+        """Write ``out`` (which carries ``_bucket``) under this table's
+        bucket directories, clustering-sorted inside each file.
+
+        The shuffle is keyed on ``_bucket`` with no fixed partition
+        count: each bucket still hashes to exactly one shuffle
+        partition, so a write makes at most one file per touched
+        bucket, while AQE coalesces a small batch to one task instead
+        of ``n_buckets`` mostly empty ones. A large write (``compact``)
+        therefore runs at most ``spark.sql.shuffle.partitions`` tasks,
+        which ``session.py`` sizes to the cluster.
+        """
         (
-            out.repartition(self.n_buckets, F.col(_BUCKET))
+            out.repartition(F.col(_BUCKET))
+            # _BUCKET leads the sort: the partitioned-file writer requires
+            # task rows ordered by the partition dirs and would otherwise
+            # insert its own (non-stable) sort, destroying the clustering
+            # order inside each file.
             .sortWithinPartitions(F.col(_BUCKET), *self._sort_cols())
-            .write.mode("append")
+            .write.mode(mode)
             .partitionBy(_BUCKET)
             .parquet(self.path)
         )
@@ -730,27 +746,31 @@ class WideColumnTable:
                 raw, pk, payload, counters, collections, types, now_micros,
                 keep_writetime, cell_meta, keep_marker,
             )
+        # The plan is built from SQL text, not Column objects: each
+        # Column call is a py4j round-trip and this plan is rebuilt on
+        # every point read. ``now_micros`` is a literal of this call,
+        # so nothing built here may be reused by a later call.
         meta = (_WRITETIME, _EXPIRES, _TOMBSTONE)
         data_cols = [c for c in payload if c not in meta]
+        wt, ex, tomb, cells = map(_q, (_WRITETIME, _EXPIRES, _TOMBSTONE, _CELLS))
+        is_tomb = f"coalesce({tomb}, false)"
         aggs = []
         for c in data_cols:
             if c in counters:
                 # counter columns merge by SUM of increments (CQL
                 # counter semantics); nulls (unset) don't contribute
-                aggs.append(F.sum(c).cast(types[c]).alias(c))
+                aggs.append(
+                    f"CAST(sum({_q(c)}) AS {types[c].simpleString()}) AS {_q(c)}"
+                )
             else:
                 # cell-level last-writer-wins: newest write that SET the
-                # cell; its writetime (tombstone cut) and expiry
-                # (per-cell TTL, like Cassandra's) ride along
+                # cell (the _cell_w ordering key); its writetime
+                # (tombstone cut) and expiry (per-cell TTL, like
+                # Cassandra's) ride along
                 aggs.append(
-                    F.max_by(
-                        F.struct(
-                            F.col(_WRITETIME).alias("w"),
-                            F.col(c).alias("v"),
-                            F.col(_EXPIRES).alias("e"),
-                        ),
-                        self._cell_w(c),
-                    ).alias(f"__sv_{c}")
+                    f"max_by(struct({wt} AS w, {_q(c)} AS v, {ex} AS e), "
+                    f"CASE WHEN {cells} IS NULL OR array_contains({cells}, "
+                    f"{_s(c)}) THEN {wt} END) AS {_q('__sv_' + c)}"
                 )
         # the row MARKER is the newest full-row write (CQL INSERT;
         # _cells null): its TTL governs the row's own liveness, while a
@@ -761,94 +781,79 @@ class WideColumnTable:
         # key-only INSERT, and compact()'s rewrite of an all-null row),
         # or carrying the "" sentinel (a named-columns INSERT — CQL
         # INSERTs always deposit the marker, UPDATEs never do)
-        marker_key = F.when(
-            (
-                (F.coalesce(F.size(F.col(_CELLS)), F.lit(0)) == 0)
-                | F.array_contains(F.col(_CELLS), F.lit(""))
-            )
-            & ~F.coalesce(F.col(_TOMBSTONE), F.lit(False)),
-            F.col(_WRITETIME),
+        marker_key = (
+            f"CASE WHEN (coalesce(size({cells}), 0) = 0 "
+            f"OR array_contains({cells}, '')) AND NOT {is_tomb} THEN {wt} END"
         )
         aggs += [
-            F.expr(f"max_by(`{_TOMBSTONE}`, `{_WRITETIME}`)").alias(_TOMBSTONE),
-            F.max_by(F.col(_EXPIRES), marker_key).alias(_EXPIRES),
-            F.max(marker_key).alias("__marker_w"),
-            F.max(
-                F.when(
-                    F.coalesce(F.col(_TOMBSTONE), F.lit(False)),
-                    F.col(_WRITETIME),
-                )
-            ).alias("__tomb_w"),
-            F.max(F.col(_WRITETIME)).alias(_WRITETIME),
+            f"max_by({tomb}, {wt}) AS {tomb}",
+            f"max_by({ex}, {marker_key}) AS {ex}",
+            f"max({marker_key}) AS `__marker_w`",
+            f"max(CASE WHEN {is_tomb} THEN {wt} END) AS `__tomb_w`",
+            f"max({wt}) AS {wt}",
         ]
-        grouped = raw.groupBy(*pk).agg(*aggs)
+        grouped = raw.groupBy(*pk).agg(*[F.expr(a) for a in aggs])
         # cells at or before the newest DELETE are dead: a later partial
         # write revives the key without resurrecting pre-delete cells
-        tomb_w = F.coalesce(F.col("__tomb_w"), F.lit(-1))
-        sel = [F.col(c) for c in pk]
+        tomb_w = "coalesce(`__tomb_w`, -1)"
+        sel = [_q(c) for c in pk]
         live_terms = []
         for c in data_cols:
             if c in counters:
-                sel.append(F.col(c))
-                live_terms.append(F.col(c).isNotNull())
+                sel.append(_q(c))
+                live_terms.append(f"{_q(c)} IS NOT NULL")
                 if cell_meta:  # CQL: WRITETIME on counters is an error
-                    sel.append(F.lit(None).cast("long").alias(f"__wt_{c}"))
+                    sel.append(f"CAST(NULL AS BIGINT) AS {_q('__wt_' + c)}")
             else:
-                sv = F.col(f"__sv_{c}")
-                cell_vis = (sv["w"] > tomb_w) & (
-                    sv["e"].isNull() | (sv["e"] > now_micros)
+                sv = _q(f"__sv_{c}")
+                cell_vis = (
+                    f"({sv}.w > {tomb_w} "
+                    f"AND ({sv}.e IS NULL OR {sv}.e > {now_micros}))"
                 )
                 sel.append(
-                    F.when(cell_vis, sv["v"]).cast(types[c]).alias(c)
+                    f"CAST(CASE WHEN {cell_vis} THEN {sv}.v END "
+                    f"AS {types[c].simpleString()}) AS {_q(c)}"
                 )
-                live_terms.append(cell_vis & sv["v"].isNotNull())
+                live_terms.append(f"({cell_vis} AND {sv}.v IS NOT NULL)")
                 if cell_meta:
-                    sel.append(F.when(cell_vis, sv["w"]).alias(f"__wt_{c}"))
-                    sel.append(F.when(cell_vis, sv["e"]).alias(f"__ex_{c}"))
+                    sel.append(
+                        f"CASE WHEN {cell_vis} THEN {sv}.w END "
+                        f"AS {_q('__wt_' + c)}"
+                    )
+                    sel.append(
+                        f"CASE WHEN {cell_vis} THEN {sv}.e END "
+                        f"AS {_q('__ex_' + c)}"
+                    )
         marker_live = (
-            F.col("__marker_w").isNotNull()
-            & (F.col("__marker_w") > tomb_w)
-            & (F.col(_EXPIRES).isNull() | (F.col(_EXPIRES) > now_micros))
+            f"(`__marker_w` IS NOT NULL AND `__marker_w` > {tomb_w} "
+            f"AND ({ex} IS NULL OR {ex} > {now_micros}))"
         )
         row_live = marker_live
         for term in live_terms:
-            row_live = row_live | term
+            row_live = f"({row_live} OR {term})"
         if keep_marker:
             # compact() preserves the marker through the rewrite: a row
             # whose lineage has a live marker keeps primary-key liveness
             # after materialization (the "" sentinel _materialized_cells
             # appends), like Cassandra carrying the marker through
             # compaction
-            sel.append(
-                (F.col("__marker_w") > tomb_w).alias("__marker_live")
-            )
+            sel.append(f"`__marker_w` > {tomb_w} AS `__marker_live`")
             if cell_meta:
                 # the fragment-preserving rewrite additionally needs the
                 # marker's own writetime to stamp its fragment
-                sel.append(F.col("__marker_w"))
-        sel += [
-            # a marker at or before the newest DELETE is dead lineage:
-            # its TTL must not ride through (compact() would otherwise
-            # stamp a revived row with the dead marker's expiry and the
-            # row would vanish when that old TTL passed)
-            F.when(F.col("__marker_w") > tomb_w, F.col(_EXPIRES)).alias(
-                _EXPIRES
-            ),
-            F.col(_TOMBSTONE),
-            F.col(_WRITETIME),
-            row_live.alias("__row_live"),
-        ]
-        out = (
-            grouped.select(*sel)
-            # a key whose NEWEST write is a DELETE marker is gone; an
-            # expiry-dead key (no live marker, no live cell) likewise —
-            # both checked after reconciliation so they shadow (never
-            # resurrect) older versions
-            .filter(~F.coalesce(F.col(_TOMBSTONE), F.lit(False)))
-            .filter(F.col("__row_live"))
-            .drop(_TOMBSTONE, "__row_live")
-        )
-        return out if keep_writetime else out.drop(_WRITETIME)
+                sel.append("`__marker_w`")
+        # a marker at or before the newest DELETE is dead lineage: its
+        # TTL must not ride through (compact() would otherwise stamp a
+        # revived row with the dead marker's expiry and the row would
+        # vanish when that old TTL passed)
+        sel.append(f"CASE WHEN `__marker_w` > {tomb_w} THEN {ex} END AS {ex}")
+        if keep_writetime:
+            sel.append(wt)
+        # a key whose NEWEST write is a DELETE marker is gone; an
+        # expiry-dead key (no live marker, no live cell) likewise — both
+        # checked after reconciliation so they shadow (never resurrect)
+        # older versions
+        return grouped.where(f"NOT {is_tomb} AND ({row_live})").selectExpr(*sel)
 
     def _reconciled_with_collections(
         self, raw, pk, payload, counters, collections, types, now_micros,
@@ -1161,7 +1166,12 @@ class WideColumnTable:
         the writer used, so Catalyst prunes the scan to a single
         ``_bucket=k`` directory — the single-token-range read of
         ``server.py:98``. Results come back in clustering order
-        (``server.py:185``).
+        (``server.py:185``): the reconciled rows are one Cassandra
+        partition (the unit the large-partition guard warns on), so
+        they are sorted in one task (``coalesce(1)`` after the
+        reconciliation shuffle) instead of by a global sort's range
+        exchange and its sampling job. The scan and the
+        reconciliation's partial aggregate stay parallel.
         """
         if set(key_values) != set(self.spec.partition_keys):
             raise ValueError(
@@ -1179,9 +1189,12 @@ class WideColumnTable:
         raw = self._raw().filter(F.col(_BUCKET) == int(bucket))
         for k, v in key_values.items():
             raw = raw.filter(F.col(k) == v)
-        deduped = self._reconciled(raw)
-        order = self._sort_cols()
-        return deduped.select(*[f.name for f in self.spec.schema.fields]).orderBy(*order)
+        return (
+            self._reconciled(raw)
+            .select(*[f.name for f in self.spec.schema.fields])
+            .coalesce(1)
+            .sortWithinPartitions(*self._sort_cols())
+        )
 
     def read_partitions(self, keys: list[dict]) -> DataFrame:
         """CQL ``WHERE pk IN (...)``: a multi-partition read, pruned to
@@ -1594,13 +1607,7 @@ class WideColumnTable:
             base._raw(), keep_writetime=True, keep_marker=True
         )
         out = self._with_bucket(self._materialized_cells(live))
-        (
-            out.repartition(self.n_buckets, F.col(_BUCKET))
-            .sortWithinPartitions(F.col(_BUCKET), *self._sort_cols())
-            .write.mode("overwrite")
-            .partitionBy(_BUCKET)
-            .parquet(self.path)
-        )
+        self._write_buckets(out, "overwrite")
 
     def compact(self, buckets: list[int] | None = None) -> None:
         """Rewrite the table dropping shadowed rows and small files.
@@ -1678,13 +1685,7 @@ class WideColumnTable:
         prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            (
-                staged.repartition(self.n_buckets, F.col(_BUCKET))
-                .sortWithinPartitions(F.col(_BUCKET), *self._sort_cols())
-                .write.mode("overwrite")
-                .partitionBy(_BUCKET)
-                .parquet(self.path)
-            )
+            self._write_buckets(staged, "overwrite")
         finally:
             conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         jvm = self.spark._jvm

@@ -7,12 +7,18 @@ DDL, schema-on-write enforcement.
 """
 
 import datetime as dt
+import gc
+import os
+import re
+import threading
 
 import pytest
+from py4j.java_gateway import GatewayClient
 from pyspark.sql import functions as F
 
 from cassandrastack_spark import schemas
 from cassandrastack_spark.catalog import Keyspace
+from cassandrastack_spark.hashing import bucket_of
 from cassandrastack_spark.storage import WideColumnTable
 
 AUTHOR_A = "a8098c1a-f86e-11da-bd1a-00112444be1e"
@@ -76,8 +82,11 @@ def test_partition_read_prunes_to_one_bucket(spark, ks):
     t = make_messages(spark, ks)
     t.append(seed_messages(spark))
     plan = t.read_partition(channel_id=1)._jdf.queryExecution().executedPlan().toString()
-    # Catalyst partition pruning: only one _bucket directory is scanned
-    assert "_bucket" in plan
+    # Catalyst partition pruning: the scan's partition filter pins the
+    # one _bucket directory the key hashes to
+    bucket = bucket_of([1], t.n_buckets, dtypes=["bigint"])
+    filters = re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
+    assert re.search(rf"\(_bucket#\d+ = {bucket}\)", filters), filters
 
 
 def test_upsert_last_writer_wins(spark, ks):
@@ -159,6 +168,61 @@ def test_point_lookup_runs_no_extra_jobs(spark, ks):
     after = tracker.getJobIdsForGroup(None)
     assert before == after, "planning a point lookup launched a Spark job"
     assert df.count() == 13  # the action itself still works
+
+
+def test_point_read_and_small_append_job_budget(spark, ks):
+    """A point read is one shuffle job plus the result job: its one
+    partition is sorted inside one task, with no range exchange and no
+    sampling job. A multi-bucket append writes one file per bucket."""
+    t = make_messages(spark, ks)
+    t.append(seed_messages(spark))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    df = t.read_partition(channel_id=1)
+    rows = df.collect()
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(rows) == 13
+    assert len(jobs) <= 2, f"point read ran {len(jobs)} jobs"
+    plan = df._jdf.queryExecution().executedPlan().toString().lower()
+    assert "rangepartitioning" not in plan
+    touched = {
+        f"_bucket={bucket_of([c], t.n_buckets, dtypes=['bigint'])}"
+        for c in (1, 2, 3)
+    }
+    assert len(touched) > 1, "seed must span several buckets"
+    dirs = {d for d in os.listdir(t.path) if d.startswith("_bucket=")}
+    assert dirs == touched
+    for d in dirs:
+        files = [
+            f for f in os.listdir(os.path.join(t.path, d))
+            if f.endswith(".parquet")
+        ]
+        assert len(files) == 1, f"{d} holds {files}"
+
+
+def test_point_read_plan_build_py4j_ceiling(spark, ks, monkeypatch):
+    """Building a point read's plan is a bounded number of py4j
+    round-trips: Column call-site capture is off in the session, and the
+    reconciliation is built from SQL text. About 1,500 calls otherwise."""
+    t = make_messages(spark, ks)
+    t.append(seed_messages(spark))
+    t.read_partition(channel_id=1)  # the first build pays one-time lookups
+    gc.collect()
+    calls = []
+    send = GatewayClient.send_command
+    build_thread = threading.get_ident()
+
+    def counting(self, *args, **kwargs):
+        # only the building thread's calls: py4j releases dead Java
+        # proxies from its own thread, whenever Python frees them
+        if threading.get_ident() == build_thread:
+            calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    t.read_partition(channel_id=1)  # plan only, no action
+    monkeypatch.undo()
+    assert len(calls) <= 150, f"{len(calls)} py4j calls to build a point read"
 
 
 def test_compact_preserves_current_state(spark, ks):
