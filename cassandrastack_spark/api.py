@@ -30,7 +30,7 @@ from pyspark.sql import SparkSession
 
 from cassandrastack_spark import schemas
 from cassandrastack_spark.catalog import Keyspace
-from cassandrastack_spark.storage import WideColumnTable
+from cassandrastack_spark.storage import WideColumnTable, _local_frame
 
 KEYSPACE = "socialmessagekeyspace"
 
@@ -99,7 +99,7 @@ class SocialMessageAPI:
                      _SEED_AUTHOR_A, "Nachricht 1 in Kanal 2"))
         rows.append((3, base + dt.timedelta(seconds=21), str(uuid.uuid4()),
                      _SEED_AUTHOR_B, "Nachricht 1 in Kanal 3"))
-        t.append(self.spark.createDataFrame(rows, schemas.MESSAGES))
+        t.append(_local_frame(self.spark, rows, schemas.MESSAGES))
         return {"table": "messages", "seeded": len(rows)}
 
     # -- GET /messages (R2: full scan) ------------------------------------------
@@ -170,7 +170,8 @@ class SocialMessageAPI:
             return {"error": "author_id and message are required"}, 400
         ts, mid = self._now()
         t = self._table("messages")
-        t.append(self.spark.createDataFrame(
+        t.append(_local_frame(
+            self.spark,
             [(int(channel_id), ts, mid, body["author_id"], body["message"])],
             schemas.MESSAGES,
         ))
@@ -191,7 +192,8 @@ class SocialMessageAPI:
         t = self._table("users")
         _, ua = self._now()
         _, ub = self._now()
-        t.append(self.spark.createDataFrame(
+        t.append(_local_frame(
+            self.spark,
             [("Alex", ua, "alex@mail.de", "alex"),
              ("Bianca", ub, "bianca@mail.de", "bianca")],
             schemas.USERS,
@@ -224,7 +226,8 @@ class SocialMessageAPI:
             return {"error": "username, email and password are required"}, 400
         _, uid = self._now()
         t = self._table("users")
-        t.append(self.spark.createDataFrame(
+        t.append(_local_frame(
+            self.spark,
             [(body["username"], uid, body["email"], body["password"])],
             schemas.USERS,
         ))

@@ -48,7 +48,11 @@ from pyspark.sql.types import (
 )
 
 from cassandrastack_spark.catalog import Keyspace
-from cassandrastack_spark.storage import WideColumnTable, _next_writetime
+from cassandrastack_spark.storage import (
+    WideColumnTable,
+    _local_frame,
+    _next_writetime,
+)
 
 _UUID_RE = re.compile(
     r"[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}"
@@ -951,7 +955,11 @@ class CqlSession:
             if (jm.group(3) or "").lower() == "unset":
                 cells = [c for c in obj if c not in t.spec.primary_key]
             t.append_json(
-                self.spark.createDataFrame([(payload,)], "json string"),
+                _local_frame(
+                    self.spark,
+                    [(payload,)],
+                    StructType([StructField("json", StringType())]),
+                ),
                 cells=cells,
                 row_marker=True,  # INSERT JSON deposits the marker too
             )
@@ -988,7 +996,7 @@ class CqlSession:
         full = {
             f.name: row.get(f.name) for f in t.spec.schema.fields
         }
-        df = self.spark.createDataFrame([tuple(full.values())], t.spec.schema)
+        df = _local_frame(self.spark, [tuple(full.values())], t.spec.schema)
         if m.group(4):
             if ts_micros is not None:
                 raise ValueError("IF NOT EXISTS with USING TIMESTAMP is not supported")
@@ -1053,7 +1061,7 @@ class CqlSession:
                 ]
                 cells = [c for c in cols if c not in t.spec.primary_key]
                 t.append(
-                    self.spark.createDataFrame(full, t.spec.schema),
+                    _local_frame(self.spark, full, t.spec.schema),
                     cells=cells,
                     row_marker=True,  # INSERTs always deposit the marker
                 )
@@ -1180,7 +1188,7 @@ class CqlSession:
             row = dict(keys)
             row[col] = delta
             full = {f.name: row.get(f.name) for f in t.spec.schema.fields}
-            t.append(self.spark.createDataFrame([tuple(full.values())], t.spec.schema))
+            t.append(_local_frame(self.spark, [tuple(full.values())], t.spec.schema))
             return None
         if col in collections:
             kind = collections[col]
@@ -1217,7 +1225,7 @@ class CqlSession:
                 )
             row = tuple(keys[k] for k in t.spec.primary_key) + (payload,)
             t.update_collection(
-                self.spark.createDataFrame([row], delta_schema), col, op
+                _local_frame(self.spark, [row], delta_schema), col, op
             )
             return None
         # plain column: CQL UPDATE is an upsert of exactly that cell —
@@ -1247,7 +1255,7 @@ class CqlSession:
         row[col] = lit.read(rhs)
         full = {f.name: row.get(f.name) for f in t.spec.schema.fields}
         t.append(
-            self.spark.createDataFrame([tuple(full.values())], t.spec.schema),
+            _local_frame(self.spark, [tuple(full.values())], t.spec.schema),
             cells=[col],
             ttl_seconds=ttl,
             timestamp_micros=ts_micros,
@@ -1315,8 +1323,8 @@ class CqlSession:
         if not targets:
             schema = StructType([t.spec.schema[k] for k in t.spec.primary_key])
             t.delete(
-                self.spark.createDataFrame(
-                    [tuple(keys[k] for k in t.spec.primary_key)], schema
+                _local_frame(
+                    self.spark, [tuple(keys[k] for k in t.spec.primary_key)], schema
                 ),
                 timestamp_micros=ts_micros,
             )
@@ -1347,7 +1355,7 @@ class CqlSession:
                     )
                 row = tuple(keys[k] for k in t.spec.primary_key) + (payload,)
                 t.update_collection(
-                    self.spark.createDataFrame([row], delta_schema), col, "remove"
+                    _local_frame(self.spark, [row], delta_schema), col, "remove"
                 )
                 continue
             col = item.strip()
@@ -1366,7 +1374,7 @@ class CqlSession:
             row = dict(keys)
             full = {f.name: row.get(f.name) for f in t.spec.schema.fields}
             t.append(
-                self.spark.createDataFrame([tuple(full.values())], t.spec.schema),
+                _local_frame(self.spark, [tuple(full.values())], t.spec.schema),
                 cells=plain_cells,
                 timestamp_micros=ts_micros,
             )

@@ -28,7 +28,10 @@ Physical layout contract (SURVEY.md §1.4):
 - **Batch atomicity → commit protocol.** The reference wraps writes in
   logged batches for atomicity (``server.py:191-207``); one Spark write
   job is already atomic per the Parquet commit protocol (SURVEY.md §2.2
-  W3), so a multi-row append IS the batch.
+  W3), so a multi-row append IS the batch. Statement rows built on the
+  driver (a REST body, a CQL INSERT/UPDATE/DELETE/BATCH) arrive as a
+  local relation (``_local_frame``), so the append's projection runs on
+  the driver and the bucket shuffle's map stage is one task.
 
 At 100 TB: n_buckets scales with data volume (buckets ≈ data /
 target_file_size); appends touch only the buckets their rows hash to;
@@ -40,7 +43,20 @@ from __future__ import annotations
 import itertools
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    IntegerType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+    _make_type_verifier,
+)
 
 from cassandrastack_spark.catalog import Keyspace, TableSpec
 from cassandrastack_spark.hashing import bucket_of, spark_hash
@@ -88,6 +104,61 @@ def _q(name: str) -> str:
 def _s(text: str) -> str:
     """A Python string as a SQL string literal."""
     return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """Driver-local ``rows`` (one tuple per row, in ``schema`` order) as a
+    frame over a local relation: the store's request path builds every
+    statement's rows through here.
+
+    ``spark.createDataFrame(rows, schema)`` pickles the rows into a
+    parallelized RDD, so even a one-row write shuffles from
+    ``defaultParallelism`` map tasks over ``Scan ExistingRDD``. Given a
+    ``pyarrow.Table``, Spark builds a ``LocalRelation`` instead: the
+    optimizer evaluates the append's projection (casts, ``_bucket``,
+    ``_writetime``, ``_expires``, ``_cells``) on the driver, and the
+    write's map stage is one task over ``LocalTableScan``.
+
+    The stored values are the ones ``createDataFrame`` stores. Each row
+    first passes the checks ``verifySchema`` runs (type, integer range,
+    nullability; same exceptions), then converts through the schema's
+    own ``toInternal``: a naive ``datetime`` is process-local time, in
+    collections too, and the Arrow columns carry the UTC instants.
+    """
+    verify = _make_type_verifier(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(row))
+    columns = [[r[i] for r in internal] for i in range(len(schema.fields))]
+    # Before pyarrow 17, PySpark rebuilds a map column that holds
+    # timestamps without its null mask (SPARK-48302), so a null map would
+    # arrive empty. Such a column rides with a null flag, and one
+    # projection, folded into the local relation, restores the nulls.
+    wire = StructType(list(schema.fields))
+    flags = {}
+    for i, f in enumerate(schema.fields):
+        if (
+            isinstance(f.dataType, MapType)
+            and "timestamp" in f.dataType.simpleString()
+            and None in columns[i]
+        ):
+            flags[f.name] = f"{f.name}#null"
+            wire.add(flags[f.name], BooleanType(), False)
+            columns.append([v is None for v in columns[i]])
+    arrow = to_arrow_schema(wire)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(columns, arrow.types)], schema=arrow
+    )
+    df = spark.createDataFrame(table, wire)
+    if flags:
+        df = df.select(*[
+            F.when(F.col(flags[n]), F.lit(None)).otherwise(F.col(n)).alias(n)
+            if n in flags
+            else F.col(n)
+            for n in schema.names
+        ])
+    return df
 
 
 class WideColumnTable:
@@ -421,7 +492,7 @@ class WideColumnTable:
         row.update(assignments)
         full = {f.name: row.get(f.name) for f in self.spec.schema.fields}
         self.append(
-            self.spark.createDataFrame([tuple(full.values())], self.spec.schema),
+            _local_frame(self.spark, [tuple(full.values())], self.spec.schema),
             cells=list(assignments),
             ttl_seconds=ttl_seconds,
             timestamp_micros=timestamp_micros,
@@ -441,12 +512,10 @@ class WideColumnTable:
         applied, resp = self._lwt_check(keys, conditions, if_exists)
         if not applied:
             return resp
-        from pyspark.sql.types import StructType
-
         pk = self.spec.primary_key
         schema = StructType([self.spec.schema[k] for k in pk])
         self.delete(
-            self.spark.createDataFrame([tuple(keys[k] for k in pk)], schema),
+            _local_frame(self.spark, [tuple(keys[k] for k in pk)], schema),
             timestamp_micros=timestamp_micros,
         )
         return resp
@@ -597,16 +666,6 @@ class WideColumnTable:
     # ---- read path (R1-R4) -------------------------------------------------
 
     def _raw(self) -> DataFrame:
-        from pyspark.sql.types import (
-            ArrayType,
-            BooleanType,
-            IntegerType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
         read_schema = StructType(
             list(self.spec.schema.fields)
             + [
@@ -1132,8 +1191,9 @@ class WideColumnTable:
         CQL's ``WRITETIME(col)`` / ``TTL(col)`` selectors.
 
         With ``key_values`` (the full partition key) the scan prunes to
-        one bucket directory exactly like ``read_partition``; without,
-        it is a full reconciled scan. Rows come back in clustering
+        one bucket directory and the one partition is sorted inside one
+        task, exactly like ``read_partition``; without, it is a full
+        reconciled scan under a global sort. Rows come back in clustering
         order either way.
         """
         raw = self._raw()
@@ -1154,10 +1214,11 @@ class WideColumnTable:
             raw = raw.filter(F.col(_BUCKET) == int(bucket))
             for k, v in key_values.items():
                 raw = raw.filter(F.col(k) == v)
-        rec = self._reconciled(raw, cell_meta=True)
-        return rec.drop(_WRITETIME).orderBy(
-            *self.spec.partition_keys, *self._sort_cols()
-        )
+        rec = self._reconciled(raw, cell_meta=True).drop(_WRITETIME)
+        order = [*self.spec.partition_keys, *self._sort_cols()]
+        if key_values:
+            return rec.coalesce(1).sortWithinPartitions(*order)
+        return rec.orderBy(*order)
 
     def read_partition(self, **key_values) -> DataFrame:
         """R1: partition-key-equality read, pruned to one bucket directory.

@@ -2,6 +2,10 @@
 replayed in docstring bootstrap order /create -> /messages/create ->
 /users/create (server.py:18-20), asserting the observable semantics."""
 
+import calendar
+import datetime as dt
+import time
+
 import pytest
 
 from cassandrastack_spark.api import SocialMessageAPI
@@ -163,3 +167,62 @@ def test_messages_route_pages_with_keyset_cursor(spark, tmp_warehouse):
     assert len(seen) == 15
     assert len({r["message_id"] for r in seen}) == 15
     c.get("/drop")
+
+
+@pytest.fixture()
+def berlin_tz(monkeypatch):
+    """The Python process runs in Europe/Berlin while the Spark session
+    time zone stays UTC: naive datetimes are process-local time."""
+    monkeypatch.setenv("TZ", "Europe/Berlin")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+_SUMMER = dt.datetime(2024, 7, 1, 12, 34, 56, 789012)
+_WINTER = dt.datetime(2024, 1, 15, 8, 0, 0, 1)
+
+
+def test_posted_message_ts_round_trips_in_process_time_zone(
+    api, berlin_tz, monkeypatch
+):
+    assert time.localtime(calendar.timegm(_SUMMER.timetuple())).tm_gmtoff == 7200
+    monkeypatch.setattr(
+        SocialMessageAPI, "_now", staticmethod(lambda: (_SUMMER, "m-summer"))
+    )
+    _, code = api.post_channel_message(4, {"author_id": "u-1", "message": "hi"})
+    assert code == 201
+    (row,) = api.get_channel_messages(4)
+    assert row["message_ts"] == _SUMMER
+    assert row["message_id"] == "m-summer"
+
+
+def test_cql_timestamps_round_trip_in_process_time_zone(
+    spark, tmp_warehouse, berlin_tz
+):
+    """Top-level and collection-nested timestamps, through a full-row
+    INSERT and through a collection delta."""
+    from cassandrastack_spark.cql import CqlSession
+
+    cql = CqlSession(spark, tmp_warehouse, n_buckets=4)
+    cql.execute(
+        "CREATE KEYSPACE tz "
+        "WITH replication = {'class': 'SimpleStrategy', 'replication_factor': '1'}"
+    )
+    cql.execute("USE tz")
+    cql.execute(
+        "CREATE TABLE events (k text, at timestamp, seen list<timestamp>, "
+        "PRIMARY KEY (k))"
+    )
+    cql.execute(
+        "INSERT INTO events (k, at, seen) VALUES (%s, %s, %s)",
+        ("e", _SUMMER, [_SUMMER, _WINTER]),
+    )
+    assert cql.execute("SELECT * FROM events WHERE k = %s", ("e",)) == [
+        {"k": "e", "at": _SUMMER, "seen": [_SUMMER, _WINTER]}
+    ]
+    cql.execute("UPDATE events SET seen = seen + %s WHERE k = %s", ([_WINTER], "e"))
+    assert cql.execute("SELECT seen FROM events WHERE k = %s", ("e",)) == [
+        {"seen": [_SUMMER, _WINTER, _WINTER]}
+    ]

@@ -1474,3 +1474,82 @@ def test_batchstatement_counter_type_enforced(cql):
         cql.execute(bad)
     with _pytest.raises(ValueError, match="unknown batch type"):
         BatchStatement(batch_type="QUORUM")
+
+
+def test_keyed_writetime_read_sorts_in_one_task(cql, spark, monkeypatch):
+    """A WRITETIME()/TTL() read pinned to one partition key reads one
+    Cassandra partition: it is sorted inside one task, like a point
+    read, with no range exchange and no sampling job."""
+    from cassandrastack_spark.storage import WideColumnTable
+
+    _bootstrap(cql)
+    for i in range(3):
+        cql.execute(
+            "INSERT INTO messages (channel_id, message_id, author_id, message) "
+            "VALUES (%s, now(), %s, %s)", (5, "a" * 36, f"m{i}"))
+    built = []
+    meta = WideColumnTable.read_cell_meta
+
+    def capture(self, **key):
+        df = meta(self, **key)
+        built.append(df)
+        return df
+
+    monkeypatch.setattr(WideColumnTable, "read_cell_meta", capture)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    rows = cql.execute(
+        "SELECT message, writetime(message) FROM messages "
+        "WHERE channel_id = %s", (5,))
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert [r["message"] for r in rows] == ["m2", "m1", "m0"], "clustering DESC"
+    assert len(jobs) <= 2, f"keyed WRITETIME read ran {len(jobs)} jobs"
+    (df,) = built
+    plan = df._jdf.queryExecution().executedPlan().toString().lower()
+    assert "rangepartitioning" not in plan
+
+
+def test_rejected_values_fail_as_before(cql):
+    """Per-value schema checks on every write: a string bound into a
+    bigint column, an out-of-range int and an INSERT that leaves a
+    NOT NULL key column out are rejected with PySpark's verifier errors,
+    and nothing is written."""
+    from pyspark.errors import PySparkTypeError, PySparkValueError
+
+    from cassandrastack_spark.api import KEYSPACE, SocialMessageAPI
+
+    cql.execute(
+        "CREATE KEYSPACE vk "
+        "WITH replication = {'class': 'SimpleStrategy', 'replication_factor': '1'}")
+    cql.execute("USE vk")
+    cql.execute(
+        "CREATE TABLE nums (k text, c int, n bigint, i int, PRIMARY KEY (k, c))")
+    for stmt, params in (
+        ("INSERT INTO nums (k, c, n) VALUES (%s, %s, %s)", ("a", 1, "x")),
+        ("UPDATE nums SET n = %s WHERE k = %s AND c = %s", ("x", "a", 1)),
+        ("BEGIN BATCH INSERT INTO nums (k, c, n) VALUES (%s, %s, %s); "
+         "APPLY BATCH", ("a", 1, "x")),
+    ):
+        with pytest.raises(PySparkTypeError) as e:
+            cql.execute(stmt, params)
+        assert type(e.value) is PySparkTypeError
+        assert e.value.getCondition() == "FIELD_DATA_TYPE_UNACCEPTABLE_WITH_NAME"
+    with pytest.raises(PySparkValueError) as e:
+        cql.execute(
+            "INSERT INTO nums (k, c, i) VALUES (%s, %s, %s)", ("a", 1, 2**31))
+    assert type(e.value) is PySparkValueError
+    assert e.value.getCondition() == "VALUE_OUT_OF_BOUNDS"
+    assert cql.execute("SELECT * FROM nums") == []
+    # the REST tables declare their key columns NOT NULL
+    api = SocialMessageAPI(cql.spark, cql.warehouse, n_buckets=4)
+    api.create()
+    api.users_create()
+    cql.keyspaces[KEYSPACE] = api.keyspace
+    cql.execute(f"USE {KEYSPACE}")
+    with pytest.raises(PySparkValueError) as e:
+        cql.execute(
+            "INSERT INTO users (user_id, email, password) VALUES (now(), %s, %s)",
+            ("z@mail.de", "pw"))
+    assert type(e.value) is PySparkValueError
+    assert e.value.getCondition() == "FIELD_NOT_NULLABLE_WITH_NAME"
+    assert len(api.get_users()) == 2

@@ -200,6 +200,89 @@ def test_point_read_and_small_append_job_budget(spark, ks):
         assert len(files) == 1, f"{d} holds {files}"
 
 
+def test_rest_write_reads_a_local_relation(spark, tmp_warehouse, monkeypatch):
+    """A REST write's one row reaches the bucket shuffle as a local
+    relation: the map stage is one task over ``LocalTableScan`` (no
+    ``ExistingRDD`` parallelized into ``defaultParallelism`` slices),
+    and the touched bucket gets one new file."""
+    from cassandrastack_spark.api import SocialMessageAPI
+
+    api = SocialMessageAPI(spark, tmp_warehouse, n_buckets=4)
+    api.create()
+    api.messages_create()
+    bucket_dir = os.path.join(
+        api.keyspace.table_path("messages"),
+        f"_bucket={bucket_of([1], 4, dtypes=['bigint'])}",
+    )
+    files_before = set(os.listdir(bucket_dir))
+    written = []
+    write = WideColumnTable._write_buckets
+
+    def capture(self, out, mode):
+        written.append(out)
+        return write(self, out, mode)
+
+    monkeypatch.setattr(WideColumnTable, "_write_buckets", capture)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    _, code = api.post_channel_message(1, {"author_id": "u-1", "message": "hi"})
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert code == 201
+    first_stage = min(tracker.getJobInfo(min(jobs)).stageIds)
+    assert tracker.getStageInfo(first_stage).numTasks == 1
+    (out,) = written
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    new = [
+        f for f in set(os.listdir(bucket_dir)) - files_before
+        if f.endswith(".parquet")
+    ]
+    assert len(new) == 1, new
+
+
+def test_local_frame_stores_what_create_dataframe_stores(spark):
+    """The write-row helper returns the same schema and values as
+    ``createDataFrame`` over every column type the store declares,
+    nulls inside collections and null timestamp maps included, and an
+    empty frame for no rows."""
+    from pyspark.sql.types import (
+        ArrayType, BinaryType, BooleanType, DateType, DoubleType, FloatType,
+        IntegerType, LongType, MapType, StringType, StructField, StructType,
+        TimestampType,
+    )
+
+    from cassandrastack_spark.storage import _local_frame
+
+    udt = StructType([
+        StructField("a", IntegerType()), StructField("t", TimestampType()),
+    ])
+    schema = StructType([
+        StructField("k", LongType(), False), StructField("i", IntegerType()),
+        StructField("d", DoubleType()), StructField("f", FloatType()),
+        StructField("b", BooleanType()), StructField("s", StringType()),
+        StructField("ts", TimestampType()),
+        StructField("l", ArrayType(TimestampType())),
+        StructField("m", MapType(StringType(), TimestampType())),
+        StructField("mi", MapType(StringType(), IntegerType())),
+        StructField("u", udt), StructField("bin", BinaryType()),
+        StructField("day", DateType()),
+    ])
+    ts = dt.datetime(2024, 7, 1, 12, 34, 56, 789012)
+    rows = [
+        (1, 2, 3.5, 1.25, True, "x", ts, [ts, None], {"a": ts}, {"x": 1},
+         (7, ts), b"ab", dt.date(2024, 1, 2)),
+        (2,) + (None,) * 12,
+        (3, None, None, None, None, "", None, [], {}, {}, (None, None), b"",
+         None),
+    ]
+    df = _local_frame(spark, rows, schema)
+    assert df.schema == schema
+    assert df.collect() == spark.createDataFrame(rows, schema).collect()
+    assert df.collect()[1]["m"] is None
+    empty = _local_frame(spark, [], schema)
+    assert empty.schema == schema and empty.collect() == []
+
+
 def test_point_read_plan_build_py4j_ceiling(spark, ks, monkeypatch):
     """Building a point read's plan is a bounded number of py4j
     round-trips: Column call-site capture is off in the session, and the
