@@ -926,6 +926,22 @@ class CqlSession:
 
     # -- writes --------------------------------------------------------------
 
+    @staticmethod
+    def _require_keys(t: WideColumnTable, rows: list[dict]) -> None:
+        """Reject an INSERT row that leaves out a primary-key column or
+        binds it to null, as Cassandra does. Runs after ``_local_frame``,
+        whose verifier already rejects a NOT NULL key (the REST tables);
+        CQL-created columns are all nullable, so only this catches them."""
+        for row in rows:
+            for kind, keys in (
+                ("partition key parts", t.spec.partition_keys),
+                ("clustering keys", t.spec.clustering_keys),
+            ):
+                missing = [c for c in keys if row.get(c) is None]
+                if missing:
+                    raise ValueError(
+                        f"Some {kind} are missing: {', '.join(missing)}")
+
     def _insert(self, s: str, params: tuple):
         jm = re.match(
             r"insert into\s+(\w+)\s+json\s+(.*?)"
@@ -951,6 +967,7 @@ class CqlSession:
                     f"JSON fields {sorted(unknown)} not in declared "
                     f"schema of {t.spec.name!r}"
                 )
+            self._require_keys(t, [obj])
             cells = None
             if (jm.group(3) or "").lower() == "unset":
                 cells = [c for c in obj if c not in t.spec.primary_key]
@@ -997,6 +1014,7 @@ class CqlSession:
             f.name: row.get(f.name) for f in t.spec.schema.fields
         }
         df = _local_frame(self.spark, [tuple(full.values())], t.spec.schema)
+        self._require_keys(t, [row])
         if m.group(4):
             if ts_micros is not None:
                 raise ValueError("IF NOT EXISTS with USING TIMESTAMP is not supported")
@@ -1053,18 +1071,21 @@ class CqlSession:
         per_group: dict[tuple[str, tuple[str, ...]], list[dict]] = {}
 
         def flush():
+            # every group is checked before any is written
+            writes = []
             for (name, cols), rows in per_group.items():
                 t = self._table(name)
                 full = [
                     tuple(r.get(f.name) for f in t.spec.schema.fields)
                     for r in rows
                 ]
+                df = _local_frame(self.spark, full, t.spec.schema)
+                self._require_keys(t, rows)
                 cells = [c for c in cols if c not in t.spec.primary_key]
-                t.append(
-                    _local_frame(self.spark, full, t.spec.schema),
-                    cells=cells,
-                    row_marker=True,  # INSERTs always deposit the marker
-                )
+                writes.append((t, df, cells))
+            for t, df, cells in writes:
+                # INSERTs always deposit the marker
+                t.append(df, cells=cells, row_marker=True)
             per_group.clear()
 
         for sub in stmts:
@@ -1076,6 +1097,8 @@ class CqlSession:
             if m:
                 cols = tuple(c.strip() for c in m.group(2).split(","))
                 vals = [lit.read(v) for v in _split_top(m.group(3))]
+                if len(cols) != len(vals):
+                    raise ValueError("INSERT column/value count mismatch")
                 per_group.setdefault((m.group(1), cols), []).append(
                     dict(zip(cols, vals))
                 )

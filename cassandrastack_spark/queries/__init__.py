@@ -19,7 +19,10 @@ Determinism rules (so Spark and DuckDB hash-match):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import glob
+import json
+import os
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,191 +79,52 @@ def hll_estimator_sql(ne: str, hs: str) -> str:
     )
 
 
-# Registry presentation order. The driver verifies the FIRST 50 entries
-# of the registry each round (confirmed in rounds 1-5 — treat the
-# 50-entry prefix window as the standing contract). Queries that have
-# never received an official CORRECTNESS row are rotated to the front;
-# already-verified queries rotate to the back. Names listed here come
-# first (in this order); everything else follows in registration order.
-# A name here that is not registered is ignored.
-#
-# Round-17 rotation (executed at r17 start — the row-age contract
-# test went red the moment CORRECTNESS_r16.json landed, naming the
-# cohort; its list and the r16 note's precomputed list were re-diffed
-# and match verbatim):
-# (a) ALL 48 un-chipped r13 rows, 4 rounds old at r17 close —
-# ann_hybrid_rrf_topk through unpivot_revenue_measures below.
-# Clearing these turns tests/test_row_age_contract.py green.
-# (b) the r14-staged r17 registrant decontam_semantic, lifted from
-# tests/test_r17_oracle_parity.py where its exact plan + oracle SQL
-# validated green at sf0.001 AND sf0.01 ahead of registration
-# (benchmark decontamination in EMBEDDING space — the semantic
-# sibling the n-gram decontam family structurally lacks). Its 3-round
-# -old staging price re-prices in-sweep this round per the ask-#4
-# rule; number + go/no-go in BENCH_NOTES.md's r17 addendum.
-# (c) 1 chip against the 50-row r14 cohort (due in full at r18):
-# graph_pagerank_seeded — chosen where r17 has adjudication value:
-# it is r16-touched-but-unsampled (the r16 VERDICT's gate note lists
-# it among the 11 touched paths the driver's r16 sample missed, and
-# Next-round item 1 asks for a pagerank row), and r17 touches the
-# same loop again (checkpoint-cadence work), so this one row
-# adjudicates both rounds of pagerank changes against the unrolled
-# float-sequence oracle.
-#
-# Debt arithmetic after r17: newest-row histogram becomes r14:49
-# r15:50 r16:50 r17:50 (N = 199 after the decontam_semantic
-# registration). The EXACT 49-row r18 debt cohort, precomputed from
-# the CORRECTNESS files + this rotation at the end of r17 (r18's
-# first commit rotates these into _FRONT verbatim, then appends its
-# registrant — the same mechanical handoff as r16->r17):
-# agg_distinct, ann_hybrid_rrf_indexed, ann_index_extend_probe,
-# ann_ivfpq_filtered_topk, ann_mmr_rerank_indexed,
-# ann_mmr_rerank_topk, anomaly_cusum_changepoint, anti_join_no_orders,
-# approx_distinct_users, corpus_curriculum_order, corpus_domain_cap,
-# corpus_mix_weights, corpus_pack_bins, corpus_prepare_pipeline,
-# corpus_quality_filter, corpus_source_kl, corpus_source_overlap,
-# corpus_source_profile, corpus_split_hash, corpus_stratified_sample,
-# decontam_ngram_overlap, dedup_cluster_components,
-# dedup_cluster_size_histogram, dedup_containment_ngram, dedup_exact,
-# dedup_incremental_minhash, dedup_ngram_jaccard,
-# dedup_paragraph_spans, dedup_semantic_indexed, distinct_tokens_hll,
-# dq_profile_lineitem, dq_profile_lineitem_approx,
-# dq_referential_orphans, embedding_covariance_exclude,
-# embedding_hard_negatives_indexed,
-# embedding_knn_label_agreement_indexed, embedding_label_cohesion,
-# percentiles_acctbal_approx, q1_pricing_summary,
-# range_join_event_pairs, rolling_wau, semi_join_open_orders,
-# stream_bloom_dedup, stream_monitor_distinct_count,
-# text_heavy_hitters_sketch, text_repetition, text_stats,
-# text_tokenizer_fertility, text_unigram_logprob.
-# That fills the r18 window exactly: 49 debt + er_fuzzy_customer_pairs
-# (drain-plan slot 2 of 2, staged in tests/test_r18_oracle_parity.py,
-# re-priced in-sweep r16) = 50, ZERO chips — r18 has no free slot.
-# STAGING-QUEUE DRAIN PLAN (VERDICT r15 ask #4 — the row-by-row
-# registration schedule, and the arithmetic that bounds it). Window
-# capacity over r17-r20 is 4 x 50 = 200 row-slots; rows needing a
-# refresh over the same span is every registered row exactly once
-# (the 4-round age cycle) = 198 after r16. So exactly TWO
-# registration slots remain through r20 without retirement. Schedule:
-# - decontam_semantic -> r17 (slot 1 of 2). DONE — registered this
-#   round (queries/llm.py); the ask-#4 re-price rule (any staging
-#   measurement >= 2 rounds old re-prices at registration) executed
-#   in-sweep, number + go/no-go in BENCH_NOTES.md's r17 addendum.
-# - er_fuzzy_customer_pairs -> r18 (slot 2 of 2). Re-priced in-sweep
-#   r16 (BENCH_NOTES r16 carries the number + go/no-go per VERDICT
-#   r15 ask #5); preferred over corpus_quality_nb_score because it
-#   closes the ER family's registered gate (brute-force pair oracle
-#   vs FastSS blocking — the strongest blocking gate) while the NB
-#   scorer's semantics are already pytest-pinned against a python
-#   model (tests/test_classifier.py).
-# - corpus_quality_nb_score -> r19 ONLY via same-commit retirement
-#   (the policy below): r19's window is fully owed to the 50-row r15
-#   cohort. If no retirement is justified, it remains staged —
-#   bit-exact oracle maintained in tests/test_r18_oracle_parity.py,
-#   semantics pytest-pinned — which the judge sees as staged surface,
-#   not registered debt.
-# - er_fuzzy_components -> staged through r20 (r20's window is fully
-#   owed to the 50-row r16 cohort; no slot exists). Its oracle stays
-#   validated in tests/test_r19_oracle_parity.py; registration falls
-#   to a future maintenance round or a retirement trade.
-# - The four r16-staged novelty rows (stream_fuzzy_ingest_dedup,
-#   stream_er_components, stream_nb_quality_score,
-#   classifier_pr_curve — the streaming ER loop's pair gate, its
-#   transitive closure, the streaming quality-filter trainer, and the
-#   threshold-selection step, tests/test_r20_oracle_parity.py, all
-#   bit-exact at 2 SFs) join the queue BEHIND er_fuzzy_components
-#   under the same rule: staging depth is never capped, only
-#   registration is.
-# STEADY-STATE POLICY (decided r13, per VERDICT r12 ask #5 — the r14+
-# windows follow this): with N registered queries, a 50-row window and
-# the 4-round age limit, maintenance is ceil(N/4) rows per round, so
-# the novelty budget is 50 - ceil(N/4) new registrations per round
-# (~2-3 at N=191). We keep the registry intact rather than retiring
-# rows: every row maps to a distinct operator surface the judge's
-# coverage table cites, and raw/indexed twins are NOT redundant — the
-# indexed twin gates persistence/merge/staleness semantics its raw
-# sibling cannot (a drifted index hash-mismatches only if the twin has
-# its own row). The budget is enforced by arithmetic in this note each
-# round: a round may register more than the budget ONLY by retiring
-# equally many rows in the same commit, and retirement requires the
-# retired row's semantics to be pinned by a surviving pytest.
-# Preference order when slots are scarce: (1) clear debt, (2) re-gate
-# touched code, (3) register staged queries, (4) stage NEW work
-# library-first (full implementation + pytest + pre-validated oracle,
-# zero registration cost until a slot frees). Staging depth is never
-# capped - only registration is.
-_FRONT: tuple[str, ...] = (
-    # -- (a) the 48-row r13-cohort debt, 4 rounds old at r17 close
-    #    (the exact list precomputed in the rotation note above; the
-    #    row-age contract test named it verbatim at round start) --
-    "ann_hybrid_rrf_topk",
-    "ann_ivf_topk",
-    "ann_matryoshka_recall",
-    "ann_pq_topk_prod",
-    "ann_quantized_topk",
-    "array_functions",
-    "corpus_quality_model_score",
-    "corpus_score_quantile_norm",
-    "corpus_split_dedup_aware",
-    "decontam_bloom_indexed",
-    "dedup_exact_substrings",
-    "dedup_simhash",
-    "embedding_correlation_block",
-    "embedding_covariance_block",
-    "embedding_covariance_drift",
-    "embedding_pca_projection_pairdist",
-    "event_interarrival",
-    "event_transitions",
-    "funnel_conversion",
-    "heatmap_dow_hour",
-    "histogram_order_totals",
-    "json_extract_props",
-    "mm_binary_meta",
-    "mm_feature_extract",
-    "mm_frame_sample",
-    "mm_resize_images",
-    "pivot_status_by_segment",
-    "rolling_wau_hll",
-    "scalar_functions",
-    "stream_click_view_join",
-    "stream_dedup_events",
-    "stream_embedding_covariance_block",
-    "stream_session_append",
-    "stream_session_windows",
-    "stream_sliding_append",
-    "stream_sliding_counts",
-    "stream_stateful_totals",
-    "stream_static_enrich",
-    "stream_tumbling_append",
-    "stream_tumbling_hourly",
-    "stream_windowed_topk",
-    "string_agg_nations",
-    "text_bpe_tokens",
-    "text_fingerprint",
-    "text_langid",
-    "text_pii_redact",
-    "text_top_terms_udtf",
-    "unpivot_revenue_measures",
-    # -- (b) the r14-staged r17 registrant (drain-plan slot 1 of 2;
-    #    re-priced in-sweep this round per the ask-#4 rule — see
-    #    BENCH_NOTES.md r17 addendum) --
-    "decontam_semantic",
-    # -- (c) 1 chip against the 50-row r14 cohort (due in full at
-    #    r18), chosen where r17 has adjudication value: the seeded
-    #    pagerank row is r16-touched-but-unsampled (VERDICT r16 gate
-    #    note + Next-round item 1 asks for a pagerank row), and r17
-    #    touches it again (checkpoint-cadence work), so this one row
-    #    adjudicates both rounds of pagerank changes. --
-    "graph_pagerank_seeded",
-)
+# The driver verifies the first WINDOW registry entries each round and
+# writes the outcome to CORRECTNESS_r<NN>.json at the repo root; a
+# query's newest green row must be refreshed within 4 rounds
+# (tests/test_row_age_contract.py). So ``load_all`` puts first the
+# queries never verified, then those whose newest green round is
+# oldest, ties in registration order.
+WINDOW = 50
+_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def newest_green_rounds(repo: str = _REPO) -> tuple[dict[str, int], list[int]]:
+    """(newest green CORRECTNESS round per query, all round numbers seen).
+
+    A green row has err None and no explicit rows/hash/schema mismatch
+    (hash/schema default True because rows-only checks omit them — but
+    an explicit False is a failure, not a verification). No ledgers
+    (an installed copy) gives ``({}, [])``.
+    """
+    newest: dict[str, int] = {}
+    rounds: list[int] = []
+    for f in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
+        r = int(f.rsplit("_r", 1)[1].split(".")[0])
+        rounds.append(r)
+        with open(f) as fh:
+            ledger = json.load(fh)
+        for name, row in ledger.items():
+            if (
+                row.get("err") is None
+                and row.get("rows_match", True)
+                and row.get("hash_match", True)
+                and row.get("schema_match", True)
+            ):
+                newest[name] = max(newest.get(name, 0), r)
+    return newest, rounds
+
+
+def window_order(names: Iterable[str], repo: str = _REPO) -> list[str]:
+    """``names`` never verified first, then by oldest newest-green round;
+    ``sorted`` is stable, so ties keep the given order."""
+    newest, _ = newest_green_rounds(repo)
+    return sorted(names, key=lambda n: (n in newest, newest.get(n, 0)))
 
 
 def load_all() -> dict[str, QueryDef]:
-    """Import every query module so their registrations run.
-
-    Returns the registry reordered so never-driver-verified queries occupy
-    the front (see ``_FRONT``); round-2-green queries follow.
-    """
+    """Import every query module so their registrations run; return the
+    registry in ``window_order``."""
     from cassandrastack_spark.queries import (  # noqa: F401
         analytics,
         analytics_ext,
@@ -270,11 +134,4 @@ def load_all() -> dict[str, QueryDef]:
         tpch_ext,
     )
 
-    ordered: dict[str, QueryDef] = {}
-    for name in _FRONT:
-        if name in REGISTRY:
-            ordered[name] = REGISTRY[name]
-    for name, qd in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = qd
-    return ordered
+    return {name: REGISTRY[name] for name in window_order(REGISTRY)}

@@ -24,7 +24,13 @@ DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "3
 
 
 def get_spark(app_name: str = "cassandrastack-spark") -> SparkSession:
-    """Build (or reuse) the engine's SparkSession.
+    """Build (or reuse) the engine's SparkSession from ``spark_builder``."""
+    return spark_builder(app_name).getOrCreate()
+
+
+def spark_builder(app_name: str = "cassandrastack-spark") -> SparkSession.Builder:
+    """The engine's configured session builder; a tool adds its own
+    confs on top before ``getOrCreate()``.
 
     Every setting here is a plain public Spark conf:
 
@@ -46,7 +52,7 @@ def get_spark(app_name: str = "cassandrastack-spark") -> SparkSession:
       PySpark reads this once per process, so it is set here on the
       builder, not later through ``spark.conf.set``.
     """
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(DEFAULT_MASTER)
         .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
@@ -80,7 +86,6 @@ def get_spark(app_name: str = "cassandrastack-spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    return builder.getOrCreate()
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):

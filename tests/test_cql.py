@@ -1553,3 +1553,38 @@ def test_rejected_values_fail_as_before(cql):
     assert type(e.value) is PySparkValueError
     assert e.value.getCondition() == "FIELD_NOT_NULLABLE_WITH_NAME"
     assert len(api.get_users()) == 2
+
+
+def test_insert_without_a_key_or_with_a_count_mismatch_is_rejected(cql):
+    """CQL-created key columns are nullable, so the schema verifier does
+    not catch an INSERT that leaves one out or binds it to null; the
+    session rejects it as Cassandra does, and a BATCH INSERT whose
+    column and value counts differ fails like a single INSERT. Nothing
+    is written, including the valid rows of the same batch."""
+    cql.execute(
+        "CREATE KEYSPACE nk "
+        "WITH replication = {'class': 'SimpleStrategy', 'replication_factor': '1'}")
+    cql.execute("USE nk")
+    cql.execute("CREATE TABLE t (k text, c int, v text, PRIMARY KEY (k, c))")
+    ok = "INSERT INTO t (k, c, v) VALUES ('a', 1, 'x'); "
+    for stmt, params, msg in (
+        ("INSERT INTO t (c, v) VALUES (%s, %s)", (1, "x"),
+         "partition key parts are missing: k"),
+        ("INSERT INTO t (k, c, v) VALUES (%s, %s, %s)", (None, 1, "x"),
+         "partition key parts are missing: k"),
+        ("INSERT INTO t (k, v) VALUES (%s, %s) IF NOT EXISTS", ("a", "x"),
+         "clustering keys are missing: c"),
+        ("INSERT INTO t JSON %s", ('{"k": "a", "v": "x"}',),
+         "clustering keys are missing: c"),
+        ("BEGIN BATCH " + ok + "INSERT INTO t (k, c) VALUES ('b', null); "
+         "APPLY BATCH", (), "clustering keys are missing: c"),
+        ("BEGIN BATCH " + ok + "INSERT INTO t (k, v) VALUES ('b', 'y'); "
+         "APPLY BATCH", (), "clustering keys are missing: c"),
+        ("BEGIN BATCH " + ok + "INSERT INTO t (k, c, v) VALUES ('b', 2); "
+         "APPLY BATCH", (), "column/value count mismatch"),
+        ("BEGIN BATCH " + ok + "INSERT INTO t (k, c) VALUES ('b', 2, 'y'); "
+         "APPLY BATCH", (), "column/value count mismatch"),
+    ):
+        with pytest.raises(ValueError, match=msg):
+            cql.execute(stmt, params)
+    assert cql.execute("SELECT * FROM t") == []

@@ -322,37 +322,3 @@ def test_pagerank_round_plan_is_flat_and_constant(spark):
         "pagerank() must return a post-checkpoint scan, not stacked "
         "round lineage:\n" + final
     )
-
-
-def test_registry_front_window_contract(registry):
-    """The rotation contract is load-bearing: the driver verifies the
-    FIRST 50 presentation-order entries each round. Guard the two
-    silent failure modes: (a) a typo'd name in _FRONT is ignored by
-    load_all, shrinking the window without an error; (b) a registered
-    query that has never received an official CORRECTNESS row must
-    occupy a window slot, or it ships without the oracle gate."""
-    import glob
-    import json
-    import os
-
-    from cassandrastack_spark.queries import _FRONT
-
-    registered = set(registry)
-    unknown = [n for n in _FRONT if n not in registered]
-    assert not unknown, f"_FRONT names not registered (typo?): {unknown}"
-    assert len(set(_FRONT)) == len(_FRONT), "duplicate _FRONT entries"
-
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))
-    )
-    ledgers = glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json"))
-    assert ledgers, f"no CORRECTNESS ledgers under {repo_root}"
-    verified = set()
-    for p in ledgers:
-        verified |= set(json.load(open(p)))
-    never = registered - verified
-    window = list(registry)[:50]
-    missing = sorted(never - set(window))
-    assert not missing, (
-        f"never-verified queries outside the 50-entry window: {missing}"
-    )

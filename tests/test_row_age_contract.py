@@ -2,14 +2,10 @@
 
 Standing contract: every registered query's newest green CORRECTNESS
 row must be at most 3 rounds old at the close of the current round —
-or the query must sit inside the driver's 50-entry verification window
-so THIS round refreshes it. The rotation comment in
-cassandrastack_spark/queries/__init__.py has carried this commitment
-since r8; until now nothing failed when a round tried to defer a
-cohort past the limit (the way r8/r9 deferred the r6-era rows). This
-test makes over-aging mechanical: if a future round's _FRONT leaves an
-over-age cohort outside the window, pytest goes red before the round
-ships.
+or the query must sit inside the driver's ``WINDOW``-entry verification
+window so THIS round refreshes it. ``load_all`` computes that window
+from the ledgers (``window_order``); these tests pin the rule on
+synthetic ledgers and check that the repo's own ledgers fit it.
 
 "Current closing round" is inferred as (newest CORRECTNESS file's
 round + 1): during round N the repo holds files through r(N-1), and
@@ -18,18 +14,39 @@ the window being tested is the one the round-N driver will execute.
 
 from __future__ import annotations
 
-import os
+import json
 
-from cassandrastack_spark.queries import load_all
-from tools.row_age import newest_green_rounds
+from cassandrastack_spark.queries import (
+    WINDOW,
+    load_all,
+    newest_green_rounds,
+    window_order,
+)
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MAX_AGE_AT_CLOSE = 3
-WINDOW = 50
+
+
+def test_window_order_follows_the_ledgers(tmp_path):
+    names = ["a", "b", "c", "d", "e", "f"]
+    assert window_order(names, str(tmp_path)) == names
+    green = {"rows_match": True, "hash_match": True, "err": None}
+    ledgers = {
+        1: {"a": green, "b": {**green, "err": "boom"}, "c": green,
+            "d": {**green, "hash_match": False}},
+        2: {"a": {**green, "err": "boom"}, "c": green, "e": green,
+            "f": {**green, "rows_match": False}},
+    }
+    for r, rows in ledgers.items():
+        (tmp_path / f"CORRECTNESS_r{r:02d}.json").write_text(json.dumps(rows))
+    assert newest_green_rounds(str(tmp_path)) == ({"a": 1, "c": 2, "e": 2}, [1, 2])
+    # a failing row does not count as verified: b, d and f come first,
+    # in registration order, then a (r1, its r2 row failed), then c and
+    # e (r2) in registration order
+    assert window_order(names, str(tmp_path)) == ["b", "d", "f", "a", "c", "e"]
 
 
 def test_no_query_over_ages_outside_the_window():
-    newest, rounds = newest_green_rounds(REPO)
+    newest, rounds = newest_green_rounds()
     assert rounds, "no CORRECTNESS_r*.json files — driver artifacts missing"
     close_round = max(rounds) + 1
     registry = list(load_all())
@@ -44,13 +61,13 @@ def test_no_query_over_ages_outside_the_window():
     assert not over_aged, (
         f"{len(over_aged)} queries' newest green row is over "
         f"{MAX_AGE_AT_CLOSE} rounds old at r{close_round} close and they "
-        f"are NOT in the 50-entry verification window — rotate them into "
-        f"_FRONT (queries/__init__.py): {over_aged}"
+        f"are NOT in the {WINDOW}-entry verification window (too many "
+        f"due or never-verified queries, see tools/row_age.py): {over_aged}"
     )
 
 
 def test_never_verified_queries_are_in_the_window():
-    newest, rounds = newest_green_rounds(REPO)
+    newest, rounds = newest_green_rounds()
     assert rounds
     registry = list(load_all())
     window = set(registry[:WINDOW])

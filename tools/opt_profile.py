@@ -42,37 +42,14 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ.setdefault("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    os.environ["SPARK_GRAFT_EVENTLOG_DIR"] = EVDIR
-
-    from pyspark.sql import SparkSession
 
     from cassandrastack_spark.queries import load_all
+    from cassandrastack_spark.session import spark_builder
 
     registry = load_all()
-    # replicate the engine factory's confs + the event log (confs must
-    # be set before the session starts, so get_spark can't be reused)
-    from cassandrastack_spark.session import (
-        DEFAULT_MASTER,
-        DEFAULT_SHUFFLE_PARTITIONS,
-    )
-
+    # event-log confs must be set before the session starts
     spark = (
-        SparkSession.builder.appName("opt-profile")
-        .master(DEFAULT_MASTER)
-        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(16 * 1024 * 1024)),
-        )
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
+        spark_builder("opt-profile")
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", EVDIR)
         .config("spark.eventLog.compress", "false")
@@ -107,8 +84,6 @@ def main() -> None:
     jobs: dict[int, dict] = {}
     stages: dict[int, dict] = {}
     stage_to_job: dict[int, int] = {}
-    import itertools
-
     def _lines():
         for pf in part_files:
             with open(pf) as f:

@@ -1,62 +1,40 @@
 """Row-age audit: newest official CORRECTNESS round per registry query.
 
-The standing contract rotates never-verified and oldest-verified
-queries into the driver's 50-entry window each round (see the rotation
-comment in cassandrastack_spark/queries/__init__.py). This prints the
-facts that planning needs: the newest-round histogram, the queries at
-each age cohort, any registered query with NO official row yet, and
-whether the current _FRONT window covers every never-verified name.
+``load_all`` orders the registry from the CORRECTNESS ledgers
+(cassandrastack_spark/queries/__init__.py), so the driver's
+``WINDOW``-entry window always takes never-verified and oldest-verified
+queries first. This prints the newest-round histogram, the queries at
+each age cohort with their window membership, and any registered query
+with NO green row yet. Exit status 1 when the due and never-verified
+queries together exceed ``WINDOW``: the one way the window can fall
+short.
 
 Usage: python tools/row_age.py
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import sys
 from collections import Counter, defaultdict
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from cassandrastack_spark.queries import load_all  # noqa: E402
-
-
-def newest_green_rounds(repo: str) -> tuple[dict[str, int], list[int]]:
-    """(newest green CORRECTNESS round per query, all round numbers seen).
-
-    A green row has err None and no explicit rows/hash/schema mismatch
-    (hash/schema default True because rows-only checks omit them — but
-    an explicit False is a failure, not a verification). This is THE
-    definition of "verified" — row_age's audit and the row-age contract
-    test (tests/test_row_age_contract.py) both use it.
-    """
-    newest: dict[str, int] = {}
-    rounds: list[int] = []
-    for f in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        r = int(f.rsplit("_r", 1)[1].split(".")[0])
-        rounds.append(r)
-        for name, row in json.load(open(f)).items():
-            if (
-                row.get("err") is None
-                and row.get("rows_match", True)
-                and row.get("hash_match", True)
-                and row.get("schema_match", True)
-            ):
-                newest[name] = max(newest.get(name, 0), r)
-    return newest, rounds
+from cassandrastack_spark.queries import (  # noqa: E402
+    WINDOW,
+    load_all,
+    newest_green_rounds,
+)
 
 
 def main() -> int:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    newest, rounds = newest_green_rounds(repo)
+    newest, rounds = newest_green_rounds()
     if not rounds:
         print("no CORRECTNESS_r*.json files found")
         return 1
     cur = max(rounds)
     registry = list(load_all())
-    window = set(registry[:50])
+    window = set(registry[:WINDOW])
     never = [n for n in registry if n not in newest]
     print(f"registry: {len(registry)} queries; official rows through r{cur:02d}")
     print("newest-round histogram:",
@@ -65,9 +43,13 @@ def main() -> int:
     for n in registry:
         if n in newest:
             cohorts[newest[n]].append(n)
+    due = 0
     for r in sorted(cohorts):
         age = cur + 1 - r
-        flag = "  <-- due" if age >= 4 else ""
+        flag = ""
+        if age >= 4:
+            flag = "  <-- due"
+            due += len(cohorts[r])
         print(f"\nr{r} cohort ({len(cohorts[r])} rows, {age} rounds old "
               f"next round){flag}:")
         for n in sorted(cohorts[r]):
@@ -76,15 +58,13 @@ def main() -> int:
     if never:
         print(f"\nNEVER verified ({len(never)}):")
         for n in never:
-            mark = " [in window]" if n in window else "  <-- MUST enter window"
-            print(f"  {n}{mark}")
-        missing = [n for n in never if n not in window]
-        if missing:
-            print(f"\nWARNING: {len(missing)} never-verified queries are "
-                  "OUTSIDE the 50-entry window:", missing)
-            return 1
+            print(f"  {n}")
     else:
         print("\nevery registered query has at least one green row")
+    if due + len(never) > WINDOW:
+        print(f"\nWARNING: {due} due + {len(never)} never-verified queries "
+              f"exceed the {WINDOW}-entry window")
+        return 1
     return 0
 
 

@@ -6,8 +6,8 @@ column names, and values (columns sorted by name, rows sorted by all
 columns — order-insensitive, like the driver's value-hash).
 
 Usage: python tools/verify_local.py [sf_dir] [query ...] [--window]
-(--window adds the first 50 presentation-order entries — the driver's
-per-round window — to whatever names are given; it may appear
+(--window adds the first WINDOW presentation-order entries — the
+driver's per-round window — to whatever names are given; it may appear
 anywhere; the first non-flag argument is sf_dir.)
 """
 
@@ -24,7 +24,7 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from cassandrastack_spark.queries import load_all  # noqa: E402
+from cassandrastack_spark.queries import WINDOW, load_all  # noqa: E402
 
 
 def driver_like_spark() -> SparkSession:
@@ -115,9 +115,10 @@ def main() -> int:
         print(f"ERROR: names not in registry: {unmatched}")
         return 2
     if window:
-        # the driver verifies the FIRST 50 presentation-order entries;
-        # explicit names alongside the flag are verified IN ADDITION
-        only |= set(list(registry)[:50])
+        # the driver verifies the FIRST WINDOW presentation-order
+        # entries; explicit names alongside the flag are verified IN
+        # ADDITION
+        only |= set(list(registry)[:WINDOW])
     spark = driver_like_spark()
     con = duck_con(sf_dir)
     failures = 0
