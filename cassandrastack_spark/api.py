@@ -30,7 +30,7 @@ from pyspark.sql import SparkSession
 
 from cassandrastack_spark import schemas
 from cassandrastack_spark.catalog import Keyspace
-from cassandrastack_spark.storage import WideColumnTable, _local_frame
+from cassandrastack_spark.storage import WideColumnTable
 
 KEYSPACE = "socialmessagekeyspace"
 
@@ -99,7 +99,7 @@ class SocialMessageAPI:
                      _SEED_AUTHOR_A, "Nachricht 1 in Kanal 2"))
         rows.append((3, base + dt.timedelta(seconds=21), str(uuid.uuid4()),
                      _SEED_AUTHOR_B, "Nachricht 1 in Kanal 3"))
-        t.append(_local_frame(self.spark, rows, schemas.MESSAGES))
+        t.write_rows(rows)
         return {"table": "messages", "seeded": len(rows)}
 
     # -- GET /messages (R2: full scan) ------------------------------------------
@@ -161,7 +161,7 @@ class SocialMessageAPI:
 
     def get_channel_messages(self, channel_id: int) -> list[dict]:
         t = self._table("messages")
-        return [r.asDict() for r in t.read_partition(channel_id=channel_id).collect()]
+        return [r.asDict() for r in t.read_partition_rows(channel_id=channel_id)]
 
     # -- POST /channels/<id>/messages (W1 + W3 + W4) ------------------------------
 
@@ -170,11 +170,9 @@ class SocialMessageAPI:
             return {"error": "author_id and message are required"}, 400
         ts, mid = self._now()
         t = self._table("messages")
-        t.append(_local_frame(
-            self.spark,
-            [(int(channel_id), ts, mid, body["author_id"], body["message"])],
-            schemas.MESSAGES,
-        ))
+        t.write_rows(
+            [(int(channel_id), ts, mid, body["author_id"], body["message"])]
+        )
         return {"channel_id": channel_id, "message_id": mid}, 201
 
     # -- GET /users (R3: projection excludes password) ----------------------------
@@ -192,12 +190,10 @@ class SocialMessageAPI:
         t = self._table("users")
         _, ua = self._now()
         _, ub = self._now()
-        t.append(_local_frame(
-            self.spark,
-            [("Alex", ua, "alex@mail.de", "alex"),
-             ("Bianca", ub, "bianca@mail.de", "bianca")],
-            schemas.USERS,
-        ))
+        t.write_rows([
+            ("Alex", ua, "alex@mail.de", "alex"),
+            ("Bianca", ub, "bianca@mail.de", "bianca"),
+        ])
         return {"table": "users", "seeded": 2}
 
     # -- POST /users/login (R4: point lookup + predicate, bug fixed) ---------------
@@ -205,19 +201,15 @@ class SocialMessageAPI:
     def login(self, body: dict):
         if not body or "username" not in body or "password" not in body:
             return {"error": "username and password are required"}, 400
-        from pyspark.sql import functions as F
-
         t = self._table("users")
-        rows = (
-            t.read_partition(username=body["username"])
-            .filter(F.col("password") == body["password"])
-            .select("user_id", "username", "email")
-            .limit(1)
-            .collect()
-        )
+        rows = [
+            r for r in t.read_partition_rows(username=body["username"])
+            # SQL equality: a null password matches nothing
+            if r.password is not None and r.password == body["password"]
+        ]
         if not rows:  # unknown user OR wrong password -> 401 (not IndexError)
             return {"error": "unauthorized"}, 401
-        return rows[0].asDict(), 200
+        return {c: rows[0][c] for c in ("user_id", "username", "email")}, 200
 
     # -- POST /users/register (W2 + W3 + W4) ----------------------------------------
 
@@ -226,11 +218,7 @@ class SocialMessageAPI:
             return {"error": "username, email and password are required"}, 400
         _, uid = self._now()
         t = self._table("users")
-        t.append(_local_frame(
-            self.spark,
-            [(body["username"], uid, body["email"], body["password"])],
-            schemas.USERS,
-        ))
+        t.write_rows([(body["username"], uid, body["email"], body["password"])])
         return {"user_id": uid, "username": body["username"]}, 201
 
 

@@ -50,6 +50,7 @@ from pyspark.sql.types import (
 from cassandrastack_spark.catalog import Keyspace
 from cassandrastack_spark.storage import (
     WideColumnTable,
+    _internal_rows,
     _local_frame,
     _next_writetime,
 )
@@ -929,15 +930,19 @@ class CqlSession:
     @staticmethod
     def _require_keys(t: WideColumnTable, rows: list[dict]) -> None:
         """Reject an INSERT row that leaves out a primary-key column or
-        binds it to null, as Cassandra does. Runs after ``_local_frame``,
-        whose verifier already rejects a NOT NULL key (the REST tables);
-        CQL-created columns are all nullable, so only this catches them."""
+        binds it to null, as Cassandra does. A NOT NULL key column (the
+        REST tables) is left to the write's schema verifier, which
+        rejects it with PySpark's own error; CQL-created columns are all
+        nullable, so only this catches them."""
         for row in rows:
             for kind, keys in (
                 ("partition key parts", t.spec.partition_keys),
                 ("clustering keys", t.spec.clustering_keys),
             ):
-                missing = [c for c in keys if row.get(c) is None]
+                missing = [
+                    c for c in keys
+                    if row.get(c) is None and t.spec.schema[c].nullable
+                ]
                 if missing:
                     raise ValueError(
                         f"Some {kind} are missing: {', '.join(missing)}")
@@ -1010,15 +1015,14 @@ class CqlSession:
                     ts_micros = v
         t = self._table(name)
         row = dict(zip(cols, vals))
-        full = {
-            f.name: row.get(f.name) for f in t.spec.schema.fields
-        }
-        df = _local_frame(self.spark, [tuple(full.values())], t.spec.schema)
+        full = tuple(row.get(f.name) for f in t.spec.schema.fields)
         self._require_keys(t, [row])
         if m.group(4):
             if ts_micros is not None:
                 raise ValueError("IF NOT EXISTS with USING TIMESTAMP is not supported")
-            report = t.insert_if_not_exists(df)
+            report = t.insert_if_not_exists(
+                _local_frame(self.spark, [full], t.spec.schema)
+            )
             return [r.asDict() for r in report.collect()]
         # cell-level upsert: only the NAMED payload columns are written
         # (Cassandra INSERT leaves unnamed cells untouched; a named
@@ -1027,8 +1031,8 @@ class CqlSession:
         # marker — the row outlives later deletion of its cells, unlike
         # an UPDATE-created row
         cells = [c for c in cols if c not in t.spec.primary_key]
-        t.append(
-            df,
+        t.write_rows(
+            [full],
             ttl_seconds=ttl,
             timestamp_micros=ts_micros,
             cells=cells,
@@ -1071,21 +1075,22 @@ class CqlSession:
         per_group: dict[tuple[str, tuple[str, ...]], list[dict]] = {}
 
         def flush():
-            # every group is checked before any is written
+            # every group is checked before any is written (write_rows
+            # checks its own rows again: microseconds a row)
             writes = []
             for (name, cols), rows in per_group.items():
                 t = self._table(name)
+                self._require_keys(t, rows)
                 full = [
                     tuple(r.get(f.name) for f in t.spec.schema.fields)
                     for r in rows
                 ]
-                df = _local_frame(self.spark, full, t.spec.schema)
-                self._require_keys(t, rows)
+                _internal_rows(full, t.spec.schema)
                 cells = [c for c in cols if c not in t.spec.primary_key]
-                writes.append((t, df, cells))
-            for t, df, cells in writes:
+                writes.append((t, full, cells))
+            for t, full, cells in writes:
                 # INSERTs always deposit the marker
-                t.append(df, cells=cells, row_marker=True)
+                t.write_rows(full, cells=cells, row_marker=True)
             per_group.clear()
 
         for sub in stmts:
@@ -1484,9 +1489,22 @@ class CqlSession:
                     if not (has_pk and k in t.spec.partition_keys):
                         df = df.filter(F.col(k) == v)
             elif has_pk:
-                df = t.read_partition(
-                    **{k: eq[k] for k in t.spec.partition_keys}
-                )
+                key = {k: eq[k] for k in t.spec.partition_keys}
+                if t.point_local:
+                    # the driver-read rows as a local relation: every
+                    # step below runs on it unchanged, with no Spark job
+                    # for filters, projections, JSON and LIMIT. Columns
+                    # are nullable, as in Spark's own file reads.
+                    df = _local_frame(
+                        self.spark,
+                        t.read_partition_rows(**key),
+                        StructType([
+                            StructField(f.name, f.dataType)
+                            for f in t.spec.schema.fields
+                        ]),
+                    )
+                else:
+                    df = t.read_partition(**key)
                 for k, v in eq.items():
                     if k not in t.spec.partition_keys:
                         df = df.filter(F.col(k) == v)

@@ -33,6 +33,24 @@ Physical layout contract (SURVEY.md §1.4):
   local relation (``_local_frame``), so the append's projection runs on
   the driver and the bucket shuffle's map stage is one task.
 
+Request-path contract: Spark serves scans, multi-partition reads, bulk
+writes and ``compact()``; a request that names ONE partition of a plain
+table (no statics, collections, counters, materialized views or
+``guard``; atomic column types) is served on the driver with no Spark
+job. ``read_partition_rows`` routes with ``bucket_of``, reads the one
+``_bucket=k`` directory with ``pyarrow.dataset`` and reconciles in
+Python under exactly ``_reconcile_rows``' plain-path rules;
+``write_rows`` writes one clustering-sorted Parquet file per touched
+bucket under a ``.``-prefixed name and renames it into place. Readers
+(Spark's file index and the driver reader alike) skip ``.``/``_``
+files, so a file becomes visible whole or not at all. The rename is
+atomic on a local disk and on HDFS; an object store (S3, GCS) has no
+atomic rename, so at 100 TB on one the driver write path needs a
+manifest (a table format's commit log) before it can stand in for
+Spark's commit protocol there. A multi-bucket driver write becomes
+visible bucket by bucket: atomic per partition, as Cassandra's batches
+are isolated only within a partition.
+
 At 100 TB: n_buckets scales with data volume (buckets ≈ data /
 target_file_size); appends touch only the buckets their rows hash to;
 point reads stay O(1 bucket); full scans parallelize across buckets.
@@ -41,20 +59,28 @@ point reads stay O(1 bucket); full scans parallelize across buckets.
 from __future__ import annotations
 
 import itertools
+import os
 import time
+import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DoubleType,
+    FloatType,
     IntegerType,
     LongType,
     MapType,
     StringType,
     StructField,
     StructType,
+    TimestampType,
     _make_type_verifier,
 )
 
@@ -96,6 +122,89 @@ def _next_writetime() -> int:
     return int(time.time() * 1_000_000) * 1000 + (next(_write_counter) % 1000)
 
 
+def _stamp(
+    ttl_seconds: int | None, timestamp_micros: int | None
+) -> tuple[int, int | None]:
+    """A write's ``(_writetime, _expires)``.
+
+    USING TIMESTAMP: a client-supplied writetime (CQL's backfill /
+    idempotent-replay mechanism) slots the rows at that instant in
+    last-writer-wins order — a backdated write cannot clobber a newer
+    row. Scaled into the engine's (micros*1000 + seq) space at seq 0,
+    so it sorts strictly before any engine write in the same
+    microsecond (deterministic, replay-stable).
+
+    TTL counts from SERVER NOW, never from the (possibly client-
+    backdated) USING TIMESTAMP writetime — Cassandra expires TTL'd data
+    at now + ttl regardless of the write's LWW position, so a backfill
+    with an old timestamp must not arrive pre-expired. TTL 0 is CQL's
+    explicit "no TTL".
+    """
+    writetime = (
+        timestamp_micros * 1000
+        if timestamp_micros is not None
+        else _next_writetime()
+    )
+    expires = (
+        int(time.time() * 1_000_000) + ttl_seconds * 1_000_000
+        if ttl_seconds
+        else None
+    )
+    return writetime, expires
+
+
+def _is_marker(cells) -> bool:
+    """A row-marker write: ``_cells`` null (a full-row write), empty (a
+    key-only INSERT, or compact()'s rewrite of an all-null row) or
+    carrying the "" sentinel (a named-columns INSERT). The SQL forms in
+    ``_reconcile_rows`` and ``_reconciled_with_collections`` state the
+    same rule."""
+    return cells is None or len(cells) == 0 or "" in cells
+
+
+def _internal_rows(rows: list, schema: StructType) -> list[tuple]:
+    """``rows`` (one tuple per row, in ``schema`` order) checked and
+    converted as ``createDataFrame(..., verifySchema=True)`` does: each
+    row passes the type, integer-range and nullability checks (same
+    exceptions), then converts through the schema's own ``toInternal``
+    (a naive ``datetime`` is process-local time, in collections too)."""
+    verify = _make_type_verifier(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(row))
+    return internal
+
+
+# Column types the driver-local request path reads and writes; a table
+# with any other column type (a UDT struct, a frozen collection) keeps
+# the Spark path.
+_POINT_TYPES = (
+    StringType, IntegerType, LongType, DoubleType, FloatType, BooleanType,
+    TimestampType,
+)
+# The metadata columns a driver write stores and a driver read needs.
+_ARROW_META = [
+    pa.field(_WRITETIME, pa.int64()),
+    pa.field(_EXPIRES, pa.int64()),
+    pa.field(_TOMBSTONE, pa.bool_()),
+    pa.field(_CELLS, pa.list_(pa.string())),
+]
+# Spark stores timestamps as INT96, which pyarrow would read as
+# nanoseconds; read them as the microseconds Spark means.
+_PARQUET = ds.ParquetFileFormat(read_options={"coerce_int96_timestamp_unit": "us"})
+
+
+def _sort_key(value):
+    """Spark's ascending order for one clustering value: nulls first,
+    NaN after every number."""
+    if value is None:
+        return (0, 0)
+    if value != value:
+        return (2, 0)
+    return (1, value)
+
+
 def _q(name: str) -> str:
     """A column name as a backtick-quoted SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
@@ -119,17 +228,11 @@ def _local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFra
     ``_writetime``, ``_expires``, ``_cells``) on the driver, and the
     write's map stage is one task over ``LocalTableScan``.
 
-    The stored values are the ones ``createDataFrame`` stores. Each row
-    first passes the checks ``verifySchema`` runs (type, integer range,
-    nullability; same exceptions), then converts through the schema's
-    own ``toInternal``: a naive ``datetime`` is process-local time, in
-    collections too, and the Arrow columns carry the UTC instants.
+    The stored values are the ones ``createDataFrame`` stores: the rows
+    pass ``_internal_rows``, and the Arrow columns carry the UTC
+    instants.
     """
-    verify = _make_type_verifier(schema)
-    internal = []
-    for row in rows:
-        verify(row)
-        internal.append(schema.toInternal(row))
+    internal = _internal_rows(rows, schema)
     columns = [[r[i] for r in internal] for i in range(len(schema.fields))]
     # Before pyarrow 17, PySpark rebuilds a map column that holds
     # timestamps without its null mask (SPARK-48302), so a null map would
@@ -196,6 +299,16 @@ class WideColumnTable:
         key_cols = [F.col(c) for c in self.spec.partition_keys]
         return df.withColumn(
             _BUCKET, F.pmod(F.hash(*key_cols), F.lit(self.n_buckets))
+        )
+
+    def _route(self, key: list) -> int:
+        """The bucket of one partition key (values in partition-key
+        order): pure driver-side arithmetic (hashing.py is a bit-exact
+        mirror of F.hash), no Spark job per point request. The DECLARED
+        column types drive the hash dispatch."""
+        types = {f.name: f.dataType.simpleString() for f in self.spec.schema.fields}
+        return bucket_of(
+            key, self.n_buckets, dtypes=[types[k] for k in self.spec.partition_keys]
         )
 
     def _warn_large_partitions(self, df: DataFrame, where: str) -> None:
@@ -272,18 +385,7 @@ class WideColumnTable:
         write per update to generate the view tombstone; a bulk engine
         takes the rebuild instead (SURVEY.md §7.1 trade-off).
         """
-        if ttl_seconds is not None and self.spec.properties.get("counter_columns"):
-            raise ValueError("counter tables do not support TTL (CQL rule)")
-        if cells is not None:
-            nonkey = {
-                f.name for f in self.spec.schema.fields
-                if f.name not in self.spec.primary_key
-            }
-            bad = set(cells) - nonkey
-            if bad:
-                raise ValueError(
-                    f"cells must name non-key payload columns, got {sorted(bad)}"
-                )
+        self._check_write(ttl_seconds, cells)
         declared = [f.name for f in self.spec.schema.fields]
         missing = set(declared) - set(df.columns)
         extra = set(df.columns) - set(declared)
@@ -295,27 +397,7 @@ class WideColumnTable:
         out = df.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in self.spec.schema.fields]
         )
-        # USING TIMESTAMP: a client-supplied writetime (CQL's backfill /
-        # idempotent-replay mechanism) slots the rows at that instant in
-        # last-writer-wins order — a backdated append cannot clobber a
-        # newer row. Scaled into the engine's (micros*1000 + seq) space
-        # at seq 0, so it sorts strictly before any engine write in the
-        # same microsecond (deterministic, replay-stable).
-        writetime = (
-            timestamp_micros * 1000
-            if timestamp_micros is not None
-            else _next_writetime()
-        )
-        # TTL counts from SERVER NOW, never from the (possibly client-
-        # backdated) USING TIMESTAMP writetime — Cassandra expires TTL'd
-        # data at now + ttl regardless of the write's LWW position, so a
-        # backfill with an old timestamp must not arrive pre-expired.
-        # TTL 0 is CQL's explicit "no TTL".
-        expires = (
-            int(time.time() * 1_000_000) + ttl_seconds * 1_000_000
-            if ttl_seconds
-            else None
-        )
+        writetime, expires = _stamp(ttl_seconds, timestamp_micros)
         out = (
             self._with_bucket(out)
             .withColumn(_WRITETIME, F.lit(writetime))
@@ -354,6 +436,120 @@ class WideColumnTable:
                 else [c for c in cells if c not in view.spec.primary_key],
                 row_marker=row_marker,
             )
+
+    def _check_write(self, ttl_seconds: int | None, cells: list[str] | None) -> None:
+        if ttl_seconds is not None and self.spec.properties.get("counter_columns"):
+            raise ValueError("counter tables do not support TTL (CQL rule)")
+        if cells is not None:
+            nonkey = {
+                f.name for f in self.spec.schema.fields
+                if f.name not in self.spec.primary_key
+            }
+            bad = set(cells) - nonkey
+            if bad:
+                raise ValueError(
+                    f"cells must name non-key payload columns, got {sorted(bad)}"
+                )
+
+    @property
+    def point_local(self) -> bool:
+        """Whether single-partition requests on this table run on the
+        driver (``read_partition_rows``, ``write_rows``): a plain table
+        of atomic columns, with no statics, collections, counters,
+        materialized views (as base or view) or ``guard``. Every other
+        table keeps the Spark path, whose reconciliation and write
+        propagation those features need."""
+        props = self.spec.properties
+        return (
+            self.guard is None
+            and not props.get("static_columns")
+            and not props.get("collection_columns")
+            and not props.get("counter_columns")
+            and not props.get("materialized_view_of")
+            and not self.keyspace.views.get(self.spec.name)
+            and all(
+                isinstance(f.dataType, _POINT_TYPES)
+                for f in self.spec.schema.fields
+            )
+        )
+
+    def write_rows(
+        self,
+        rows: list,
+        cells: list[str] | None = None,
+        row_marker: bool = False,
+        ttl_seconds: int | None = None,
+        timestamp_micros: int | None = None,
+    ) -> None:
+        """``append`` for driver-built rows (one tuple per row, in
+        schema order), with ``append``'s meaning for every argument.
+
+        On a ``point_local`` table no Spark job runs: the rows pass
+        ``_internal_rows``, take one ``_stamp``, and each touched bucket
+        gets one Parquet file, clustering-sorted, written under a hidden
+        ``.`` name and renamed into place once every file is written.
+        The file holds what ``append`` writes (timestamps as UTC micros,
+        ``_cells``, no ``_bucket`` column), so ``_raw()`` reads both
+        alike. Other tables append the rows as a local relation.
+        """
+        if not self.point_local:
+            self.append(
+                _local_frame(self.spark, rows, self.spec.schema),
+                ttl_seconds=ttl_seconds,
+                timestamp_micros=timestamp_micros,
+                cells=cells,
+                row_marker=row_marker,
+            )
+            return
+        self._check_write(ttl_seconds, cells)
+        schema = self.spec.schema
+        internal = _internal_rows(rows, schema)
+        writetime, expires = _stamp(ttl_seconds, timestamp_micros)
+        written = (
+            None if cells is None else [*cells, *([""] if row_marker else [])]
+        )
+        pk_at = [schema.names.index(k) for k in self.spec.partition_keys]
+        buckets: dict[int, list[tuple]] = {}
+        for r in internal:
+            buckets.setdefault(self._route([r[i] for i in pk_at]), []).append(r)
+        file_schema = pa.schema(list(to_arrow_schema(schema)) + _ARROW_META)
+        renames = []
+        try:
+            for b, part in sorted(buckets.items()):
+                self._sort_rows(part)
+                n = len(part)
+                columns = [list(c) for c in zip(*part)] + [
+                    [writetime] * n, [expires] * n, [False] * n, [written] * n,
+                ]
+                table = pa.Table.from_arrays(
+                    [pa.array(c, type=f.type) for c, f in zip(columns, file_schema)],
+                    schema=file_schema,
+                )
+                bucket_dir = os.path.join(self.path, f"{_BUCKET}={b}")
+                os.makedirs(bucket_dir, exist_ok=True)
+                name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+                hidden = os.path.join(bucket_dir, "." + name)
+                renames.append((hidden, os.path.join(bucket_dir, name)))
+                pq.write_table(table, hidden)
+            for hidden, visible in renames:
+                os.replace(hidden, visible)
+        except BaseException:
+            for hidden, _ in renames:
+                if os.path.exists(hidden):
+                    os.remove(hidden)
+            raise
+
+    def _sort_rows(self, rows: list) -> None:
+        """Sort one partition's rows (internal values, schema order) in
+        place into the clustering order ``_sort_cols`` gives Spark."""
+        keys = self.spec.clustering_keys
+        if not keys:
+            return
+        at = [self.spec.schema.names.index(k) for k in keys]
+        rows.sort(
+            key=lambda r: tuple(_sort_key(r[i]) for i in at),
+            reverse=self.spec.clustering_desc,
+        )
 
     def insert_if_not_exists(self, df: DataFrame) -> DataFrame:
         """CQL lightweight transaction: ``INSERT ... IF NOT EXISTS``.
@@ -416,13 +612,18 @@ class WideColumnTable:
     def _current_row(self, keys: dict):
         """The live row for one FULL primary key, or None — a pruned
         point read (driver-side bucket arithmetic + clustering-equality
-        filters), the probe under every single-key LWT."""
+        filters), the probe under every single-key LWT. Driver-local on
+        a ``point_local`` table."""
         pk = self.spec.primary_key
         if set(keys) != set(pk):
             raise ValueError(f"need the full primary key {pk}, got {sorted(keys)}")
-        df = self.read_partition(
-            **{k: keys[k] for k in self.spec.partition_keys}
-        )
+        partition = {k: keys[k] for k in self.spec.partition_keys}
+        if self.point_local:
+            for row in self.read_partition_rows(**partition):
+                if all(row[c] == keys[c] for c in self.spec.clustering_keys):
+                    return row
+            return None
+        df = self.read_partition(**partition)
         for c in self.spec.clustering_keys:
             df = df.filter(F.col(c) == keys[c])
         rows = df.limit(1).collect()
@@ -560,11 +761,7 @@ class WideColumnTable:
                 for f in self.spec.schema.fields
             ]
         )
-        writetime = (
-            timestamp_micros * 1000
-            if timestamp_micros is not None
-            else _next_writetime()
-        )
+        writetime, _ = _stamp(None, timestamp_micros)
         out = (
             self._with_bucket(out)
             .withColumn(_WRITETIME, F.lit(writetime))
@@ -839,9 +1036,11 @@ class WideColumnTable:
         # marker writes: _cells null (full-row INSERT), EMPTY (a
         # key-only INSERT, and compact()'s rewrite of an all-null row),
         # or carrying the "" sentinel (a named-columns INSERT — CQL
-        # INSERTs always deposit the marker, UPDATEs never do)
+        # INSERTs always deposit the marker, UPDATEs never do); the
+        # same rule as _is_marker. The null test is explicit: size(NULL)
+        # is NULL under ANSI mode but -1 without it.
         marker_key = (
-            f"CASE WHEN (coalesce(size({cells}), 0) = 0 "
+            f"CASE WHEN ({cells} IS NULL OR size({cells}) = 0 "
             f"OR array_contains({cells}, '')) AND NOT {is_tomb} THEN {wt} END"
         )
         aggs += [
@@ -1002,7 +1201,8 @@ class WideColumnTable:
         marker_key = F.when(
             F.col(_COLL_COL).isNull()
             & (
-                (F.coalesce(F.size(F.col(_CELLS)), F.lit(0)) == 0)
+                F.col(_CELLS).isNull()
+                | (F.size(F.col(_CELLS)) == 0)
                 | F.array_contains(F.col(_CELLS), F.lit(""))
             )
             & ~F.coalesce(F.col(_TOMBSTONE), F.lit(False)),
@@ -1202,16 +1402,8 @@ class WideColumnTable:
                 raise ValueError(
                     f"partition read needs exactly {self.spec.partition_keys}"
                 )
-            types = {
-                f.name: f.dataType.simpleString()
-                for f in self.spec.schema.fields
-            }
-            bucket = bucket_of(
-                [key_values[k] for k in self.spec.partition_keys],
-                self.n_buckets,
-                dtypes=[types[k] for k in self.spec.partition_keys],
-            )
-            raw = raw.filter(F.col(_BUCKET) == int(bucket))
+            bucket = self._route([key_values[k] for k in self.spec.partition_keys])
+            raw = raw.filter(F.col(_BUCKET) == bucket)
             for k, v in key_values.items():
                 raw = raw.filter(F.col(k) == v)
         rec = self._reconciled(raw, cell_meta=True).drop(_WRITETIME)
@@ -1238,16 +1430,8 @@ class WideColumnTable:
             raise ValueError(
                 f"partition read needs exactly {self.spec.partition_keys}"
             )
-        # Bucket routing is pure driver-side arithmetic (hashing.py is a
-        # bit-exact mirror of F.hash) — no Spark job per point lookup.
-        # The DECLARED column types drive the hash dispatch.
-        types = {f.name: f.dataType.simpleString() for f in self.spec.schema.fields}
-        bucket = bucket_of(
-            [key_values[k] for k in self.spec.partition_keys],
-            self.n_buckets,
-            dtypes=[types[k] for k in self.spec.partition_keys],
-        )
-        raw = self._raw().filter(F.col(_BUCKET) == int(bucket))
+        bucket = self._route([key_values[k] for k in self.spec.partition_keys])
+        raw = self._raw().filter(F.col(_BUCKET) == bucket)
         for k, v in key_values.items():
             raw = raw.filter(F.col(k) == v)
         return (
@@ -1256,6 +1440,124 @@ class WideColumnTable:
             .coalesce(1)
             .sortWithinPartitions(*self._sort_cols())
         )
+
+    def read_partition_rows(self, **key_values) -> list:
+        """``read_partition(**key_values).collect()``, served on the
+        driver for a ``point_local`` table (no Spark job; other tables
+        collect the Spark read).
+
+        The driver routes with ``bucket_of``, reads the one
+        ``_bucket=k`` directory with ``pyarrow.dataset`` filtered on the
+        key (hidden ``.``/``_`` files skipped, columns a file lacks read
+        as null), reconciles with ``_reconcile_rows``' plain-path rules
+        in ``_reconcile_partition``, sorts into clustering order and
+        converts through the schema's ``fromInternal`` — the same Rows,
+        in the same order, that ``collect()`` returns.
+        """
+        if not self.point_local:
+            return self.read_partition(**key_values).collect()
+        if set(key_values) != set(self.spec.partition_keys):
+            raise ValueError(
+                f"partition read needs exactly {self.spec.partition_keys}"
+            )
+        schema = self.spec.schema
+        key = {k: schema[k].dataType.toInternal(v) for k, v in key_values.items()}
+        bucket = self._route([key[k] for k in self.spec.partition_keys])
+        bucket_dir = os.path.join(self.path, f"{_BUCKET}={bucket}")
+        if not os.path.isdir(bucket_dir):
+            return []
+        arrow = to_arrow_schema(schema)
+        read_schema = pa.schema(
+            [f.with_nullable(True) for f in arrow] + _ARROW_META
+        )
+        match = None
+        for k, v in key.items():
+            term = pc.field(k) == pa.scalar(v, type=arrow.field(k).type)
+            match = term if match is None else match & term
+        table = ds.dataset(bucket_dir, schema=read_schema, format=_PARQUET).to_table(
+            filter=match
+        )
+        columns = {}
+        for f in read_schema:
+            col = table.column(f.name)
+            if pa.types.is_timestamp(f.type):
+                col = col.cast(pa.int64())  # internal micros
+            columns[f.name] = col.to_pylist()
+        names = read_schema.names
+        raw = [dict(zip(names, vals)) for vals in zip(*(columns[n] for n in names))]
+        rows = self._reconcile_partition(raw, int(time.time() * 1_000_000))
+        self._sort_rows(rows)
+        return [schema.fromInternal(r) for r in rows]
+
+    def _reconcile_partition(self, raw: list[dict], now_micros: int) -> list[tuple]:
+        """``_reconcile_rows``' plain path over one partition's raw rows
+        (internal values), in Python; returns live rows as internal
+        tuples in schema order. Same rules, same names:
+
+        - each payload cell takes the newest write that set it
+          (``_cells`` null or naming it), with that write's expiry;
+        - the row marker is the newest non-tombstone marker write
+          (``_is_marker``), with its expiry;
+        - cells and markers at or before the newest tombstone are dead;
+        - a key whose newest write is a tombstone is gone;
+        - expiry is applied after reconciliation: a key lives while its
+          marker or any non-null cell is live at ``now_micros``.
+
+        A writetime tie (two rows of one write, e.g. a BATCH naming one
+        key twice) goes to the row read last, as ``max_by`` resolves it:
+        within one file that is statement order on both paths.
+        """
+        pk = self.spec.primary_key
+        data_cols = [n for n in self.spec.schema.names if n not in pk]
+        groups: dict[tuple, dict] = {}
+        for r in raw:
+            w = r[_WRITETIME]
+            cells = r[_CELLS]
+            is_tomb = bool(r[_TOMBSTONE])
+            g = groups.get(tuple(r[k] for k in pk))
+            if g is None:
+                g = groups[tuple(r[k] for k in pk)] = {
+                    "row": r, "sv": {}, "w": None, "tomb": None,
+                    "marker_w": None, "marker_e": None, "tomb_w": None,
+                }
+            for c in data_cols:
+                if cells is None or c in cells:
+                    sv = g["sv"].get(c)
+                    if sv is None or w >= sv[0]:
+                        g["sv"][c] = (w, r[c], r[_EXPIRES])
+            if g["w"] is None or w >= g["w"]:
+                g["w"], g["tomb"] = w, r[_TOMBSTONE]
+            if _is_marker(cells) and not is_tomb:
+                if g["marker_w"] is None or w >= g["marker_w"]:
+                    g["marker_w"], g["marker_e"] = w, r[_EXPIRES]
+            if is_tomb and (g["tomb_w"] is None or w > g["tomb_w"]):
+                g["tomb_w"] = w
+        out = []
+        for g in groups.values():
+            if g["tomb"]:
+                continue
+            tomb_w = -1 if g["tomb_w"] is None else g["tomb_w"]
+            values = {}
+            live = (
+                g["marker_w"] is not None
+                and g["marker_w"] > tomb_w
+                and (g["marker_e"] is None or g["marker_e"] > now_micros)
+            )
+            for c in data_cols:
+                sv = g["sv"].get(c)
+                visible = (
+                    sv is not None
+                    and sv[0] > tomb_w
+                    and (sv[2] is None or sv[2] > now_micros)
+                )
+                values[c] = sv[1] if visible else None
+                live = live or (visible and sv[1] is not None)
+            if live:
+                out.append(tuple(
+                    values[n] if n in values else g["row"][n]
+                    for n in self.spec.schema.names
+                ))
+        return out
 
     def read_partitions(self, keys: list[dict]) -> DataFrame:
         """CQL ``WHERE pk IN (...)``: a multi-partition read, pruned to
@@ -1275,19 +1577,7 @@ class WideColumnTable:
         for kv in keys:
             if set(kv) != set(pkeys):
                 raise ValueError(f"each key needs exactly {pkeys}, got {sorted(kv)}")
-        types = {f.name: f.dataType.simpleString() for f in self.spec.schema.fields}
-        buckets = sorted(
-            {
-                int(
-                    bucket_of(
-                        [kv[k] for k in pkeys],
-                        self.n_buckets,
-                        dtypes=[types[k] for k in pkeys],
-                    )
-                )
-                for kv in keys
-            }
-        )
+        buckets = sorted({self._route([kv[k] for k in pkeys]) for kv in keys})
         raw = self._raw().filter(F.col(_BUCKET).isin(buckets))
         key_tuples = sorted({tuple(kv[k] for k in pkeys) for kv in keys})
         if len(pkeys) == 1:

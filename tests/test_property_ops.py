@@ -9,7 +9,7 @@ partitions, duplicate timestamps.
 
 import datetime as dt
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -117,11 +117,12 @@ def test_rollup_ladder_reaggregation_exact(spark):
 # ---------------------------------------------------------------------------
 
 _store_keys = st.sampled_from(["a", "b", "c", "d"])
+_writers = st.sampled_from(["spark", "driver"])
 _ops = st.lists(
     st.one_of(
-        st.tuples(st.just("put"), _store_keys, st.integers(0, 99)),
-        st.tuples(st.just("del"), _store_keys, st.just(0)),
-        st.tuples(st.just("ttl0"), _store_keys, st.integers(0, 99)),
+        st.tuples(st.just("put"), _store_keys, st.integers(0, 99), _writers),
+        st.tuples(st.just("del"), _store_keys, st.just(0), st.just("spark")),
+        st.tuples(st.just("ttl0"), _store_keys, st.integers(0, 99), _writers),
     ),
     min_size=1,
     max_size=8,
@@ -133,8 +134,10 @@ _ops = st.lists(
 @given(_ops, st.booleans())
 def test_storage_reconciliation_matches_model(spark, tmp_path_factory, ops, do_compact):
     """Any interleaving of upserts, deletes, and already-expired TTL
-    writes must read back exactly like a last-writer-wins dict (expired
-    = delete), before AND after compaction."""
+    writes, by Spark (``append``) or the driver (``write_rows``), must
+    read back exactly like a last-writer-wins dict (expired = delete),
+    through the Spark scan and the driver point read, before AND after
+    compaction."""
     import time as _time
 
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
@@ -151,24 +154,168 @@ def test_storage_reconciliation_matches_model(spark, tmp_path_factory, ops, do_c
     spec = ks.create_table("kv", schema, ["k"])
     t = WideColumnTable(spark, ks, spec, n_buckets=2)
 
+    def write(writer, row, **kwargs):
+        if writer == "spark":
+            t.append(spark.createDataFrame([row], schema), **kwargs)
+        else:
+            t.write_rows([row], **kwargs)
+
+    def check():
+        assert {r.k: r.v for r in t.read().collect()} == model
+        point = {}
+        for k in ("a", "b", "c", "d"):
+            point.update((r.k, r.v) for r in t.read_partition_rows(k=k))
+        assert point == model
+
     model: dict = {}
-    for op, k, v in ops:
+    for op, k, v, writer in ops:
         if op == "put":
-            t.append(spark.createDataFrame([(k, v)], schema))
+            write(writer, (k, v))
             model[k] = v
         elif op == "del":
             t.delete(spark.createDataFrame([(k,)], "k string"))
             model.pop(k, None)
         else:  # short ttl: after the expiry sleep below, behaves like delete
-            t.append(spark.createDataFrame([(k, v)], schema), ttl_seconds=1)
+            write(writer, (k, v), ttl_seconds=1)
             model.pop(k, None)
     _time.sleep(1.2)  # let every ttl'd row cross its expiry instant
-    got = {r.k: r.v for r in t.read().collect()}
-    assert got == model
+    check()
     if do_compact:
         t.compact()
-        got = {r.k: r.v for r in t.read().collect()}
-        assert got == model
+        check()
+    ks.drop()
+
+
+_diff_values = st.tuples(
+    st.one_of(st.none(), st.integers(0, 99)),  # v
+    st.one_of(st.none(), st.integers(0, 10**7)),  # ts, micros after BASE
+    st.one_of(st.none(), st.sampled_from(["x", "y"])),  # w
+)
+
+
+@st.composite
+def _diff_write(draw):
+    op = draw(st.sampled_from(["put", "cells", "cells", "del"]))
+    return {
+        "op": op,
+        # deletes have no driver path; they come from Spark only
+        "writer": "spark" if op == "del" else draw(st.sampled_from(["spark", "driver"])),
+        "key": (draw(st.sampled_from(["a", "b"])), draw(st.integers(0, 1))),
+        "values": draw(_diff_values),
+        "cells": sorted(draw(st.sets(st.sampled_from(["v", "ts", "w"])))),
+        "marker": draw(st.booleans()),
+        "ttl": draw(st.sampled_from([None, None, 1, 3600])),
+        "stamp": draw(st.sampled_from([None, None, "past", "future"])),
+    }
+
+
+def _w(op, writer, key, values=(None, None, None), cells=(), marker=False,
+       ttl=None, stamp=None):
+    return {"op": op, "writer": writer, "key": key, "values": values,
+            "cells": list(cells), "marker": marker, "ttl": ttl, "stamp": stamp}
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(st.lists(_diff_write(), min_size=2, max_size=14), st.booleans(),
+       st.booleans())
+# each reconciliation rule, once for sure: a cells write after a delete
+# revives the key without its pre-delete cells; a live cell outlives an
+# expired row marker; a future client timestamp beats a later engine
+# write, and a backdated delete shadows nothing newer; a key-only write
+# keeps the key
+@example([
+    _w("put", "driver", ("a", 0), (1, 5, "x")),
+    _w("del", "spark", ("a", 0)),
+    _w("cells", "driver", ("a", 0), (None, None, "y"), cells=["w"]),
+    _w("put", "spark", ("a", 1), (2, 6, "x"), ttl=1),
+    _w("cells", "driver", ("a", 1), (7, None, None), cells=["v"]),
+    _w("cells", "spark", ("b", 0), (3, None, None), cells=["v"], marker=True,
+       ttl=1),
+    _w("cells", "driver", ("b", 0)),  # key-only: an empty cell set is a marker
+    _w("put", "driver", ("b", 1), (4, 7, "z"), stamp="future"),
+    _w("put", "spark", ("b", 1), (5, 8, "x")),
+    _w("del", "spark", ("b", 1), stamp="past"),
+], True, True)
+def test_driver_reconciler_matches_spark(spark, tmp_path_factory, writes, desc,
+                                         do_compact):
+    """The driver-local point read (``read_partition_rows``) returns
+    exactly ``read_partition().collect()`` — same rows, values, types and
+    clustering order — for any interleaving of full-row and partial-cell
+    writes (with and without the INSERT row marker), ``USING TIMESTAMP``
+    writes before and after the engine's own, short and long TTLs and
+    deletes, written by Spark (``append``) and by the driver
+    (``write_rows``) into shared buckets; before and after
+    ``compact()``, and read again with the process in Europe/Berlin."""
+    import os
+    import time as _time
+
+    from pyspark.sql.types import (
+        IntegerType, StringType, StructField, StructType, TimestampType,
+    )
+
+    from cassandrastack_spark.catalog import Keyspace
+    from cassandrastack_spark.storage import WideColumnTable
+
+    wh = str(tmp_path_factory.mktemp("propd"))
+    ks = Keyspace(spark, "propd", wh).create()
+    schema = StructType([
+        StructField("k", StringType(), False),
+        StructField("c", IntegerType(), False),
+        StructField("v", IntegerType(), True),
+        StructField("ts", TimestampType(), True),
+        StructField("w", StringType(), True),
+    ])
+    spec = ks.create_table("kcv", schema, ["k"], ["c"], clustering_desc=desc)
+    # one bucket: Spark- and driver-written files share it
+    t = WideColumnTable(spark, ks, spec, n_buckets=1)
+    assert t.point_local
+
+    now = int(_time.time() * 1_000_000)
+    for i, op in enumerate(writes):
+        # client timestamps well before or after every engine writetime,
+        # distinct per write (ties would make either winner legal)
+        stamp = {
+            None: None,
+            "past": now - 60_000_000 + i,
+            "future": now + 3_600_000_000 + i,
+        }[op["stamp"]]
+        (k, c), (v, ts, w) = op["key"], op["values"]
+        if op["op"] == "del":
+            t.delete(spark.createDataFrame([(k, c)], "k string, c int"),
+                     timestamp_micros=stamp)
+            continue
+        row = (k, c, v, None if ts is None else BASE + dt.timedelta(microseconds=ts), w)
+        kwargs = {"ttl_seconds": op["ttl"], "timestamp_micros": stamp}
+        if op["op"] == "cells":
+            kwargs.update(cells=op["cells"], row_marker=op["marker"])
+        if op["writer"] == "spark":
+            t.append(spark.createDataFrame([row], schema), **kwargs)
+        else:
+            t.write_rows([row], **kwargs)
+    if any(op["ttl"] == 1 for op in writes):
+        _time.sleep(1.2)  # every short TTL is past, so no read races it
+
+    def check():
+        for k in ("a", "b"):
+            want = [r.asDict() for r in t.read_partition(k=k).collect()]
+            assert [r.asDict() for r in t.read_partition_rows(k=k)] == want
+
+    check()
+    tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Europe/Berlin"
+    _time.tzset()
+    try:
+        check()
+    finally:
+        if tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = tz
+        _time.tzset()
+    if do_compact:
+        t.compact()
+        check()
     ks.drop()
 
 

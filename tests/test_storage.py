@@ -200,44 +200,125 @@ def test_point_read_and_small_append_job_budget(spark, ks):
         assert len(files) == 1, f"{d} holds {files}"
 
 
-def test_rest_write_reads_a_local_relation(spark, tmp_warehouse, monkeypatch):
-    """A REST write's one row reaches the bucket shuffle as a local
-    relation: the map stage is one task over ``LocalTableScan`` (no
-    ``ExistingRDD`` parallelized into ``defaultParallelism`` slices),
-    and the touched bucket gets one new file."""
+def test_point_requests_run_no_spark_job(spark, tmp_warehouse):
+    """Every request that names one partition of a plain table runs on
+    the driver: no Spark job for a REST post, register, channel read or
+    login, nor for a CQL INSERT, keyed SELECT or BATCH INSERT. A write
+    leaves exactly one new visible part file in the touched bucket and
+    no hidden temp file. A table with a static column keeps the Spark
+    path."""
     from cassandrastack_spark.api import SocialMessageAPI
+    from cassandrastack_spark.cql import CqlSession
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_of(request):
+        before = set(tracker.getJobIdsForGroup(None))
+        out = request()
+        return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    def files(path):
+        return set(os.listdir(path)) if os.path.isdir(path) else set()
+
+    def new_files(bucket_dir, request):
+        before = files(bucket_dir)
+        out, jobs = jobs_of(request)
+        assert jobs == 0, f"{jobs} Spark jobs"
+        added = files(bucket_dir) - before
+        assert not [f for f in os.listdir(bucket_dir) if f.startswith(".")]
+        visible = [f for f in added if not f.startswith((".", "_"))]
+        assert len(visible) == 1 and re.fullmatch(
+            r"part-.*\.parquet", visible[0]), added
+        return out
 
     api = SocialMessageAPI(spark, tmp_warehouse, n_buckets=4)
     api.create()
     api.messages_create()
-    bucket_dir = os.path.join(
+    api.users_create()
+    channel_dir = os.path.join(
         api.keyspace.table_path("messages"),
         f"_bucket={bucket_of([1], 4, dtypes=['bigint'])}",
     )
-    files_before = set(os.listdir(bucket_dir))
-    written = []
-    write = WideColumnTable._write_buckets
-
-    def capture(self, out, mode):
-        written.append(out)
-        return write(self, out, mode)
-
-    monkeypatch.setattr(WideColumnTable, "_write_buckets", capture)
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    _, code = api.post_channel_message(1, {"author_id": "u-1", "message": "hi"})
-    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    user_dir = os.path.join(
+        api.keyspace.table_path("users"),
+        f"_bucket={bucket_of(['zoe'], 4, dtypes=['string'])}",
+    )
+    _, code = new_files(channel_dir, lambda: api.post_channel_message(
+        1, {"author_id": "u-1", "message": "hi"}))
     assert code == 201
-    first_stage = min(tracker.getJobInfo(min(jobs)).stageIds)
-    assert tracker.getStageInfo(first_stage).numTasks == 1
-    (out,) = written
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
-    new = [
-        f for f in set(os.listdir(bucket_dir)) - files_before
-        if f.endswith(".parquet")
-    ]
-    assert len(new) == 1, new
+    _, code = new_files(user_dir, lambda: api.register(
+        {"username": "zoe", "email": "z@x", "password": "pw"}))
+    assert code == 201
+    messages, jobs = jobs_of(lambda: api.get_channel_messages(1))
+    assert jobs == 0 and len(messages) == 14 and messages[0]["message"] == "hi"
+    (_, code), jobs = jobs_of(
+        lambda: api.login({"username": "zoe", "password": "pw"}))
+    assert jobs == 0 and code == 200
+
+    cql = CqlSession(spark, tmp_warehouse, n_buckets=4)
+    cql.execute(
+        "CREATE KEYSPACE pj WITH replication = "
+        "{'class': 'SimpleStrategy', 'replication_factor': '1'}")
+    cql.execute("USE pj")
+    cql.execute("CREATE TABLE kv (k bigint, v text, PRIMARY KEY (k))")
+    kv_dir = os.path.join(
+        cql.current.table_path("kv"), f"_bucket={bucket_of([7], 4, dtypes=['bigint'])}")
+    new_files(kv_dir, lambda: cql.execute(
+        "INSERT INTO kv (k, v) VALUES (%s, %s)", (7, "a")))
+    rows, jobs = jobs_of(lambda: cql.execute("SELECT * FROM kv WHERE k = %s", (7,)))
+    assert jobs == 0 and rows == [{"k": 7, "v": "a"}]
+    rows, jobs = jobs_of(
+        lambda: cql.execute("SELECT v FROM kv WHERE k = %s LIMIT 1", (7,)))
+    assert jobs == 0 and rows == [{"v": "a"}]
+    # a second key in the same bucket: the batch still adds one file
+    k2 = next(k for k in range(8, 100) if bucket_of([k], 4, dtypes=["bigint"])
+              == bucket_of([7], 4, dtypes=["bigint"]))
+    new_files(kv_dir, lambda: cql.execute(
+        "BEGIN BATCH INSERT INTO kv (k, v) VALUES (%s, 'b'); "
+        "INSERT INTO kv (k, v) VALUES (%s, 'c'); APPLY BATCH", (7, k2)))
+    assert cql.execute("SELECT v FROM kv WHERE k = 7") == [{"v": "b"}]
+    assert cql.execute("SELECT v FROM kv WHERE k = %s", (k2,)) == [{"v": "c"}]
+    # one key twice in one write: both rows share a writetime, and the
+    # later statement wins on the driver read and the Spark scan alike
+    cql.execute("BEGIN BATCH INSERT INTO kv (k, v) VALUES (9, 'b'); "
+                "INSERT INTO kv (k, v) VALUES (9, 'a'); APPLY BATCH")
+    assert cql.execute("SELECT * FROM kv WHERE k = 9") == [{"k": 9, "v": "a"}]
+    assert [r for r in cql.execute("SELECT * FROM kv") if r["k"] == 9] == [
+        {"k": 9, "v": "a"}]
+
+    cql.execute(
+        "CREATE TABLE st (k int, c int, s text static, v text, PRIMARY KEY (k, c))")
+    _, jobs = jobs_of(lambda: cql.execute(
+        "INSERT INTO st (k, c, s, v) VALUES (1, 1, 'x', 'y')"))
+    assert jobs > 0
+    rows, jobs = jobs_of(lambda: cql.execute("SELECT * FROM st WHERE k = 1"))
+    assert jobs > 0 and rows == [{"k": 1, "c": 1, "s": "x", "v": "y"}]
+
+
+def test_row_marker_rule_ignores_ansi_mode(spark, ks):
+    """A full-row write deposits the row marker under either setting of
+    ``spark.sql.ansi.enabled`` (``size(NULL)`` is NULL with it and -1
+    without), so nulling the row's only payload cell leaves the key
+    live, on the Spark read and the driver read alike."""
+    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+    schema = StructType([
+        StructField("id", IntegerType()), StructField("v", StringType()),
+    ])
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            spec = ks.create_table(f"ansi_{ansi}", schema, ["id"])
+            t = WideColumnTable(spark, ks, spec, n_buckets=4)
+            t.append(spark.createDataFrame([(1, "x")], schema))
+            # UPDATE t SET v = null WHERE id = 1
+            t.append(spark.createDataFrame([(1, None)], schema), cells=["v"])
+            want = [{"id": 1, "v": None}]
+            assert [r.asDict() for r in t.read().collect()] == want, ansi
+            assert [r.asDict() for r in t.read_partition_rows(id=1)] == want
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_local_frame_stores_what_create_dataframe_stores(spark):

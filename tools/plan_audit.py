@@ -27,7 +27,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -430,7 +431,7 @@ def main() -> None:
         .getOrCreate()
     )
     text = audit(spark, sf_dir, names)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(text + "\n")
     bad = text.count("RED FLAGS")
     print(f"PLANS.md written ({len(names)} queries, {bad} red-flagged)")

@@ -13,6 +13,7 @@ anywhere; the first non-flag argument is sf_dir.)
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -20,23 +21,18 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
 from cassandrastack_spark.queries import WINDOW, load_all  # noqa: E402
+from cassandrastack_spark.session import spark_builder  # noqa: E402
 
 
-def driver_like_spark() -> SparkSession:
-    """A bare SparkSession, deliberately WITHOUT the factory confs in
-    cassandrastack_spark.session — mirrors the external harness, so any
-    query that silently depends on a factory conf fails here first."""
-    return (
-        SparkSession.builder.master("local[32]")
-        .appName("verify-local")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
+def verify_spark() -> SparkSession:
+    """The engine's own session (``session.spark_builder``), so the
+    oracle gate checks the queries under the confs they run with."""
+    return spark_builder("verify-local").getOrCreate()
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -119,7 +115,7 @@ def main() -> int:
         # entries; explicit names alongside the flag are verified IN
         # ADDITION
         only |= set(list(registry)[:WINDOW])
-    spark = driver_like_spark()
+    spark = verify_spark()
     con = duck_con(sf_dir)
     failures = 0
     for name, qd in registry.items():
