@@ -29,9 +29,10 @@ Physical layout contract (SURVEY.md §1.4):
   logged batches for atomicity (``server.py:191-207``); one Spark write
   job is already atomic per the Parquet commit protocol (SURVEY.md §2.2
   W3), so a multi-row append IS the batch. Statement rows built on the
-  driver (a REST body, a CQL INSERT/UPDATE/DELETE/BATCH) arrive as a
-  local relation (``_local_frame``), so the append's projection runs on
-  the driver and the bucket shuffle's map stage is one task.
+  driver that take the Spark path (a CQL UPDATE/DELETE, or any write to
+  a table that is not plain) arrive as a local relation
+  (``_local_frame``), so the append's projection runs on the driver and
+  the bucket shuffle's map stage is one task.
 
 Request-path contract: Spark serves scans, multi-partition reads, bulk
 writes and ``compact()``; a request that names ONE partition of a plain
@@ -217,8 +218,9 @@ def _s(text: str) -> str:
 
 def _local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
     """Driver-local ``rows`` (one tuple per row, in ``schema`` order) as a
-    frame over a local relation: the store's request path builds every
-    statement's rows through here.
+    frame over a local relation: statement rows that take the Spark path,
+    and driver-read rows that a CQL SELECT filters and projects, become
+    frames through here.
 
     ``spark.createDataFrame(rows, schema)`` pickles the rows into a
     parallelized RDD, so even a one-row write shuffles from
@@ -1514,9 +1516,10 @@ class WideColumnTable:
             w = r[_WRITETIME]
             cells = r[_CELLS]
             is_tomb = bool(r[_TOMBSTONE])
-            g = groups.get(tuple(r[k] for k in pk))
+            key = tuple(r[k] for k in pk)
+            g = groups.get(key)
             if g is None:
-                g = groups[tuple(r[k] for k in pk)] = {
+                g = groups[key] = {
                     "row": r, "sv": {}, "w": None, "tomb": None,
                     "marker_w": None, "marker_e": None, "tomb_w": None,
                 }
