@@ -215,7 +215,7 @@ def _w(op, writer, key, values=(None, None, None), cells=(), marker=False,
             "cells": list(cells), "marker": marker, "ttl": ttl, "stamp": stamp}
 
 
-@settings(max_examples=10, deadline=None,
+@settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(st.lists(_diff_write(), min_size=2, max_size=14), st.booleans(),
        st.booleans())
