@@ -47,6 +47,8 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 
+from cassandrastack_spark.sources.io import resolved_input_files
+
 # slot name -> (key DataFrame, input fingerprint, persisted DataFrames)
 _SLOTS: dict[
     str, tuple[DataFrame, tuple | None, tuple[DataFrame, ...]]
@@ -86,32 +88,18 @@ def _input_fingerprint(df: DataFrame) -> tuple | None:
     exact same-path-rewrite alias the fingerprint exists to close. A
     spurious roll is cheap; a stale hit is not.
 
-    The file list comes from the ANALYZED plan's file-source
-    relations, NOT ``df.inputFiles()``: inputFiles() walks the
-    OPTIMIZED plan, and once a slot's previous generation is cached
-    and materialized, CacheManager substitution rewrites every
-    logically-identical new frame's optimized plan to read the
-    InMemoryRelation — no file scan survives, inputFiles() returns
-    [], and the fingerprint flips to () forever mismatching the
-    stored file list. That made every slot re-call ROLL (unpersist +
-    full recompute + re-persist) instead of HIT — the r9–r11
-    monotone perf drift on the dsir/tfidf postings consumers (the
-    cache was rebuilt per call; bench's min-of-2 never saw a warm
-    hit). Analysis never substitutes the cache, so the analyzed
-    plan's ``LogicalRelation(HadoopFsRelation)`` leaves keep their
-    resolved file lists regardless of what is currently cached."""
+    The file list comes from the ANALYZED plan
+    (``sources.io.resolved_input_files``), NOT ``df.inputFiles()``:
+    once a slot's previous generation is cached and materialized,
+    CacheManager substitution leaves no file scan in a logically
+    identical new frame's optimized plan, inputFiles() returns [], and
+    the fingerprint would flip to () forever mismatching the stored
+    file list. That made every slot re-call ROLL (unpersist + full
+    recompute + re-persist) instead of HIT — the r9–r11 monotone perf
+    drift on the dsir/tfidf postings consumers (the cache was rebuilt
+    per call; bench's min-of-2 never saw a warm hit)."""
     try:
-        plan = df._jdf.queryExecution().analyzed()
-        leaves = plan.collectLeaves()
-        files = []
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            if leaf.getClass().getSimpleName() != "LogicalRelation":
-                continue
-            rel = leaf.relation()
-            if rel.getClass().getSimpleName() == "HadoopFsRelation":
-                files.extend(rel.location().inputFiles())
-        files.sort()
+        files = resolved_input_files(df)
     except Exception:
         return None
     out = []

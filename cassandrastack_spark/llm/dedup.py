@@ -1127,12 +1127,16 @@ def substring_dedup(
       (count + min(doc, pos)) — a boilerplate window repeated across
       millions of docs arrives at its reducer as one row per map
       partition, not one per occurrence;
-    - span removal explodes only DUPLICATED occurrences (cost
-      proportional to duplicated-token mass, the thing being
-      removed, not corpus mass);
-    - document rebuild groups by doc_id — the uniform key — with
-      per-doc state bounded by document length, the same reassembly
-      bound as ``paragraph_dedup``.
+    - the removed window starts are grouped per document (one list
+      per doc that lost anything; its size follows the duplicated
+      mass, not corpus mass) and left-joined back to the documents
+      on doc_id — the uniform key;
+    - the rebuild is per document, inside the row: the kept indices
+      are ``array_except`` of all indices and the removed spans
+      (hash-based, linear in document length), mapped back to words.
+      No step explodes, joins or shuffles at token level, so a corpus
+      with nothing duplicated pays only the window pass and the
+      window-hash aggregate.
 
     Caching contract: the token/window intermediates are cached per
     (corpus, min_len) in a single slot keyed by plan identity + the
@@ -1145,11 +1149,11 @@ def substring_dedup(
     if min_len < 2:
         raise ValueError(f"min_len must be >= 2, got {min_len}")
     L = int(min_len)
-    # `d` feeds three consumers (windows, token rebuild, final
-    # n_tokens) and `win` two (the hash stats and the removal probe) —
-    # shared lineage is not shared execution, so without these the
-    # dominant tokenize+md5 pass runs twice and the corpus is re-read
-    # four times per action. Both go through the single-slot persist
+    # `d` feeds two consumers (windows and the per-document rebuild)
+    # and `win` two (the hash stats and the removal probe) — shared
+    # lineage is not shared execution, so without these the dominant
+    # tokenize+md5 pass runs twice and the corpus is re-read three
+    # times per action. Both go through the single-slot persist
     # (lazy — plan-only consumers never execute the corpus-sized
     # window materialization an eager checkpoint used to force at
     # frame-construction time; LRU-evictable, unlike checkpoint
@@ -1190,40 +1194,35 @@ def substring_dedup(
         )
         .select("doc_id", "pos")
     )
-    rm_idx = remove.select(
-        "doc_id",
-        F.explode(
-            F.sequence(F.col("pos"), F.col("pos") + F.lit(L - 1))
-        ).alias("idx"),
-    ).distinct()
-    tok = d.select(
-        "doc_id", F.posexplode("words").alias("i0", "w")
-    ).select("doc_id", (F.col("i0") + 1).alias("idx"), "w")
-    kept = tok.join(rm_idx, ["doc_id", "idx"], "left_anti")
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.concat_ws(
-            " ",
-            F.expr(
-                "transform(array_sort(collect_list(struct(idx, w))), "
-                "s -> s.w)"
-            ),
-        ).alias("clean_text"),
-        F.count("*").alias("kept_n"),
+    # one list of removed window starts per document: its size follows
+    # the duplicated mass, not the corpus, and the only shuffle it adds
+    # is keyed by doc_id over the removed windows alone
+    starts = remove.groupBy("doc_id").agg(
+        F.collect_list("pos").alias("starts")
+    )
+    # rebuild inside the row: drop every index a removed window covers.
+    # array_except is hash-based, so this is linear in document length
+    # (a per-token exists(starts, ...) probe would be quadratic); docs
+    # with nothing removed keep their token array as is
+    kept = F.expr(
+        "CASE WHEN starts IS NULL THEN words ELSE transform("
+        "array_except(sequence(1, size(words)), "
+        f"flatten(transform(starts, p -> sequence(p, p + {L - 1})))), "
+        "i -> element_at(words, i)) END"
     )
     return (
-        # size(NULL words) is NULL (a NULL-text doc has zero tokens,
-        # not an unknown count) — coalesce so n_removed is 0, never
-        # NULL, honoring the every-input-document contract
-        d.select(
-            "doc_id",
-            F.coalesce(F.size("words"), F.lit(0)).alias("n_tokens"),
-        )
-        .join(rebuilt, "doc_id", "left")
+        d.join(starts, "doc_id", "left")
+        .select("doc_id", "words", kept.alias("kept"))
         .select(
             "doc_id",
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
+            # a NULL-text doc has NULL words and NULL kept: concat_ws
+            # gives '' and the coalesced sizes give n_removed 0, so
+            # every input document comes back and n_removed is never
+            # NULL
+            F.concat_ws(" ", "kept").alias("clean_text"),
             (
-                F.col("n_tokens") - F.coalesce("kept_n", F.lit(0))
+                F.coalesce(F.size("words"), F.lit(0))
+                - F.coalesce(F.size("kept"), F.lit(0))
             ).cast("bigint").alias("n_removed"),
         )
     )

@@ -43,16 +43,21 @@ from cassandrastack_spark.sources.io import widen_for_compute as _widen
 DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
 
 
+def _add_norm(df: DataFrame, vec_col: str) -> DataFrame:
+    """``with_norm`` without the widening: for the small, broadcast
+    query side of the bounded exact paths, where a repartition would
+    only add a shuffle job before the broadcast."""
+    as_double = F.expr(f"transform({vec_col}, x -> cast(x AS double))")
+    return df.withColumn("vec", as_double).withColumn(
+        "norm", F.expr("sqrt(" + DOT.format(a="vec", b="vec") + ")")
+    )
+
+
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Add ``vec`` (double[]) and its L2 norm (computed once per row).
     Widens narrow scans first: the vector math downstream is the
     expensive per-row stage."""
-    as_double = F.expr(f"transform({vec_col}, x -> cast(x AS double))")
-    return (
-        _widen(df)
-        .withColumn("vec", as_double)
-        .withColumn("norm", F.expr("sqrt(" + DOT.format(a="vec", b="vec") + ")"))
-    )
+    return _add_norm(_widen(df), vec_col)
 
 
 def _normed_vecs(
@@ -129,7 +134,12 @@ def cosine_topk(
             f"(or raise the cap explicitly) for large query sets"
         )
     corpus = _normed_vecs(df, id_col, vec_col, "neighbor_id", "c_vec", "c_norm")
-    q = _normed_vecs(queries, id_col, vec_col, "query_id", "q_vec", "q_norm")
+    # the query side is capped and broadcast whole: not widened
+    q = _add_norm(queries.select(id_col, vec_col), vec_col).select(
+        F.col(id_col).alias("query_id"),
+        F.col("vec").alias("q_vec"),
+        F.col("norm").alias("q_norm"),
+    )
     pairs = corpus.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
     scored = pairs.withColumn(
         "cosine",
@@ -151,10 +161,14 @@ def quantize_int8(
     no UDF, no shuffle. Zero vectors quantize to zeros under scale 1.
     Adds ``vec`` (double[]), ``scale``, ``qvec`` (int[]).
     """
+    return _add_int8(_widen(df), vec_col)
+
+
+def _add_int8(df: DataFrame, vec_col: str) -> DataFrame:
+    """``quantize_int8`` without the widening (see ``_add_norm``)."""
     amax = "array_max(transform(vec, x -> abs(x)))"
     return (
-        _widen(df)
-        .withColumn(
+        df.withColumn(
             "vec", F.expr(f"transform({vec_col}, x -> cast(x AS double))")
         )
         .withColumn(
@@ -198,7 +212,7 @@ def ann_quantized_topk(
         F.col("qvec").alias("c_q"),
         F.col("scale").alias("c_s"),
     )
-    q = quantize_int8(queries.select(id_col, vec_col), vec_col).select(
+    q = _add_int8(queries.select(id_col, vec_col), vec_col).select(
         F.col(id_col).alias("query_id"),
         F.col("qvec").alias("q_q"),
         F.col("scale").alias("q_s"),

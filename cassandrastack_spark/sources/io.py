@@ -134,6 +134,30 @@ CHECKPOINT_MAX_INPUT_BYTES = int(
 )
 
 
+def resolved_input_files(df: DataFrame) -> list[str]:
+    """Sorted file URIs of ``df``'s file-source relations, read from
+    the ANALYZED plan (raises if the plan cannot be read).
+
+    Not ``df.inputFiles()``: that walks the OPTIMIZED plan, and once a
+    logically identical frame is cached and materialized, CacheManager
+    substitution rewrites the optimized plan to read the
+    InMemoryRelation — no file scan survives and inputFiles() returns
+    []. Analysis never substitutes the cache, so the analyzed plan's
+    ``LogicalRelation(HadoopFsRelation)`` leaves keep their resolved
+    file lists whatever is cached. Plans with no file source (local
+    relations, RDDs, checkpointed frames) list nothing."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    files = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() == "HadoopFsRelation":
+            files.extend(rel.location().inputFiles())
+    return sorted(files)
+
+
 def checkpoint_if_small(df: DataFrame) -> DataFrame:
     """Eagerly localCheckpoint ``df`` ONLY when its resolved file
     inputs are provably under ``CHECKPOINT_MAX_INPUT_BYTES``.
@@ -145,13 +169,15 @@ def checkpoint_if_small(df: DataFrame) -> DataFrame:
     any executor loss. Gate: local ``file:`` inputs are stat-ed and
     summed; unknown sizes (remote URIs, stat failures, non-file plans)
     conservatively count as LARGE → no checkpoint (the caller's plan
-    must already be recompute-tolerant). An empty ``inputFiles()`` is
-    unknown too, not zero: local relations, RDD or JDBC sources, and
-    plans whose scans a cached frame replaced all list no files.
+    must already be recompute-tolerant). An empty file list is unknown
+    too, not zero: local relations, RDD or JDBC sources list no files.
+    The files come from ``resolved_input_files`` (the analyzed plan),
+    so a small file input that a cached frame replaced in the
+    optimized plan is still sized, not read as unknown.
     """
     total = 0
     try:
-        files = df.inputFiles()
+        files = resolved_input_files(df)
         if not files:
             return df
         for u in files:

@@ -26,6 +26,7 @@ from __future__ import annotations
 import itertools
 import json
 import os
+import shutil
 import tempfile
 
 import pandas as pd
@@ -376,20 +377,31 @@ def run_to_batch(
     the batch oracle, which is Structured Streaming's core guarantee.
 
     ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for this
-    query only (restored after). Stateful operators create one state
+    query only (restored after), capped at the session's task slots
+    (``defaultParallelism``). Stateful operators create one state
     store PER partition PER operator-internal store (a stream-stream
     join keeps four), each paying checkpoint-commit I/O every micro-
     batch — fixed cost independent of data volume, so state partition
     count must be sized to STATE volume, not defaulted to the batch
     shuffle width (32 partitions made this harness 5x slower on
-    kilobyte-scale state). The count is frozen into the checkpoint at
-    first run — a production stream sizes it up front the same way.
+    kilobyte-scale state). A partition beyond the slots runs in a
+    second wave and pays its own commit, so the cap only ever removes
+    cost; on a cluster with at least ``state_partitions`` slots it
+    changes nothing. The count is frozen into the checkpoint at first
+    run — a production stream sizes it up front the same way.
+
+    Each call checkpoints to a fresh ``cs_stream_ckpt_*`` temp
+    directory that nothing reads again once the query has stopped, so
+    it is removed then, whether the query finished or failed. The
+    memory-sink table the result reads stays registered.
     """
     spark = streaming_df.sparkSession
     name = f"cs_stream_sink_{os.getpid()}_{next(_sink_ids)}"
+    parts = min(state_partitions, spark.sparkContext.defaultParallelism)
     checkpoint = tempfile.mkdtemp(prefix="cs_stream_ckpt_")
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    q = None
     try:
         q = (
             streaming_df.writeStream.format("memory")
@@ -402,6 +414,9 @@ def run_to_batch(
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        if q is not None and q.isActive:
+            q.stop()
+        shutil.rmtree(checkpoint, ignore_errors=True)
     return spark.table(name)
 
 

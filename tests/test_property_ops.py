@@ -605,6 +605,98 @@ def test_paragraph_dedup_matches_bruteforce(spark, texts):
         assert got[i]["text_deduped"] == " ".join(kept), (i, texts)
 
 
+def _exact_substr_model(texts, L):
+    """Pure-Python ExactSubstr over {doc_id: text}: count every L-token
+    window, keep each duplicated window's first occurrence by
+    (doc_id, pos) and remove the union of the other occurrences'
+    spans. Returns {doc_id: (clean_text, n_removed)}."""
+    words = {i: (t.split(" ") if t is not None else []) for i, t in texts.items()}
+    occ: dict[tuple, list] = {}
+    for i in sorted(words):
+        w = words[i]
+        for p in range(1, len(w) - L + 2):
+            occ.setdefault(tuple(w[p - 1:p - 1 + L]), []).append((i, p))
+    removed: dict = {i: set() for i in words}
+    for hits in occ.values():
+        first = min(hits)
+        for i, p in hits:
+            if (i, p) != first:
+                removed[i].update(range(p, p + L))
+    out = {}
+    for i, w in words.items():
+        kept = [x for j, x in enumerate(w, 1) if j not in removed[i]]
+        out[i] = (" ".join(kept), len(w) - len(kept))
+    return out
+
+
+def _plan_nodes(df):
+    """One-line strings of every node of ``df``'s optimized plan. The
+    physical plan behind each cached frame is walked too, once per
+    frame however often the plan reads it."""
+    nodes, seen = [], set()
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        n = stack.pop()
+        nodes.append(n.simpleString(5))
+        ch = n.children()
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+        if n.nodeName() == "InMemoryRelation":
+            cached = n.cacheBuilder().cachedPlan()
+            if cached.toString() not in seen:
+                seen.add(cached.toString())
+                stack.append(cached)
+    return nodes
+
+
+# a three-token vocabulary makes runs repeat across and inside documents
+_substr_text = st.one_of(
+    st.none(),
+    st.just(""),
+    st.lists(st.sampled_from("abc"), min_size=1, max_size=14).map(" ".join),
+)
+
+
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(st.lists(_substr_text, min_size=1, max_size=6),
+       st.integers(min_value=2, max_value=5))
+# runs repeated inside one document, overlapping runs, NULL and "" text
+# and a document shorter than min_len
+@example(["a b a b a b a", None, "", "a b", "b a b a c"], 2)
+@example(["a b c a b c a b c", "c a b c a", "a b c"], 3)
+def test_substring_dedup_matches_exact_substr_model(spark, texts, min_len):
+    from cassandrastack_spark.llm.dedup import substring_dedup
+
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got = {r.doc_id: (r.clean_text, r.n_removed)
+           for r in substring_dedup(docs, min_len=min_len).collect()}
+    assert got == _exact_substr_model(dict(enumerate(texts)), min_len)
+
+
+def test_substring_dedup_rebuilds_per_document(spark):
+    """Plan guard for the per-document rebuild: the only Generate is
+    the window posexplode (no token-level explode) and no anti join
+    filters tokens. Long-document case: three copies of a 2,000-token
+    document keep the first copy whole and empty the other two."""
+    from cassandrastack_spark.llm.dedup import substring_dedup
+
+    doc = " ".join(f"t{i}" for i in range(2000))
+    texts = {1: doc, 2: doc, 3: doc}
+    docs = spark.createDataFrame(
+        list(texts.items()), "doc_id long, text string"
+    )
+    out = substring_dedup(docs, min_len=10)
+    nodes = _plan_nodes(out)
+    generates = [n for n in nodes if n.startswith("Generate ")]
+    assert len(generates) == 1 and "posexplode" in generates[0], generates
+    assert not any("LeftAnti" in n for n in nodes), nodes
+    got = {r.doc_id: (r.clean_text, r.n_removed) for r in out.collect()}
+    assert got == {1: (doc, 0), 2: ("", 2000), 3: ("", 2000)}
+    assert got == _exact_substr_model(texts, 10)
+
+
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(

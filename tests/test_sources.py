@@ -435,3 +435,23 @@ def test_checkpoint_if_small_fails_closed_on_unknown_size(spark, tmp_path):
     assert done is not small
     assert done.inputFiles() == []  # scans replaced by checkpoint blocks
     assert sorted(map(tuple, done.collect())) == ROWS
+
+
+def test_checkpoint_if_small_sizes_cache_substituted_input(spark, tmp_path):
+    """A small parquet frame that is persisted and materialized lists no
+    files in its optimized plan (the cache replaced the scan); the gate
+    sizes it from the analyzed plan and still checkpoints it."""
+    from cassandrastack_spark.sources.io import checkpoint_if_small
+
+    p = str(tmp_path / "cached.parquet")
+    spark.createDataFrame(ROWS, SCHEMA).write.parquet(p)
+    cached = spark.read.parquet(p).persist()
+    try:
+        cached.count()
+        again = spark.read.parquet(p)
+        assert again.inputFiles() == []  # cache substitution hides the scan
+        done = checkpoint_if_small(again)
+        assert done is not again
+        assert sorted(map(tuple, done.collect())) == ROWS
+    finally:
+        cached.unpersist()

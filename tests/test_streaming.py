@@ -330,6 +330,56 @@ def test_append_mode_emits_only_watermark_passed_windows(spark, stream_dir, tmp_
     }
 
 
+def test_run_to_batch_removes_its_checkpoint(spark, stream_dir, monkeypatch):
+    """run_to_batch checkpoints to a fresh temp directory nothing reads
+    after the query stops: it is removed when the query finishes AND
+    when it fails, while the result stays readable. The state
+    partition count is capped at the session's task slots."""
+    import glob
+    import os
+    import tempfile
+
+    from cassandrastack_spark.streaming import ops
+    from cassandrastack_spark.streaming.ops import run_to_batch
+
+    def ckpts() -> set:
+        return set(glob.glob(
+            os.path.join(tempfile.gettempdir(), "cs_stream_ckpt_*")
+        ))
+
+    _write_batch(stream_dir, "b1.parquet", [
+        (1, BASE, 100, "click", 1.0),
+        (2, BASE + dt.timedelta(hours=2), 100, "click", 1.0),
+    ])
+    before = ckpts()
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def spy(*a, **kw):
+        made.append(mkdtemp(*a, **kw))
+        return made[-1]
+
+    monkeypatch.setattr(ops.tempfile, "mkdtemp", spy)
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    out = run_to_batch(
+        tumbling_window_counts(events_stream(spark, str(stream_dir))),
+        state_partitions=spark.sparkContext.defaultParallelism + 4,
+    )
+    assert out.count() == 2
+    assert spark.conf.get("spark.sql.shuffle.partitions") == old_parts
+    assert made and not os.path.exists(made[-1])
+    assert ckpts() <= before
+
+    # a query that fails still releases its checkpoint
+    bad = events_stream(spark, str(stream_dir)).select(
+        F.assert_true(F.col("value") < 0).alias("v")
+    )
+    with pytest.raises(Exception):
+        run_to_batch(bad, "append")
+    assert not os.path.exists(made[-1])
+    assert ckpts() <= before
+
+
 def test_stream_ingest_maintains_rollup(spark, stream_dir, tmp_path):
     """ingest_with_rollup: after every micro-batch the maintained
     rollup equals a from-scratch rollup of the table's current state —
