@@ -12,9 +12,11 @@ long-lived session calling the operator against a rolling series of
 corpora accumulates dead cached plans (the r7 verdict's watch item).
 
 ``slot_persist`` bounds that to ONE live generation per named slot —
-the `_INDEX_CACHE` discipline applied to cached frames: when a slot is
-asked to persist frames for a DIFFERENT input plan, the previous
-generation is unpersisted (non-blocking) first. Re-calling an operator
+the build-once discipline of ``sources.io.table_artifact`` applied to
+cached frames, except that an operator's input can change, so a slot
+rolls instead of trusting its key: when a slot is asked to persist
+frames for a DIFFERENT input plan, the previous generation is
+unpersisted (non-blocking) first. Re-calling an operator
 on the SAME input reuses the already-persisted frames, so repeated
 calls cost one cache fill, and alternating inputs can never hold more
 than one generation of blocks per slot.

@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cassandrastack_spark.queries import hll_estimator_sql, register
+from cassandrastack_spark.sources.io import table_artifact
 from cassandrastack_spark.streaming.ops import (
     events_stream,
     run_to_batch,
@@ -369,14 +370,10 @@ def stream_static_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_batch(joined, output_mode="append").orderBy("event_id")
 
 
-# per-process state cache for the drift monitor's state table — an
-# accumulated moments table is a persisted artifact like the BM25 /
 def _resolve_monitor_state(
     spark: SparkSession,
     sf_dir: str,
-    cache: dict,
-    cache_key: str,
-    prefix: str,
+    kind: str,
     start,
     table: str = "events.parquet",
 ) -> str:
@@ -384,26 +381,20 @@ def _resolve_monitor_state(
     (review r16 — this sequence was copy-pasted per query): stream the
     ``table`` file under ``sf_dir`` through ``start(src, state_path,
     checkpoint_path)`` (which returns the started StreamingQuery) once
-    per (kind, sf_dir), cache the state path, resolve on every later
-    call — monitor state is a persisted artifact; rebuilding it per
-    call would price the ingest, not the resolution. Explicit raise,
-    not assert (python -O strips asserts, ADVICE r14), and the query
-    is STOPPED before raising on timeout — a zombie ingest would keep
-    writing state in the shared session and skew every subsequent
-    sweep timing (review r16). The cache entry lands only on success,
-    so a failed ingest retries clean in a fresh tempdir.
+    per (kind, sf_dir) and return the state path on every call —
+    monitor state is a persisted artifact; rebuilding it per call would
+    price the ingest, not the resolution. Explicit raise, not assert
+    (python -O strips asserts, ADVICE r14), and the query is STOPPED
+    before raising on timeout — a zombie ingest would keep writing
+    state in the shared session and skew every subsequent sweep timing
+    (review r16).
 
-    Staleness contract (same as queries/llm.py's _INDEX_CACHE): the
-    key is (kind, sf_dir), so a long-lived session that mutates the
-    table under an sf_dir keeps reading the previously accumulated
-    state — mutate into a NEW dir, or pop the key (restart the
-    monitor stream) to re-accumulate.
+    The state lives in a ``sources.io.table_artifact`` directory: a
+    failed ingest leaves no entry and retries clean, and the
+    immutable-``sf_dir`` contract is the one stated there.
     """
-    key = (cache_key, sf_dir)
-    if key not in cache:
-        import tempfile
 
-        root = tempfile.mkdtemp(prefix=prefix)
+    def build(root: str) -> None:
         schema = (
             spark.read.option("pathGlobFilter", table)
             .parquet(sf_dir)
@@ -417,15 +408,9 @@ def _resolve_monitor_state(
         q = start(src, os.path.join(root, "state"), os.path.join(root, "ckpt"))
         if not q.awaitTermination(600):
             q.stop()
-            raise RuntimeError(f"{cache_key} ingest did not finish")
-        cache[key] = os.path.join(root, "state")
-    return cache[key]
+            raise RuntimeError(f"{kind} ingest did not finish")
 
-
-# moments state table, amortized like the IVF+PQ indexes in
-# queries/llm.py (_INDEX_CACHE): build once per (sf_dir), probe on
-# every call (staleness contract in _resolve_monitor_state).
-_MOMENTS_CACHE: dict = {}
+    return os.path.join(table_artifact(sf_dir, kind, build), "state")
 
 
 @register(
@@ -460,7 +445,7 @@ def stream_embedding_covariance_block(
     )
 
     state = _resolve_monitor_state(
-        spark, sf_dir, _MOMENTS_CACHE, "moments", "cs_q_moments_",
+        spark, sf_dir, "moments",
         lambda src, sp, cp: monitor_embedding_moments(
             src, sp, checkpoint=cp
         ),
@@ -531,12 +516,6 @@ def stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# monitor_distinct_count's persisted state table, amortized across
-# calls like _MOMENTS_CACHE's entries (monitor state is a persisted
-# artifact; rebuilding it per call would price the ingest, not the
-# resolution)
-_DCOUNT_STATE_CACHE: dict = {}
-
 
 @register(
     "stream_monitor_distinct_count",
@@ -606,7 +585,7 @@ def stream_monitor_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     state = _resolve_monitor_state(
-        spark, sf_dir, _DCOUNT_STATE_CACHE, "dcount", "cs_q_dcount_",
+        spark, sf_dir, "dcount",
         lambda src, sp, cp: monitor_distinct_count(
             src, sp, "user_id", p=12, checkpoint=cp
         ),
@@ -623,12 +602,6 @@ def stream_monitor_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("est_distinct", "m", "nonempty", "exact_distinct")
     )
 
-
-# monitor_hot_keys' persisted CM state table, amortized across calls
-# like _DCOUNT_STATE_CACHE's entries (monitor state is a persisted
-# artifact; rebuilding it per call would price the ingest, not the
-# resolution)
-_HOT_KEYS_STATE_CACHE: dict = {}
 
 
 @register(
@@ -697,7 +670,7 @@ def stream_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     state = _resolve_monitor_state(
-        spark, sf_dir, _HOT_KEYS_STATE_CACHE, "hotkeys", "cs_q_cm_state_",
+        spark, sf_dir, "hotkeys",
         lambda src, sp, cp: monitor_hot_keys(
             src, sp, "props", width=64, depth=3, checkpoint=cp
         ),
@@ -722,12 +695,6 @@ def stream_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("props")
     )
 
-
-# monitor_value_sample's persisted bottom-k sample state table,
-# amortized across calls like _DCOUNT_STATE_CACHE's entries (monitor
-# state is a persisted artifact; rebuilding it per call would price
-# the ingest, not the resolution)
-_BKS_STATE_CACHE: dict = {}
 
 
 @register(
@@ -809,7 +776,7 @@ def stream_quantile_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     state = _resolve_monitor_state(
-        spark, sf_dir, _BKS_STATE_CACHE, "bks", "cs_q_bks_state_",
+        spark, sf_dir, "bks",
         lambda src, sp, cp: monitor_value_sample(
             src, sp, "value", "event_id", k=256,
             group_cols=("event_type",), checkpoint=cp,
@@ -845,10 +812,6 @@ def stream_quantile_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("event_type", "p")
     )
 
-
-# monitor_histogram's persisted histogram state table, amortized
-# across calls like _BKS_STATE_CACHE's entries
-_PSI_STATE_CACHE: dict = {}
 
 
 @register(
@@ -933,7 +896,7 @@ def stream_psi_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5(F.col("event_id").cast("string")), 1, 1) < "8"
     )
     state = _resolve_monitor_state(
-        spark, sf_dir, _PSI_STATE_CACHE, "psi", "cs_q_psi_state_",
+        spark, sf_dir, "psi",
         lambda src, sp, cp: monitor_histogram(
             src.filter(~half), sp, "value", 0.0, 100.0, 10,
             group_cols=("event_type",), checkpoint=cp,
@@ -958,10 +921,6 @@ def stream_psi_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("event_type")
     )
 
-
-# monitor_weighted_sample's persisted A-ES reservoir state table,
-# amortized across calls like _BKS_STATE_CACHE's entries
-_WKS_STATE_CACHE: dict = {}
 
 
 @register(
@@ -1020,7 +979,7 @@ def stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     state = _resolve_monitor_state(
-        spark, sf_dir, _WKS_STATE_CACHE, "wks", "cs_q_wks_state_",
+        spark, sf_dir, "wks",
         lambda src, sp, cp: monitor_weighted_sample(
             src, sp, "event_id", "value", k=64,
             group_cols=("event_type",), checkpoint=cp,

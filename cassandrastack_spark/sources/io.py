@@ -17,7 +17,11 @@ Rules (100 TB discipline):
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -38,10 +42,20 @@ _NANOS_TABLES = {"events"}
 # bench constructs each base table hundreds of times per sweep. The memo
 # holds the LOGICAL PLAN only — no rows, no results; every action still
 # computes from the parquet files. Keyed by the session's applicationId
-# so a stopped/recreated session (tests) never serves a dead plan; the
-# testdata directories are immutable within a process (the driver
-# regenerates them only between rounds, i.e. between processes).
+# so a stopped/recreated session (tests) never serves a dead plan.
+#
+# Contract shared with table_artifact below: the testdata directories
+# are immutable within a process (the driver regenerates them only
+# between rounds, i.e. between processes). No data fingerprint backs
+# either memo, and one could not help: a memoized plan keeps the file
+# listing it was built with, so after an in-place rewrite under sf_dir
+# its reads fail (FILE_NOT_EXIST) before any artifact could roll.
 _READ_TABLE_PLANS: dict[tuple, DataFrame] = {}
+
+# table_artifact's entries and the per-process root of their directories
+_ARTIFACTS: dict[tuple[str, str], str] = {}
+_ARTIFACT_ROOT_PREFIX = "cs_q_"
+_artifact_root: str | None = None
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -73,6 +87,39 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     _READ_TABLE_PLANS[key] = df
     return df
+
+
+def table_artifact(
+    sf_dir: str, kind: str, build: Callable[[str], object]
+) -> str:
+    """Directory of the ``kind`` artifact derived from ``sf_dir`` (a
+    persisted index, an accumulated monitor state table), built once
+    per process: rebuilding it per call would price the build, not the
+    probe. Keyed by ``(kind, abspath(sf_dir))`` under the contract
+    stated at ``_READ_TABLE_PLANS``.
+
+    On a miss, ``build(path)`` writes into a fresh, empty subdirectory
+    of one per-process root, and the entry is recorded only when it
+    returns. If it raises, the subdirectory is removed and the error
+    propagates, so the next call builds again. The root is removed at
+    process exit.
+    """
+    global _artifact_root
+    key = (kind, os.path.abspath(sf_dir))
+    hit = _ARTIFACTS.get(key)
+    if hit is not None:
+        return hit
+    if _artifact_root is None:
+        _artifact_root = tempfile.mkdtemp(prefix=_ARTIFACT_ROOT_PREFIX)
+        atexit.register(shutil.rmtree, _artifact_root, ignore_errors=True)
+    path = tempfile.mkdtemp(prefix=f"{kind}_", dir=_artifact_root)
+    try:
+        build(path)
+    except BaseException:
+        shutil.rmtree(path, ignore_errors=True)
+        raise
+    _ARTIFACTS[key] = path
+    return path
 
 
 def widen_for_compute(df: DataFrame, key_cols: list[str] | None = None) -> DataFrame:

@@ -392,8 +392,10 @@ def run_to_batch(
 
     Each call checkpoints to a fresh ``cs_stream_ckpt_*`` temp
     directory that nothing reads again once the query has stopped, so
-    it is removed then, whether the query finished or failed. The
-    memory-sink table the result reads stays registered.
+    it is removed then, whether the query finished or failed. So is
+    the memory-sink temp view, once the result has resolved it: the
+    returned frame keeps the sink alive through its own plan, so the
+    sink's rows live as long as that frame, not as long as the session.
     """
     spark = streaming_df.sparkSession
     name = f"cs_stream_sink_{os.getpid()}_{next(_sink_ids)}"
@@ -412,12 +414,14 @@ def run_to_batch(
             .start()
         )
         q.awaitTermination()
+        out = spark.table(name)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         if q is not None and q.isActive:
             q.stop()
         shutil.rmtree(checkpoint, ignore_errors=True)
-    return spark.table(name)
+        spark.catalog.dropTempView(name)
+    return out
 
 
 # ---------------------------------------------------------------------------

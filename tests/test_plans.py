@@ -130,89 +130,23 @@ def test_streaming_plan_has_watermark_and_state(spark):
 
 def test_no_unjustified_bnl_join_across_catalog(spark, registry):
     """Catalog-wide guardrail: no registered batch query may plan a
-    BroadcastNestedLoopJoin, except documented 1-row scalar broadcasts
-    (the canonical scalar-subquery plan — bounded by construction).
+    BroadcastNestedLoopJoin, except the bounded broadcasts documented,
+    each with its reason, in guardrails.DOCUMENTED_BNL.
 
     Skipped families: stream_* (execute on build), dedup_*/ann_*/mm_*/
     text_* (eager checkpoints / UDF stages; their join guardrails are
     asserted in tests/test_llm_ops.py where the expensive build is
     already paid).
     """
-    from cassandrastack_spark.plans.guardrails import plan_lints
+    from cassandrastack_spark.plans.guardrails import (
+        DOCUMENTED_BNL,
+        plan_lints,
+    )
 
-    scalar_broadcast_ok = {
-        # .join(broadcast(<1-row aggregate>)) with no equi-condition:
-        "q11_important_volume",   # 3*avg(value) threshold scalar
-        "q22_sales_opportunity",  # avg(acctbal) scalar
-        "profile_hot_keys",       # sum(cnt) table-total scalar
-        "outliers_iqr_values",    # 1-row quartile-fences scalar
-        "corpus_curriculum_order",  # 1-row token-quartile scalar
-        "anomaly_cusum_changepoint",  # broadcast 1-row corpus mean
-        # embstats covariance finish: broadcast 1-row n + 1-row dim
-        # onto the dim^2-row moments frame (bounded by DIMENSION)
-        "embedding_covariance_block",
-        "embedding_correlation_block",   # same finish + dim-row diag
-        "embedding_covariance_drift",    # same finish, both snapshots
-        # same finish on subtracted moments + 1-row-x-1-row guard
-        # crossJoins (n_rem / k_a / k_b counts)
-        "embedding_covariance_exclude",
-        # broadcast 1-row smoothed-LM totals (n_r, n_t, V) onto the
-        # vocab frame — the canonical scalar-subquery plan
-        "corpus_dsir_weights",
-        "corpus_dsir_resample",
-        # same finish via the SHARED _dsir_scores_from_postings helper,
-        # fed from the persisted postings index instead of a tokenize
-        "corpus_dsir_weights_indexed",
-        # the bigram LM's 1-row (N, V) training-scalar broadcast
-        # (llm/lm.py bigram_logprob — the canonical scalar-subquery
-        # plan); the tercile cut is an equi-keyed window
-        "corpus_ccnet_buckets",
-        # 1-row (m, k) Bloom-filter-metadata scalar broadcasts
-        # (bloom_build sizes the bitmap from the item count;
-        # bloom_might_contain reads m/k back from the filter); the
-        # bitmap lookup itself is a word_idx equi-join
-        "decontam_bloom_probe",
-        # same bloom metadata scalars, served from the persisted +
-        # merged filter (the indexed twin)
-        "decontam_bloom_indexed",
-        # literal-bounded probe: 16-row broadcast x 16-row side with a
-        # "<" pair condition (120 pairs by construction, never corpus²)
-        "embedding_pca_projection_pairdist",
-        # literal-bounded anchor broadcasts (8 / 64 rows) against the
-        # corpus scan — the cosine_topk exact-audit shape
-        "embedding_hard_negatives",
-        "embedding_knn_label_agreement",
-        # 8-row anchor broadcast x label column with a != condition
-        # (bounded by the anchor side) building the per-query allowed
-        # pair set the IVF+PQ probe pre-filters on
-        "embedding_hard_negatives_indexed",
-        # bounded eval-split broadcast x corpus scan — the cosine_topk
-        # exact-audit shape, guarded by max_ref_rows (fails loud past
-        # the cap); the reduce is a map-side-combinable max(struct)
-        # groupBy shipping one row per train vector (r17 registrant;
-        # the staging note in tests/test_r17_oracle_parity.py wrongly
-        # assumed decontam_ was in the skip tuple — it is not, so the
-        # documented-BNL justification lands here instead)
-        "decontam_semantic",
-        # broadcast 1-row corpus-token-total scalar onto the
-        # vocabulary-bounded (source, token) frame — the canonical
-        # scalar-subquery plan (r14 registrant; the registration note
-        # in tests/test_r14_oracle_parity.py prescribed this entry)
-        "corpus_source_kl",
-        # literal-bounded probe: the 20-row source list self-joined
-        # under "<" (190 pairs by construction, never corpus²) — the
-        # embedding_pca_projection_pairdist shape (r14 registrant)
-        "corpus_source_overlap",
-        # 1-row (w, d) CM-geometry scalar broadcast (cm_estimate reads
-        # the modulus back from the sketch, mixed-geometry-guarded) —
-        # the decontam_bloom_probe metadata pattern; the cell lookup
-        # itself is a (row, col) equi-join (r15 registrant)
-        "token_freq_cm",
-    }
     skip = ("stream_", "mm_", "dedup_", "ann_", "text_")
     offenders = []
     for name, qd in registry.items():
-        if name.startswith(skip) or name in scalar_broadcast_ok:
+        if name.startswith(skip) or name in DOCUMENTED_BNL:
             continue
         lints = plan_lints(qd.fn(spark, SF))
         if lints["has_bnl_join"]:

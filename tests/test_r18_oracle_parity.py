@@ -29,9 +29,9 @@ Staged here, the two r14-VERDICT #6 novelty surfaces:
   score EVERY document. REGISTRATION NOTE: nb_logodds_weights
   broadcasts its 1-row (doc-count + gram-total) scalar frame onto the
   dim-row spine — the canonical scalar-subquery BNL; the registering
-  round must add a ``scalar_broadcast_ok`` entry in test_plans.py and
-  a ``DOCUMENTED_BNL`` entry in tools/plan_audit.py (the
-  corpus_source_kl precedent). The oracle rebuilds the identical buckets
+  round must add its entry, with the reason, to ``DOCUMENTED_BNL`` in
+  cassandrastack_spark/plans/guardrails.py (the corpus_source_kl
+  precedent). The oracle rebuilds the identical buckets
   (the CM-oracle strpos hex arithmetic), the identical smoothed
   weights, and the identical decimal-summed dot product; scores round
   to 6 decimals on both sides (ln/exp engine difference is bounded by

@@ -38,6 +38,8 @@ tier disagrees at registration, segment-bound or split per the
 dq_profile_lineitem_approx precedent.
 """
 
+import os
+
 import duckdb
 import pytest
 
@@ -155,26 +157,23 @@ ER_FUZZY_MATCH_INDEXED_ORACLE = """
     ORDER BY probe_key, key
 """
 
-_FUZZY_IDX_CACHE: dict = {}
-
-
 def er_fuzzy_match_indexed_spark(spark, sf_dir):
-    """The exact plan that registers when a slot frees (lift verbatim,
-    cache dict alongside — the index is a persisted artifact,
-    amortized like every other indexed twin's)."""
-    import tempfile
-
+    """The exact plan that registers when a slot frees (lift verbatim —
+    the index is a persisted artifact, built once per process by
+    sources.io.table_artifact like every other indexed twin's)."""
     from cassandrastack_spark.operators.fuzzy import (
         build_fuzzy_index,
         extend_fuzzy_index,
         probe_fuzzy_index,
     )
+    from cassandrastack_spark.sources.io import table_artifact
 
     c = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_name"
     )
-    if sf_dir not in _FUZZY_IDX_CACHE:
-        path = tempfile.mkdtemp(prefix="cs_q_fuzzy_idx_") + "/idx"
+
+    def build(root):
+        path = os.path.join(root, "idx")
         build_fuzzy_index(
             c.filter(F.col("c_custkey") % 3 != 0),
             path, "c_custkey", "c_name", max_dist=1,
@@ -183,12 +182,14 @@ def er_fuzzy_match_indexed_spark(spark, sf_dir):
             c.filter(F.col("c_custkey") % 3 == 0),
             path, "c_custkey", "c_name",
         )
-        _FUZZY_IDX_CACHE[sf_dir] = path
+
     probes = c.filter(F.col("c_custkey") % 10 == 0).select(
         F.col("c_custkey").alias("probe_key"), F.col("c_name").alias("q")
     )
     hits = probe_fuzzy_index(
-        spark, _FUZZY_IDX_CACHE[sf_dir], probes, "q"
+        spark,
+        os.path.join(table_artifact(sf_dir, "fuzzy_idx", build), "idx"),
+        probes, "q",
     )
     return (
         hits.join(probes, hits["s_probe"] == probes["q"])

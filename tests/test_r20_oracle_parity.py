@@ -65,7 +65,6 @@ distinct-score window).
 """
 
 import os
-import tempfile
 
 import duckdb
 import pyarrow as pa
@@ -74,9 +73,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
-SF = "/root/testdata/sf0.001"
+from cassandrastack_spark.sources.io import table_artifact
 
-_FZI_STATE_CACHE: dict = {}
+SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
@@ -90,14 +89,12 @@ def duck():
 
 
 def stream_fuzzy_ingest_dedup_spark(spark, sf_dir):
-    """The exact plan that registers when a slot frees (lift verbatim,
-    cache dict alongside — the accepted store is a persisted artifact,
-    amortized like the monitor state caches)."""
+    """The exact plan that registers when a slot frees (lift verbatim —
+    the accepted store is a persisted artifact, built once per process
+    by sources.io.table_artifact like the monitor states)."""
     from cassandrastack_spark.streaming.ops import ingest_with_fuzzy_dedup
 
-    key = sf_dir
-    if key not in _FZI_STATE_CACHE:
-        root = tempfile.mkdtemp(prefix="cs_q_fzi_state_")
+    def build(root):
         src_dir = os.path.join(root, "in")
         os.makedirs(src_dir)
         cust = (
@@ -143,9 +140,10 @@ def stream_fuzzy_ingest_dedup_spark(spark, sf_dir):
         _run()
         _drop(cust.filter(~half), "b2.parquet")
         _run()
-        _FZI_STATE_CACHE[key] = os.path.join(root, "accepted")
+
+    root = table_artifact(sf_dir, "fzi_state", build)
     return (
-        spark.read.parquet(_FZI_STATE_CACHE[key])
+        spark.read.parquet(os.path.join(root, "accepted"))
         .select("key", "name", "nation")
         .orderBy("key")
     )
@@ -206,14 +204,11 @@ def test_stream_fuzzy_ingest_dedup_matches_staged_oracle(spark, duck):
     assert n_seed < len(got) < n_all
 
 
-_SEC_STATE_CACHE: dict = {}
-
-
 def stream_er_components_spark(spark, sf_dir):
-    """The exact plan that registers when a slot frees (lift verbatim,
-    cache dict alongside) — the streaming twin of er_fuzzy_components:
-    the nation-blocked fuzzy pair set streams through
-    monitor_components in two md5-split drops (the second drop's
+    """The exact plan that registers when a slot frees (lift verbatim;
+    the state is a sources.io.table_artifact) — the streaming twin of
+    er_fuzzy_components: the nation-blocked fuzzy pair set streams
+    through monitor_components in two md5-split drops (the second drop's
     edges bridge components the first drop left separate, exercising
     the contraction path), and components_state resolves the persisted
     mapping to (custkey, component, cluster_size). The result is
@@ -221,9 +216,6 @@ def stream_er_components_spark(spark, sf_dir):
     argument, so it equals the batch closure — the SAME recursive-CTE
     oracle er_fuzzy_components stages against (deliberately shared:
     the streamed state must land on the identical clusters)."""
-    import os
-    import tempfile
-
     from pyspark.sql import Window
 
     from cassandrastack_spark.operators.fuzzy import fuzzy_self_pairs
@@ -232,9 +224,7 @@ def stream_er_components_spark(spark, sf_dir):
         monitor_components,
     )
 
-    key = sf_dir
-    if key not in _SEC_STATE_CACHE:
-        root = tempfile.mkdtemp(prefix="cs_q_sec_state_")
+    def build(root):
         src_dir = os.path.join(root, "in")
         os.makedirs(src_dir)
         c = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
@@ -298,8 +288,9 @@ def stream_er_components_spark(spark, sf_dir):
         _run()
         _drop(pairs[~in_half], "b2.parquet")
         _run()
-        _SEC_STATE_CACHE[key] = os.path.join(root, "state")
-    m = components_state(spark, _SEC_STATE_CACHE[key])
+
+    root = table_artifact(sf_dir, "sec_state", build)
+    m = components_state(spark, os.path.join(root, "state"))
     w = Window.partitionBy("comp")
     return (
         m.select(
@@ -356,8 +347,6 @@ def test_stream_er_components_matches_staged_oracle(spark, duck):
     assert got["cluster_size"].max() > 2
 
 
-_NBW_STATE_CACHE: dict = {}
-
 # bucket arithmetic shared with tests/test_r18_oracle_parity.py's
 # corpus_quality_nb_score (dim=256 keeps the weight table readable
 # while forcing real collisions)
@@ -365,8 +354,8 @@ _NB_DIM = 256
 
 
 def stream_nb_quality_score_spark(spark, sf_dir):
-    """The exact plan that registers when a slot frees (lift verbatim,
-    cache dict alongside) — the streaming twin of
+    """The exact plan that registers when a slot frees (lift verbatim;
+    the state is a sources.io.table_artifact) — the streaming twin of
     corpus_quality_nb_score: the labeled seed (src0/src1 positive vs
     src8/src9 negative) streams through monitor_nb_counts in two
     md5-split drops, nb_weights_state resolves the accumulated counts
@@ -385,9 +374,7 @@ def stream_nb_quality_score_spark(spark, sf_dir):
         nb_weights_state,
     )
 
-    key = sf_dir
-    if key not in _NBW_STATE_CACHE:
-        root = tempfile.mkdtemp(prefix="cs_q_nbw_state_")
+    def build(root):
         src_dir = os.path.join(root, "in")
         os.makedirs(src_dir)
         seed = (
@@ -433,8 +420,9 @@ def stream_nb_quality_score_spark(spark, sf_dir):
         _run()
         _drop(seed[~in_half], "b2.parquet")
         _run()
-        _NBW_STATE_CACHE[key] = os.path.join(root, "state")
-    w = nb_weights_state(spark, _NBW_STATE_CACHE[key])
+
+    root = table_artifact(sf_dir, "nbw_state", build)
+    w = nb_weights_state(spark, os.path.join(root, "state"))
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return (
         linear_text_score(d, w, "doc_id", "text")

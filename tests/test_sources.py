@@ -455,3 +455,70 @@ def test_checkpoint_if_small_sizes_cache_substituted_input(spark, tmp_path):
         assert sorted(map(tuple, done.collect())) == ROWS
     finally:
         cached.unpersist()
+
+
+def test_table_artifact_builds_once_per_directory(tmp_path):
+    """One build per (kind, absolute sf_dir): a trailing slash names the
+    same directory, another kind or directory builds its own."""
+    from cassandrastack_spark.sources.io import table_artifact
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    built = []
+
+    def build(path):
+        assert os.listdir(path) == []
+        built.append(path)
+        open(os.path.join(path, "part-0"), "w").close()
+
+    first = table_artifact(str(sf), "t_once", build)
+    assert table_artifact(str(sf) + "/", "t_once", build) == first
+    assert built == [first]
+    assert os.path.exists(os.path.join(first, "part-0"))
+    other = table_artifact(str(sf), "t_once_other", build)
+    assert other != first and built == [first, other]
+
+
+def test_table_artifact_failed_build_leaves_nothing(tmp_path):
+    """A build that raises records no entry and leaves no directory; the
+    next call builds again."""
+    from cassandrastack_spark.sources import io
+
+    made = []
+
+    def failing(path):
+        made.append(path)
+        raise RuntimeError("ingest did not finish")
+
+    with pytest.raises(RuntimeError):
+        io.table_artifact(str(tmp_path), "t_fail", failing)
+    assert not os.path.exists(made[0])
+    assert ("t_fail", str(tmp_path)) not in io._ARTIFACTS
+
+    path = io.table_artifact(str(tmp_path), "t_fail", lambda p: None)
+    assert path != made[0] and os.path.isdir(path)
+
+
+def test_table_artifact_root_removed_at_exit(tmp_path):
+    """A process that built an artifact and exits normally leaves no
+    artifact root behind."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os, sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from cassandrastack_spark.sources.io import table_artifact\n"
+        f"p = table_artifact({str(tmp_path)!r}, 'child', "
+        "lambda d: open(os.path.join(d, 'f'), 'w').close())\n"
+        "assert os.path.exists(os.path.join(p, 'f'))\n"
+        "print(os.path.dirname(p))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, check=True,
+    )
+    root = out.stdout.strip().splitlines()[-1]
+    assert os.path.basename(root).startswith("cs_q_")
+    assert not os.path.exists(root)

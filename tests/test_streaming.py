@@ -380,6 +380,43 @@ def test_run_to_batch_removes_its_checkpoint(spark, stream_dir, monkeypatch):
     assert ckpts() <= before
 
 
+def test_run_to_batch_drops_its_sink_view(spark, stream_dir):
+    """run_to_batch leaves no memory-sink table registered, whether the
+    query finished or failed, and each returned frame still reads its
+    rows: the frame's own plan keeps the sink alive."""
+    from cassandrastack_spark.streaming.ops import run_to_batch
+
+    def sinks() -> list:
+        return [
+            t.name for t in spark.catalog.listTables()
+            if t.name.startswith("cs_stream_sink_")
+        ]
+
+    _write_batch(stream_dir, "b1.parquet", [
+        (1, BASE, 100, "click", 1.0),
+        (2, BASE + dt.timedelta(minutes=10), 101, "view", 2.0),
+        (3, BASE + dt.timedelta(hours=2), 100, "click", 3.0),
+    ])
+    outs = [
+        run_to_batch(
+            tumbling_window_counts(events_stream(spark, str(stream_dir)))
+        )
+        for _ in range(3)
+    ]
+    assert sinks() == []
+    for out in outs:
+        assert len(out.collect()) == 3
+        assert len(out.toPandas()) == 3
+
+    # a query that fails drops its sink view too
+    bad = events_stream(spark, str(stream_dir)).select(
+        F.assert_true(F.col("value") < 0).alias("v")
+    )
+    with pytest.raises(Exception):
+        run_to_batch(bad, "append")
+    assert sinks() == []
+
+
 def test_stream_ingest_maintains_rollup(spark, stream_dir, tmp_path):
     """ingest_with_rollup: after every micro-batch the maintained
     rollup equals a from-scratch rollup of the table's current state —

@@ -32,6 +32,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from cassandrastack_spark.plans.guardrails import DOCUMENTED_BNL  # noqa: E402
 from cassandrastack_spark.queries import REGISTRY, load_all  # noqa: E402
 
 DEFAULT_QUERIES = [
@@ -111,138 +112,6 @@ DEFAULT_QUERIES = [
 ]
 
 RED_FLAGS = ("BroadcastNestedLoopJoin", "CartesianProduct")
-
-# BNLs that are the DOCUMENTED bounded-broadcast pattern, not a planning
-# accident: either a 1-row scalar broadcast (the canonical
-# scalar-subquery plan) or the guarded exact-scorer baselines whose
-# broadcast side is capped by max_query_rows (fails loud past the cap).
-DOCUMENTED_BNL = {
-    "ann_pq_topk": "ADC scan scores corpus x queries by design; "
-                   "query side capped by max_query_rows (fails loud)",
-    "ann_pq_topk_prod": "same ADC shape on the Arrow path; capped by "
-                        "max_query_rows",
-    "ann_ivf_pq_topk": "registered query embeds the exact cosine "
-                       "baseline for its recall invariant (capped "
-                       "broadcast); the composite itself equi-joins "
-                       "on cid",
-    "decontam_semantic": "bounded eval-split broadcast x corpus scan — "
-                         "the cosine_topk exact-audit shape, guarded "
-                         "by max_ref_rows (fails loud past the cap)",
-    "text_unigram_logprob": "1-row corpus-total scalar broadcast",
-    "corpus_dsir_weights": "1-row smoothed-LM totals (n_r, n_t, V) "
-                           "scalar broadcasts (shared "
-                           "_dsir_scores_from_postings finish)",
-    "corpus_dsir_resample": "same 1-row smoothed-LM scalar broadcasts",
-    "corpus_dsir_weights_indexed": "same shared finish, fed from the "
-                                   "persisted postings index",
-    "text_bigram_logprob": "1-row (N, V) training-scalar broadcast",
-    "decontam_bloom_probe": "1-row (m, k) filter-metadata scalar "
-                            "broadcasts in bloom_build / "
-                            "bloom_might_contain; the bitmap lookup "
-                            "itself is a word_idx equi-join",
-    "corpus_ccnet_buckets": "the bigram LM's 1-row (N, V) scalar "
-                            "broadcast; terciles are an equi-keyed "
-                            "window",
-    "anomaly_cusum_changepoint": "1-row corpus-mean scalar broadcast",
-    "decontam_bloom_indexed": "same 1-row (m, k) filter-metadata "
-                              "scalar broadcasts, read back from the "
-                              "persisted+merged bitmap; probe is the "
-                              "word_idx equi-join",
-    "ann_matryoshka_recall": "cosine_topk exact-audit shape on both "
-                             "legs: 10-query bounded broadcast x "
-                             "corpus with a <> condition (capped by "
-                             "max_query_rows, fails loud)",
-    "text_bm25_topk": "1-row (N, avgdl) corpus-scalar broadcast",
-    "token_freq_cm": "1-row (w, d) CM-geometry scalar broadcast "
-                     "(cm_estimate reads the modulus back from the "
-                     "sketch, mixed-geometry-guarded); the cell "
-                     "lookup itself is a (row, col) equi-join",
-    "text_tfidf_sim_topk": "1-row corpus-count scalar broadcast "
-                           "(df-ratio cap predicate)",
-    "ann_hybrid_rrf_topk": "single query-vector broadcast on the "
-                           "dense leg + the BM25 corpus scalars",
-    "ann_hybrid_rrf_indexed": "bounded probe-side broadcasts of the "
-                              "persisted-index probes (query "
-                              "elections + 1-row index scalars)",
-    "text_tfidf_sim_indexed": "1-row index-scalar broadcast from "
-                              "_meta (df-ratio cap predicate)",
-    "dedup_semantic_clustered": "1-row x 1-row gate-stat crossJoin "
-                                "(exact-count scalar vs clustered-"
-                                "match scalar); the candidate stage "
-                                "itself equi-joins on the list id",
-    "dedup_semantic_indexed": "same 1-row x 1-row gate-stat crossJoin "
-                              "as its retraining twin (shared "
-                              "_semantic_gate); stored-centroid "
-                              "assignment is a narrow map",
-    "embedding_covariance_block": "1-row n + 1-row dim scalar "
-                                  "broadcasts onto the dim^2-row "
-                                  "moments frame (dimension-bounded "
-                                  "by construction)",
-    "ann_ivfpq_filtered_topk": "bounded probe-side broadcasts "
-                               "(query election + 1-row _meta "
-                               "scalars); the allowed-set restriction "
-                               "is an id equi-semi-join",
-    "embedding_correlation_block": "the covariance finish's 1-row "
-                                   "scalars plus two dim-row diagonal "
-                                   "broadcasts (dimension-bounded)",
-    "embedding_covariance_drift": "both snapshots' covariance "
-                                  "finishes (1-row n + dim scalars); "
-                                  "the drift itself equi-joins on "
-                                  "(i, j)",
-    "embedding_pca_projection_pairdist": "literal-bounded 16-row "
-                                         "probe broadcast with a "
-                                         "'<' pair condition (120 "
-                                         "pairs by construction)",
-    "corpus_dsir_weights": "1-row smoothed-LM totals (n_r, n_t, V) "
-                           "scalar broadcast onto the vocab frame",
-    "corpus_dsir_resample": "same LM-totals scalar broadcast; "
-                            "selection is TakeOrderedAndProject",
-    "ann_mmr_rerank_topk": "first-stage exact cosine_topk broadcasts "
-                           "the 2-row query side (capped by "
-                           "max_query_rows, fails loud); the MMR "
-                           "stage equi-joins on neighbor_id and "
-                           "groups per query",
-    "embedding_hard_negatives": "literal-bounded 8-row anchor "
-                                "broadcast against the corpus scan "
-                                "(the cosine_topk exact-audit shape)",
-    "embedding_knn_label_agreement": "literal-bounded 64-row anchor "
-                                     "broadcast; the vote is two "
-                                     "grouped aggregations",
-    "embedding_covariance_exclude": "the covariance finish's 1-row "
-                                    "scalars on SUBTRACTED moments, "
-                                    "plus the 1-row x 1-row "
-                                    "over-retire/dim-parity guard "
-                                    "crossJoins (all count-bounded)",
-    "ann_mmr_rerank_indexed": "bounded probe-side broadcasts of the "
-                              "persisted-index first stage (2-row "
-                              "query election + 1-row _meta "
-                              "scalars); the MMR stage equi-joins "
-                              "on neighbor_id and groups per query",
-    "embedding_hard_negatives_indexed": "8-row anchor broadcast with "
-                                        "a label-mismatch condition "
-                                        "building the per-query "
-                                        "allowed pair set (bounded "
-                                        "by the anchor side); the "
-                                        "probe restriction itself is "
-                                        "an equi-semi-join on "
-                                        "(query_id, neighbor_id)",
-    "embedding_knn_label_agreement_indexed": "bounded probe-side "
-                                             "broadcasts (64-row "
-                                             "election + 1-row _meta "
-                                             "scalars); labels attach "
-                                             "by id equi-join",
-    "corpus_curriculum_order": "1-row token-quartile scalar broadcast "
-                               "(the outliers_iqr shape); stage "
-                               "assignment is a narrow map",
-    "corpus_source_kl": "1-row corpus-token-total scalar broadcast "
-                        "onto the vocabulary-bounded (source, token) "
-                        "frame (the canonical scalar-subquery plan)",
-    "corpus_source_overlap": "literal-bounded 20-row source list "
-                             "self-joined under '<' (190 pairs by "
-                             "construction — the pca_pairdist shape); "
-                             "register unions and the exact gate leg "
-                             "are equi-joins",
-}
 
 
 def _pagerank_round_section(spark: SparkSession, sf_dir: str) -> list[str]:
