@@ -2455,8 +2455,6 @@ def _rrf_fuse(bmr: DataFrame, csr: DataFrame, k: int = 15) -> DataFrame:
     )
 
 
-# The persisted indexes the *_indexed queries probe, built once per
-# process by sources.io.table_artifact.
 def _bm25_index_for(spark: SparkSession, sf_dir: str) -> str:
     from cassandrastack_spark.llm.retrieval import build_bm25_index
 
