@@ -73,8 +73,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from cassandrastack_spark.sources.io import table_artifact
-
 SF = "/root/testdata/sf0.001"
 
 
@@ -92,6 +90,7 @@ def stream_fuzzy_ingest_dedup_spark(spark, sf_dir):
     """The exact plan that registers when a slot frees (lift verbatim —
     the accepted store is a persisted artifact, built once per process
     by sources.io.table_artifact like the monitor states)."""
+    from cassandrastack_spark.sources.io import table_artifact
     from cassandrastack_spark.streaming.ops import ingest_with_fuzzy_dedup
 
     def build(root):
@@ -219,6 +218,7 @@ def stream_er_components_spark(spark, sf_dir):
     from pyspark.sql import Window
 
     from cassandrastack_spark.operators.fuzzy import fuzzy_self_pairs
+    from cassandrastack_spark.sources.io import table_artifact
     from cassandrastack_spark.streaming.ops import (
         components_state,
         monitor_components,
@@ -369,6 +369,7 @@ def stream_nb_quality_score_spark(spark, sf_dir):
     import hashlib
 
     from cassandrastack_spark.llm.classifier import linear_text_score
+    from cassandrastack_spark.sources.io import table_artifact
     from cassandrastack_spark.streaming.ops import (
         monitor_nb_counts,
         nb_weights_state,
