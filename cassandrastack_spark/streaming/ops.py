@@ -429,6 +429,33 @@ def run_to_batch(
 # ---------------------------------------------------------------------------
 
 
+def _run_foreach_batch(
+    stream: DataFrame,
+    sink,
+    checkpoint: str | None,
+    ckpt_prefix: str,
+    trigger_available_now: bool,
+):
+    """The one ``foreachBatch`` writer behind every sink in this module:
+    resolve the checkpoint (a fresh ``ckpt_prefix`` temp directory when
+    none is given), call ``sink(batch_df, batch_id, checkpoint)`` per
+    micro-batch — the sinks key their epoch markers under the
+    checkpoint, whose lineage the batch ids share — and start the query.
+
+    Returns the StreamingQuery. With ``trigger_available_now`` the call
+    drains the available input and stops (the testable finite mode); in
+    production pass ``False`` for a continuous trigger and keep a
+    durable ``checkpoint``.
+    """
+    checkpoint = checkpoint or tempfile.mkdtemp(prefix=ckpt_prefix)
+    writer = stream.writeStream.foreachBatch(
+        lambda batch_df, batch_id: sink(batch_df, batch_id, checkpoint)
+    ).option("checkpointLocation", checkpoint)
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def ingest_stream(
     stream: DataFrame,
     table,
@@ -447,23 +474,13 @@ def ingest_stream(
     clustering sort, monotonic ``_writetime`` — lives in
     ``WideColumnTable.append``, and micro-batches reuse it unchanged.
 
-    Returns the StreamingQuery. With ``trigger_available_now`` the call
-    drains the available input and stops (the testable finite mode); in
-    production pass ``False`` for a continuous trigger and keep a
-    durable ``checkpoint``.
+    Returns the StreamingQuery; ``trigger_available_now`` and
+    ``checkpoint`` as in ``_run_foreach_batch``.
     """
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="cs_ingest_ckpt_")
-
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        table.append(batch_df)
-
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
+    return _run_foreach_batch(
+        stream, lambda batch_df, _batch_id, _ckpt: table.append(batch_df),
+        checkpoint, "cs_ingest_ckpt_", trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -522,19 +539,15 @@ def ingest_with_rollup(
         refresh_rollup_incremental, rollup_events,
     )
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="cs_rollup_ckpt_")
     spark = stream.sparkSession
 
-    def _rollup_exists() -> bool:
+    def _sink(batch_df: DataFrame, _batch_id: int, _ckpt: str) -> None:
+        table.append(batch_df)
+        current = table.read()
         # explicit existence probe (any Hadoop scheme): a TRANSIENT read
         # failure on a live rollup must raise, not silently truncate the
         # maintained aggregate to one batch's groups
-        return _fs_exists(spark, rollup_path)
-
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        table.append(batch_df)
-        current = table.read()
-        if _rollup_exists():
+        if _fs_exists(spark, rollup_path):
             prior = spark.read.parquet(rollup_path).localCheckpoint(eager=True)
         else:
             prior = rollup_events(
@@ -545,13 +558,9 @@ def ingest_with_rollup(
         )
         refreshed.write.mode("overwrite").parquet(rollup_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
+    return _run_foreach_batch(
+        stream, _sink, checkpoint, "cs_rollup_ckpt_", trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -661,6 +670,127 @@ def _read_parquet_if_committed(spark, path: str):
         return None
 
 
+def _first_per(df: DataFrame, w) -> DataFrame:
+    """The first row of each partition of window ``w`` (its ordering
+    decides which): the ingest loops' in-batch collapses and the
+    components resolution."""
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _ingest_loop(
+    stream: DataFrame,
+    index_path: str,
+    accepted_path: str,
+    identity: tuple[str, ...],
+    prepare,
+    reject,
+    build,
+    extend,
+    checkpoint: str | None,
+    ckpt_prefix: str,
+    trigger_available_now: bool,
+    scratch: tuple[str, ...] = (),
+    sidecar=None,
+):
+    """The per-batch skeleton of the three ingest loops
+    (``ingest_with_dedup``, ``ingest_vectors``,
+    ``ingest_with_fuzzy_dedup``): probe the persisted index, reject,
+    extend, append. Each micro-batch runs, in this order:
+
+    1. ``prepare(batch_df)`` — the loop's in-batch hygiene and
+       collapses; ``None`` skips the batch (nothing to index or append);
+    2. one readability probe of the accepted store
+       (``_read_parquet_if_committed``);
+    3. nothing committed: ``build(batch)`` — the first batch seeds the
+       index;
+    4. otherwise: ``build(accepted)`` first if the index ``_meta`` is
+       missing, then ``reject(batch_df, accepted)``, the anti-join on
+       the ``identity`` columns, and ``extend(survivors)`` under the
+       epoch marker;
+    5. ``sidecar(accepted, survivors, checkpoint, batch_id)`` if given
+       (``accepted`` is None on the first-batch branch), then the
+       append of the survivors (``scratch`` columns dropped) to
+       ``accepted_path``.
+
+    Replay contract. foreachBatch is at-least-once, so a crashed batch
+    re-runs, and every crash point replays to the state an uncrashed
+    run would have reached:
+
+    - **First batch.** "Nothing committed" is decided by READABILITY,
+      not existence: the writer creates the accepted directory before
+      any file commits, so a crash during the very first append leaves
+      a directory a bare existence probe would route into a
+      schema-inference failure on every restart. Missing or
+      uncommitted both take step 3, whose build overwrites, so
+      rebuilding from the same batch is idempotent.
+    - **Lost index.** Index existence is decided by the index's own
+      ``_meta`` (Hadoop FS probe, any scheme), so a read failure on a
+      live index raises instead of silently rebuilding. An index lost
+      AFTER batches were accepted (deleted, mis-pathed, partial
+      restore) is rebuilt from the FULL accepted store before the
+      probe: rebuilding from the batch alone would leave the whole
+      accepted corpus unguarded — every later near-dup of it silently
+      accepted — and could not even train on a small batch. The build
+      overwrites, so a replay of this branch is idempotent.
+    - **Extend before append.** The index extend runs BEFORE the
+      accepted append on purpose: the reverse order would, on a crash
+      between the two writes, replay into "accepted but never indexed"
+      — a permanent recall hole, worse than accretion. The extend is
+      guarded by a per-epoch marker directory
+      (``<checkpoint>/cs_epochs/<batch_id>``): batch ids are
+      CHECKPOINT-scoped, so an index-global marker would make a second
+      run with a fresh checkpoint skip extends for colliding ids. A
+      batch replayed after its extend committed never extends twice;
+      only the sub-second extend→marker window can still double-write.
+    - **Replay inside the extend→append window.** The index then holds
+      the batch's own rows while the accepted store lacks them. Every
+      ``reject`` counts only matches against the ACCEPTED store, never
+      index rows alone (the dedup probe scores against accepted texts,
+      the vector probe skips floatless ids, the fuzzy probe joins to
+      accepted keys), so the replay re-derives the identical survivor
+      set, the marker skips the re-extend, and the append completes
+      the interrupted attempt.
+    - **Replay after the append.** The ``identity`` anti-join drops
+      every row already accepted under the same identity, so nothing
+      appends twice.
+    """
+    spark = stream.sparkSession
+    ids = list(identity)
+
+    def _sink(batch_df: DataFrame, batch_id: int, ckpt: str) -> None:
+        batch_df = prepare(batch_df)
+        if batch_df is None:
+            return
+        accepted = _read_parquet_if_committed(spark, accepted_path)
+        if accepted is None:
+            survivors = batch_df.drop(*scratch)
+            build(survivors)
+        else:
+            if not _fs_exists(spark, index_path + "/_meta"):
+                build(accepted)
+            survivors = (
+                reject(batch_df, accepted)
+                .join(accepted.select(*ids), ids, "left_anti")
+                .drop(*scratch)
+                .localCheckpoint(eager=True)
+            )
+            marker = f"{ckpt}/cs_epochs/{batch_id}"
+            if not _fs_exists(spark, marker):
+                extend(survivors)
+                _fs_mkdirs(spark, marker)
+        if sidecar is not None:
+            sidecar(accepted, survivors, ckpt, batch_id)
+        survivors.write.mode("append").parquet(accepted_path)
+
+    return _run_foreach_batch(
+        stream, _sink, checkpoint, ckpt_prefix, trigger_available_now
+    )
+
+
 def ingest_with_dedup(
     stream: DataFrame,
     index_path: str,
@@ -705,21 +835,11 @@ def ingest_with_dedup(
     trade; run a periodic in-corpus ``minhash_lsh_pairs`` sweep to
     catch stragglers.
 
-    Replay-safe: foreachBatch is at-least-once, so a crashed batch can
-    re-run. A replayed doc already in the accepted corpus matches
+    Replay-safe under the contract on ``_ingest_loop`` (identity:
+    ``id_col``). A replayed doc already in the accepted corpus matches
     ITSELF in the probe (same id, jaccard 1.0 — ``probe_dedup_index``
-    deliberately keeps self-id matches) and the id anti-join below
-    drops anything accepted under the same id even at lower
-    thresholds, so re-running a batch appends nothing twice. Index
-    existence is decided by the INDEX's own metadata (Hadoop FS
-    existence probe, any scheme) — read failures on a live index
-    raise instead of silently rebuilding it from one batch. The index
-    extend itself is guarded by a per-epoch marker directory
-    (``<checkpoint>/cs_epochs/<batch_id>`` — batch ids are CHECKPOINT-
-    scoped, so the marker must share the checkpoint's lineage; an
-    index-global marker would make a second run with a fresh checkpoint
-    skip extends for colliding batch ids), so a batch replayed after its
-    extend committed never appends its band rows twice.
+    deliberately keeps self-id matches), and the id anti-join drops
+    anything accepted under the same id even at lower thresholds.
     """
     from cassandrastack_spark.llm.dedup import (
         build_dedup_index,
@@ -731,99 +851,60 @@ def ingest_with_dedup(
         extend_bm25_index,
     )
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="cs_dedup_ckpt_")
     spark = stream.sparkSession
+    cols = dict(id_col=id_col, text_col=text_col)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
+    def _prepare(batch_df: DataFrame) -> DataFrame:
         # in-batch exact dedup: first (lowest id) per text digest wins
         w_digest = Window.partitionBy(F.md5(F.col(text_col))).orderBy(id_col)
-        batch_df = (
-            batch_df.withColumn("_rn", F.row_number().over(w_digest))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        if not _fs_exists(spark, index_path + "/_meta") or not _fs_exists(spark, accepted_path):
-            # first batch — or its replay after a crash between the
-            # index build and the accepted write (index overwrite is
-            # idempotent, so rebuilding from the same batch is safe)
-            survivors = batch_df
-            build_dedup_index(
-                survivors, index_path, id_col=id_col, text_col=text_col
-            )
-            if bm25_index_path is not None:
-                # overwrite-idempotent like the band-index build: a
-                # replay of the first batch rebuilds the same postings
-                build_bm25_index(
-                    survivors, bm25_index_path,
-                    id_col=id_col, text_col=text_col,
-                )
-        else:
-            accepted = spark.read.parquet(accepted_path)
-            dups = probe_dedup_index(
-                batch_df, index_path, accepted,
-                id_col=id_col, text_col=text_col, threshold=threshold,
-            ).select(F.col("batch_id").alias(id_col)).distinct()
-            survivors = (
-                batch_df.join(dups, id_col, "left_anti")
-                # replay guard: an id already accepted never re-appends
-                .join(accepted.select(id_col), id_col, "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            # per-epoch marker (underscore dir: invisible to partition
-            # discovery, like `_meta`) makes the extend idempotent under
-            # foreachBatch's at-least-once replay: a crash between the
-            # index append and the accepted append used to re-extend the
-            # index with the same band rows on replay (benign — probe
-            # dedups candidates — but the index accreted). Extending
-            # BEFORE the accepted append is deliberate: the reverse
-            # order would, on a crash between the two writes, replay
-            # into "docs accepted but never indexed" — a permanent
-            # recall hole, worse than accretion. Only the sub-second
-            # extend→touch window can still double-write.
-            marker = f"{checkpoint}/cs_epochs/{batch_id}"
-            if not _fs_exists(spark, marker):
-                extend_dedup_index(
-                    survivors, index_path, id_col=id_col, text_col=text_col
-                )
-                _fs_mkdirs(spark, marker)
-            if bm25_index_path is not None:
-                if not _fs_exists(spark, bm25_index_path + "/_meta"):
-                    # retrofit: the pipeline ran before bm25_index_path
-                    # was configured — build the postings from the
-                    # FULL corpus (already-accepted docs + this batch's
-                    # survivors), not just the batch; build overwrites,
-                    # so a replay of this branch is idempotent
-                    build_bm25_index(
-                        accepted.select(id_col, text_col).unionByName(
-                            survivors.select(id_col, text_col)
-                        ),
-                        bm25_index_path, id_col=id_col, text_col=text_col,
-                    )
-                else:
-                    # own epoch marker (the band extend above may have
-                    # committed in a crashed earlier attempt that never
-                    # reached this line): double-appended postings from
-                    # the residual extend->marker crash window are
-                    # collapsed at read time (probe_bm25_index
-                    # aggregates per (w, doc_id)), so the marker is an
-                    # efficiency guard, not the correctness one
-                    bm_marker = f"{checkpoint}/cs_bm25_epochs/{batch_id}"
-                    if not _fs_exists(spark, bm_marker):
-                        extend_bm25_index(
-                            survivors, bm25_index_path,
-                            id_col=id_col, text_col=text_col,
-                        )
-                        _fs_mkdirs(spark, bm_marker)
-        survivors.write.mode("append").parquet(accepted_path)
+        return _first_per(batch_df.localCheckpoint(eager=True), w_digest)
 
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
+    def _reject(batch_df: DataFrame, accepted: DataFrame) -> DataFrame:
+        dups = probe_dedup_index(
+            batch_df, index_path, accepted, threshold=threshold, **cols
+        ).select(F.col("batch_id").alias(id_col)).distinct()
+        return batch_df.join(dups, id_col, "left_anti")
+
+    def _bm25(accepted, survivors: DataFrame, ckpt: str, batch_id: int):
+        if accepted is None:
+            # overwrite-idempotent like the band-index build: a replay
+            # of the first batch rebuilds the same postings
+            build_bm25_index(survivors, bm25_index_path, **cols)
+        elif not _fs_exists(spark, bm25_index_path + "/_meta"):
+            # retrofit: the pipeline ran before bm25_index_path was
+            # configured — build the postings from the FULL corpus
+            # (already-accepted docs + this batch's survivors), not
+            # just the batch; build overwrites, so a replay of this
+            # branch is idempotent
+            build_bm25_index(
+                accepted.select(id_col, text_col).unionByName(
+                    survivors.select(id_col, text_col)
+                ),
+                bm25_index_path, **cols,
+            )
+        else:
+            # own epoch marker (the band extend may have committed in a
+            # crashed earlier attempt that never reached this line):
+            # double-appended postings from the residual extend->marker
+            # crash window are collapsed at read time (probe_bm25_index
+            # aggregates per (w, doc_id)), so the marker is an
+            # efficiency guard, not the correctness one
+            bm_marker = f"{ckpt}/cs_bm25_epochs/{batch_id}"
+            if not _fs_exists(spark, bm_marker):
+                extend_bm25_index(survivors, bm25_index_path, **cols)
+                _fs_mkdirs(spark, bm_marker)
+
+    return _ingest_loop(
+        stream, index_path, accepted_path, (id_col,),
+        prepare=_prepare,
+        reject=_reject,
+        build=lambda corpus: build_dedup_index(corpus, index_path, **cols),
+        extend=lambda s: extend_dedup_index(s, index_path, **cols),
+        checkpoint=checkpoint,
+        ckpt_prefix="cs_dedup_ckpt_",
+        trigger_available_now=trigger_available_now,
+        sidecar=_bm25 if bm25_index_path is not None else None,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ingest_vectors(
@@ -866,10 +947,9 @@ def ingest_vectors(
     The first batch trains and builds the index (``build_ivfpq_index``
     — overwrite, replay-idempotent). Centroid/codebook drift under a
     shifting stream is handled by periodic rebuilds, like every IVF
-    system. Same replay discipline as ``ingest_with_dedup``: an
-    accepted id never re-appends (anti-join), and the index extend is
-    guarded by a per-epoch marker under ``<checkpoint>/cs_epochs/``
-    (checkpoint-scoped, like the batch ids it keys).
+    system. Replay-safe under the contract on ``_ingest_loop``
+    (identity: ``id_col``); a lost index retrains on the accepted
+    store.
 
     Size the geometry to the SEED batch: PQ training fails loud when
     the first batch holds fewer than ``k_codes`` vectors, and IVF
@@ -882,22 +962,16 @@ def ingest_vectors(
         probe_ivfpq_index,
     )
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="cs_vec_ckpt_")
     spark = stream.sparkSession
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
+    def _prepare(batch_df: DataFrame) -> DataFrame:
         # content-keyed election: replay-stable regardless of partition
         # layout (monotonically_increasing_id is neither)
         vec_key = F.xxhash64(F.col(vec_col).cast("string"))
         w_id = Window.partitionBy(id_col).orderBy(
             vec_key, F.col(vec_col).cast("string")
         )
-        batch_df = (
-            batch_df.withColumn("_rn", F.row_number().over(w_id))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        batch_df = _first_per(batch_df.localCheckpoint(eager=True), w_id)
         # in-batch CONTENT dedup: bit-identical vectors under different
         # ids collapse to the lowest id (matching ingest_with_dedup's
         # md5-digest in-batch pass) — otherwise an availableNow backlog
@@ -914,96 +988,74 @@ def ingest_vectors(
         w_vec = Window.partitionBy(F.col(vec_col).cast("string")).orderBy(
             id_col
         )
-        batch_df = (
-            batch_df.withColumn("_rn", F.row_number().over(w_vec))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        batch_df = _first_per(batch_df, w_vec)
+        if reject_cosine is None:
+            return batch_df
+        # in-batch NEAR-dup collapse (batch-vs-batch, bounded): exact
+        # cosine pairs at the rejection threshold → connected
+        # components → lowest id per cluster survives. Runs on the
+        # FIRST batch too (it builds the index and never probes), and
+        # before the corpus probe on later batches so a near-dup
+        # cluster arriving inside one availableNow backlog lands
+        # exactly once. Cost is the triangle-block self-join over THIS
+        # batch only — short-circuited for the continuous low-volume
+        # case: a <2-row batch can hold no pair (one cheap count on the
+        # checkpointed dedup output), and an empty pair frame skips the
+        # iterative components loop (several driver-synchronized jobs)
+        # that would otherwise tax every micro-batch a fixed latency.
+        from cassandrastack_spark.llm.dedup import dedup_components
+        from cassandrastack_spark.llm.simsearch import cosine_pairs_above
+
+        batch_df = batch_df.localCheckpoint(eager=True)
+        if batch_df.count() < 2:
+            return batch_df
+        pairs = cosine_pairs_above(
+            batch_df, id_col=id_col, vec_col=vec_col,
+            threshold=reject_cosine, method="exact",
+        ).select("a_id", "b_id").localCheckpoint(eager=True)
+        if pairs.isEmpty():
+            return batch_df
+        losers = (
+            dedup_components(pairs)
+            .filter(F.col("id") != F.col("component"))
+            .select(F.col("id").alias(id_col))
         )
-        if reject_cosine is not None:
-            # in-batch NEAR-dup collapse (batch-vs-batch, bounded):
-            # exact cosine pairs at the rejection threshold →
-            # connected components → lowest id per cluster survives.
-            # Runs on the FIRST batch too (it builds the index and
-            # never probes), and before the corpus probe on later
-            # batches so a near-dup cluster arriving inside one
-            # availableNow backlog lands exactly once. Cost is the
-            # triangle-block self-join over THIS batch only —
-            # short-circuited for the continuous low-volume case: a
-            # <2-row batch can hold no pair (one cheap count on the
-            # checkpointed dedup output), and an empty pair frame
-            # skips the iterative components loop (several
-            # driver-synchronized jobs) that would otherwise tax
-            # every micro-batch a fixed latency.
-            from cassandrastack_spark.llm.dedup import dedup_components
-            from cassandrastack_spark.llm.simsearch import (
-                cosine_pairs_above,
-            )
+        return batch_df.join(losers, id_col, "left_anti").localCheckpoint(
+            eager=True
+        )
 
-            batch_df = batch_df.localCheckpoint(eager=True)
-            losers = None
-            if batch_df.count() >= 2:
-                pairs = cosine_pairs_above(
-                    batch_df, id_col=id_col, vec_col=vec_col,
-                    threshold=reject_cosine, method="exact",
-                ).select("a_id", "b_id").localCheckpoint(eager=True)
-                if not pairs.isEmpty():
-                    losers = (
-                        dedup_components(pairs)
-                        .filter(F.col("id") != F.col("component"))
-                        .select(F.col("id").alias(id_col))
-                    )
-            if losers is not None:
-                batch_df = batch_df.join(
-                    losers, id_col, "left_anti"
-                ).localCheckpoint(eager=True)
-        if not _fs_exists(spark, index_path + "/_meta") or not _fs_exists(spark, accepted_path):
-            survivors = batch_df
-            build_ivfpq_index(
-                survivors, index_path, id_col=id_col, vec_col=vec_col,
-                k_centroids=k_centroids, m_sub=m_sub, k_codes=k_codes,
-            )
-        else:
-            accepted = spark.read.parquet(accepted_path)
-            survivors = batch_df
-            if reject_cosine is not None:
-                # on_missing_corpus="skip": a replay after a crash
-                # between the index extend and the accepted append
-                # probes with a corpus that lacks exactly THIS batch's
-                # ids (extend-before-append is deliberate, see
-                # ingest_with_dedup) — "raise" would wedge the stream
-                # permanently on that state; the skipped ids are the
-                # batch's own vectors, re-checked as they re-land.
-                hits = probe_ivfpq_index(
-                    spark, index_path, batch_df, accepted,
-                    id_col=id_col, vec_col=vec_col,
-                    k=1, nprobe=nprobe, include_score=True,
-                    on_missing_corpus="skip",
-                ).filter(F.col("cosine") >= reject_cosine)
-                dups = hits.select(
-                    F.col("query_id").alias(id_col)
-                ).distinct()
-                survivors = survivors.join(dups, id_col, "left_anti")
-            survivors = (
-                survivors
-                # replay guard: an id already accepted never re-appends
-                .join(accepted.select(id_col), id_col, "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            marker = f"{checkpoint}/cs_epochs/{batch_id}"
-            if not _fs_exists(spark, marker):
-                extend_ivfpq_index(
-                    survivors, index_path, id_col=id_col, vec_col=vec_col
-                )
-                _fs_mkdirs(spark, marker)
-        survivors.write.mode("append").parquet(accepted_path)
+    def _reject(batch_df: DataFrame, accepted: DataFrame) -> DataFrame:
+        if reject_cosine is None:
+            return batch_df
+        # on_missing_corpus="skip": a replay inside the extend→append
+        # crash window probes with a corpus that lacks exactly THIS
+        # batch's ids — "raise" would wedge the stream permanently on
+        # that state; the skipped ids are the batch's own vectors,
+        # re-checked as they re-land.
+        hits = probe_ivfpq_index(
+            spark, index_path, batch_df, accepted,
+            id_col=id_col, vec_col=vec_col,
+            k=1, nprobe=nprobe, include_score=True,
+            on_missing_corpus="skip",
+        ).filter(F.col("cosine") >= reject_cosine)
+        dups = hits.select(F.col("query_id").alias(id_col)).distinct()
+        return batch_df.join(dups, id_col, "left_anti")
 
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
+    return _ingest_loop(
+        stream, index_path, accepted_path, (id_col,),
+        prepare=_prepare,
+        reject=_reject,
+        build=lambda corpus: build_ivfpq_index(
+            corpus, index_path, id_col=id_col, vec_col=vec_col,
+            k_centroids=k_centroids, m_sub=m_sub, k_codes=k_codes,
+        ),
+        extend=lambda s: extend_ivfpq_index(
+            s, index_path, id_col=id_col, vec_col=vec_col
+        ),
+        checkpoint=checkpoint,
+        ckpt_prefix="cs_vec_ckpt_",
+        trigger_available_now=trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ingest_with_fuzzy_dedup(
@@ -1037,24 +1089,15 @@ def ingest_with_fuzzy_dedup(
        with their variants under a fresh epoch
        (``extend_fuzzy_index``), marker-guarded.
 
-    Rejection counts only matches whose index (block_cols..., key)
-    identity is already in the accepted store — NOT every index hit
-    (identity is block-scoped throughout the fuzzy-index family: the
-    same key under different block values is different evidence). The difference is the crash
-    window between the index extend and the accepted append: a batch
-    replayed inside it self-matches its OWN just-extended rows, and
-    rejecting on those would permanently lose the batch (indexed but
-    never accepted — the recall-hole analysis of ``ingest_with_dedup``,
-    inverted). Joining matches to accepted keys makes the replay
-    re-derive the identical survivor set: the accepted store is
-    unchanged, the new index rows' keys are not in it, so they reject
-    nothing; the per-epoch marker (``<checkpoint>/cs_epochs/<batch_id>``
-    — checkpoint-scoped for the same lineage reason as
-    ``ingest_with_dedup``'s) then skips the re-extend, and the append
-    completes the interrupted attempt. Replay after the accepted
-    append committed: every batch key self-matches an accepted row at
-    dist 0 and the accepted-key anti-join drops it — nothing appends
-    twice.
+    Replay-safe under the contract on ``_ingest_loop`` (identity:
+    ``(block_cols..., key_col)``). Rejection counts only matches whose
+    index (block_cols..., key) identity is already in the accepted
+    store — NOT every index hit (identity is block-scoped throughout
+    the fuzzy-index family: the same key under different block values
+    is different evidence). A batch replayed inside the extend→append
+    crash window self-matches its OWN just-extended rows, and
+    rejecting on those would permanently lose the batch; their keys
+    are not in the accepted store, so they reject nothing.
 
     Near-duplicates WITHIN one batch (non-exact) ride through
     together — the standard at-drop-granularity trade, same as
@@ -1072,10 +1115,9 @@ def ingest_with_fuzzy_dedup(
     )
 
     bc = tuple(block_cols)
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="cs_fuzzy_ckpt_")
     spark = stream.sparkSession
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _prepare(batch_df: DataFrame) -> DataFrame | None:
         batch_df = (
             batch_df.withColumn("_s", F.col(str_col).cast("string"))
             .na.drop(subset=[*bc, key_col, "_s"])
@@ -1086,91 +1128,45 @@ def ingest_with_fuzzy_dedup(
             # nothing to probe, index, or append — and the first-batch
             # branch must not reach build_fuzzy_index's empty-corpus
             # raise
-            return
+            return None
         # in-batch exact collapse: lowest key per (blocks, string) wins
         w_s = Window.partitionBy(*bc, "_s").orderBy(key_col)
-        batch_df = (
-            batch_df.withColumn("_rn", F.row_number().over(w_s))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        accepted = _read_parquet_if_committed(spark, accepted_path)
-        if accepted is None:
-            # first batch — or its replay after a crash between the
-            # index build and the accepted write, INCLUDING a crash
-            # mid-first-append that left the directory created but
-            # uncommitted (review r16; index overwrite is idempotent,
-            # so rebuilding from the same batch is safe)
-            survivors = batch_df.drop("_s")
-            build_fuzzy_index(
-                survivors, index_path, key_col, str_col,
-                max_dist=max_dist, n_buckets=n_buckets, block_cols=bc,
-            )
-        else:
-            if not _fs_exists(spark, index_path + "/_meta"):
-                # recovery: the index was lost AFTER batches were
-                # accepted (deleted, mis-pathed, partial restore).
-                # Rebuilding from the batch alone would leave the
-                # whole pre-existing accepted corpus unguarded — every
-                # future near-dup of it silently accepted (review r16;
-                # the bm25 retrofit branch of ingest_with_dedup is the
-                # precedent). Rebuild from the FULL accepted store,
-                # then probe this batch against it as normal; build
-                # overwrites, so a replay of this branch is idempotent.
-                build_fuzzy_index(
-                    accepted, index_path, key_col, str_col,
-                    max_dist=max_dist, n_buckets=n_buckets,
-                    block_cols=bc,
-                )
-            matches = probe_fuzzy_index(
-                spark, index_path, batch_df, "_s", max_dist=max_dist
-            )
-            # identity is (block_cols..., key) — the fuzzy-index
-            # family's contract (_current_epochs): the same key under
-            # different block values is DIFFERENT evidence. Joining on
-            # key alone would (a) treat a crashed attempt's index row
-            # in block B2 as "accepted" because the key is accepted in
-            # B1, re-rejecting rows the crash-window analysis promises
-            # to re-accept, and (b) let the replay guard silently drop
-            # a record whose key is accepted under another block
-            # (review r16).
-            acc_keys = accepted.select(
-                *bc, F.col(key_col).alias("key")
-            ).distinct()
-            rejected = (
-                matches.join(acc_keys, [*bc, "key"])
-                .select(*bc, F.col("s_probe").alias("_s"))
-                .distinct()
-            )
-            survivors = (
-                batch_df.join(rejected, [*bc, "_s"], "left_anti")
-                # replay guard: a (blocks, key) already accepted never
-                # re-appends
-                .join(
-                    accepted.select(*bc, key_col), [*bc, key_col],
-                    "left_anti",
-                )
-                .drop("_s")
-                .localCheckpoint(eager=True)
-            )
-            # extend BEFORE the accepted append (the ingest_with_dedup
-            # ordering): the reverse order would, on a crash between
-            # the writes, replay into "records accepted but never
-            # indexed" — a permanent recall hole, worse than the
-            # marker-closed accretion window
-            marker = f"{checkpoint}/cs_epochs/{batch_id}"
-            if not _fs_exists(spark, marker):
-                extend_fuzzy_index(survivors, index_path, key_col, str_col)
-                _fs_mkdirs(spark, marker)
-        survivors.write.mode("append").parquet(accepted_path)
+        return _first_per(batch_df, w_s)
 
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
+    def _reject(batch_df: DataFrame, accepted: DataFrame) -> DataFrame:
+        matches = probe_fuzzy_index(
+            spark, index_path, batch_df, "_s", max_dist=max_dist
+        )
+        # identity is (block_cols..., key) — the fuzzy-index family's
+        # contract (_current_epochs): the same key under different
+        # block values is DIFFERENT evidence. Joining on key alone
+        # would (a) treat a crashed attempt's index row in block B2 as
+        # "accepted" because the key is accepted in B1, re-rejecting
+        # rows the crash-window analysis promises to re-accept, and
+        # (b) let the replay guard silently drop a record whose key is
+        # accepted under another block.
+        acc_keys = accepted.select(*bc, F.col(key_col).alias("key")).distinct()
+        rejected = (
+            matches.join(acc_keys, [*bc, "key"])
+            .select(*bc, F.col("s_probe").alias("_s"))
+            .distinct()
+        )
+        return batch_df.join(rejected, [*bc, "_s"], "left_anti")
+
+    return _ingest_loop(
+        stream, index_path, accepted_path, (*bc, key_col),
+        prepare=_prepare,
+        reject=_reject,
+        build=lambda corpus: build_fuzzy_index(
+            corpus, index_path, key_col, str_col,
+            max_dist=max_dist, n_buckets=n_buckets, block_cols=bc,
+        ),
+        extend=lambda s: extend_fuzzy_index(s, index_path, key_col, str_col),
+        checkpoint=checkpoint,
+        ckpt_prefix="cs_fuzzy_ckpt_",
+        trigger_available_now=trigger_available_now,
+        scratch=("_s",),
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def monitor_components(
@@ -1230,10 +1226,9 @@ def monitor_components(
     """
     from cassandrastack_spark.llm.dedup import dedup_components
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="cs_comp_ckpt_")
     spark = stream.sparkSession
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+    def _sink(batch_df: DataFrame, _batch_id: int, _ckpt: str) -> None:
         edges = (
             batch_df.select(
                 F.col(src_col).alias("u"), F.col(dst_col).alias("v")
@@ -1342,13 +1337,9 @@ def monitor_components(
                 .parquet(state_path)
             )
 
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
+    return _run_foreach_batch(
+        stream, _sink, checkpoint, "cs_comp_ckpt_", trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _resolve_components(rows: DataFrame, keep_epoch: bool = False) -> DataFrame:
@@ -1358,11 +1349,7 @@ def _resolve_components(rows: DataFrame, keep_epoch: bool = False) -> DataFrame:
     column so stamps survive compaction)."""
     w = Window.partitionBy("node").orderBy(F.desc("epoch"), "comp")
     cols = ["node", "comp"] + (["epoch"] if keep_epoch else [])
-    return (
-        rows.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(*cols)
-    )
+    return _first_per(rows, w).select(*cols)
 
 
 def compact_components_state(spark: SparkSession, state_path: str) -> None:
@@ -1448,11 +1435,10 @@ def monitor_embedding_moments(
     """
     from cassandrastack_spark.llm.embstats import _moment_partials
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="cs_mom_ckpt_")
     spark = stream.sparkSession
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        marker = f"{checkpoint}/cs_epochs/{batch_id}"
+    def _sink(batch_df: DataFrame, batch_id: int, ckpt: str) -> None:
+        marker = f"{ckpt}/cs_epochs/{batch_id}"
         if _fs_exists(spark, marker):
             return
         # eager checkpoint: the summed totals AND the count read these
@@ -1492,13 +1478,9 @@ def monitor_embedding_moments(
         ).coalesce(1).write.mode("append").parquet(state_path)
         _fs_mkdirs(spark, marker)
 
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
+    return _run_foreach_batch(
+        stream, _sink, checkpoint, "cs_mom_ckpt_", trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def embedding_moments_state(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1573,11 +1555,10 @@ def _marker_guarded_sketch_monitor(
     additive CM/histogram states it is the deliberate
     at-least-once/overcount-only policy).
     """
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix=ckpt_prefix)
     spark = stream.sparkSession
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        marker = f"{checkpoint}/cs_epochs/{batch_id}"
+    def _sink(batch_df: DataFrame, batch_id: int, ckpt: str) -> None:
+        marker = f"{ckpt}/cs_epochs/{batch_id}"
         if _fs_exists(spark, marker):
             return
         if batch_df.filter(F.col(notnull_col).isNotNull()).isEmpty():
@@ -1593,13 +1574,9 @@ def _marker_guarded_sketch_monitor(
         out.parquet(state_path)
         _fs_mkdirs(spark, marker)
 
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
+    return _run_foreach_batch(
+        stream, _sink, checkpoint, ckpt_prefix, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def monitor_distinct_count(
@@ -1741,11 +1718,7 @@ def _compact_hll_snapshot(
     merged.coalesce(1).write.mode("append").partitionBy("p").parquet(
         state_path
     )
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for f in snapshot:
-        fpath = jvm.org.apache.hadoop.fs.Path(f)
-        fpath.getFileSystem(hconf).delete(fpath, False)
+    _delete_snapshot_files(spark, snapshot)
 
 
 def monitor_hot_keys(
@@ -1878,9 +1851,9 @@ def compact_hot_keys_state(spark: SparkSession, state_path: str) -> None:
     ``spark.sql.files.ignoreMissingFiles`` (a missing file only ever
     removes rows the merged file re-states).
     """
-    _recover_hot_keys_compaction(spark, state_path)
+    _recover_additive_compaction(spark, state_path)
     if _stage_hot_keys_compaction(spark, state_path):
-        _recover_hot_keys_compaction(spark, state_path)
+        _recover_additive_compaction(spark, state_path)
 
 
 def _stage_hot_keys_compaction(spark: SparkSession, state_path: str) -> bool:
@@ -2030,11 +2003,6 @@ def _stage_additive_compaction(
             "state untouched; re-run after the other compactor finishes"
         )
     return True
-
-
-def _recover_hot_keys_compaction(spark: SparkSession, state_path: str) -> None:
-    """Schema-agnostic alias kept for the protocol's CM-named seam."""
-    _recover_additive_compaction(spark, state_path)
 
 
 def _recover_additive_compaction(spark: SparkSession, state_path: str) -> None:

@@ -2797,3 +2797,189 @@ def test_stream_fuzzy_ingest_recovers_uncommitted_accepted_dir(
         r.key for r in spark.read.parquet(str(tmp_path / "accepted")).collect()
     )
     assert acc == [1, 2]
+
+
+def _ingest_case(spark, tmp_path, loop):
+    """One ``ingest_with_dedup`` or ``ingest_vectors`` setup for the
+    recovery cases the fuzzy loop pins above: the stream schema, a
+    seed batch, a second batch holding one near-duplicate of a seed
+    row (listed first) and one novel row, ``run()`` over the source
+    directory, and ``build(rows)`` that writes the loop's index the
+    way a first batch does."""
+    import numpy as np
+    from pyspark.sql.types import (
+        ArrayType, DoubleType, LongType, StringType, StructField,
+        StructType,
+    )
+
+    from cassandrastack_spark.llm.dedup import build_dedup_index
+    from cassandrastack_spark.llm.simsearch import build_ivfpq_index
+    from cassandrastack_spark.streaming.ops import (
+        ingest_vectors,
+        ingest_with_dedup,
+    )
+
+    index, accepted = str(tmp_path / "index"), str(tmp_path / "accepted")
+    if loop == "dedup":
+        id_col, schema = "doc_id", StructType([
+            StructField("doc_id", LongType()),
+            StructField("text", StringType()),
+        ])
+        seed = [(1, " ".join(f"a{i}" for i in range(30))),
+                (2, " ".join(f"b{i}" for i in range(30)))]
+        near = " ".join(("X" if i == 15 else f"b{i}") for i in range(30))
+        batch2 = [(10, near), (11, " ".join(f"c{i}" for i in range(30)))]
+
+        def start(src):
+            return ingest_with_dedup(
+                src, index, accepted, checkpoint=str(tmp_path / "ckpt"))
+
+        def build(rows):
+            build_dedup_index(spark.createDataFrame(rows, schema), index)
+    else:
+        # 40 seed vectors: the rebuild from the accepted store trains
+        # PQ on them, so the seed must hold at least k_codes vectors
+        id_col, schema = "vec_id", StructType([
+            StructField("vec_id", LongType()),
+            StructField("embedding", ArrayType(DoubleType())),
+        ])
+        rng = np.random.default_rng(7)
+        vecs = rng.normal(size=(42, 8))
+        seed = [(i + 1, vecs[i].tolist()) for i in range(40)]
+        near = (vecs[1] + 1e-3 * rng.normal(size=8)).tolist()
+        batch2 = [(100, near), (101, vecs[41].tolist())]
+
+        def start(src):
+            return ingest_vectors(
+                src, index, accepted, reject_cosine=0.98,
+                k_centroids=2, m_sub=4, k_codes=8,
+                checkpoint=str(tmp_path / "ckpt"))
+
+        def build(rows):
+            build_ivfpq_index(
+                spark.createDataFrame(rows, schema), index,
+                k_centroids=2, m_sub=4, k_codes=8)
+
+    d = tmp_path / "in"
+    d.mkdir()
+
+    def write(name, rows):
+        pdf = pd.DataFrame(rows, columns=schema.fieldNames())
+        pq.write_table(
+            pa.Table.from_pandas(pdf, preserve_index=False), str(d / name)
+        )
+
+    def run():
+        q = start(spark.readStream.schema(schema).parquet(str(d)))
+        if not q.awaitTermination(120):
+            q.stop()
+            raise RuntimeError(f"{loop} ingest did not finish")
+
+    def accepted_ids():
+        rows = spark.read.parquet(accepted).collect()
+        return sorted(r[id_col] for r in rows)
+
+    return dict(seed=seed, batch2=batch2, write=write, run=run,
+                build=build, index=index, accepted=accepted,
+                accepted_ids=accepted_ids)
+
+
+@pytest.mark.parametrize("loop", ["dedup", "vectors"])
+def test_stream_ingest_rebuilds_lost_index_from_accepted(
+    spark, tmp_path, loop
+):
+    """The fuzzy loop's lost-index rule holds for the band and IVF+PQ
+    loops too: an index lost after batches were accepted is rebuilt
+    from the FULL accepted store before the next batch probes it, so
+    a near-duplicate of an old accepted row is still rejected (and a
+    two-row batch never retrains the index on itself)."""
+    import shutil
+
+    c = _ingest_case(spark, tmp_path, loop)
+    c["write"]("b1.parquet", c["seed"])
+    c["run"]()
+    shutil.rmtree(c["index"])
+
+    c["write"]("b2.parquet", c["batch2"])
+    c["run"]()
+    want = sorted([r[0] for r in c["seed"]] + [c["batch2"][1][0]])
+    assert c["accepted_ids"]() == want, (
+        "the near-dup of the OLD accepted corpus must still be rejected "
+        "after the index rebuild"
+    )
+
+
+@pytest.mark.parametrize("loop", ["dedup", "vectors"])
+def test_stream_ingest_recovers_uncommitted_accepted_dir(
+    spark, tmp_path, loop
+):
+    """The fuzzy loop's uncommitted-first-append rule holds for the
+    band and IVF+PQ loops too: a crash after the first batch's index
+    build and during its first accepted append leaves a committed
+    index beside an accepted directory with no committed data; the
+    replay takes the first-batch branch instead of failing schema
+    inference on every restart."""
+    import os
+
+    c = _ingest_case(spark, tmp_path, loop)
+    c["build"](c["seed"])
+    os.makedirs(os.path.join(c["accepted"], "_temporary"))
+
+    c["write"]("b1.parquet", c["seed"])
+    c["run"]()
+    assert c["accepted_ids"]() == [r[0] for r in c["seed"]]
+
+
+def test_ingest_with_dedup_bm25_turned_on_mid_life(spark, tmp_path):
+    """``bm25_index_path`` first set on the second batch: the missing
+    postings are built from the accepted corpus plus that batch's
+    survivors, so probing them equals ``bm25_rank`` over the whole
+    accepted corpus and the batch's rejected near-dup is absent."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from cassandrastack_spark.llm.retrieval import bm25_rank, probe_bm25_index
+    from cassandrastack_spark.streaming.ops import ingest_with_dedup
+
+    schema = StructType([
+        StructField("doc_id", LongType()),
+        StructField("text", StringType()),
+    ])
+    d = tmp_path / "docs_in"
+    d.mkdir()
+    text_a = "spark vector " + " ".join(f"a{i}" for i in range(20))
+    text_b = "stream join " + " ".join(f"b{i}" for i in range(20))
+    text_c = "vector stream vector " + " ".join(f"c{i}" for i in range(20))
+    near_b = "stream join " + " ".join(
+        ("CHANGED" if i == 9 else f"b{i}") for i in range(20)
+    )
+
+    def write(name, rows):
+        pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
+        pq.write_table(
+            pa.Table.from_pandas(pdf, preserve_index=False), str(d / name)
+        )
+
+    def run(bm25_index_path):
+        src = spark.readStream.schema(schema).parquet(str(d))
+        q = ingest_with_dedup(
+            src, str(tmp_path / "band"), str(tmp_path / "acc"),
+            checkpoint=str(tmp_path / "ckpt"),
+            bm25_index_path=bm25_index_path)
+        q.awaitTermination(120)
+
+    write("b1.parquet", [(1, text_a), (2, text_b)])
+    run(None)
+    write("b2.parquet", [(10, text_c), (11, near_b)])
+    run(str(tmp_path / "bm25"))
+    accepted = spark.read.parquet(str(tmp_path / "acc"))
+    assert sorted(r.doc_id for r in accepted.collect()) == [1, 2, 10]
+    got = probe_bm25_index(
+        spark, str(tmp_path / "bm25"), ["vector", "stream", "join"], k=10
+    )
+    want = bm25_rank(accepted, ["vector", "stream", "join"], k=10)
+    assert [tuple(r) for r in got.collect()] == [
+        tuple(r) for r in want.collect()
+    ], "probe over the retrofitted index == bm25_rank over accepted docs"
+    assert 11 not in {r.doc_id for r in got.collect()}, (
+        "rejected near-dup never entered the postings"
+    )
