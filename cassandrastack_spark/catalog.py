@@ -170,6 +170,18 @@ class Keyspace:
             unknown = set(collections) - {f.name for f in schema.fields}
             if unknown:
                 raise ValueError(f"collection columns not in schema: {sorted(unknown)}")
+        # last-writer-wins breaks a writetime tie on the cell value
+        # (storage.py _reconcile_rows); Spark orders a map only as a
+        # cell's top-level value, by its entries
+        unordered = [
+            f.name for f in schema.fields
+            if f.name not in collections
+            and "map<" in f.dataType.simpleString().removeprefix("map<")
+        ]
+        if unordered:
+            raise ValueError(
+                f"a map nested in a non-collection column has no order: {unordered}"
+            )
         counters = list(counter_columns or [])
         if counters:
             pk = list(partition_keys) + list(clustering_keys or [])

@@ -21,8 +21,11 @@ Physical layout contract (SURVEY.md §1.4):
 - **Upsert (last-writer-wins) → dedup-on-read.** CQL INSERT is an upsert
   on the primary key (``server.py:307-308`` re-seeding overwrites).
   Parquet is append-only, so every write carries a monotonically
-  increasing ``_writetime``; reads keep the newest row per primary key
-  via max_by/row_number (SURVEY.md §7.4). A ``compact()`` job rewrites
+  increasing ``_writetime``; reads keep the newest write per cell
+  (SURVEY.md §7.4). At equal writetimes the tie goes by content, as in
+  Cassandra: a delete beats a value, then the greater value wins, so no
+  winner depends on the order files are read in (a collection's ops at
+  one writetime still fold in read order). A ``compact()`` job rewrites
   buckets to physically drop shadowed rows — the compaction analogue
   (``cassandra.yaml:818``).
 - **Batch atomicity → commit protocol.** The reference wraps writes in
@@ -157,9 +160,8 @@ def _stamp(
 def _is_marker(cells) -> bool:
     """A row-marker write: ``_cells`` null (a full-row write), empty (a
     key-only INSERT, or compact()'s rewrite of an all-null row) or
-    carrying the "" sentinel (a named-columns INSERT). The SQL forms in
-    ``_reconcile_rows`` and ``_reconciled_with_collections`` state the
-    same rule."""
+    carrying the "" sentinel (a named-columns INSERT). The SQL form in
+    ``_reconcile_rows`` states the same rule."""
     return cells is None or len(cells) == 0 or "" in cells
 
 
@@ -204,6 +206,23 @@ def _sort_key(value):
     if value != value:
         return (2, 0)
     return (1, value)
+
+
+def _cell_order(w: int, v, e):
+    """The order of two writes to one cell, as ``_reconcile_rows``'
+    ``struct(w, v IS NULL, v, e)`` sorts them: the newer writetime, then
+    a delete (null) over a value, then the greater value, then the later
+    expiry (no TTL first)."""
+    return (w, v is None, _sort_key(v), _sort_key(e))
+
+
+def _orderable(sql_type: str) -> tuple[str, str]:
+    """Format strings that turn a cell value of ``sql_type`` into a form
+    Spark can order, and back: Spark has no order on maps, so a map
+    (a view's copy of a map collection, say) compares as its entries."""
+    if sql_type.startswith("map<"):
+        return "map_entries({})", "map_from_entries({})"
+    return "{}", "{}"
 
 
 def _q(name: str) -> str:
@@ -890,10 +909,13 @@ class WideColumnTable:
     ) -> DataFrame:
         """Newest row per primary key, expired keys dropped.
 
-        max_by over a single groupBy — one shuffle, map-side combinable,
-        no window-sort. Shadowed (overwritten) rows drop out exactly as
-        Cassandra's read-path reconciliation does. Expiry filtering runs
-        AFTER reconciliation: an expired newest version removes the key
+        One groupBy — one shuffle, map-side combinable, no window-sort.
+        Each winner is the ``max`` of one ordered struct led by the
+        writetime, so a writetime tie resolves by content as Cassandra
+        resolves it (see ``_reconcile_rows``), never by read order.
+        Shadowed (overwritten) rows drop out exactly as Cassandra's
+        read-path reconciliation does. Expiry filtering runs AFTER
+        reconciliation: an expired newest version removes the key
         (TTL tombstone semantics) instead of resurrecting older data.
         Keeps ``_expires`` so ``compact()`` can carry live TTLs through
         the rewrite; plain reads drop it.
@@ -932,28 +954,29 @@ class WideColumnTable:
         clustering rows.
 
         The static value is the newest non-null write across ANY row of
-        the partition — resolved by a groupBy on the partition keys
-        alone (a tiny frame: one row per partition) and left-joined back
-        onto the row-level reconciliation, which runs with the static
-        columns stripped so last-writer-wins never sees them. Writing a
-        static via any clustering row updates it for the whole
-        partition; null statics on a write mean "not written" (CQL
-        UPDATEs name only the cells they set — this engine's full-row
-        appends encode absence as null). Divergence from Cassandra,
-        documented: statics live only while the partition has at least
-        one live row (Cassandra keeps a rowless static row; a
-        reconciling engine would need a phantom row to carry it).
+        the partition (at a writetime tie, the greater value) — resolved
+        by a groupBy on the partition keys alone (a tiny frame: one row
+        per partition) and left-joined back onto the row-level
+        reconciliation, which runs with the static columns stripped so
+        last-writer-wins never sees them. Writing a static via any
+        clustering row updates it for the whole partition; null statics
+        on a write mean "not written" (CQL UPDATEs name only the cells
+        they set — this engine's full-row appends encode absence as
+        null). Divergence from Cassandra, documented: statics live only
+        while the partition has at least one live row (Cassandra keeps a
+        rowless static row; a reconciling engine would need a phantom
+        row to carry it).
         """
         pkeys = self.spec.partition_keys
-        stat = raw.groupBy(*pkeys).agg(
-            *[
-                F.max_by(
-                    F.col(c),
-                    F.when(F.col(c).isNotNull(), F.col(_WRITETIME)),
-                ).alias(c)
-                for c in statics
-            ]
-        )
+        aggs = []
+        for c in statics:
+            wrap, unwrap = _orderable(self.spec.schema[c].dataType.simpleString())
+            newest = (
+                f"max(CASE WHEN {_q(c)} IS NOT NULL THEN struct("
+                f"{_q(_WRITETIME)} AS w, {wrap.format(_q(c))} AS v) END).v"
+            )
+            aggs.append(F.expr(f"{unwrap.format(newest)} AS {_q(c)}"))
+        stat = raw.groupBy(*pkeys).agg(*aggs)
         rows = self._reconcile_rows(
             raw.drop(*statics), keep_writetime, cell_meta, as_of_micros,
             keep_marker,
@@ -963,18 +986,6 @@ class WideColumnTable:
         # table preserve INSERT row markers exactly like the plain path
         return rows.join(stat, pkeys, "left")
 
-    @staticmethod
-    def _cell_w(c: str):
-        """Ordering key for cell-level last-writer-wins: a write
-        contributes to column ``c`` only if it SET that cell (``_cells``
-        null = full-row write sets everything). max_by skips null
-        ordering keys, so unset cells drop out of the race while a
-        named-but-null cell (explicit cell delete) still wins."""
-        return F.when(
-            F.col(_CELLS).isNull() | F.array_contains(F.col(_CELLS), c),
-            F.col(_WRITETIME),
-        )
-
     def _reconcile_rows(
         self,
         raw: DataFrame,
@@ -983,75 +994,118 @@ class WideColumnTable:
         as_of_micros: int | None = None,
         keep_marker: bool = False,
     ) -> DataFrame:
+        """Row-level reconciliation of every table kind, one groupBy.
+
+        The tie rule: a cell takes the ``max`` of ``struct(w, v IS NULL,
+        v, e)`` over the writes that set it — the newest writetime, then
+        at equal writetimes a named-null cell delete over a value, then
+        the greater value (Spark's order: UTF-8 bytes for text, numbers
+        by value with NaN greatest, ``false < true``, timestamps by
+        instant), then the later expiry (no TTL first). The row marker
+        takes ``max(struct(w, e))``. A key whose newest write is a
+        DELETE is gone, and a DELETE wins a tie with any write.
+
+        Counters sum their increments. Collection columns collect their
+        (writetime, op, payload) cells and fold them in writetime order
+        (``_fold_collection``; ops at one writetime in read order); only
+        full writes (``_coll_col`` null — every write, on a table without
+        collections) feed the scalar, counter and marker races. Op-chains
+        are bounded by writes-per-key since the last ``compact()``, which
+        materializes folds back to one cell. A map outside the op chain
+        (a view's copy of a map collection) orders by its entries.
+
+        Liveness divergence on collection tables, documented: the key
+        lives while it is not deleted and the newest full write's expiry
+        has not passed, whatever its cells' liveness (more lenient than
+        the plain path's marker-OR-live-cell model), and scalar cells
+        carry that row-level expiry instead of their own. ``keep_marker``
+        still tracks the marker honestly — compact()'s rewrite preserves
+        INSERT row markers (the "" sentinel) so a later schema evolution
+        dropping the collection columns does not silently lose
+        primary-key liveness history.
+
+        The plan is built from SQL text, not Column objects: each Column
+        call is a py4j round-trip and this plan is rebuilt on every
+        point read. ``now`` is a literal of this call, so nothing built
+        here may be reused by a later call.
+        """
         pk = self.spec.primary_key
-        payload = [
-            c
-            for c in raw.columns
-            if c not in pk and c not in (_BUCKET, _COLL_COL, _COLL_OP, _CELLS)
-        ]
-        counters = set(self.spec.properties.get("counter_columns", ()))
-        collections = dict(self.spec.properties.get("collection_columns") or {})
-        types = {f.name: f.dataType for f in self.spec.schema.fields}
+        props = self.spec.properties
+        counters = set(props.get("counter_columns", ()))
+        collections = dict(props.get("collection_columns") or {})
+        types = {f.name: f.dataType.simpleString() for f in self.spec.schema.fields}
         # TTL expiry is evaluated at the snapshot instant for as-of
         # reads: a row that expired AFTER the snapshot was live then
-        now_micros = (
-            as_of_micros
-            if as_of_micros is not None
-            else int(time.time() * 1_000_000)
+        now = as_of_micros if as_of_micros is not None else int(time.time() * 1_000_000)
+        meta = (_BUCKET, _COLL_COL, _COLL_OP, _CELLS, _WRITETIME, _EXPIRES, _TOMBSTONE)
+        data_cols = [c for c in raw.columns if c not in pk and c not in meta]
+        wt, ex, tomb, cells, coll = map(
+            _q, (_WRITETIME, _EXPIRES, _TOMBSTONE, _CELLS, _COLL_COL)
         )
-        if collections:
-            return self._reconciled_with_collections(
-                raw, pk, payload, counters, collections, types, now_micros,
-                keep_writetime, cell_meta, keep_marker,
-            )
-        # The plan is built from SQL text, not Column objects: each
-        # Column call is a py4j round-trip and this plan is rebuilt on
-        # every point read. ``now_micros`` is a literal of this call,
-        # so nothing built here may be reused by a later call.
-        meta = (_WRITETIME, _EXPIRES, _TOMBSTONE)
-        data_cols = [c for c in payload if c not in meta]
-        wt, ex, tomb, cells = map(_q, (_WRITETIME, _EXPIRES, _TOMBSTONE, _CELLS))
         is_tomb = f"coalesce({tomb}, false)"
+        full = f"{coll} IS NULL"
         aggs = []
         for c in data_cols:
+            qc = _q(c)
+            # the write SET the cell: _cells null (a full-row write) or
+            # naming it; unset cells drop out of the race
+            sets_c = (
+                f"{full} AND ({cells} IS NULL OR array_contains({cells}, {_s(c)}))"
+            )
             if c in counters:
-                # counter columns merge by SUM of increments (CQL
-                # counter semantics); nulls (unset) don't contribute
+                # CQL counter semantics: the SUM of increments; nulls
+                # (unset) don't contribute
                 aggs.append(
-                    f"CAST(sum({_q(c)}) AS {types[c].simpleString()}) AS {_q(c)}"
+                    f"CAST(sum(CASE WHEN {full} THEN {qc} END) AS {types[c]}) AS {qc}"
+                )
+            elif c in collections:
+                # a full write's value joins the op-chain as an
+                # ``assign`` only if the write SET the cell (else a
+                # partial INSERT's null placeholder would clear the
+                # collection); deltas name their column via _coll_col.
+                # The comparator orders on writetime only: a map payload
+                # is not orderable.
+                aggs.append(
+                    f"array_sort(collect_list(CASE WHEN ({sets_c}) OR {coll} = "
+                    f"{_s(c)} THEN struct({wt} AS w, coalesce({_q(_COLL_OP)}, "
+                    f"'assign') AS op, {qc} AS v) END), (l, r) -> CASE WHEN "
+                    "l.w < r.w THEN -1 WHEN l.w > r.w THEN 1 ELSE 0 END) "
+                    f"AS {_q('__ops_' + c)}"
                 )
             else:
-                # cell-level last-writer-wins: newest write that SET the
-                # cell (the _cell_w ordering key); its writetime
-                # (tombstone cut) and expiry (per-cell TTL, like
-                # Cassandra's) ride along
+                # the winning write's writetime (tombstone cut) and
+                # expiry (per-cell TTL, like Cassandra's) ride along
+                wrap = _orderable(types[c])[0]
                 aggs.append(
-                    f"max_by(struct({wt} AS w, {_q(c)} AS v, {ex} AS e), "
-                    f"CASE WHEN {cells} IS NULL OR array_contains({cells}, "
-                    f"{_s(c)}) THEN {wt} END) AS {_q('__sv_' + c)}"
+                    f"max(CASE WHEN {sets_c} THEN struct({wt} AS w, {qc} IS NULL "
+                    f"AS d, {wrap.format(qc)} AS v, {ex} AS e) END) "
+                    f"AS {_q('__sv_' + c)}"
                 )
-        # the row MARKER is the newest full-row write (CQL INSERT;
-        # _cells null): its TTL governs the row's own liveness, while a
-        # cells-write's TTL expires only its cells — Cassandra's
-        # row-marker model. A key stays live while the marker is live
-        # OR any cell is live.
-        # marker writes: _cells null (full-row INSERT), EMPTY (a
-        # key-only INSERT, and compact()'s rewrite of an all-null row),
-        # or carrying the "" sentinel (a named-columns INSERT — CQL
-        # INSERTs always deposit the marker, UPDATEs never do); the
-        # same rule as _is_marker. The null test is explicit: size(NULL)
-        # is NULL under ANSI mode but -1 without it.
-        marker_key = (
-            f"CASE WHEN ({cells} IS NULL OR size({cells}) = 0 "
-            f"OR array_contains({cells}, '')) AND NOT {is_tomb} THEN {wt} END"
+        # the row MARKER is the newest full-row write (CQL INSERT): its
+        # TTL governs the row's own liveness, while a cells-write's TTL
+        # expires only its cells — Cassandra's row-marker model. Marker
+        # writes: _cells null (full-row INSERT), EMPTY (a key-only
+        # INSERT, and compact()'s rewrite of an all-null row), or
+        # carrying the "" sentinel (a named-columns INSERT — CQL INSERTs
+        # always deposit the marker, UPDATEs never do); the same rule as
+        # _is_marker. The null test is explicit: size(NULL) is NULL
+        # under ANSI mode but -1 without it.
+        is_marker = (
+            f"{full} AND ({cells} IS NULL OR size({cells}) = 0 "
+            f"OR array_contains({cells}, '')) AND NOT {is_tomb}"
         )
         aggs += [
-            f"max_by({tomb}, {wt}) AS {tomb}",
-            f"max_by({ex}, {marker_key}) AS {ex}",
-            f"max({marker_key}) AS `__marker_w`",
+            f"max(CASE WHEN {is_marker} THEN struct({wt} AS w, {ex} AS e) END) "
+            "AS `__marker`",
             f"max(CASE WHEN {is_tomb} THEN {wt} END) AS `__tomb_w`",
             f"max({wt}) AS {wt}",
         ]
+        if collections:
+            # TTL rides on full rows only — a delta carries no expiry
+            aggs.append(
+                f"max(CASE WHEN {full} THEN struct({wt} AS w, {ex} AS e) END).e "
+                f"AS {ex}"
+            )
         grouped = raw.groupBy(*pk).agg(*[F.expr(a) for a in aggs])
         # cells at or before the newest DELETE are dead: a later partial
         # write revives the key without resurrecting pre-delete cells
@@ -1059,261 +1113,101 @@ class WideColumnTable:
         sel = [_q(c) for c in pk]
         live_terms = []
         for c in data_cols:
-            if c in counters:
-                sel.append(_q(c))
-                live_terms.append(f"{_q(c)} IS NOT NULL")
-                if cell_meta:  # CQL: WRITETIME on counters is an error
-                    sel.append(f"CAST(NULL AS BIGINT) AS {_q('__wt_' + c)}")
-            else:
-                sv = _q(f"__sv_{c}")
-                cell_vis = (
-                    f"({sv}.w > {tomb_w} "
-                    f"AND ({sv}.e IS NULL OR {sv}.e > {now_micros}))"
-                )
-                sel.append(
-                    f"CAST(CASE WHEN {cell_vis} THEN {sv}.v END "
-                    f"AS {types[c].simpleString()}) AS {_q(c)}"
-                )
-                live_terms.append(f"({cell_vis} AND {sv}.v IS NOT NULL)")
+            qc = _q(c)
+            if c in counters or c in collections:
+                if c in counters:
+                    sel.append(qc)
+                    live_terms.append(f"{qc} IS NOT NULL")
+                else:
+                    fold = self._fold_collection(
+                        collections[c], _q("__ops_" + c), types[c], tomb_w
+                    )
+                    sel.append(f"{fold} AS {qc}")
                 if cell_meta:
-                    sel.append(
-                        f"CASE WHEN {cell_vis} THEN {sv}.w END "
-                        f"AS {_q('__wt_' + c)}"
-                    )
-                    sel.append(
-                        f"CASE WHEN {cell_vis} THEN {sv}.e END "
-                        f"AS {_q('__ex_' + c)}"
-                    )
-        marker_live = (
-            f"(`__marker_w` IS NOT NULL AND `__marker_w` > {tomb_w} "
-            f"AND ({ex} IS NULL OR {ex} > {now_micros}))"
-        )
-        row_live = marker_live
-        for term in live_terms:
-            row_live = f"({row_live} OR {term})"
+                    # multi-cell values: CQL errors on WRITETIME/TTL of
+                    # them (the front-end enforces)
+                    sel += [
+                        f"CAST(NULL AS BIGINT) AS {_q('__wt_' + c)}",
+                        f"CAST(NULL AS BIGINT) AS {_q('__ex_' + c)}",
+                    ]
+                continue
+            sv = _q("__sv_" + c)
+            vis = f"{sv}.w > {tomb_w}"
+            if not collections:
+                vis = f"({vis} AND ({sv}.e IS NULL OR {sv}.e > {now}))"
+            value = _orderable(types[c])[1].format(f"{sv}.v")
+            sel.append(f"CAST(CASE WHEN {vis} THEN {value} END AS {types[c]}) AS {qc}")
+            live_terms.append(f"({vis} AND {sv}.v IS NOT NULL)")
+            if cell_meta:
+                sel += [
+                    f"CASE WHEN {vis} THEN {sv}.w END AS {_q('__wt_' + c)}",
+                    f"CASE WHEN {vis} THEN {sv}.e END AS {_q('__ex_' + c)}",
+                ]
         if keep_marker:
             # compact() preserves the marker through the rewrite: a row
             # whose lineage has a live marker keeps primary-key liveness
             # after materialization (the "" sentinel _materialized_cells
             # appends), like Cassandra carrying the marker through
             # compaction
-            sel.append(f"`__marker_w` > {tomb_w} AS `__marker_live`")
+            sel.append(f"`__marker`.w > {tomb_w} AS `__marker_live`")
             if cell_meta:
                 # the fragment-preserving rewrite additionally needs the
                 # marker's own writetime to stamp its fragment
-                sel.append("`__marker_w`")
-        # a marker at or before the newest DELETE is dead lineage: its
-        # TTL must not ride through (compact() would otherwise stamp a
-        # revived row with the dead marker's expiry and the row would
-        # vanish when that old TTL passed)
-        sel.append(f"CASE WHEN `__marker_w` > {tomb_w} THEN {ex} END AS {ex}")
+                sel.append("`__marker`.w AS `__marker_w`")
+        if collections:
+            row_live = f"({ex} IS NULL OR {ex} > {now})"
+            sel.append(ex)
+        else:
+            # a key stays live while its marker is live OR any cell is
+            # live
+            row_live = " OR ".join([
+                f"(`__marker`.w > {tomb_w} AND (`__marker`.e IS NULL "
+                f"OR `__marker`.e > {now}))",
+                *live_terms,
+            ])
+            # a marker at or before the newest DELETE is dead lineage:
+            # its TTL must not ride through (compact() would otherwise
+            # stamp a revived row with the dead marker's expiry and the
+            # row would vanish when that old TTL passed)
+            sel.append(f"CASE WHEN `__marker`.w > {tomb_w} THEN `__marker`.e END AS {ex}")
         if keep_writetime:
             sel.append(wt)
-        # a key whose NEWEST write is a DELETE marker is gone; an
-        # expiry-dead key (no live marker, no live cell) likewise — both
-        # checked after reconciliation so they shadow (never resurrect)
-        # older versions
-        return grouped.where(f"NOT {is_tomb} AND ({row_live})").selectExpr(*sel)
-
-    def _reconciled_with_collections(
-        self, raw, pk, payload, counters, collections, types, now_micros,
-        keep_writetime: bool = False, cell_meta: bool = False,
-        keep_marker: bool = False,
-    ) -> DataFrame:
-        """Reconciliation when the table declares collection columns.
-
-        Still ONE groupBy — the same single shuffle as the plain path.
-        Collection columns collect their (writetime, op, payload) cells
-        and fold them in writetime order with JVM lambda expressions
-        (``aggregate`` over the sorted cell array); scalar columns take
-        the newest FULL write (delta rows excluded via a null max_by
-        key) and are additionally cut off at the newest tombstone's
-        writetime, so a delta that revives a deleted key does not
-        resurrect pre-delete scalar cells — Cassandra's per-cell
-        shadowing. Op-chains are bounded by writes-per-key since the
-        last ``compact()`` (which materializes folds back to one cell).
-
-        Liveness divergence, documented: this path keeps every
-        non-tombstoned, non-expired key regardless of cell liveness
-        (more lenient than the plain path's marker-OR-live-cell model),
-        so markers never decide visibility on collection tables.
-        ``keep_marker`` still tracks the marker honestly — compact()'s
-        rewrite preserves INSERT row markers (the "" sentinel) so a
-        later schema evolution dropping the collection columns does not
-        silently lose primary-key liveness history.
-        """
-        meta = (_WRITETIME, _EXPIRES, _TOMBSTONE)
-        data_cols = [c for c in payload if c not in meta]
-        full_w = F.when(F.col(_COLL_COL).isNull(), F.col(_WRITETIME))
-        aggs = []
-        for c in data_cols:
-            if c in counters:
-                aggs.append(
-                    F.sum(F.when(F.col(_COLL_COL).isNull(), F.col(c)))
-                    .cast(types[c])
-                    .alias(c)
-                )
-            elif c in collections:
-                # a full write's collection value joins the op-chain as
-                # an ``assign`` only if the write SET the cell (else a
-                # partial INSERT's null placeholder would clear the
-                # collection); deltas name their column via _coll_col
-                cell = F.when(
-                    (
-                        F.col(_COLL_COL).isNull()
-                        & (
-                            F.col(_CELLS).isNull()
-                            | F.array_contains(F.col(_CELLS), c)
-                        )
-                    )
-                    | (F.col(_COLL_COL) == c),
-                    F.struct(
-                        F.col(_WRITETIME).alias("w"),
-                        F.coalesce(F.col(_COLL_OP), F.lit("assign")).alias("op"),
-                        F.col(c).alias("v"),
-                    ),
-                )
-                aggs.append(
-                    # comparator on writetime only: the default struct
-                    # ordering would try to compare the payload too,
-                    # which is illegal for map-typed collections
-                    F.array_sort(
-                        F.collect_list(cell),
-                        lambda l, r: F.when(l["w"] < r["w"], -1)
-                        .when(l["w"] > r["w"], 1)
-                        .otherwise(0),
-                    ).alias(f"__ops_{c}")
-                )
-            else:
-                # scalar cells: newest FULL write that set the cell
-                aggs.append(
-                    F.max_by(
-                        F.struct(
-                            F.col(_WRITETIME).alias("w"),
-                            F.col(c).alias("v"),
-                            F.col(_EXPIRES).alias("e"),
-                        ),
-                        F.when(F.col(_COLL_COL).isNull(), self._cell_w(c)),
-                    ).alias(f"__sv_{c}")
-                )
-        # marker writes: full-row (not a collection delta), cell set
-        # empty/null or carrying the "" sentinel, not a tombstone —
-        # same definition as the plain path, guarded on _coll_col so a
-        # delta (whose _cells is null) never counts as a marker
-        marker_key = F.when(
-            F.col(_COLL_COL).isNull()
-            & (
-                F.col(_CELLS).isNull()
-                | (F.size(F.col(_CELLS)) == 0)
-                | F.array_contains(F.col(_CELLS), F.lit(""))
-            )
-            & ~F.coalesce(F.col(_TOMBSTONE), F.lit(False)),
-            F.col(_WRITETIME),
-        )
-        aggs += [
-            # row liveness: the newest write of ANY kind decides (a
-            # delta after a DELETE revives the key, like Cassandra)
-            F.expr(f"max_by(`{_TOMBSTONE}`, `{_WRITETIME}`)").alias(_TOMBSTONE),
-            # TTL rides on full rows only — a delta carries no expiry
-            F.max_by(F.col(_EXPIRES), full_w).alias(_EXPIRES),
-            F.max(marker_key).alias("__marker_w"),
-            F.max(
-                F.when(
-                    F.coalesce(F.col(_TOMBSTONE), F.lit(False)),
-                    F.col(_WRITETIME),
-                )
-            ).alias("__tomb_w"),
-            F.max(F.col(_WRITETIME)).alias(_WRITETIME),
-        ]
-        grouped = raw.groupBy(*pk).agg(*aggs)
-        tomb_w = F.coalesce(F.col("__tomb_w"), F.lit(-1))
-        sel = [F.col(c) for c in pk]
-        for c in data_cols:
-            if c in counters:
-                sel.append(F.col(c))
-            elif c in collections:
-                sel.append(
-                    self._fold_collection(
-                        collections[c], f"__ops_{c}", types[c], tomb_w
-                    ).alias(c)
-                )
-            else:
-                sv = F.col(f"__sv_{c}")
-                sel.append(
-                    F.when(sv["w"] > tomb_w, sv["v"]).cast(types[c]).alias(c)
-                )
-            if cell_meta:
-                # scalar cells carry their winning write's timestamp;
-                # counters/collections are multi-cell -> null (CQL
-                # errors on WRITETIME for them; the front-end enforces)
-                if c in counters or c in collections:
-                    wt = F.lit(None).cast("long")
-                    ex = F.lit(None).cast("long")
-                else:
-                    sv = F.col(f"__sv_{c}")
-                    wt = F.when(sv["w"] > tomb_w, sv["w"]).cast("long")
-                    ex = F.when(sv["w"] > tomb_w, sv["e"]).cast("long")
-                sel.append(wt.alias(f"__wt_{c}"))
-                sel.append(ex.alias(f"__ex_{c}"))
-        if keep_marker:
-            sel.append((F.col("__marker_w") > tomb_w).alias("__marker_live"))
-        sel += [F.col(_EXPIRES), F.col(_TOMBSTONE)]
-        if keep_writetime:
-            sel.append(F.col(_WRITETIME))
-        return (
-            grouped.select(*sel)
-            .filter(~F.coalesce(F.col(_TOMBSTONE), F.lit(False)))
-            .filter(F.col(_EXPIRES).isNull() | (F.col(_EXPIRES) > now_micros))
-            .drop(_TOMBSTONE)
-        )
+        # a key whose NEWEST write is a DELETE (a tie included) is gone;
+        # an expiry-dead key likewise — both checked after
+        # reconciliation so they shadow (never resurrect) older versions
+        return grouped.where(f"{tomb_w} < {wt} AND ({row_live})").selectExpr(*sel)
 
     @staticmethod
-    def _fold_collection(kind: str, ops_col: str, dtype, tomb_w):
-        """Fold a key's sorted (w, op, v) cells into the live value.
+    def _fold_collection(kind: str, ops: str, sql_type: str, tomb_w: str) -> str:
+        """SQL folding a key's sorted (w, op, v) cells into the live value.
 
         Pure JVM higher-order functions — no Python in the loop. Cells
         at or before the newest tombstone are dead (filtered first);
         ``assign`` restarts the fold, deltas mutate the accumulator.
         Empty results read as NULL (CQL: empty collections are null).
         """
-        sql_t = dtype.simpleString()
-        empty = F.expr(
-            "CAST({} AS {})".format(
-                "array()" if kind in ("set", "list") else "map()", sql_t
-            )
-        )
-        live = F.filter(F.col(ops_col), lambda o: o["w"] > tomb_w)
-
-        def step(acc, o):
-            v = F.coalesce(o["v"], empty)
-            a = F.coalesce(acc, empty)
-            if kind == "set":
-                return (
-                    F.when(o["op"] == "assign", F.array_distinct(v))
-                    .when(o["op"] == "add", F.array_union(a, v))
-                    .otherwise(F.array_except(a, v))  # remove
-                )
-            if kind == "list":
-                return (
-                    F.when(o["op"] == "assign", v)
-                    .when(o["op"] == "append", F.concat(a, v))
-                    .otherwise(F.concat(v, a))  # prepend
-                )
+        empty = f"CAST({'map()' if kind == 'map' else 'array()'} AS {sql_type})"
+        v, acc = f"coalesce(o.v, {empty})", f"coalesce(acc, {empty})"
+        res = "array_sort(acc)" if kind == "set" else "acc"
+        # each op's new accumulator; the last one is the ELSE
+        if kind == "set":
+            ops_sql = [("assign", f"array_distinct({v})"),
+                       ("add", f"array_union({acc}, {v})"),
+                       ("remove", f"array_except({acc}, {v})")]
+        elif kind == "list":
+            ops_sql = [("assign", v), ("append", f"concat({acc}, {v})"),
+                       ("prepend", f"concat({v}, {acc})")]
+        else:
             # map: put overrides existing keys, remove drops by key
-            dropped = F.map_filter(
-                a, lambda k, _: ~F.array_contains(F.map_keys(v), k)
-            )
-            return (
-                F.when(o["op"] == "assign", v)
-                .when(o["op"] == "put", F.map_concat(dropped, v))
-                .otherwise(dropped)  # remove
-            )
-
-        def finish(acc):
-            res = F.array_sort(acc) if kind == "set" else acc
-            return F.when(F.size(res) > 0, res)
-
-        return F.aggregate(live, empty, step, finish)
+            dropped = f"map_filter({acc}, (k, x) -> NOT array_contains(map_keys({v}), k))"
+            ops_sql = [("assign", v), ("put", f"map_concat({dropped}, {v})"),
+                       ("remove", dropped)]
+        step = " ".join(f"WHEN '{op}' THEN {e}" for op, e in ops_sql[:-1])
+        return (
+            f"aggregate(filter({ops}, o -> o.w > {tomb_w}), {empty}, "
+            f"(acc, o) -> CASE o.op {step} ELSE {ops_sql[-1][1]} END, "
+            f"acc -> CASE WHEN size({res}) > 0 THEN {res} END)"
+        )
 
     def read(self) -> DataFrame:
         """Full table with upsert semantics: newest live row per key."""
@@ -1386,6 +1280,26 @@ class WideColumnTable:
             deletes.withColumn("_op", F.lit("delete"))
         )
 
+    def _partition_bucket(self, key_values: dict) -> int:
+        """The bucket of the one partition ``key_values`` names; it must
+        name exactly the partition key. Routes on the internal values,
+        which Spark's ``hash`` reads (a timestamp as its micros)."""
+        pkeys = self.spec.partition_keys
+        if set(key_values) != set(pkeys):
+            raise ValueError(f"partition read needs exactly {pkeys}")
+        schema = self.spec.schema
+        return self._route(
+            [schema[k].dataType.toInternal(key_values[k]) for k in pkeys]
+        )
+
+    def _partition_raw(self, key_values: dict) -> DataFrame:
+        """The raw rows of one partition: the scan pruned to its bucket
+        directory, filtered on the key."""
+        raw = self._raw().filter(F.col(_BUCKET) == self._partition_bucket(key_values))
+        for k, v in key_values.items():
+            raw = raw.filter(F.col(k) == v)
+        return raw
+
     def read_cell_meta(self, **key_values) -> DataFrame:
         """Reconciled rows plus per-cell metadata: ``__wt_<col>`` (the
         winning write's timestamp for each scalar cell, engine units =
@@ -1398,16 +1312,7 @@ class WideColumnTable:
         reconciled scan under a global sort. Rows come back in clustering
         order either way.
         """
-        raw = self._raw()
-        if key_values:
-            if set(key_values) != set(self.spec.partition_keys):
-                raise ValueError(
-                    f"partition read needs exactly {self.spec.partition_keys}"
-                )
-            bucket = self._route([key_values[k] for k in self.spec.partition_keys])
-            raw = raw.filter(F.col(_BUCKET) == bucket)
-            for k, v in key_values.items():
-                raw = raw.filter(F.col(k) == v)
+        raw = self._partition_raw(key_values) if key_values else self._raw()
         rec = self._reconciled(raw, cell_meta=True).drop(_WRITETIME)
         order = [*self.spec.partition_keys, *self._sort_cols()]
         if key_values:
@@ -1428,16 +1333,8 @@ class WideColumnTable:
         exchange and its sampling job. The scan and the
         reconciliation's partial aggregate stay parallel.
         """
-        if set(key_values) != set(self.spec.partition_keys):
-            raise ValueError(
-                f"partition read needs exactly {self.spec.partition_keys}"
-            )
-        bucket = self._route([key_values[k] for k in self.spec.partition_keys])
-        raw = self._raw().filter(F.col(_BUCKET) == bucket)
-        for k, v in key_values.items():
-            raw = raw.filter(F.col(k) == v)
         return (
-            self._reconciled(raw)
+            self._reconciled(self._partition_raw(key_values))
             .select(*[f.name for f in self.spec.schema.fields])
             .coalesce(1)
             .sortWithinPartitions(*self._sort_cols())
@@ -1458,13 +1355,9 @@ class WideColumnTable:
         """
         if not self.point_local:
             return self.read_partition(**key_values).collect()
-        if set(key_values) != set(self.spec.partition_keys):
-            raise ValueError(
-                f"partition read needs exactly {self.spec.partition_keys}"
-            )
+        bucket = self._partition_bucket(key_values)
         schema = self.spec.schema
         key = {k: schema[k].dataType.toInternal(v) for k, v in key_values.items()}
-        bucket = self._route([key[k] for k in self.spec.partition_keys])
         bucket_dir = os.path.join(self.path, f"{_BUCKET}={bucket}")
         if not os.path.isdir(bucket_dir):
             return []
@@ -1496,61 +1389,52 @@ class WideColumnTable:
         (internal values), in Python; returns live rows as internal
         tuples in schema order. Same rules, same names:
 
-        - each payload cell takes the newest write that set it
-          (``_cells`` null or naming it), with that write's expiry;
-        - the row marker is the newest non-tombstone marker write
-          (``_is_marker``), with its expiry;
-        - cells and markers at or before the newest tombstone are dead;
-        - a key whose newest write is a tombstone is gone;
+        - each payload cell takes the greatest ``_cell_order`` among the
+          writes that set it (``_cells`` null or naming it);
+        - the row marker is the greatest (writetime, expiry) among the
+          non-tombstone marker writes (``_is_marker``);
+        - cells and markers at or before the newest tombstone are dead,
+          so a key whose newest write is a tombstone (a tie included)
+          has nothing left to live on;
         - expiry is applied after reconciliation: a key lives while its
           marker or any non-null cell is live at ``now_micros``.
-
-        A writetime tie (two rows of one write, e.g. a BATCH naming one
-        key twice) goes to the row read last, as ``max_by`` resolves it:
-        within one file that is statement order on both paths.
         """
         pk = self.spec.primary_key
         data_cols = [n for n in self.spec.schema.names if n not in pk]
         groups: dict[tuple, dict] = {}
         for r in raw:
-            w = r[_WRITETIME]
-            cells = r[_CELLS]
-            is_tomb = bool(r[_TOMBSTONE])
-            key = tuple(r[k] for k in pk)
-            g = groups.get(key)
-            if g is None:
-                g = groups[key] = {
-                    "row": r, "sv": {}, "w": None, "tomb": None,
-                    "marker_w": None, "marker_e": None, "tomb_w": None,
-                }
+            w, cells, e = r[_WRITETIME], r[_CELLS], r[_EXPIRES]
+            g = groups.setdefault(
+                tuple(r[k] for k in pk),
+                {"row": r, "sv": {}, "marker": None, "tomb_w": -1},
+            )
             for c in data_cols:
                 if cells is None or c in cells:
+                    order = _cell_order(w, r[c], e)
                     sv = g["sv"].get(c)
-                    if sv is None or w >= sv[0]:
-                        g["sv"][c] = (w, r[c], r[_EXPIRES])
-            if g["w"] is None or w >= g["w"]:
-                g["w"], g["tomb"] = w, r[_TOMBSTONE]
-            if _is_marker(cells) and not is_tomb:
-                if g["marker_w"] is None or w >= g["marker_w"]:
-                    g["marker_w"], g["marker_e"] = w, r[_EXPIRES]
-            if is_tomb and (g["tomb_w"] is None or w > g["tomb_w"]):
-                g["tomb_w"] = w
+                    if sv is None or order > sv[0]:
+                        g["sv"][c] = (order, r[c], e)
+            if r[_TOMBSTONE]:
+                g["tomb_w"] = max(g["tomb_w"], w)
+            elif _is_marker(cells):
+                order = (w, _sort_key(e))
+                if g["marker"] is None or order > g["marker"][0]:
+                    g["marker"] = (order, e)
         out = []
         for g in groups.values():
-            if g["tomb"]:
-                continue
-            tomb_w = -1 if g["tomb_w"] is None else g["tomb_w"]
-            values = {}
+            tomb_w = g["tomb_w"]
+            marker = g["marker"]
             live = (
-                g["marker_w"] is not None
-                and g["marker_w"] > tomb_w
-                and (g["marker_e"] is None or g["marker_e"] > now_micros)
+                marker is not None
+                and marker[0][0] > tomb_w
+                and (marker[1] is None or marker[1] > now_micros)
             )
+            values = {}
             for c in data_cols:
                 sv = g["sv"].get(c)
                 visible = (
                     sv is not None
-                    and sv[0] > tomb_w
+                    and sv[0][0] > tomb_w
                     and (sv[2] is None or sv[2] > now_micros)
                 )
                 values[c] = sv[1] if visible else None

@@ -1248,6 +1248,31 @@ def test_mv_if_not_exists_and_drop_index_guards(cql):
     assert "audit_idx" in cql.execute("DESCRIBE TABLES")
 
 
+def test_index_of_a_map_collection_table_reads_its_maps(cql):
+    """An index copies its base's columns, and a map collection is a
+    plain cell there: last-writer-wins on a map compares its entries,
+    since Spark has no order on maps. A map nested in a plain column
+    has no order at all, so the catalog refuses it."""
+    _bootstrap(cql)
+    cql.execute("CREATE TABLE prof (uid text, plan text, prefs map<text, int>, "
+                "PRIMARY KEY (uid))")
+    cql.execute("CREATE INDEX ON prof (plan)")
+    cql.execute("INSERT INTO prof (uid, plan, prefs) VALUES ('u1', 'free', {'x': 1})")
+    cql.execute("INSERT INTO prof (uid, plan, prefs) VALUES ('u1', 'free', {'y': 2})")
+    assert cql.execute("SELECT uid, prefs FROM prof_plan_idx WHERE plan = 'free'") == [
+        {"uid": "u1", "prefs": {"y": 2}}]
+    from pyspark.sql.types import (
+        ArrayType, IntegerType, MapType, StringType, StructField, StructType,
+    )
+
+    nested = StructType([
+        StructField("k", StringType(), False),
+        StructField("m", ArrayType(MapType(StringType(), IntegerType()))),
+    ])
+    with pytest.raises(ValueError, match="no order"):
+        cql.current.create_table("nested", nested, ["k"])
+
+
 def test_insert_row_marker_survives_cell_delete(cql):
     """Cassandra parity: INSERT always deposits the row marker, so a
     row created by a partial INSERT survives deletion of its only cell

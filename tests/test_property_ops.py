@@ -202,17 +202,70 @@ def _diff_write(draw):
         "writer": "spark" if op == "del" else draw(st.sampled_from(["spark", "driver"])),
         "key": (draw(st.sampled_from(["a", "b"])), draw(st.integers(0, 1))),
         "values": draw(_diff_values),
+        # another row for the same key in the same write, as a BATCH
+        # naming the key twice writes it: both share one writetime
+        "more": draw(st.lists(_diff_values, max_size=1)),
         "cells": sorted(draw(st.sets(st.sampled_from(["v", "ts", "w"])))),
         "marker": draw(st.booleans()),
         "ttl": draw(st.sampled_from([None, None, 1, 3600])),
-        "stamp": draw(st.sampled_from([None, None, "past", "future"])),
+        "stamp": draw(st.sampled_from([None, None, "past", "future", "tie"])),
     }
 
 
 def _w(op, writer, key, values=(None, None, None), cells=(), marker=False,
-       ttl=None, stamp=None):
+       ttl=None, stamp=None, more=()):
     return {"op": op, "writer": writer, "key": key, "values": values,
-            "cells": list(cells), "marker": marker, "ttl": ttl, "stamp": stamp}
+            "more": list(more), "cells": list(cells), "marker": marker,
+            "ttl": ttl, "stamp": stamp}
+
+
+def _cassandra_model(writes, stamps, expired):
+    """Cassandra's reconciliation of ``writes`` as ``{(k, c): (v, ts, w)}``
+    for the live rows. ``stamps[i]`` is write i's writetime (any number
+    that orders the writes as the store does) and ``expired[i]`` whether
+    its TTL has passed at read time.
+
+    Per cell, the newest write that set it wins; at equal writetimes a
+    delete (a null) beats a value, then the greater value wins, then the
+    later expiry (one without TTL first). A row DELETE kills every cell
+    and row marker it is not older than. A row lives while its INSERT
+    marker or any non-null cell is live."""
+    data = ("v", "ts", "w")
+    keys = {}
+    for i, op in enumerate(writes):
+        state = keys.setdefault(op["key"], {"cells": {}, "marker": None, "del": None})
+        t = stamps[i]
+        if op["op"] == "del":
+            state["del"] = max(t, state["del"] or t)
+            continue
+        expiry = -1 if op["ttl"] is None else op["ttl"] * 10**6 + i
+        named = data if op["op"] == "put" else op["cells"]
+        if op["op"] == "put" or op["marker"] or not named:
+            state["marker"] = max(state["marker"] or (t, expiry, i), (t, expiry, i))
+        for values in [op["values"], *op["more"]]:
+            for col, v in zip(data, values):
+                if col in named:
+                    rank = (t, v is None, v, expiry)
+                    old = state["cells"].get(col)
+                    if old is None or rank > old[0]:
+                        state["cells"][col] = (rank, v, i)
+    out = {}
+    for key, state in keys.items():
+        cut = state["del"]
+
+        def live(t, i):
+            return (cut is None or t > cut) and not expired[i]
+
+        marker = state["marker"]
+        row = {}
+        for col in data:
+            cell = state["cells"].get(col)
+            row[col] = cell[1] if cell and live(cell[0][0], cell[2]) else None
+        if (marker and live(marker[0], marker[2])) or any(
+            v is not None for v in row.values()
+        ):
+            out[key] = tuple(row[col] for col in data)
+    return out
 
 
 @settings(max_examples=8, deadline=None,
@@ -237,16 +290,31 @@ def _w(op, writer, key, values=(None, None, None), cells=(), marker=False,
     _w("put", "spark", ("b", 1), (5, 8, "x")),
     _w("del", "spark", ("b", 1), stamp="past"),
 ], True, True)
+# writetime ties: a BATCH writing one key as 'b', 'c', 'a' reads 'c' on
+# either writer; at one USING TIMESTAMP across files, a named null beats
+# a value and a delete beats a write
+@example([
+    _w("put", "spark", ("a", 0), (None, None, "b"),
+       more=[(None, None, "c"), (None, None, "a")]),
+    _w("put", "driver", ("a", 1), (None, None, "b"),
+       more=[(None, None, "c"), (None, None, "a")]),
+    _w("cells", "spark", ("b", 0), (5, None, None), cells=["v"], stamp="tie"),
+    _w("cells", "driver", ("b", 0), (None, None, "x"), cells=["v", "w"],
+       stamp="tie"),
+    _w("put", "driver", ("b", 1), (3, 9, "y"), stamp="tie"),
+    _w("del", "spark", ("b", 1), stamp="tie"),
+], False, False)
 def test_driver_reconciler_matches_spark(spark, tmp_path_factory, writes, desc,
                                          do_compact):
     """The driver-local point read (``read_partition_rows``) returns
     exactly ``read_partition().collect()`` — same rows, values, types and
     clustering order — for any interleaving of full-row and partial-cell
     writes (with and without the INSERT row marker), ``USING TIMESTAMP``
-    writes before and after the engine's own, short and long TTLs and
-    deletes, written by Spark (``append``) and by the driver
-    (``write_rows``) into shared buckets; before and after
-    ``compact()``, and read again with the process in Europe/Berlin."""
+    writes before and after the engine's own, writetime ties within one
+    write and across files, short and long TTLs and deletes, written by
+    Spark (``append``) and by the driver (``write_rows``) into shared
+    buckets; before and after ``compact()``, and read again with the
+    process in Europe/Berlin. Both equal ``_cassandra_model``."""
     import os
     import time as _time
 
@@ -272,41 +340,60 @@ def test_driver_reconciler_matches_spark(spark, tmp_path_factory, writes, desc,
     assert t.point_local
 
     now = int(_time.time() * 1_000_000)
+    stamps = []
     for i, op in enumerate(writes):
         # client timestamps well before or after every engine writetime,
-        # distinct per write (ties would make either winner legal)
+        # distinct per write, except that every "tie" write shares one
         stamp = {
             None: None,
             "past": now - 60_000_000 + i,
+            "tie": now + 1_800_000_000,
             "future": now + 3_600_000_000 + i,
         }[op["stamp"]]
-        (k, c), (v, ts, w) = op["key"], op["values"]
+        # the model's writetime: engine writes fall between the past and
+        # the tie stamps, in write order
+        stamps.append(now + i + 1 if stamp is None else stamp)
+        k, c = op["key"]
         if op["op"] == "del":
             t.delete(spark.createDataFrame([(k, c)], "k string, c int"),
                      timestamp_micros=stamp)
             continue
-        row = (k, c, v, None if ts is None else BASE + dt.timedelta(microseconds=ts), w)
+        rows = [
+            (k, c, v, None if ts is None else BASE + dt.timedelta(microseconds=ts), w)
+            for v, ts, w in [op["values"], *op["more"]]
+        ]
         kwargs = {"ttl_seconds": op["ttl"], "timestamp_micros": stamp}
         if op["op"] == "cells":
             kwargs.update(cells=op["cells"], row_marker=op["marker"])
         if op["writer"] == "spark":
-            t.append(spark.createDataFrame([row], schema), **kwargs)
+            t.append(spark.createDataFrame(rows, schema), **kwargs)
         else:
-            t.write_rows([row], **kwargs)
+            t.write_rows(rows, **kwargs)
     if any(op["ttl"] == 1 for op in writes):
         _time.sleep(1.2)  # every short TTL is past, so no read races it
+    model = _cassandra_model(writes, stamps, [op["ttl"] == 1 for op in writes])
 
-    def check():
+    def check(against_model=True):
         for k in ("a", "b"):
             want = [r.asDict() for r in t.read_partition(k=k).collect()]
             assert [r.asDict() for r in t.read_partition_rows(k=k)] == want
+            if against_model:  # timestamps read back in the write's zone
+                assert {
+                    (r["k"], r["c"]): (
+                        r["v"],
+                        None if r["ts"] is None
+                        else (r["ts"] - BASE) // dt.timedelta(microseconds=1),
+                        r["w"],
+                    )
+                    for r in want
+                } == {key: row for key, row in model.items() if key[0] == k}
 
     check()
     tz = os.environ.get("TZ")
     os.environ["TZ"] = "Europe/Berlin"
     _time.tzset()
     try:
-        check()
+        check(against_model=False)
     finally:
         if tz is None:
             del os.environ["TZ"]

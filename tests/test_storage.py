@@ -119,6 +119,27 @@ def test_ddl_idempotent(spark, ks):
     assert ks2.path == ks.path
 
 
+def test_partition_reads_route_a_timestamp_key(spark, ks):
+    """A timestamp partition key routes through its internal micros, as
+    Spark's hash reads it: the Spark partition read and the driver read
+    both find the row."""
+    from pyspark.sql.types import (
+        StringType, StructField, StructType, TimestampType,
+    )
+
+    schema = StructType([
+        StructField("day", TimestampType(), False),
+        StructField("v", StringType()),
+    ])
+    t = WideColumnTable(spark, ks, ks.create_table("days", schema, ["day"]),
+                        n_buckets=4)
+    day = dt.datetime(2024, 3, 1, 12, 0)
+    t.append(spark.createDataFrame([(day, "x"), (dt.datetime(2024, 3, 2), "y")],
+                                   schema))
+    assert [r.v for r in t.read_partition(day=day).collect()] == ["x"]
+    assert [r.v for r in t.read_partition_rows(day=day)] == ["x"]
+
+
 def test_driver_side_hash_matches_jvm(spark):
     """hashing.py must be bit-exact vs F.hash for every partition-key
     type — the point-lookup bucket route depends on it."""
@@ -279,12 +300,19 @@ def test_point_requests_run_no_spark_job(spark, tmp_warehouse):
     assert cql.execute("SELECT v FROM kv WHERE k = 7") == [{"v": "b"}]
     assert cql.execute("SELECT v FROM kv WHERE k = %s", (k2,)) == [{"v": "c"}]
     # one key twice in one write: both rows share a writetime, and the
-    # later statement wins on the driver read and the Spark scan alike
+    # greater value wins (Cassandra's tie rule) on the driver read and
+    # the Spark scan alike, whatever the statement order
     cql.execute("BEGIN BATCH INSERT INTO kv (k, v) VALUES (9, 'b'); "
                 "INSERT INTO kv (k, v) VALUES (9, 'a'); APPLY BATCH")
-    assert cql.execute("SELECT * FROM kv WHERE k = 9") == [{"k": 9, "v": "a"}]
+    assert cql.execute("SELECT * FROM kv WHERE k = 9") == [{"k": 9, "v": "b"}]
     assert [r for r in cql.execute("SELECT * FROM kv") if r["k"] == 9] == [
-        {"k": 9, "v": "a"}]
+        {"k": 9, "v": "b"}]
+    cql.execute("BEGIN BATCH INSERT INTO kv (k, v) VALUES (11, 'b'); "
+                "INSERT INTO kv (k, v) VALUES (11, 'c'); "
+                "INSERT INTO kv (k, v) VALUES (11, 'a'); APPLY BATCH")
+    assert cql.execute("SELECT v FROM kv WHERE k = 11") == [{"v": "c"}]
+    assert [r["v"] for r in cql.execute("SELECT * FROM kv") if r["k"] == 11] == [
+        "c"]
 
     cql.execute(
         "CREATE TABLE st (k int, c int, s text static, v text, PRIMARY KEY (k, c))")
@@ -364,13 +392,49 @@ def test_local_frame_stores_what_create_dataframe_stores(spark):
     assert empty.schema == schema and empty.collect() == []
 
 
-def test_point_read_plan_build_py4j_ceiling(spark, ks, monkeypatch):
-    """Building a point read's plan is a bounded number of py4j
-    round-trips: Column call-site capture is off in the session, and the
-    reconciliation is built from SQL text. About 1,500 calls otherwise."""
+def make_channel_feed(spark, ks):
+    """A table with a static column and set and map collections."""
+    from pyspark.sql.types import (
+        ArrayType, IntegerType, LongType, MapType, StringType, StructField,
+        StructType,
+    )
+
+    schema = StructType([
+        StructField("channel", LongType(), False),
+        StructField("msg_id", LongType(), False),
+        StructField("channel_name", StringType(), True),
+        StructField("tags", ArrayType(StringType()), True),
+        StructField("reactions", MapType(StringType(), IntegerType()), True),
+    ])
+    spec = ks.create_table(
+        "feed", schema, ["channel"], clustering_keys=["msg_id"],
+        clustering_desc=True, static_columns=["channel_name"],
+        collection_columns={"tags": "set", "reactions": "map"},
+    )
+    t = WideColumnTable(spark, ks, spec, n_buckets=4)
+    t.append(spark.createDataFrame(
+        [(1, 10, "general", ["a"], {"x": 1}), (1, 11, None, None, None)],
+        schema,
+    ))
+    return t, "channel"
+
+
+def make_seeded_messages(spark, ks):
     t = make_messages(spark, ks)
     t.append(seed_messages(spark))
-    t.read_partition(channel_id=1)  # the first build pays one-time lookups
+    return t, "channel_id"
+
+
+@pytest.mark.parametrize("make", [make_seeded_messages, make_channel_feed],
+                         ids=["plain", "statics_collections"])
+def test_point_read_plan_build_py4j_ceiling(spark, ks, monkeypatch, make):
+    """Building a point read's plan is a bounded number of py4j
+    round-trips, on a plain table and on one with statics and
+    collections: Column call-site capture is off in the session, and
+    every reconciliation is built from SQL text. About 1,500 calls
+    otherwise."""
+    t, key = make(spark, ks)
+    t.read_partition(**{key: 1})  # the first build pays one-time lookups
     gc.collect()
     calls = []
     send = GatewayClient.send_command
@@ -384,7 +448,7 @@ def test_point_read_plan_build_py4j_ceiling(spark, ks, monkeypatch):
         return send(self, *args, **kwargs)
 
     monkeypatch.setattr(GatewayClient, "send_command", counting)
-    t.read_partition(channel_id=1)  # plan only, no action
+    t.read_partition(**{key: 1})  # plan only, no action
     monkeypatch.undo()
     assert len(calls) <= 150, f"{len(calls)} py4j calls to build a point read"
 
@@ -1328,7 +1392,7 @@ def test_key_only_insert_creates_row_marker(spark, ks):
 
 def test_key_only_marker_survives_compact_on_statics_and_collections(spark, ks):
     """Round-4 regression (keep_marker threaded through _with_statics
-    and _reconciled_with_collections): a key-only INSERT's row marker
+    and the collection path): a key-only INSERT's row marker
     must survive compact() on STATICS and COLLECTIONS tables too — the
     "" sentinel is preserved through the materialized rewrite, not only
     on plain tables (test_key_only_insert_creates_row_marker)."""
