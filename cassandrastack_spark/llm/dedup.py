@@ -47,7 +47,10 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
 from cassandrastack_spark.llm._slots import slot_persist
-from cassandrastack_spark.sources.io import widen_for_compute as _widen
+from cassandrastack_spark.sources.io import (
+    staged_partition_overwrite,
+    widen_for_compute as _widen,
+)
 
 # ---------------------------------------------------------------------------
 # shingling
@@ -924,6 +927,22 @@ def _banded_signatures(
     )
 
 
+def _write_bands(
+    docs: DataFrame, path: str, id_col: str, text_col: str, mode: str,
+    k: int, num_hashes: int, bands: int,
+) -> None:
+    """Write ``docs``' band rows under ``path``: the one write path of
+    the band index (build: ``overwrite``; extend: ``append``)."""
+    (
+        _banded_signatures(docs, id_col, text_col, k, num_hashes, bands)
+        .repartition("band")
+        .sortWithinPartitions("band", "sig")
+        .write.mode(mode)
+        .partitionBy("band")
+        .parquet(path)
+    )
+
+
 def build_dedup_index(
     corpus: DataFrame,
     path: str,
@@ -936,7 +955,9 @@ def build_dedup_index(
     """Materialize the corpus's MinHash band index at ``path``: (id,
     band, sig) rows partitioned by ``band``, plus the hash-family
     parameters as a 1-row parquet under ``path/_meta`` so probes use
-    the identical family.
+    the identical family. Build, extend and ``_meta`` follow the
+    persisted-index lifecycle (``sources/io.py``); the band index has
+    no epochs, since a doc's band rows never change.
 
     The production incremental-dedup loop this enables: the corpus is
     shingled and hashed ONCE; each incoming crawl drop probes the
@@ -946,16 +967,8 @@ def build_dedup_index(
     document regardless of document size; at 100 TB of text that is a
     ~tens-of-GB index, and (band, sig) is its natural sort/bucket key.
     """
-    spark = corpus.sparkSession
-    (
-        _banded_signatures(corpus, id_col, text_col, k, num_hashes, bands)
-        .repartition("band")
-        .sortWithinPartitions("band", "sig")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(path)
-    )
-    spark.createDataFrame(
+    _write_bands(corpus, path, id_col, text_col, "overwrite", k, num_hashes, bands)
+    corpus.sparkSession.createDataFrame(
         [(k, num_hashes, bands)], "k int, num_hashes int, bands int"
     ).coalesce(1).write.mode("overwrite").parquet(path + "/_meta")
 
@@ -968,18 +981,8 @@ def extend_dedup_index(
 ) -> None:
     """Append accepted documents' band rows to the index — the write
     half of the ingest loop. Uses the stored hash-family parameters."""
-    spark = new_docs.sparkSession
-    meta = spark.read.parquet(path + "/_meta").head()
-    (
-        _banded_signatures(
-            new_docs, id_col, text_col, meta.k, meta.num_hashes, meta.bands
-        )
-        .repartition("band")
-        .sortWithinPartitions("band", "sig")
-        .write.mode("append")
-        .partitionBy("band")
-        .parquet(path)
-    )
+    meta = new_docs.sparkSession.read.parquet(path + "/_meta").head()
+    _write_bands(new_docs, path, id_col, text_col, "append", **meta.asDict())
 
 
 def probe_dedup_index(
@@ -1040,15 +1043,11 @@ def compact_dedup_index(spark, path: str) -> None:
     """Small-file maintenance for the band index: every ``extend``
     appends a few files per band, and a drop-every-hour pipeline
     accretes thousands — probe cost then becomes file-open latency, not
-    I/O. Rewrite each band partition into sorted files using the same
-    object-store-safe staged commit as ``storage.py compact()``: stage
-    next to the index (all-or-nothing Spark commit), dynamic-overwrite
-    one ``band=`` directory per commit so concurrent probes always see
-    a complete index, then drop staging via the Hadoop FileSystem API
-    (s3a/gs/abfs/hdfs/file alike). Band count is fixed, so driver work
-    is bounded; run it on the compaction cadence, like the store."""
-    from cassandrastack_spark.sources.io import staged_partition_overwrite
-
+    I/O. Rewrite each band partition into sorted files through
+    ``staged_partition_overwrite``, the commit protocol of
+    ``storage.py compact()``, so concurrent probes always see a
+    complete index. Band count is fixed, so driver work is bounded;
+    run it on the compaction cadence, like the store."""
     idx = spark.read.parquet(path)
     staged_partition_overwrite(idx, path, "band", ["band", "sig"])
 

@@ -32,10 +32,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from cassandrastack_spark.llm._slots import slot_persist
+from cassandrastack_spark.sources.io import (
+    commit_generation,
+    newest_generation,
+    next_epoch,
+    staged_partition_overwrite,
+)
 
 # Lucene defaults; callers override per corpus.
 BM25_K1 = 1.2
 BM25_B = 0.75
+
+# a BM25 generation's _epochs row: its stamp and the corpus scalars
+_GENERATION = "epoch long, n_docs double, avgdl double"
 
 
 def _words(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -280,6 +289,54 @@ def _cosine_topk_from_vecs(
 # ---------------------------------------------------------------------------
 
 
+def _term_buckets(spark, path: str) -> int:
+    """The index's term-bucket count, from its write-once ``_meta``."""
+    meta = spark.read.schema("n_term_buckets int").parquet(path + "/_meta")
+    return int(meta.head().n_term_buckets)
+
+
+def _write_bm25_generation(
+    docs: DataFrame, path: str, id_col: str, text_col: str,
+    n_term_buckets: int, epoch: int, mode: str,
+) -> None:
+    """Write ``docs``' postings and lengths under ``epoch``, then commit
+    the generation with the corpus scalars: the one write path of the
+    BM25 index (build: generation 0, ``overwrite``; extend: ``append``).
+    """
+    spark = docs.sparkSession
+    stamp = F.lit(epoch).cast("long").alias("epoch")
+    (
+        _words(docs, id_col, text_col)
+        .groupBy("w", "doc_id")
+        .agg(F.count("*").cast("double").alias("tf"))
+        .select(
+            "w", "doc_id", "tf", stamp,
+            F.pmod(F.hash("w"), F.lit(n_term_buckets)).alias("tb"),
+        )
+        .repartition("tb")
+        .sortWithinPartitions("tb", "w")
+        .write.mode(mode)
+        .partitionBy("tb")
+        .parquet(path)
+    )
+    docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.size(F.split(F.col(text_col), " ")).cast("double").alias("dl"),
+        stamp,
+    ).write.mode(mode).parquet(path + "/_doclen")
+    # per-doc LAST-WRITER stats: each doc contributes its newest
+    # epoch's length once, no matter how many versions/replays landed
+    dl_cur = (
+        spark.read.parquet(path + "/_doclen")
+        .groupBy("doc_id")
+        .agg(F.expr("max_by(dl, epoch)").alias("dl"))
+    )
+    stats = dl_cur.agg(
+        F.count("*").cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
+    )
+    commit_generation(spark, path, epoch, mode, stats)
+
+
 def build_bm25_index(
     corpus: DataFrame,
     path: str,
@@ -295,44 +352,23 @@ def build_bm25_index(
     n_term_buckets)`` so a probe's scan is partition-pruned to the
     query terms' buckets; (doc_id, dl, epoch) under ``path/_doclen``
     (the length-normalization side, joined for matched docs only);
-    corpus scalars (n_docs, avgdl, n_term_buckets) as one row under
-    ``path/_meta``. ``epoch`` is the write-generation stamp (build =
-    0, each ``extend_bm25_index`` call = previous max + 1): probes
-    resolve a doc_id to its NEWEST epoch, so re-ingesting an id with
-    changed text is a clean last-writer overwrite, never a merge of
-    the two versions' postings. At 100 TB the postings are the
-    Zipf-shaped term frequency table — (term, id, count) triples, a
-    small multiple of the vocabulary-positions count, partitioned AND
-    sorted by term so a probe touches a handful of row groups.
+    each generation's corpus scalars (n_docs, avgdl) in its
+    ``path/_epochs`` row; ``n_term_buckets`` in the write-once
+    ``path/_meta``. Build, extend and the ``epoch`` stamp follow the
+    persisted-index lifecycle (``sources/io.py``): probes resolve a
+    doc_id to its NEWEST epoch, so re-ingesting an id with changed
+    text is a clean last-writer overwrite, never a merge of the two
+    versions' postings. At 100 TB the postings are the Zipf-shaped
+    term frequency table — (term, id, count) triples, a small multiple
+    of the vocabulary-positions count, partitioned AND sorted by term
+    so a probe touches a handful of row groups.
     """
-    spark = corpus.sparkSession
-    tf = (
-        _words(corpus, id_col, text_col)
-        .groupBy("w", "doc_id")
-        .agg(F.count("*").cast("double").alias("tf"))
-        .withColumn("epoch", F.lit(0).cast("long"))
-        .withColumn("tb", F.pmod(F.hash("w"), F.lit(n_term_buckets)))
+    _write_bm25_generation(
+        corpus, path, id_col, text_col, n_term_buckets, 0, "overwrite"
     )
-    (
-        tf.repartition("tb")
-        .sortWithinPartitions("tb", "w")
-        .write.mode("overwrite")
-        .partitionBy("tb")
-        .parquet(path)
-    )
-    dl = corpus.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(F.split(F.col(text_col), " ")).cast("double").alias("dl"),
-        F.lit(0).cast("long").alias("epoch"),
-    )
-    dl.write.mode("overwrite").parquet(path + "/_doclen")
-    stats = spark.read.parquet(path + "/_doclen").agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
-    stats.withColumn("n_term_buckets", F.lit(n_term_buckets)).coalesce(
-        1
-    ).write.mode("overwrite").parquet(path + "/_meta")
+    corpus.sparkSession.createDataFrame(
+        [(n_term_buckets,)], "n_term_buckets int"
+    ).coalesce(1).write.mode("overwrite").parquet(path + "/_meta")
 
 
 def extend_bm25_index(
@@ -341,11 +377,11 @@ def extend_bm25_index(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """Append new documents' postings and lengths under a fresh
-    ``epoch`` stamp, then refresh the corpus scalars — the write half
-    of the retrieval ingest loop. Cost is proportional to the batch
-    (the stored corpus is never re-tokenized); only the 1-row
-    ``_meta`` is rewritten, from the appended ``_doclen`` table (df
+    """Append new documents' postings and lengths as the next
+    generation, whose ``_epochs`` row carries the refreshed corpus
+    scalars — the write half of the retrieval ingest loop. Cost is
+    proportional to the batch plus one aggregate over the small
+    ``_doclen`` table (the stored corpus is never re-tokenized; df
     needs no maintenance — it is derived from the postings at probe
     time, so it is always exact).
 
@@ -355,63 +391,20 @@ def extend_bm25_index(
     its newest epoch only, so the old version's postings (including
     terms absent from the new text) stop contributing entirely. A
     byte-identical replay of the SAME batch (the streaming loop's
-    at-least-once window) lands identical content at a higher epoch
-    and is equally harmless. SINGLE-WRITER assumption: the next epoch
-    is read-then-stamped, so two CONCURRENT extends would share a
-    stamp and same-id rows from the two writers would merge within
-    it — serialize extends per index (the streaming ingest loop, a
-    foreachBatch sink, already does; multi-writer ingest needs an
-    external serializer), like every maintenance path in this engine. The stored history is append-only;
-    superseded epochs are dead weight until a rebuild — the same
-    compaction story as the band index.
+    at-least-once window) lands identical content and is equally
+    harmless. Single-writer, and superseded epochs are dead weight
+    until ``compact_bm25_index``, per the lifecycle in
+    ``sources/io.py``.
 
-    A probe racing the extend can read new postings with the old
-    scalars for one batch — the same eventual-consistency window the
+    A probe racing the extend can read new postings with the previous
+    generation's scalars — the same eventual-consistency window the
     band-index extend has, and harmless to ranking at corpus scale.
     """
     spark = new_docs.sparkSession
-    meta = spark.read.parquet(path + "/_meta").head()
-    nb = int(meta.n_term_buckets)
-    # next write generation: 1 + the newest stamp on record. Computed
-    # from _doclen (1 small agg) BEFORE any append, so a crashed
-    # extend's replay re-lands the whole batch at one single (new)
-    # epoch — never splitting a batch across epochs.
-    epoch = (
-        spark.read.parquet(path + "/_doclen")
-        .agg(F.coalesce(F.max("epoch"), F.lit(0)).alias("e"))
-        .head()
-        .e
-        + 1
+    _write_bm25_generation(
+        new_docs, path, id_col, text_col, _term_buckets(spark, path),
+        next_epoch(spark, path), "append",
     )
-    tf = (
-        _words(new_docs, id_col, text_col)
-        .groupBy("w", "doc_id")
-        .agg(F.count("*").cast("double").alias("tf"))
-        .withColumn("epoch", F.lit(epoch).cast("long"))
-        .withColumn("tb", F.pmod(F.hash("w"), F.lit(nb)))
-    )
-    tf.repartition("tb").sortWithinPartitions("tb", "w").write.mode(
-        "append"
-    ).partitionBy("tb").parquet(path)
-    new_docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(F.split(F.col(text_col), " ")).cast("double").alias("dl"),
-        F.lit(epoch).cast("long").alias("epoch"),
-    ).write.mode("append").parquet(path + "/_doclen")
-    # per-doc LAST-WRITER stats: each doc contributes its newest
-    # epoch's length once, no matter how many versions/replays landed
-    dl_cur = (
-        spark.read.parquet(path + "/_doclen")
-        .groupBy("doc_id")
-        .agg(F.expr("max_by(dl, epoch)").alias("dl"))
-    )
-    stats = dl_cur.agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
-    stats.withColumn("n_term_buckets", F.lit(nb)).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path + "/_meta")
 
 
 def probe_bm25_index(
@@ -431,8 +424,8 @@ def probe_bm25_index(
     """
     if not terms:
         raise ValueError("probe_bm25_index needs at least one query term")
-    meta = spark.read.parquet(path + "/_meta").head()
-    nb = int(meta.n_term_buckets)
+    nb = _term_buckets(spark, path)
+    gen = newest_generation(spark, path, _GENERATION)
     # bucket ids computed with the SAME expression build/extend used —
     # a 1-row-per-term local frame, nothing scans until the pruned read
     term_rows = spark.createDataFrame([(t,) for t in terms], "w string")
@@ -478,11 +471,11 @@ def probe_bm25_index(
     )
     idf = F.log(
         F.lit(1.0)
-        + (F.lit(float(meta.n_docs)) - F.col("df") + 0.5)
+        + (F.lit(gen.n_docs) - F.col("df") + 0.5)
         / (F.col("df") + 0.5)
     )
     denom = F.col("tf") + k1 * (
-        1.0 - b + b * F.col("dl") / F.lit(float(meta.avgdl))
+        1.0 - b + b * F.col("dl") / F.lit(gen.avgdl)
     )
     scored = (
         tf.join(F.broadcast(df_t), "w")
@@ -535,11 +528,10 @@ def tfidf_weights_from_index(
     needs, so document-similarity joins run postings-to-postings (the
     production shape the raw-text path only models). Docs resolve to
     their newest epoch first (same last-writer read as
-    ``probe_bm25_index``); ``n`` comes from the ``_meta`` scalars.
-    Returns (doc_id, w, weight, norm).
+    ``probe_bm25_index``); ``n`` comes from the newest generation's
+    ``_epochs`` row. Returns (doc_id, w, weight, norm).
     """
-    meta = spark.read.parquet(path + "/_meta").head()
-    n = float(meta.n_docs)
+    n = newest_generation(spark, path, _GENERATION).n_docs
     tf = postings_from_index(spark, path)
     df_t = tf.groupBy("w").agg(
         F.countDistinct("doc_id").cast("double").alias("df")
@@ -558,9 +550,9 @@ def tfidf_weights_from_index(
     # Same bounded vecs slot as tfidf_weights (separate slot name: the
     # index-served plan must never thrash the raw-text generation).
     # The key embeds the ratio literal AND the index file snapshot
-    # (path + _doclen + _meta resolved file lists), so an extend/
-    # compact that lands new part files rolls the cache; ``n`` is a
-    # _meta literal in the plan, rolling it on meta change too.
+    # (path + _doclen resolved file lists), so an extend/compact that
+    # lands new part files rolls the cache; ``n`` is a literal of the
+    # newest generation in the plan, rolling it on a new generation too.
     (vecs,) = slot_persist("retrieval.tfidf_vecs_index", vecs, (vecs,))
     return vecs
 
@@ -592,24 +584,18 @@ def compact_bm25_index(spark, path: str) -> None:
     replays) accrete as dead rows — probe cost becomes file-open
     latency plus stale-row filtering. Rewrite each term-bucket
     partition to (a) only each doc's NEWEST-epoch postings, collapsed
-    per (w, doc_id), and (b) sorted-by-term files, using the same
-    object-store-safe staged commit as ``compact_dedup_index`` /
-    ``storage.py compact()``: stage next to the index, dynamic-
-    overwrite one ``tb=`` directory per commit so concurrent probes
-    always see a complete bucket, drop staging via the FileSystem API.
+    per (w, doc_id), and (b) sorted-by-term files, through
+    ``staged_partition_overwrite`` (concurrent probes always see a
+    complete bucket; a bucket whose every posting was superseded is
+    deleted).
 
     Epochs are PRESERVED, not renumbered — the per-doc max epoch in
     ``_doclen`` must keep matching the postings' stamps at every
     interleaving with a concurrent probe, so renumbering is unsafe
-    without quiescing. Consequences, documented: ``_doclen`` is left
-    as-is (it accretes one tiny row per doc per write; the max_by
-    resolution already handles it, and it compacts on rebuild), and a
-    bucket whose every posting is superseded keeps its stale files
-    (dynamic overwrite only touches partitions present in the new
-    data) — harmless, the epoch filter drops them at read.
+    without quiescing. ``_doclen`` is left as-is: it accretes one tiny
+    row per doc per write, the max_by resolution already handles it,
+    and it compacts on rebuild.
     """
-    from cassandrastack_spark.sources.io import staged_partition_overwrite
-
     cur = (
         spark.read.parquet(path + "/_doclen")
         .groupBy("doc_id")

@@ -38,7 +38,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from cassandrastack_spark.sources.io import widen_for_compute as _widen
+from cassandrastack_spark.sources.io import (
+    commit_generation,
+    next_epoch,
+    staged_partition_overwrite,
+    widen_for_compute as _widen,
+)
 
 DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
 
@@ -1551,6 +1556,32 @@ def probe_ivf_index(
     return _topk(scored, "cosine", k)
 
 
+def _write_codes(
+    vecs: DataFrame, path: str, id_col: str, vec_col: str,
+    centroids: list, books: list, epoch: int, mode: str,
+) -> None:
+    """Assign and encode ``vecs`` with the given training, write the
+    codes under ``epoch``, then commit the generation: the one write
+    path of the IVF+PQ index (build: generation 0, ``overwrite``;
+    extend: ``append``)."""
+    c_normed = _unit_vecs(vecs, id_col, vec_col, "neighbor_id", "c_unit")
+    (
+        pq_encode(
+            ivf_assign(c_normed, centroids, "c_unit"), books, "c_unit",
+            compose_safe=False,
+        )
+        .select(
+            "cid", "neighbor_id", "codes",
+            F.lit(epoch).cast("long").alias("epoch"),
+        )
+        .repartition("cid")
+        .write.mode(mode)
+        .partitionBy("cid")
+        .parquet(path)
+    )
+    commit_generation(vecs.sparkSession, path, epoch, mode)
+
+
 def build_ivfpq_index(
     corpus: DataFrame,
     path: str,
@@ -1574,25 +1605,18 @@ def build_ivfpq_index(
     (``probe_ivfpq_index``). Train once, assign once; rebuild cadence
     is a data-drift decision, like the plain IVF index.
 
-    Each code row carries an ``epoch`` write-generation stamp (build =
-    0, each ``extend_ivfpq_index`` = newest stored generation + 1,
-    tracked in the append-only 1-row-per-generation ``path/_epochs``
-    sidecar — ``_meta`` itself is written ONCE here and never
-    rewritten, so concurrent probes can always read it and no extend
-    crash can leave the index meta-less) — the same last-writer
-    protocol as the BM25 postings: compaction resolves a same-list
-    re-extended id to its NEWEST codes (``max_by(codes, epoch)``)
-    instead of a lexicographic ``max`` that could keep stale codes
-    forever. On disk the constant-per-file column RLE-encodes to
+    Build, extend, ``_meta`` and the ``epoch`` stamp on each code row
+    follow the persisted-index lifecycle (``sources/io.py``) — the same
+    last-writer protocol as the BM25 postings: compaction resolves a
+    same-list re-extended id to its NEWEST codes (``max_by(codes,
+    epoch)``) instead of a lexicographic ``max`` that could keep stale
+    codes forever. On disk the constant-per-file column RLE-encodes to
     ~nothing; probes don't read it (shortlist election tolerates
     pre-compaction duplicates, and the re-rank fetches floats from the
     CORPUS, so scores are stale-proof either way — see
     ``probe_ivfpq_index``).
     """
-    c_normed = _unit_vecs(corpus, id_col, vec_col, "neighbor_id", "c_unit")
-    train = c_normed.select(
-        F.col("neighbor_id").alias("id"), F.col("c_unit").alias("vec")
-    )
+    train = _unit_vecs(corpus, id_col, vec_col, "id", "vec")
     # one sampling scan feeds both trainers (they draw the identical
     # deterministic sample; collecting it twice doubled the training I/O)
     sample_x = _training_sample(train)
@@ -1603,29 +1627,14 @@ def build_ivfpq_index(
         train, m_sub=m_sub, k_codes=k_codes, iters=iters,
         sample_matrix=sample_x,
     )
-    spark = corpus.sparkSession
-    (
-        pq_encode(
-            ivf_assign(c_normed, centroids, "c_unit"), books, "c_unit",
-            compose_safe=False,
-        )
-        .select(
-            "cid", "neighbor_id", "codes",
-            F.lit(0).cast("long").alias("epoch"),
-        )
-        .repartition("cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(path)
+    _write_codes(
+        corpus, path, id_col, vec_col, centroids, books, 0, "overwrite"
     )
-    spark.createDataFrame(
+    corpus.sparkSession.createDataFrame(
         [(centroids, books)],
         "centroids array<array<double>>, "
         "codebooks array<array<array<double>>>",
     ).coalesce(1).write.mode("overwrite").parquet(path + "/_meta")
-    spark.createDataFrame([(0,)], "epoch long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path + "/_epochs")
 
 
 def extend_ivfpq_index(
@@ -1634,71 +1643,29 @@ def extend_ivfpq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Append new vectors to a persisted IVF+PQ index using the STORED
-    centroids and codebooks — no retrain, no corpus re-read: the write
-    half of the vector-ingest loop, mirroring ``extend_dedup_index``.
-    Cost ∝ the batch (one assign + encode pass over the new rows, one
-    append into their ``cid=`` partitions). Retrain on drift by
-    rebuilding, like the other persisted indexes.
+    """Append new vectors to a persisted IVF+PQ index as the next
+    generation, using the STORED centroids and codebooks — no retrain,
+    no corpus re-read: the write half of the vector-ingest loop,
+    mirroring ``extend_dedup_index``. Cost ∝ the batch (one assign +
+    encode pass over the new rows, one append into their ``cid=``
+    partitions). Retrain on drift by rebuilding, like the other
+    persisted indexes.
 
-    The batch lands under a fresh ``epoch`` stamp: the newest stored
-    generation + 1, read from the append-only ``path/_epochs`` sidecar
-    (one 1-long-row file per generation — the read is a few rows, the
-    write is an APPEND; nothing under the index is ever rewritten by
-    an extend, so ``_meta`` stays immutable and concurrent probes are
-    never exposed to a delete-rewrite window). Crash anywhere inside
-    the extend and the replay is safe: before the codes append, the
-    replay recomputes the SAME epoch and re-lands byte-identical codes
-    (collapsible exactly); after the codes append but before the
-    epoch-row append, same; after both, a replayed batch lands
-    byte-identical content one generation higher — still collapsible.
-    A same-id re-extend with a CHANGED vector supersedes the old codes
-    at compaction (``compact_ivfpq_index`` keeps ``max_by(codes,
-    epoch)``). SINGLE-WRITER per index, like the BM25 extend: two
-    concurrent extends would share a stamp — serialize them (the
-    streaming ingest loop, a foreachBatch sink, already does). Indexes
-    built before the sidecar existed extend as generation 1.
+    Crash anywhere inside the extend and the replay is safe (lifecycle:
+    ``sources/io.py``): before the ``_epochs`` row commits, the replay
+    re-lands byte-identical codes at the SAME epoch; after it, one
+    generation higher — collapsible either way. A same-id re-extend
+    with a CHANGED vector supersedes the old codes at compaction
+    (``compact_ivfpq_index`` keeps ``max_by(codes, epoch)``).
     """
     spark = new_vecs.sparkSession
     meta = spark.read.parquet(path + "/_meta").head()
     centroids = [list(c) for c in meta.centroids]
     books = [[list(c) for c in book] for book in meta.codebooks]
-    epoch = _newest_epoch(spark, path) + 1
-    c_normed = _unit_vecs(new_vecs, id_col, vec_col, "neighbor_id", "c_unit")
-    (
-        pq_encode(
-            ivf_assign(c_normed, centroids, "c_unit"), books, "c_unit",
-            compose_safe=False,
-        )
-        .select(
-            "cid", "neighbor_id", "codes",
-            F.lit(epoch).cast("long").alias("epoch"),
-        )
-        .repartition("cid")
-        .write.mode("append")
-        .partitionBy("cid")
-        .parquet(path)
+    _write_codes(
+        new_vecs, path, id_col, vec_col, centroids, books,
+        next_epoch(spark, path), "append",
     )
-    spark.createDataFrame([(epoch,)], "epoch long").coalesce(1).write.mode(
-        "append"
-    ).parquet(path + "/_epochs")
-
-
-def _newest_epoch(spark, path: str) -> int:
-    """Newest write generation from the ``_epochs`` sidecar; 0 for
-    indexes built before the sidecar existed (they extend as
-    generation 1, their build rows reading as epoch 0)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        row = (
-            spark.read.parquet(path + "/_epochs")
-            .agg(F.coalesce(F.max("epoch"), F.lit(0)).alias("e"))
-            .head()
-        )
-        return int(row.e)
-    except AnalysisException:
-        return 0
 
 
 def probe_ivfpq_index(
@@ -1846,35 +1813,21 @@ def compact_ivfpq_index(spark, path: str) -> None:
     rule): a byte-identical replay collapses exactly (same epoch, same
     bytes), and a same-id re-extend with a CHANGED vector that lands
     in the SAME list keeps the new generation's codes, never the stale
-    ones a lexicographic ``max(codes)`` could elect forever. Same
-    object-store-safe protocol as ``compact_bm25_index`` /
-    ``compact_dedup_index``: staged commit, dynamic overwrite one
-    ``cid=`` directory at a time (concurrent probes always see a
-    complete list), staging dropped via the FileSystem API.
+    ones a lexicographic ``max(codes)`` could elect forever. Commits
+    through ``staged_partition_overwrite``, so concurrent probes always
+    see a complete list.
 
     Scope, documented: a same-id re-extend with a CHANGED vector can
     assign the id to a DIFFERENT list; the two rows then live in two
     partitions and within-list collapsing cannot merge them (cross-
-    partition moves are rebuild territory — dynamic overwrite cannot
-    retire a partition it writes no rows into). That state stays
+    partition moves are rebuild territory). That state stays
     correct at probe time regardless: ``probe_ivfpq_index`` collapses
     duplicate ids in the shortlist and re-ranks on the CORPUS floats,
     so only shortlist ELECTION ever sees the stale list's codes (a
-    recall nibble, never a wrong score). Indexes written before the
-    epoch column existed compact as a single generation (epoch
-    coalesced to 0) — rebuild to adopt last-writer semantics.
+    recall nibble, never a wrong score).
     """
-    from cassandrastack_spark.sources.io import staged_partition_overwrite
-
-    # mergeSchema: a pre-epoch build extended by epoch-stamped code has
-    # MIXED files (with/without the column); default schema inference
-    # samples ONE footer, and sampling an epoch-less file would stamp
-    # every row 0 and tie-break the last-writer election arbitrarily
-    codes = spark.read.option("mergeSchema", "true").parquet(path)
-    if "epoch" not in codes.columns:
-        codes = codes.withColumn("epoch", F.lit(0).cast("long"))
     live = (
-        codes.withColumn("epoch", F.coalesce("epoch", F.lit(0)))
+        spark.read.parquet(path)
         .groupBy("cid", "neighbor_id")
         .agg(
             F.expr("max_by(codes, epoch)").alias("codes"),

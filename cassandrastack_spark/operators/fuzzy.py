@@ -79,6 +79,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from cassandrastack_spark.sources.io import (
+    commit_generation,
+    next_epoch,
+    staged_partition_overwrite,
+)
+
 
 def _len_sql(i: int, tau: int, length: str) -> str:
     """SQL for segment ``i``'s length under the even partition of a
@@ -475,6 +481,56 @@ def fuzzy_self_pairs(
 # variants forever)
 
 
+def _write_fuzzy_generation(
+    rows: DataFrame, path: str, key_col: str, str_col: str, bc: tuple,
+    max_dist: int, n_buckets: int, epoch: int, mode: str,
+) -> None:
+    """Write ``rows``' deletion variants and keys under ``epoch``, then
+    commit the generation: the one write path of the fuzzy index
+    (build: generation 0, ``overwrite``; extend: ``append``). The
+    variants land before ``_keys``, so an extend that crashes between
+    the two stays invisible (probes join ``_keys``)."""
+    keys = (
+        rows.select(
+            *bc,
+            F.col(key_col).alias("key"),
+            F.col(str_col).cast("string").alias("s"),
+        )
+        .na.drop(subset=[*bc, "key", "s"])
+        .distinct()
+        .withColumn("epoch", F.lit(epoch).cast("long"))
+    )
+    if epoch == 0 and not keys.limit(1).count():
+        # the build's generation: a zero-row partitioned write emits
+        # only _SUCCESS, so probes and extends would die on
+        # UNABLE_TO_INFER_SCHEMA much later — fail at the build instead
+        # (an empty keys frame here means the corpus was empty or a
+        # wrong column na.drop'ed everything)
+        raise ValueError(
+            "build_fuzzy_index: no indexable rows — the corpus is "
+            "empty, or key/string/block columns are all-NULL"
+        )
+    variants = _deletes_blocks(
+        keys.select(*bc, "s").distinct(), "s", "s", max_dist, extra=bc
+    )
+    (
+        keys.join(variants, [*bc, "s"])
+        .withColumn("vb", F.pmod(F.hash("variant"), F.lit(n_buckets)))
+        .repartition("vb")
+        .sortWithinPartitions("vb", "variant")
+        .write.mode(mode)
+        .partitionBy("vb")
+        .parquet(path)
+    )
+    keys.write.mode(mode).parquet(path + "/_keys")
+    commit_generation(rows.sparkSession, path, epoch, mode)
+
+
+def _block_cols(meta) -> tuple:
+    """The block columns an index's ``_meta`` row records."""
+    return tuple(c for c in meta.block_cols.split(",") if c)
+
+
 def build_fuzzy_index(
     df: DataFrame,
     path: str,
@@ -495,15 +551,13 @@ def build_fuzzy_index(
     to its own variants' buckets; (block_cols..., key, s, epoch) under
     ``path/_keys`` (the last-writer resolution side); design scalars
     (max_dist, n_buckets, block_cols) as one row under ``path/_meta``.
-    ``epoch`` is the write-generation stamp (build = 0, each
-    ``extend_fuzzy_index`` = previous max + 1): probes resolve each
+    Build, extend and the ``epoch`` stamp follow the persisted-index
+    lifecycle (``sources/io.py``): probes resolve each
     (block_cols..., key) identity to its NEWEST epoch, so re-ingesting
     a key with a changed string is a clean last-writer overwrite
     WITHIN ITS BLOCK — the old string's variants stop matching
     entirely, while the same key's rows under OTHER block values stay
     live (blocks partition the match space; see ``_current_epochs``).
-    The ``extend_bm25_index`` contract otherwise, including its
-    single-writer assumption for concurrent extends.
 
     Rows with NULL key/string/blocks are dropped (they can never
     match); ``block_cols`` behave exactly as in ``fuzzy_string_pairs``.
@@ -522,42 +576,11 @@ def build_fuzzy_index(
             f"block_cols {clash} collide with index column names — "
             "rename them first"
         )
-    spark = df.sparkSession
-    keys = (
-        df.select(
-            *bc,
-            F.col(key_col).alias("key"),
-            F.col(str_col).cast("string").alias("s"),
-        )
-        .na.drop(subset=[*bc, "key", "s"])
-        .distinct()
-        .withColumn("epoch", F.lit(0).cast("long"))
+    _write_fuzzy_generation(
+        df, path, key_col, str_col, bc, int(max_dist), int(n_buckets), 0,
+        "overwrite",
     )
-    if not keys.limit(1).count():
-        # a zero-row partitioned write emits only _SUCCESS: probes and
-        # extends then die on UNABLE_TO_INFER_SCHEMA much later — fail
-        # at the build instead (review r15, second pass; an empty keys
-        # frame here means the corpus was empty or a wrong column
-        # na.drop'ed everything)
-        raise ValueError(
-            "build_fuzzy_index: no indexable rows — the corpus is "
-            "empty, or key/string/block columns are all-NULL"
-        )
-    variants = _deletes_blocks(keys.select(*bc, "s").distinct(), "s", "s",
-                               int(max_dist), extra=bc)
-    rows = (
-        keys.join(variants, [*bc, "s"])
-        .withColumn("vb", F.pmod(F.hash("variant"), F.lit(n_buckets)))
-    )
-    (
-        rows.repartition("vb")
-        .sortWithinPartitions("vb", "variant")
-        .write.mode("overwrite")
-        .partitionBy("vb")
-        .parquet(path)
-    )
-    keys.write.mode("overwrite").parquet(path + "/_keys")
-    spark.createDataFrame(
+    df.sparkSession.createDataFrame(
         [(int(max_dist), int(n_buckets), ",".join(bc))],
         "max_dist int, n_buckets int, block_cols string",
     ).coalesce(1).write.mode("overwrite").parquet(path + "/_meta")
@@ -569,47 +592,21 @@ def extend_fuzzy_index(
     key_col: str,
     str_col: str,
 ) -> None:
-    """Append a new batch's variants under a fresh epoch stamp — cost
+    """Append a new batch's variants as the next generation — cost
     proportional to the batch, the stored corpus is never re-exploded.
     Block columns and geometry come from ``_meta`` (so a caller cannot
     disagree with the build). Same-key contract is last-writer, same
     as ``extend_bm25_index``: the newest epoch's string wins outright,
-    a byte-identical replay is harmless, and concurrent extends need
-    an external serializer (single-writer, like every maintenance
-    path in this engine).
+    a byte-identical replay is harmless, and extends are single-writer
+    (lifecycle: ``sources/io.py``).
     """
     spark = new_rows.sparkSession
     meta = spark.read.parquet(path + "/_meta").head()
-    bc = tuple(c for c in meta.block_cols.split(",") if c)
-    epoch = (
-        spark.read.parquet(path + "/_keys")
-        .agg(F.coalesce(F.max("epoch"), F.lit(0)).alias("e"))
-        .head()
-        .e
-        + 1
+    _write_fuzzy_generation(
+        new_rows, path, key_col, str_col, _block_cols(meta),
+        int(meta.max_dist), int(meta.n_buckets), next_epoch(spark, path),
+        "append",
     )
-    keys = (
-        new_rows.select(
-            *bc,
-            F.col(key_col).alias("key"),
-            F.col(str_col).cast("string").alias("s"),
-        )
-        .na.drop(subset=[*bc, "key", "s"])
-        .distinct()
-        .withColumn("epoch", F.lit(epoch).cast("long"))
-    )
-    variants = _deletes_blocks(
-        keys.select(*bc, "s").distinct(), "s", "s",
-        int(meta.max_dist), extra=bc,
-    )
-    rows = (
-        keys.join(variants, [*bc, "s"])
-        .withColumn("vb", F.pmod(F.hash("variant"), F.lit(int(meta.n_buckets))))
-    )
-    rows.repartition("vb").sortWithinPartitions("vb", "variant").write.mode(
-        "append"
-    ).partitionBy("vb").parquet(path)
-    keys.write.mode("append").parquet(path + "/_keys")
 
 
 def _current_epochs(spark, path: str, bc: tuple) -> DataFrame:
@@ -653,7 +650,7 @@ def probe_fuzzy_index(
     once (narrow columns); verification touches candidates only.
     """
     meta = spark.read.parquet(path + "/_meta").head()
-    bc = tuple(c for c in meta.block_cols.split(",") if c)
+    bc = _block_cols(meta)
     tau = int(meta.max_dist) if max_dist is None else int(max_dist)
     if tau < 1:
         raise ValueError(f"max_dist must be >= 1, got {tau}")
@@ -716,10 +713,8 @@ def compact_fuzzy_index(spark, path: str) -> None:
     epoch per key must keep matching the store's stamps at every
     interleaving with a concurrent probe; ``_keys`` itself accretes
     one tiny row per key per write and compacts on rebuild."""
-    from cassandrastack_spark.sources.io import staged_partition_overwrite
-
     meta = spark.read.parquet(path + "/_meta").head()
-    bc = tuple(c for c in meta.block_cols.split(",") if c)
+    bc = _block_cols(meta)
     cur = _current_epochs(spark, path, bc)
     idx = spark.read.parquet(path)
     data_cols = [c for c in idx.columns if c != "vb"]

@@ -13,6 +13,28 @@ Rules (100 TB discipline):
   hash-distribute on the partition key, sort within partitions
   (clustering order), cap file sizes via maxRecordsPerFile so a
   1000-executor scan gets even splits.
+- **One lifecycle for the persisted indexes** (the MinHash band,
+  BM25 postings, fuzzy deletion-variant and IVF-PQ codes indexes).
+  Each index module has one function that writes a generation's rows;
+  ``build_*`` trains or validates, calls it with mode ``overwrite``
+  (which clears the whole index directory) as generation 0, and writes
+  the index's ``_meta`` LAST. ``_meta`` is written once: no extend
+  rewrites it, and an index is built exactly when its ``_meta`` reads,
+  so a crash anywhere in a build, an interrupted ``_meta`` write
+  included, reads as "not built" and the next build overwrites it.
+  ``extend_*`` reads ``_meta`` and calls the same function with mode
+  ``append``. The epoch-stamped indexes (BM25, fuzzy, IVF-PQ) stamp a
+  generation's rows with ``epoch``; the generation COMMITS when
+  ``commit_generation`` appends its row to the append-only ``_epochs``
+  table, after its data, and ``next_epoch`` is the newest committed
+  generation + 1. A crashed extend never committed, so its replay
+  re-lands the batch at the same stamp; probes resolve each identity
+  to its newest stamp, so a byte-identical replay collapses and a
+  changed re-ingest supersedes. Extends are single-writer: two
+  concurrent extends would share a stamp, so serialize them per index
+  (the streaming ingest loops, ``foreachBatch`` sinks, already do).
+  Compactions rewrite through ``staged_partition_overwrite`` and keep
+  every stamp.
 """
 
 from __future__ import annotations
@@ -605,51 +627,81 @@ def write_zordered(
     )
 
 
-def staged_partition_overwrite(
-    df, path: str, partition_col: str, sort_cols: list[str]
-) -> None:
-    """Object-store-safe rewrite of a partitioned parquet table — the
-    shared commit protocol behind the three index compactors
-    (``compact_dedup_index``, ``compact_bm25_index``,
-    ``compact_ivfpq_index``). It mirrors the protocol
-    ``storage.py compact()`` pioneered; the store keeps its OWN inline
-    copy because its staged write also models bucket-range slicing and
-    fragment materialization this simple helper does not — a change
-    here does NOT cover storage.compact():
+def newest_generation(spark: SparkSession, path: str, schema: str = "epoch long"):
+    """The ``_epochs`` row of the newest committed generation of the
+    index at ``path`` (lifecycle: module docstring). ``schema`` names
+    the columns to read, so the read runs no schema-inference job; the
+    row comes back in one job over the one-row-per-generation table."""
+    return (
+        spark.read.schema(schema)
+        .parquet(path + "/_epochs")
+        .orderBy(F.desc("epoch"))
+        .head()
+    )
 
-    1. write ``df`` to a run-unique staging dir NEXT to the target
-       (one all-or-nothing Spark commit; concurrent maintenance jobs
-       never share a stage),
-    2. re-read the staged result and dynamic-overwrite the target ONE
-       partition directory per commit, so concurrent readers always
-       see a complete partition (partitions absent from ``df`` are
-       left untouched — the caller documents what that means for its
-       layout),
-    3. drop staging via the Hadoop FileSystem API (works on
-       s3a/gs/abfs/hdfs/file alike), in a ``finally`` so a failed
-       overwrite doesn't leak the stage dir.
+
+def next_epoch(spark: SparkSession, path: str) -> int:
+    """The stamp of the next generation of the index at ``path``: its
+    newest committed generation + 1."""
+    return newest_generation(spark, path).epoch + 1
+
+
+def commit_generation(
+    spark: SparkSession, path: str, epoch: int, mode: str,
+    stats: DataFrame | None = None,
+) -> None:
+    """Commit generation ``epoch`` of the index at ``path``: write its
+    row to ``_epochs`` (mode ``overwrite`` for the build's generation 0,
+    ``append`` after). Call it after the generation's data is written.
+    ``stats`` is an optional one-row frame of scalars the generation
+    carries (BM25's ``n_docs``, ``avgdl``)."""
+    row = (
+        spark.createDataFrame([(epoch,)], "epoch long")
+        if stats is None
+        else stats.select(F.lit(epoch).cast("long").alias("epoch"), "*")
+    )
+    row.coalesce(1).write.mode(mode).parquet(path + "/_epochs")
+
+
+def staged_partition_overwrite(
+    df: DataFrame, path: str, partition_col: str, sort_cols: list, scope=None
+) -> None:
+    """Object-store-safe rewrite of the partitions in ``scope`` (None:
+    every partition) of a parquet table partitioned by
+    ``partition_col``: the one commit protocol of
+    ``WideColumnTable.compact`` (``scope`` is its ``buckets``) and the
+    four index compactors. ``df`` holds the rows the rewritten
+    partitions keep.
+
+    1. Write ``df`` unpartitioned to a run-unique staging dir NEXT to
+       the target: one all-or-nothing Spark commit and no shuffle;
+       concurrent maintenance jobs never share a stage.
+    2. Re-read the staged rows and dynamic-overwrite the target, each
+       file ordered by ``sort_cols`` (led by ``partition_col``): every
+       partition the staged rows hold is replaced in its own commit, so
+       concurrent readers always see a complete partition.
+    3. Delete the in-scope partition directories the staged rows no
+       longer hold (every row in them was dropped), reclaiming their
+       space; a partition outside ``scope`` is never touched.
+    4. Drop staging via the Hadoop FileSystem API (s3a/gs/abfs/hdfs/file
+       alike), in a ``finally`` so a failed overwrite doesn't leak the
+       stage dir.
     """
     import uuid as _uuid
 
     spark = df.sparkSession
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
     stage = f"{path}.compacting-{_uuid.uuid4().hex[:12]}"
+    fs = hadoop_path(stage).getFileSystem(spark._jsc.hadoopConfiguration())
     try:
-        (
-            df.repartition(partition_col)
-            .sortWithinPartitions(*sort_cols)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(stage)
-        )
+        df.write.mode("overwrite").parquet(stage)
         staged = spark.read.parquet(stage)
         conf = spark.conf
-        prev = conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
+        prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             (
-                staged.repartition(partition_col)
+                staged.repartition(F.col(partition_col))
                 .sortWithinPartitions(*sort_cols)
                 .write.mode("overwrite")
                 .partitionBy(partition_col)
@@ -657,8 +709,16 @@ def staged_partition_overwrite(
             )
         finally:
             conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        kept = {
+            str(r[0]) for r in staged.select(partition_col).distinct().collect()
+        }
+        in_scope = None if scope is None else {str(v) for v in scope}
+        for status in fs.listStatus(hadoop_path(path)):
+            name = status.getPath().getName()
+            if not name.startswith(f"{partition_col}="):
+                continue
+            value = name.split("=", 1)[1]
+            if value not in kept and (in_scope is None or value in in_scope):
+                fs.delete(status.getPath(), True)
     finally:
-        jvm = spark._jvm
-        stage_path = jvm.org.apache.hadoop.fs.Path(stage)
-        fs = stage_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(stage_path, True)
+        fs.delete(hadoop_path(stage), True)

@@ -1006,8 +1006,14 @@ class WideColumnTable:
         DELETE is gone, and a DELETE wins a tie with any write.
 
         Counters sum their increments. Collection columns collect their
-        (writetime, op, payload) cells and fold them in writetime order
-        (``_fold_collection``; ops at one writetime in read order); only
+        (writetime, op, payload) cells and fold them in writetime order,
+        an assign before a delta at one writetime (``_fold_collection``).
+        Full writes of one collection at one writetime merge as
+        Cassandra's cells do: a set takes the union, a map the entry
+        union with the greater value at a key tie (the scalar cell rule
+        above). Lists diverge, documented: their assigns at one
+        writetime, like any two ops at one writetime, fold in read order
+        and the last one read wins. Only
         full writes (``_coll_col`` null — every write, on a table without
         collections) feed the scalar, counter and marker races. Op-chains
         are bounded by writes-per-key since the last ``compact()``, which
@@ -1063,14 +1069,15 @@ class WideColumnTable:
                 # ``assign`` only if the write SET the cell (else a
                 # partial INSERT's null placeholder would clear the
                 # collection); deltas name their column via _coll_col.
-                # The comparator orders on writetime only: a map payload
-                # is not orderable.
+                # The comparator orders on writetime, then an assign
+                # before a delta (a map payload is not orderable).
                 aggs.append(
                     f"array_sort(collect_list(CASE WHEN ({sets_c}) OR {coll} = "
                     f"{_s(c)} THEN struct({wt} AS w, coalesce({_q(_COLL_OP)}, "
                     f"'assign') AS op, {qc} AS v) END), (l, r) -> CASE WHEN "
-                    "l.w < r.w THEN -1 WHEN l.w > r.w THEN 1 ELSE 0 END) "
-                    f"AS {_q('__ops_' + c)}"
+                    "l.w < r.w THEN -1 WHEN l.w > r.w THEN 1 WHEN l.op = r.op "
+                    "THEN 0 WHEN l.op = 'assign' THEN -1 WHEN r.op = 'assign' "
+                    f"THEN 1 ELSE 0 END) AS {_q('__ops_' + c)}"
                 )
             else:
                 # the winning write's writetime (tombstone cut) and
@@ -1183,29 +1190,40 @@ class WideColumnTable:
 
         Pure JVM higher-order functions — no Python in the loop. Cells
         at or before the newest tombstone are dead (filtered first);
-        ``assign`` restarts the fold, deltas mutate the accumulator.
+        ``assign`` restarts the fold, deltas mutate the accumulator. The
+        accumulator carries the writetime of the op that made it, so a
+        set or map assign at the writetime of the assign before it
+        merges with it instead (``_reconcile_rows`` states the rule).
         Empty results read as NULL (CQL: empty collections are null).
         """
         empty = f"CAST({'map()' if kind == 'map' else 'array()'} AS {sql_type})"
-        v, acc = f"coalesce(o.v, {empty})", f"coalesce(acc, {empty})"
-        res = "array_sort(acc)" if kind == "set" else "acc"
-        # each op's new accumulator; the last one is the ELSE
+        v, acc = f"coalesce(o.v, {empty})", f"coalesce(acc.v, {empty})"
+        res = "array_sort(acc.v)" if kind == "set" else "acc.v"
+        # each op's new accumulator; the last one is the ELSE. ``tie``
+        # merges an assign into the assign before it at one writetime.
         if kind == "set":
-            ops_sql = [("assign", f"array_distinct({v})"),
-                       ("add", f"array_union({acc}, {v})"),
-                       ("remove", f"array_except({acc}, {v})")]
+            union = f"array_union({acc}, {v})"
+            assign, tie = f"array_distinct({v})", union
+            deltas = [("add", union), ("remove", f"array_except({acc}, {v})")]
         elif kind == "list":
-            ops_sql = [("assign", v), ("append", f"concat({acc}, {v})"),
-                       ("prepend", f"concat({v}, {acc})")]
+            assign, tie = v, None
+            deltas = [("append", f"concat({acc}, {v})"),
+                      ("prepend", f"concat({v}, {acc})")]
         else:
             # map: put overrides existing keys, remove drops by key
             dropped = f"map_filter({acc}, (k, x) -> NOT array_contains(map_keys({v}), k))"
-            ops_sql = [("assign", v), ("put", f"map_concat({dropped}, {v})"),
-                       ("remove", dropped)]
+            assign = v
+            tie = f"map_zip_with({acc}, {v}, (k, x, y) -> greatest(x, y))"
+            deltas = [("put", f"map_concat({dropped}, {v})"), ("remove", dropped)]
+        if tie is not None:
+            assign = f"CASE WHEN acc.w = o.w THEN {tie} ELSE {assign} END"
+        ops_sql = [("assign", assign), *deltas]
         step = " ".join(f"WHEN '{op}' THEN {e}" for op, e in ops_sql[:-1])
         return (
-            f"aggregate(filter({ops}, o -> o.w > {tomb_w}), {empty}, "
-            f"(acc, o) -> CASE o.op {step} ELSE {ops_sql[-1][1]} END, "
+            f"aggregate(filter({ops}, o -> o.w > {tomb_w}), "
+            f"struct({empty} AS v, CAST(NULL AS BIGINT) AS w), "
+            f"(acc, o) -> struct(CASE o.op {step} ELSE {ops_sql[-1][1]} END AS v, "
+            "o.w AS w), "
             f"acc -> CASE WHEN size({res}) > 0 THEN {res} END)"
         )
 
@@ -1859,35 +1877,25 @@ class WideColumnTable:
         one table-sized job. Buckets are disjoint by construction, so
         range jobs can run concurrently.
 
-        Commit protocol (object-store-safe, no local-FS calls):
-
-        1. stage the deduped rows next to the table (Spark's own commit
-           protocol makes the staging write all-or-nothing);
-        2. read the staging copy back and DYNAMIC-partition-overwrite
-           the live table — each ``_bucket=k`` directory is replaced in
-           its own commit, so concurrent readers always see a complete
-           table (never the rmtree-then-move gap a rename swap has);
-        3. drop staging through the Hadoop FileSystem API, which
-           resolves s3a/gs/abfs/hdfs/file alike.
-
-        The staging directory is unique PER RUN (random suffix): two
-        concurrent range jobs each stage, commit, and clean up their
-        own copy — a shared staging dir would let one run clobber the
-        other's staged buckets and then delete live directories it
-        mistook for empty.
+        Commits through ``sources.io.staged_partition_overwrite``
+        (object-store-safe, no local-FS calls) with ``buckets`` as its
+        scope: the rewritten rows are staged next to the table, each
+        ``_bucket=k`` directory is replaced in its own commit, so
+        concurrent readers always see a complete table, and an
+        in-scope bucket left with no live row is deleted. The staging
+        directory is unique PER RUN, so concurrent range jobs never
+        clobber each other's staged buckets.
         """
-        import uuid as _uuid
+        from cassandrastack_spark.sources.io import staged_partition_overwrite
 
-        stage = f"{self.path}.compacting-{_uuid.uuid4().hex[:12]}"
         if buckets is not None:
             bad = [b for b in buckets if not (0 <= int(b) < self.n_buckets)]
             if bad:
                 raise ValueError(f"bucket ids out of range: {bad}")
             buckets = sorted({int(b) for b in buckets})
-        raw = self._raw()
-        if buckets is not None:
-            # partition-pruned slice: only these directories are read
-            raw = raw.filter(F.col(_BUCKET).isin(buckets))
+        # partition-pruned slice: only these directories are read
+        in_scope = F.lit(True) if buckets is None else F.col(_BUCKET).isin(buckets)
+        raw = self._raw().filter(in_scope)
         # reconcile keeps _expires (live TTLs survive the rewrite; rows
         # already expired, and rows they shadowed, are physically gone)
         # and _writetime: Cassandra preserves cell writetimes through
@@ -1912,42 +1920,12 @@ class WideColumnTable:
                 raw, keep_writetime=True, cell_meta=True, keep_marker=True
             )
             out = self._with_bucket(self._fragmented_cells(live))
-        out.write.mode("overwrite").parquet(stage)
-        staged = self.spark.read.parquet(stage)
-        # post-reconciliation = true partition size: exactly where
-        # Cassandra's compaction warning fires (the staged copy is
-        # already materialized, so this extra pass re-reads parquet,
-        # not the reconciliation plan)
-        self._warn_large_partitions(staged, "compact")
-        conf = self.spark.conf
-        prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            self._write_buckets(staged, "overwrite")
-        finally:
-            conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        jvm = self.spark._jvm
-        stage_path = jvm.org.apache.hadoop.fs.Path(stage)
-        fs = stage_path.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        # Dynamic overwrite only replaces buckets that still HAVE rows;
-        # a bucket whose every row expired/was shadowed keeps its old
-        # files. Reads stay correct regardless (reconciliation filters
-        # them) — this reclaims the space: drop bucket dirs absent from
-        # the staged output. Bounded driver work: at most n_buckets ids.
-        kept = {
-            r[0] for r in staged.select(_BUCKET).distinct().collect()
-        }
-        in_scope = (
-            set(range(self.n_buckets)) if buckets is None else set(buckets)
+        staged_partition_overwrite(
+            out, self.path, _BUCKET, [F.col(_BUCKET), *self._sort_cols()],
+            scope=buckets,
         )
-        live_path = jvm.org.apache.hadoop.fs.Path(self.path)
-        if fs.exists(live_path):
-            for status in fs.listStatus(live_path):
-                name = status.getPath().getName()
-                if name.startswith(f"{_BUCKET}="):
-                    bucket_id = int(name.split("=", 1)[1])
-                    # only directories this run compacted are eligible:
-                    # a range job must never delete out-of-scope buckets
-                    if bucket_id in in_scope and bucket_id not in kept:
-                        fs.delete(status.getPath(), True)
-        fs.delete(stage_path, True)
+        # post-reconciliation = true partition size: exactly where
+        # Cassandra's compaction warning fires (re-reads the rewritten
+        # parquet, not the reconciliation plan)
+        if self.guard is not None:
+            self._warn_large_partitions(self._raw().filter(in_scope), "compact")

@@ -707,8 +707,8 @@ def _ingest_loop(
        (``_read_parquet_if_committed``);
     3. nothing committed: ``build(batch)`` — the first batch seeds the
        index;
-    4. otherwise: ``build(accepted)`` first if the index ``_meta`` is
-       missing, then ``reject(batch_df, accepted)``, the anti-join on
+    4. otherwise: ``build(accepted)`` first if the index ``_meta`` does
+       not read, then ``reject(batch_df, accepted)``, the anti-join on
        the ``identity`` columns, and ``extend(survivors)`` under the
        epoch marker;
     5. ``sidecar(accepted, survivors, checkpoint, batch_id)`` if given
@@ -727,12 +727,16 @@ def _ingest_loop(
       schema-inference failure on every restart. Missing or
       uncommitted both take step 3, whose build overwrites, so
       rebuilding from the same batch is idempotent.
-    - **Lost index.** Index existence is decided by the index's own
-      ``_meta`` (Hadoop FS probe, any scheme), so a read failure on a
-      live index raises instead of silently rebuilding. An index lost
+    - **Lost index.** An index is built exactly when its write-once
+      ``_meta``, written last by the build, READS
+      (``_read_parquet_if_committed``; the lifecycle in
+      ``sources/io.py``). A crash inside a build, its ``_meta`` write
+      included, leaves an existing but unreadable ``_meta`` that an
+      existence probe would take for a live index, failing every later
+      batch; read as "not built", it is rebuilt instead. An index lost
       AFTER batches were accepted (deleted, mis-pathed, partial
-      restore) is rebuilt from the FULL accepted store before the
-      probe: rebuilding from the batch alone would leave the whole
+      restore, crashed build) is rebuilt from the FULL accepted store
+      before the probe: rebuilding from the batch alone would leave the whole
       accepted corpus unguarded — every later near-dup of it silently
       accepted — and could not even train on a small batch. The build
       overwrites, so a replay of this branch is idempotent.
@@ -770,7 +774,7 @@ def _ingest_loop(
             survivors = batch_df.drop(*scratch)
             build(survivors)
         else:
-            if not _fs_exists(spark, index_path + "/_meta"):
+            if _read_parquet_if_committed(spark, index_path + "/_meta") is None:
                 build(accepted)
             survivors = (
                 reject(batch_df, accepted)
@@ -870,9 +874,10 @@ def ingest_with_dedup(
             # overwrite-idempotent like the band-index build: a replay
             # of the first batch rebuilds the same postings
             build_bm25_index(survivors, bm25_index_path, **cols)
-        elif not _fs_exists(spark, bm25_index_path + "/_meta"):
-            # retrofit: the pipeline ran before bm25_index_path was
-            # configured — build the postings from the FULL corpus
+        elif _read_parquet_if_committed(spark, bm25_index_path + "/_meta") is None:
+            # retrofit (the pipeline ran before bm25_index_path was
+            # configured) or a crashed build (its _meta does not read):
+            # build the postings from the FULL corpus
             # (already-accepted docs + this batch's survivors), not
             # just the batch; build overwrites, so a replay of this
             # branch is idempotent

@@ -322,6 +322,39 @@ def test_collection_delta_edge_statements(cql):
     assert cql.execute("SELECT * FROM sess WHERE sid = %s", ("s2",)) == []
 
 
+def test_collection_full_writes_at_one_writetime_merge(cql):
+    """Two full writes of one collection at the same USING TIMESTAMP
+    merge as Cassandra's cells do, whichever file is read last: a set
+    takes the union, a map the entry union with the greater value at a
+    key tie."""
+    cql.execute(
+        "CREATE KEYSPACE IF NOT EXISTS ks WITH replication = "
+        "{'class': 'SimpleStrategy', 'replication_factor': '1'}"
+    )
+    cql.execute("USE ks")
+    cql.execute(
+        "CREATE TABLE t (id int, tags set<text>, m map<text, int>, "
+        "PRIMARY KEY (id))"
+    )
+    writes = [
+        (1, "tags", ["{'b'}", "{'a'}"]),
+        (2, "tags", ["{'a'}", "{'b'}"]),
+        (3, "m", ["{'x': 1}", "{'x': 2, 'y': 0}"]),
+        (4, "m", ["{'x': 2, 'y': 0}", "{'x': 1}"]),
+    ]
+    for key, col, values in writes:
+        for value in values:
+            cql.execute(
+                f"INSERT INTO t (id, {col}) VALUES ({key}, {value}) "
+                "USING TIMESTAMP 5000"
+            )
+    rows = {r["id"]: r for r in cql.execute("SELECT * FROM t")}
+    assert sorted(rows[1]["tags"]) == ["a", "b"]
+    assert sorted(rows[2]["tags"]) == ["a", "b"]
+    assert rows[3]["m"] == {"x": 2, "y": 0}
+    assert rows[4]["m"] == {"x": 2, "y": 0}
+
+
 def test_describe_table_statement(cql):
     _bootstrap(cql)
     ddl = cql.execute("DESCRIBE TABLE messages")

@@ -548,10 +548,7 @@ def test_fuzzy_index_extend_supersedes_within_block_only(spark, tmp_path):
     # compaction must keep the EU row (it is live) and the answers
     compact_fuzzy_index(spark, path)
     assert got() == want
-    # both live versions survive physically; a bucket whose every row
-    # is superseded may keep stale files (the documented dynamic-
-    # overwrite caveat — the epoch filter drops them at read), so
-    # assert containment, not equality
+    # both live versions survive physically
     live = {(r.region, r.s) for r in spark.read.parquet(path)
             .select("region", "s").distinct().collect()}
     assert {("EU", "jones"), ("US", "smithy")} <= live
@@ -624,8 +621,9 @@ def test_fuzzy_index_extend_crash_window_is_invisible(spark, tmp_path):
     assert got() == before
 
     # the replay: the full extend re-lands the batch at the SAME epoch
-    # (computed from _keys, which the crash never advanced) — now the
-    # key is live and the duplicate variant rows collapse
+    # (the newest committed generation + 1; the crash never committed
+    # its generation to _epochs) — now the key is live and the
+    # duplicate variant rows collapse
     extend_fuzzy_index(
         spark.createDataFrame([(3, "wolfe")], "id long, name string"),
         path, "id", "name",

@@ -1591,9 +1591,10 @@ def test_compact_bm25_index_drops_superseded_epochs(spark, tmp_path):
     extend_bm25_index(newdoc, path)
     extend_bm25_index(newdoc, path)  # replayed extend (epoch-bumped copy)
     # SAME-epoch duplicate: a crash between the postings append and
-    # the _doclen append replays with an UNCHANGED max epoch, so the
-    # batch's postings land twice under one stamp — simulate by
-    # re-appending the newest epoch's postings rows directly
+    # the _epochs commit replays at the SAME epoch (the newest
+    # committed generation + 1), so the batch's postings land twice
+    # under one stamp — simulate by re-appending the newest epoch's
+    # postings rows directly
     idx_now = spark.read.parquet(path)
     cur_max = idx_now.agg(F.max("epoch")).head()[0]
     (
@@ -1642,6 +1643,88 @@ def test_compact_bm25_index_drops_superseded_epochs(spark, tmp_path):
     # doc 1's old 'vector' posting must be physically gone, and doc
     # 4's replay duplicate collapsed
     assert idx.filter("doc_id = 1 AND w = 'vector'").count() == 0
+
+
+def test_compact_bm25_index_deletes_fully_superseded_bucket(spark, tmp_path):
+    """A term bucket whose every posting was superseded is gone after
+    compact_bm25_index, not left holding stale files."""
+    import os
+
+    from cassandrastack_spark.llm.retrieval import (
+        build_bm25_index,
+        compact_bm25_index,
+        extend_bm25_index,
+        probe_bm25_index,
+    )
+
+    path = str(tmp_path / "bm25_reclaim")
+    build_bm25_index(
+        spark.createDataFrame([(1, "old"), (2, "kept")], ["doc_id", "text"]),
+        path, n_term_buckets=16,
+    )
+    extend_bm25_index(
+        spark.createDataFrame([(1, "kept")], ["doc_id", "text"]), path
+    )
+
+    def bucket(term):
+        return spark.range(1).select(
+            F.pmod(F.hash(F.lit(term)), F.lit(16))
+        ).head()[0]
+
+    stale = os.path.join(path, f"tb={bucket('old')}")
+    assert bucket("old") != bucket("kept") and os.path.isdir(stale), (
+        "fixture: 'old' must sit alone in its bucket"
+    )
+    compact_bm25_index(spark, path)
+    assert not os.path.exists(stale)
+    got = probe_bm25_index(spark, path, ["kept", "old"], k=10).collect()
+    assert sorted(r.doc_id for r in got) == [1, 2]
+
+
+def test_extends_leave_meta_files_unchanged(spark, tmp_path):
+    """_meta is write-once: extend_bm25_index and extend_fuzzy_index
+    leave its file listing as the build wrote it (the IVF-PQ twin is
+    pinned in test_compact_ivfpq_index_keeps_newest_generation_codes)."""
+    import os
+
+    from cassandrastack_spark.llm.retrieval import (
+        build_bm25_index,
+        extend_bm25_index,
+    )
+    from cassandrastack_spark.operators.fuzzy import (
+        build_fuzzy_index,
+        extend_fuzzy_index,
+    )
+
+    def listing(path):
+        meta = os.path.join(path, "_meta")
+        return sorted(
+            (name, os.stat(os.path.join(meta, name)).st_mtime_ns)
+            for name in os.listdir(meta)
+        )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c"), (2, "b c d")], ["doc_id", "text"]
+    )
+    bm25 = str(tmp_path / "bm25_meta")
+    build_bm25_index(docs, bm25)
+    before = listing(bm25)
+    extend_bm25_index(
+        spark.createDataFrame([(3, "c d e")], ["doc_id", "text"]), bm25
+    )
+    assert listing(bm25) == before
+
+    names = spark.createDataFrame(
+        [(1, "smith"), (2, "jones")], "id long, name string"
+    )
+    fuzzy = str(tmp_path / "fuzzy_meta")
+    build_fuzzy_index(names, fuzzy, "id", "name")
+    before = listing(fuzzy)
+    extend_fuzzy_index(
+        spark.createDataFrame([(3, "smyth")], "id long, name string"),
+        fuzzy, "id", "name",
+    )
+    assert listing(fuzzy) == before
 
 
 def test_probe_ivfpq_index_collapses_duplicate_indexed_ids(spark, tmp_path):

@@ -2983,3 +2983,81 @@ def test_ingest_with_dedup_bm25_turned_on_mid_life(spark, tmp_path):
     assert 11 not in {r.doc_id for r in got.collect()}, (
         "rejected near-dup never entered the postings"
     )
+
+
+def _interrupt_meta_write(index_path):
+    """The state an interrupted ``_meta`` overwrite leaves: the
+    directory exists and holds no file, so it does not read."""
+    import os
+    import shutil
+
+    meta = os.path.join(index_path, "_meta")
+    shutil.rmtree(meta)
+    os.makedirs(meta)
+
+
+def test_stream_ingest_rebuilds_band_index_whose_meta_does_not_read(
+    spark, tmp_path
+):
+    """A rebuild-from-accepted that crashed while writing the band
+    index's ``_meta`` leaves a ``_meta`` that exists but does not read:
+    the next batch rebuilds the index from the accepted store instead
+    of failing on every later batch, and the near-dup of an old
+    accepted doc is still rejected."""
+    c = _ingest_case(spark, tmp_path, "dedup")
+    c["write"]("b1.parquet", c["seed"])
+    c["run"]()
+    _interrupt_meta_write(c["index"])
+
+    c["write"]("b2.parquet", c["batch2"])
+    c["run"]()
+    assert c["accepted_ids"]() == [1, 2, 11]
+
+
+def test_ingest_with_dedup_rebuilds_bm25_index_whose_meta_does_not_read(
+    spark, tmp_path
+):
+    """A BM25 ``_meta`` that does not read after batch 1 (an
+    interrupted write) is rebuilt from the accepted corpus plus the
+    next batch's survivors, so the stream keeps running and probing
+    the postings equals ``bm25_rank`` over the accepted corpus."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from cassandrastack_spark.llm.retrieval import bm25_rank, probe_bm25_index
+    from cassandrastack_spark.streaming.ops import ingest_with_dedup
+
+    schema = StructType([
+        StructField("doc_id", LongType()),
+        StructField("text", StringType()),
+    ])
+    d = tmp_path / "docs_in"
+    d.mkdir()
+    bm25 = str(tmp_path / "bm25")
+
+    def run(name, rows):
+        pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
+        pq.write_table(
+            pa.Table.from_pandas(pdf, preserve_index=False), str(d / name)
+        )
+        src = spark.readStream.schema(schema).parquet(str(d))
+        q = ingest_with_dedup(
+            src, str(tmp_path / "band"), str(tmp_path / "acc"),
+            checkpoint=str(tmp_path / "ckpt"), bm25_index_path=bm25)
+        q.awaitTermination(120)
+
+    run("b1.parquet", [
+        (1, "spark vector " + " ".join(f"a{i}" for i in range(20))),
+        (2, "stream join " + " ".join(f"b{i}" for i in range(20))),
+    ])
+    _interrupt_meta_write(bm25)
+    run("b2.parquet", [
+        (10, "vector stream vector " + " ".join(f"c{i}" for i in range(20))),
+    ])
+    accepted = spark.read.parquet(str(tmp_path / "acc"))
+    assert sorted(r.doc_id for r in accepted.collect()) == [1, 2, 10]
+    terms = ["vector", "stream", "join"]
+    got = probe_bm25_index(spark, bm25, terms, k=10)
+    want = bm25_rank(accepted, terms, k=10)
+    assert [tuple(r) for r in got.collect()] == [
+        tuple(r) for r in want.collect()
+    ]
