@@ -820,8 +820,7 @@ def bottomk_sample_build(
     bottomk(bottomk(A) ∪ bottomk(B)), and re-merging the same batch
     changes nothing (duplicates dedup on the hash). That idempotence
     is the HLL-register property, so the same at-least-once streaming
-    discipline (and the same append-then-delete compaction) applies —
-    see ``streaming/ops.py monitor_value_sample``. A uniform k-row
+    discipline applies — see ``streaming/ops.py monitor_value_sample``. A uniform k-row
     sample estimates any quantile with standard error ~sqrt(p(1-p)/k)
     in rank space (~1.6% at k=1024, p=0.5).
 

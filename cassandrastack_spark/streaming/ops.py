@@ -632,19 +632,21 @@ def stateful_user_totals_tws(stream: DataFrame) -> DataFrame:
     )
 
 
+def _hadoop_fs(spark, p: str):
+    """The Hadoop ``Path`` class and the file system holding ``p`` (any
+    scheme: s3a/gs/abfs/hdfs/file)."""
+    P = spark._jvm.org.apache.hadoop.fs.Path
+    return P, P(p).getFileSystem(spark._jsc.hadoopConfiguration())
+
+
 def _fs_exists(spark, p: str) -> bool:
-    """Hadoop-FS existence probe (any scheme: s3a/gs/abfs/hdfs/file)."""
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(p)
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hp))
+    P, fs = _hadoop_fs(spark, p)
+    return bool(fs.exists(P(p)))
 
 
 def _fs_mkdirs(spark, p: str) -> None:
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path(p)
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(hp)
+    P, fs = _hadoop_fs(spark, p)
+    fs.mkdirs(P(p))
 
 
 def _read_parquet_if_committed(spark, path: str):
@@ -1174,6 +1176,232 @@ def ingest_with_fuzzy_dedup(
     )
 
 
+# ---------------------------------------------------------------------------
+# monitor-state compaction: one commit, one merge per state kind
+# ---------------------------------------------------------------------------
+
+
+def _sum_merge(
+    snap: DataFrame,
+    state_path: str,
+    sum_col: str = "cnt",
+    key_cols: tuple[str, ...] | None = None,
+) -> DataFrame:
+    """The additive merge (Count-Min cells, histogram bins): sum
+    ``sum_col`` per every other column. The key is DERIVED from the
+    state schema: additive states carry their geometry, grid and group
+    columns as data, and merging on a subset would permanently sum
+    counts across the missing columns, or launder two incompatible
+    sketches into one plausible-looking table.
+    ``key_cols``, when supplied, is validated against the derived key
+    and a mismatch raises rather than merges."""
+    keys = [c for c in snap.columns if c != sum_col]
+    if sum_col not in snap.columns:
+        raise ValueError(
+            f"additive compaction: sum column {sum_col!r} not in state "
+            f"schema {snap.columns} at {state_path}"
+        )
+    if key_cols is not None and set(key_cols) != set(keys):
+        raise ValueError(
+            "additive compaction: supplied key_cols "
+            f"{sorted(key_cols)} do not cover the state's non-sum "
+            f"columns {sorted(keys)} at {state_path} — merging on a "
+            "subset would permanently collapse counts across the "
+            "missing columns"
+        )
+    return (
+        snap.groupBy(*keys)
+        .agg(F.sum(sum_col).alias(sum_col))
+        .select(*keys, sum_col)
+    )
+
+
+def _hll_merge(snap: DataFrame, state_path: str) -> DataFrame:
+    """The HLL merge: max per register. ``p`` stays a group key, so two
+    precisions mistakenly written to one path both survive compaction
+    and ``distinct_count_state`` still refuses them."""
+    return (
+        snap.groupBy("bucket", "p")
+        .agg(F.max("maxrank").alias("maxrank"))
+        .select("bucket", "maxrank", "p")
+    )
+
+
+def _sample_merge(
+    snap: DataFrame,
+    state_path: str,
+    data_cols: tuple[str, ...],
+    retake,
+    caller: str,
+) -> DataFrame:
+    """The sample merge, shared by the uniform and weighted twins:
+    ``retake`` under the group columns DERIVED from the state schema
+    (every non-``data_cols`` column), after refusing mixed ``k``."""
+    gcols = [c for c in snap.columns if c not in data_cols]
+    _check_sample_state_k(snap, state_path, caller)
+    return retake(snap, gcols).select(*gcols, *data_cols)
+
+
+def _stage_compaction(
+    spark: SparkSession,
+    state_path: str,
+    merge=_sum_merge,
+    partition_by: tuple[str, ...] = (),
+    **merge_args,
+) -> bool:
+    """Steps (2)-(4) of ``_compact_state``: snapshot the state, run
+    ``merge(snapshot_frame, state_path, **merge_args)`` (the default is
+    the additive merge), stage it into this attempt's side directory and
+    rename the manifest into place. Returns False when there is nothing
+    to compact: no committed state, or one file. Once this returns True
+    the commit is durable — ``_recover_compaction`` finishes it exactly
+    once, however many crashes intervene.
+
+    Both the staging directory and the manifest's staging file are
+    unique per attempt: with shared names a concurrent compactor could
+    make this manifest record the other attempt's parts against this
+    attempt's snapshot, or commit the other attempt's record, and
+    double-count or silently abort."""
+    import uuid
+
+    raw = _read_parquet_if_committed(spark, state_path)
+    if raw is None:
+        return False
+    snapshot = sorted(raw.inputFiles())
+    if len(snapshot) <= 1:
+        return False
+    merged = merge(
+        spark.read.option("basePath", state_path).parquet(*snapshot),
+        state_path,
+        **merge_args,
+    )
+    base = state_path.rstrip("/")
+    attempt = uuid.uuid4().hex
+    tmp_dir = f"{base}.compact.tmp.{attempt}"
+    out = merged.coalesce(1).write.mode("overwrite")
+    if partition_by:
+        out = out.partitionBy(*partition_by)
+    out.parquet(tmp_dir)
+    P, fs = _hadoop_fs(spark, tmp_dir)
+    # each part's path relative to the staging dir: partition dirs too
+    depth = len(partition_by)
+    staged = sorted(
+        "/".join(st.getPath().toUri().getPath().split("/")[-depth - 1:])
+        for st in fs.globStatus(P(tmp_dir + "/*" * depth + "/*.parquet"))
+        or []
+    )
+    record = {
+        "staged": staged,
+        "snapshot": snapshot,
+        "tmp": tmp_dir.rsplit("/", 1)[-1],
+    }
+    manifest = P(base + ".compact.manifest")
+    staging = P(f"{base}.compact.manifest.tmp.{attempt}")
+    w = fs.create(staging, True)
+    w.write(bytearray(json.dumps(record), "utf-8"))
+    w.close()
+    if not fs.rename(staging, manifest):
+        # another compactor's manifest holds the path: recovery finishes
+        # THEIR commit; ours aborts, removing its own side artifacts
+        fs.delete(staging, False)
+        fs.delete(P(tmp_dir), True)
+        raise RuntimeError(
+            f"compaction: manifest rename refused at {state_path} "
+            "(concurrent compactor?) — commit aborted, state untouched; "
+            "re-run after the other compactor finishes"
+        )
+    return True
+
+
+def _recover_compaction(spark: SparkSession, state_path: str) -> None:
+    """Step (5) of ``_compact_state``, and the finish of any commit a
+    crashed compactor left manifested: move exactly the staged parts the
+    manifest lists into the state (creating a partition directory if it
+    is missing), and only when every one of them is there delete exactly
+    the snapshot files; then drop the manifest and every side artifact
+    (``<state>.compact.tmp*`` directories and ``.compact.manifest.tmp*``
+    files — each belongs to a finished, aborted or crashed attempt once
+    no manifest references it). Idempotent: every step skips work
+    already done.
+
+    A staged part missing from both places means a concurrent
+    compactor's sweep removed it before this manifest landed, and a
+    manifest that does not parse or lacks a key proves nothing: both
+    ABORT. Every snapshot file stays, the listed parts already moved in
+    are backed out (a merged part beside its snapshot would double an
+    additive state), and the state is merely uncompacted."""
+    base = state_path.rstrip("/")
+    P, fs = _hadoop_fs(spark, base)
+    manifest = P(base + ".compact.manifest")
+    if fs.exists(manifest):
+        ins = fs.open(manifest)
+        try:
+            rec = json.loads(bytes(ins.readAllBytes()).decode("utf-8"))
+            staged, snapshot = rec["staged"], rec["snapshot"]
+            tmp = P(P(base).getParent(), rec["tmp"])
+        except (ValueError, KeyError, TypeError):
+            staged = None
+        finally:
+            ins.close()
+        if staged is not None:
+            for rel in staged:
+                src, dst = P(tmp, rel), P(f"{base}/{rel}")
+                if not fs.exists(dst) and fs.exists(src):
+                    fs.mkdirs(dst.getParent())
+                    fs.rename(src, dst)
+            if all(fs.exists(P(f"{base}/{rel}")) for rel in staged):
+                for f in snapshot:
+                    fs.delete(P(f), False)
+            else:
+                for rel in staged:
+                    fs.delete(P(f"{base}/{rel}"), False)
+        fs.delete(manifest, False)
+    for st in fs.globStatus(P(base + ".compact.{tmp,manifest.tmp}*")) or []:
+        fs.delete(st.getPath(), True)
+
+
+def _compact_state(
+    spark: SparkSession,
+    state_path: str,
+    merge,
+    partition_by: tuple[str, ...] = (),
+    **merge_args,
+) -> None:
+    """The one compaction commit of every monitor state. A monitor
+    appends one small file per non-empty batch and its reader always
+    merges, so compaction changes no answer, only the file count. The
+    protocol: (1) finish any commit a crashed compactor left
+    manifested; (2) snapshot the state's file list (no committed state,
+    or one file: return) and run the kind's ``merge`` on exactly those
+    files — every validation raises here, before any write; (3) stage
+    the merge into a per-attempt ``<state>.compact.tmp.<uuid>``
+    directory no reader lists, keeping the state's ``p=``/``k=``
+    partition layout; (4) rename the manifest ``<state>.compact.manifest``
+    into place — the commit point — recording the snapshot, the staged
+    parts (relative to the staging directory) and that directory's
+    name; (5) move exactly the staged parts in, prove they are all
+    there, delete exactly the snapshot files, and drop the manifest and
+    every side artifact. It is safe for both merge kinds. A file the
+    live monitor appends after the snapshot is in neither list and
+    survives untouched. A snapshot file is deleted only once its merged
+    restatement is in place, so no interleaving loses data. A crash
+    before (4) leaves nothing visible, and a crash after it is finished
+    by the next call instead of leaving old + merged files side by side
+    — which an idempotent merge (HLL max, bottom-k retake, newest-epoch
+    components) would read correctly, but an additive one (Count-Min,
+    histogram: counts SUM) would permanently double. Readers listing
+    inside (5) may see old + merged for a moment (an additive reader
+    can only OVERcount, never under) or hit a deleted file: always-on
+    readers set ``spark.sql.files.ignoreMissingFiles``. A second
+    compactor whose manifest rename is refused raises, and an aborted
+    commit (``_recover_compaction``) keeps the snapshot: schedule one
+    compactor per state path.
+    """
+    _recover_compaction(spark, state_path)
+    if _stage_compaction(spark, state_path, merge, partition_by, **merge_args):
+        _recover_compaction(spark, state_path)
+
+
 def monitor_components(
     stream: DataFrame,
     state_path: str,
@@ -1360,42 +1588,19 @@ def _resolve_components(rows: DataFrame, keep_epoch: bool = False) -> DataFrame:
 def compact_components_state(spark: SparkSession, state_path: str) -> None:
     """Maintenance for a ``monitor_components`` state table: rewrite
     the accreted change rows (one per node per merge) as each node's
-    single newest-epoch row, under the shared append-then-delete-
-    snapshot protocol (``_compact_sample_state``'s argument, adapted):
-    epochs are PRESERVED, not renumbered — the compacted row carries
-    its original epoch, so the monitor's max-epoch read and any
-    interleaved resolution see exactly the values they would have seen
-    uncompacted. CONTENT-safe at every interleaving: a concurrent
-    batch append survives outside the snapshot and is strictly newer;
-    a reader whose file listing lands inside the append-to-delete
-    window sees (old ∪ merged) whose per-node newest rows are
-    byte-identical duplicates; a crash between append and delete
-    leaves a correct, merely-uncompacted table. (The additive manifest
-    protocol is for sum-merged states — last-writer resolution, like
-    min-k, tolerates duplicates.) FILE-listing races are another
-    matter (review r16): a reader that listed the snapshot BEFORE the
-    delete and scans after it fails with missing-file errors — and
-    unlike the sample twins, this monitor's own sink reads the state
-    every batch. Run compaction in the monitor's idle window, the
-    single-writer maintenance discipline every compactor in this
-    engine assumes.
+    single newest-epoch row, through the one compaction commit
+    (``_compact_state``). Epochs are PRESERVED, not renumbered — the
+    compacted row carries its original epoch, so the monitor's
+    max-epoch read and any resolution see exactly the values they
+    would have seen uncompacted. This monitor's own sink reads the
+    state every batch, so a sink that listed a snapshot file before its
+    delete fails on the missing file: run compaction in the monitor's
+    idle window.
     """
-    from pyspark.errors import AnalysisException
-
-    try:
-        raw = spark.read.parquet(state_path)
-    except AnalysisException:
-        return
-    snapshot = sorted(raw.inputFiles())
-    if len(snapshot) <= 1:
-        return  # nothing to compact
-    snap = spark.read.option("basePath", state_path).parquet(*snapshot)
-    merged = (
-        _resolve_components(snap, keep_epoch=True)
-        .localCheckpoint(eager=True)  # materialize BEFORE any delete
+    _compact_state(
+        spark, state_path,
+        lambda snap, _: _resolve_components(snap, keep_epoch=True),
     )
-    merged.coalesce(1).write.mode("append").parquet(state_path)
-    _delete_snapshot_files(spark, snapshot)
 
 
 def components_state(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1430,7 +1635,9 @@ def monitor_embedding_moments(
     documents "retrain on drift" — this operator is the detector).
 
     Replay discipline, mirroring ``ingest_vectors``: the append is
-    guarded by a per-batch marker under ``<checkpoint>/cs_epochs/``, so
+    guarded by a per-batch marker under ``<checkpoint>/cs_epochs/``
+    (``_marker_guarded_sketch_monitor``; a batch whose vectors are all
+    null writes the marker and no state file), so
     a crash inside the append→marker window re-lands the SAME
     (batch_id, n, s, ss) row byte-identically, and the reader
     additionally collapses duplicate batch_ids — both halves of the
@@ -1442,10 +1649,7 @@ def monitor_embedding_moments(
 
     spark = stream.sparkSession
 
-    def _sink(batch_df: DataFrame, batch_id: int, ckpt: str) -> None:
-        marker = f"{ckpt}/cs_epochs/{batch_id}"
-        if _fs_exists(spark, marker):
-            return
+    def build(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # eager checkpoint: the summed totals AND the count read these
         # partials — without it the batch-sized moment pass runs twice
         parts = _moment_partials(batch_df, vec_col).localCheckpoint(
@@ -1462,10 +1666,6 @@ def monitor_embedding_moments(
             F.min(F.size("s")).alias("dmin"),
             F.max(F.size("s")).alias("dmax"),
         ).head()
-        n = stats.n
-        if not summed or not n:
-            _fs_mkdirs(spark, marker)
-            return  # empty batch contributes nothing
         if stats.dmin != stats.dmax:
             raise ValueError(
                 "monitor_embedding_moments: ragged vector lengths "
@@ -1477,14 +1677,17 @@ def monitor_embedding_moments(
         v = [0.0] * cnt
         for r in summed:
             v[r.pos] = r.v
-        spark.createDataFrame(
-            [(int(batch_id), int(n), v[:dim], v[dim:])],
+        return spark.createDataFrame(
+            [(int(batch_id), int(stats.n), v[:dim], v[dim:])],
             "batch_id long, n long, s array<double>, ss array<double>",
-        ).coalesce(1).write.mode("append").parquet(state_path)
-        _fs_mkdirs(spark, marker)
+        )
 
-    return _run_foreach_batch(
-        stream, _sink, checkpoint, "cs_mom_ckpt_", trigger_available_now
+    return _marker_guarded_sketch_monitor(
+        stream, state_path, vec_col, build,
+        ckpt_prefix="cs_mom_ckpt_",
+        checkpoint=checkpoint,
+        trigger_available_now=trigger_available_now,
+        pass_batch_id=True,
     )
 
 
@@ -1502,13 +1705,10 @@ def embedding_moments_state(spark: SparkSession, state_path: str) -> DataFrame:
     young stream is zero evidence, not an error), so a polling drift
     scheduler never wedges on startup.
     """
-    from pyspark.errors import AnalysisException
-
     from cassandrastack_spark.llm.embstats import _cov_frame_from_totals
 
-    try:
-        raw = spark.read.parquet(state_path)
-    except AnalysisException:
+    raw = _read_parquet_if_committed(spark, state_path)
+    if raw is None:
         return spark.createDataFrame([], "i int, j int, cov double")
     # cross-BATCH dim guard: a stream whose vector length changed
     # between batches would merge into a silently wrong dim — the
@@ -1550,7 +1750,10 @@ def _marker_guarded_sketch_monitor(
 ):
     """The shared sink shape of the sketch monitors
     (``monitor_distinct_count`` / ``monitor_hot_keys`` /
-    ``monitor_histogram``): per batch, probe the epoch marker (skip a
+    ``monitor_histogram`` / the samples) and of
+    ``monitor_embedding_moments`` and ``monitor_nb_counts``, whose
+    rows carry the batch id (``pass_batch_id``): per batch, probe the
+    epoch marker (skip a
     replay's wasted work), short-circuit an all-null batch on the RAW
     frame (so the build aggregation runs exactly once, in the write),
     reduce the batch with ``build_fn`` and append one small file, then
@@ -1615,10 +1818,9 @@ def monitor_distinct_count(
     Cost per batch: one map pass over the batch + a ``2**p``-bounded
     map-side-combined shuffle + a ≤ ``2**p``-row file. The state table
     grows one small file per non-empty batch; readers always merge, so
-    ``compact_distinct_count_state`` may run at any time — its
-    append-then-delete-snapshot commit (see its docstring for why NOT
-    a directory overwrite) never changes any answer, even against a
-    concurrently appending monitor.
+    ``compact_distinct_count_state`` may run at any time — the one
+    compaction commit (``_compact_state``) never changes any answer,
+    even against a concurrently appending monitor.
     """
     from cassandrastack_spark.operators.sketch import hll_build
 
@@ -1643,13 +1845,10 @@ def distinct_count_state(spark: SparkSession, state_path: str) -> DataFrame:
     in one state directory mean two incompatible sketches were pointed
     at the same path — refuse loudly rather than merge garbage.
     """
-    from pyspark.errors import AnalysisException
-
     from cassandrastack_spark.operators.sketch import hll_estimate
 
-    try:
-        raw = spark.read.parquet(state_path)
-    except AnalysisException:
+    raw = _read_parquet_if_committed(spark, state_path)
+    if raw is None:
         return spark.createDataFrame(
             [(0.0, 0, 0)], "est_distinct double, m long, nonempty long"
         )
@@ -1671,59 +1870,10 @@ def compact_distinct_count_state(spark: SparkSession, state_path: str) -> None:
     monitor appends one small register file per non-empty batch, so an
     always-on stream accretes files whose only cost is open latency —
     the ANSWER never drifts (the reader max-merges). Rewrite the state
-    as its merged ≤ ``2**p``-row register table.
-
-    Commit protocol — append-then-delete-snapshot, NOT a partition
-    overwrite: (1) snapshot the file list, (2) APPEND the max-merge of
-    exactly those files, (3) delete exactly the snapshot files. An
-    overwrite (the other compactors' protocol) would be WRONG here: a
-    register file the live monitor appends between the compactor's
-    read and its commit is not in the merged result, and overwriting
-    the directory would delete it — silently and permanently dropping
-    that batch's distinct items (its epoch marker and the streaming
-    checkpoint guarantee it is never re-processed). With
-    append-then-delete, a concurrent append is simply not in the
-    snapshot and survives untouched, and every read interleaving is
-    correct by register idempotence: between (2) and (3) a reader
-    sees old files + merged (max-merges to the same registers), after
-    (3) just merged + any newer appends. A crash between (2) and (3)
-    leaves a correct, merely-uncompacted table. The one availability
-    caveat (shared with every file-level compaction): a reader that
-    listed files before (3) can hit a deleted file and must retry —
-    set ``spark.sql.files.ignoreMissingFiles`` on always-on readers;
-    a missing file only ever removes rows the merged file re-states.
+    as its merged ≤ ``2**p``-row register table, in its ``p=`` layout,
+    through the one compaction commit (``_compact_state``).
     """
-    raw = spark.read.parquet(state_path)
-    snapshot = list(raw.inputFiles())
-    if len(snapshot) <= 1:
-        return  # nothing to compact
-    _compact_hll_snapshot(spark, state_path, snapshot)
-
-
-def _compact_hll_snapshot(
-    spark: SparkSession, state_path: str, snapshot: list[str]
-) -> None:
-    """The commit half of ``compact_distinct_count_state``, taking the
-    file-list snapshot explicitly: merge EXACTLY the snapshot files,
-    append the result, delete exactly those files. Split out so the
-    concurrent-append race is testable — a test can take a snapshot,
-    append a register file (the live monitor's move inside the
-    compactor's window), then commit against the STALE snapshot and
-    assert the late file's items survive.
-    """
-    merged = (
-        # basePath recovers the p= partition column when reading the
-        # snapshot's leaf files directly
-        spark.read.option("basePath", state_path).parquet(*snapshot)
-        .groupBy("bucket", "p")
-        .agg(F.max("maxrank").alias("maxrank"))
-        .select("bucket", "maxrank", "p")
-        .localCheckpoint(eager=True)  # materialize BEFORE any delete
-    )
-    merged.coalesce(1).write.mode("append").partitionBy("p").parquet(
-        state_path
-    )
-    _delete_snapshot_files(spark, snapshot)
+    _compact_state(spark, state_path, _hll_merge, ("p",))
 
 
 def monitor_hot_keys(
@@ -1765,7 +1915,7 @@ def monitor_hot_keys(
     Cost per batch: one map pass + a ``depth x width``-bounded
     map-side-combined shuffle + one small file. Readers always
     sum-merge, so ``compact_hot_keys_state`` may run at any time
-    (see its one-sided-window note).
+    (the one compaction commit, ``_compact_state``).
     """
     from cassandrastack_spark.operators.sketch import cm_build
 
@@ -1795,13 +1945,10 @@ def hot_keys_state(
     directory mean two incompatible sketches were pointed at the same
     path — refuse loudly rather than sum garbage.
     """
-    from pyspark.errors import AnalysisException
-
     from cassandrastack_spark.operators.sketch import cm_estimate
 
-    try:
-        raw = spark.read.parquet(state_path)
-    except AnalysisException:
+    raw = _read_parquet_if_committed(spark, state_path)
+    if raw is None:
         return probes.withColumn(out_col, F.lit(0).cast("long"))
     geoms = [
         (r.w, r.d) for r in raw.select("w", "d").distinct().collect()
@@ -1823,322 +1970,17 @@ def hot_keys_state(
 def compact_hot_keys_state(spark: SparkSession, state_path: str) -> None:
     """Maintenance for a ``monitor_hot_keys`` state table: the monitor
     appends one small cell file per non-empty batch; rewrite the state
-    as its sum-merged ≤ ``depth x width``-row table.
-
-    The HLL compactor's append-then-delete protocol is NOT safe here,
-    and the difference is the whole design note: HLL registers are
-    idempotent (max), so a crash that leaves both the old files and
-    the merged file changes no answer — CM cells SUM, so the same
-    crash would permanently DOUBLE the compacted counts, and a
-    re-run of the compactor would bake the doubling in (sum-merging
-    doubled cells cannot un-double them). This compactor therefore
-    uses a manifest-recovery commit:
-
-    1. stage the sum-merge of a snapshotted file list into a side
-       directory (``<state>.compact.tmp`` — never visible to readers);
-    2. atomically rename a manifest into place recording the snapshot
-       (the staged merge is complete whenever the manifest exists);
-    3. move the staged part files INTO the state directory;
-    4. delete exactly the snapshot files;
-    5. remove the manifest and the side directory.
-
-    Every entry first runs recovery: an existing manifest means a
-    previous compaction crashed mid-commit — finish its moves, finish
-    its deletes, clean up. Crash anywhere leaves a state a re-run
-    makes exact: before (2) nothing is visible; after (2) the
-    snapshot+staged pair is replayed to completion. Readers inside
-    the (3)-(4) window can transiently OVERcount (old + merged — the
-    one-sided direction, same side as CM's design error and the
-    monitor's replay policy); no interleaving can ever UNDERcount — a
-    snapshot file is deleted only after every staged part is in
-    place, and a concurrent monitor append is not in the snapshot and
-    survives untouched. Always-on readers set
-    ``spark.sql.files.ignoreMissingFiles`` (a missing file only ever
-    removes rows the merged file re-states).
+    as its sum-merged ≤ ``depth x width``-row table through the one
+    compaction commit (``_compact_state``, which says why CM's summed
+    cells are safe there). Geometry (w, d) stays a merge key: if two
+    incompatible sketches were mistakenly written to one path,
+    compaction PRESERVES both geometries so ``hot_keys_state``'s loud
+    refusal still fires — collapsing them under max(w)/max(d) would
+    launder the corruption into a single plausible-looking sketch.
     """
-    _recover_additive_compaction(spark, state_path)
-    if _stage_hot_keys_compaction(spark, state_path):
-        _recover_additive_compaction(spark, state_path)
-
-
-def _stage_hot_keys_compaction(spark: SparkSession, state_path: str) -> bool:
-    """The CM instantiation of ``_stage_additive_compaction`` — kept as
-    a named seam so the crash-window test reads like the protocol note.
-    Geometry (w, d) stays a GROUP KEY (the HLL compactor's bucket,p
-    discipline): if two incompatible sketches were mistakenly written
-    to one path, compaction must PRESERVE both geometries so
-    hot_keys_state's loud refusal still fires — collapsing them under
-    max(w)/max(d) would launder the corruption into a single
-    plausible-looking sketch.
-    """
-    return _stage_additive_compaction(
-        spark, state_path, key_cols=("row", "col", "w", "d"), sum_col="cnt"
+    _compact_state(
+        spark, state_path, _sum_merge, key_cols=("row", "col", "w", "d")
     )
-
-
-def _stage_additive_compaction(
-    spark: SparkSession,
-    state_path: str,
-    sum_col: str,
-    key_cols: tuple[str, ...] | None = None,
-) -> bool:
-    """Steps (1)-(2) of the manifested commit for ANY additive state
-    table (rows merge by summing ``sum_col`` per every other column —
-    the Count-Min cells, the fixed-width histogram bins), split out so
-    the crash window is testable (the _compact_hll_snapshot
-    discipline): stage the sum-merge of the current snapshot into the
-    side directory and atomically rename the manifest into place.
-    Returns False when there is nothing to compact. After this returns
-    True, the commit is durable — ANY later compact entry (or
-    ``_recover_additive_compaction`` directly) finishes it exactly
-    once, however many crashes intervene.
-
-    The merge key is DERIVED from the state schema as every non-sum
-    column (review r13): additive states carry their geometry/grid/
-    group columns as data, and collapsing any of them would launder an
-    incompatible-write mistake — or a caller's wrong group_cols — into
-    one plausible-looking table, permanently summing counts across
-    groups. ``key_cols``, when supplied, is VALIDATED against the
-    derived set and a mismatch raises rather than merges. A state path
-    the monitor has not written yet (only empty batches so far) is
-    "nothing to compact", not an error — the compactor may run at any
-    time, like its readers.
-
-    The manifest records the snapshot file list, the staged part
-    names AND the per-attempt staging directory (JSON), so recovery
-    can prove the merged data is in place before deleting any
-    snapshot file — the guard that makes a concurrent compactor's
-    pre-commit orphan sweep (which may race away this instance's tmp
-    dir between the stage write and the manifest rename) an aborted
-    commit instead of a permanent undercount. The staging directory
-    is UNIQUE per attempt (``<state>.compact.tmp.<uuid>``) — ADVICE
-    r14: with a SHARED tmp dir, a concurrent compactor's overwrite in
-    the window between this attempt's stage write and its listStatus
-    made this manifest record the OTHER attempt's staged parts
-    (merged from a possibly newer snapshot) against THIS attempt's
-    older snapshot list, and recovery then double-counted any file
-    appended between the two snapshots (deleted via neither list,
-    re-stated by the merged parts). With per-attempt dirs each
-    manifest's staged names are provably its own. Concurrent
-    compactors therefore cannot lose OR double data; they can only
-    waste each other's staging work (the orphan sweep aborts the
-    slower commit) — still schedule one compactor per state path.
-    """
-    from pyspark.errors import AnalysisException
-
-    try:
-        raw = spark.read.parquet(state_path)
-    except AnalysisException:
-        return False  # monitor has not written a first file yet
-    snapshot = sorted(raw.inputFiles())
-    if len(snapshot) <= 1:
-        return False  # nothing to compact
-    derived = tuple(c for c in raw.columns if c != sum_col)
-    if sum_col not in raw.columns:
-        raise ValueError(
-            f"additive compaction: sum column {sum_col!r} not in state "
-            f"schema {raw.columns} at {state_path}"
-        )
-    if key_cols is not None and set(key_cols) != set(derived):
-        raise ValueError(
-            "additive compaction: supplied key_cols "
-            f"{sorted(key_cols)} do not cover the state's non-sum "
-            f"columns {sorted(derived)} at {state_path} — merging on a "
-            "subset would permanently collapse counts across the "
-            "missing columns"
-        )
-    import uuid
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    attempt = uuid.uuid4().hex
-    tmp_dir = state_path.rstrip("/") + ".compact.tmp." + attempt
-    kcols = list(derived)
-    (
-        spark.read.parquet(*snapshot)
-        .groupBy(*kcols)
-        .agg(F.sum(sum_col).alias(sum_col))
-        .select(*kcols, sum_col)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(tmp_dir)
-    )
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(tmp_dir).getFileSystem(hconf)
-    staged_names = sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(P(tmp_dir))
-        if st.getPath().getName().endswith(".parquet")
-    )
-    # manifest rename is the commit point: staged merge is complete.
-    # The staging FILE is per-attempt too (review r15): a shared
-    # staging path written with overwrite lets attempt B clobber A's
-    # record between A's create and A's rename — A then commits B's
-    # record while B's refused-rename cleanup deletes the staging dir
-    # that record references, silently aborting a commit whose stage
-    # call returned True. Per-attempt names make every rename carry
-    # its own attempt's record.
-    manifest = P(state_path.rstrip("/") + ".compact.manifest")
-    staging = P(
-        state_path.rstrip("/") + ".compact.manifest.tmp." + attempt
-    )
-    out = fs.create(staging, True)
-    out.write(bytearray(
-        json.dumps({
-            "staged": staged_names,
-            "snapshot": snapshot,
-            # the attempt's own staging dir NAME (sibling of the state
-            # dir) — recovery moves parts from exactly this dir, never
-            # another attempt's
-            "tmp": tmp_dir.rsplit("/", 1)[-1],
-        }),
-        "utf-8",
-    ))
-    out.close()
-    if not fs.rename(staging, manifest):
-        # another compactor committed first (its manifest occupies the
-        # path): our staging work is superseded, not lost — recovery
-        # will finish THEIR commit; ours aborts cleanly (including our
-        # own per-attempt staging dir, so no orphan accumulates)
-        fs.delete(staging, False)
-        fs.delete(P(tmp_dir), True)
-        raise RuntimeError(
-            f"additive compaction: manifest rename refused at "
-            f"{state_path} (concurrent compactor?) — commit aborted, "
-            "state untouched; re-run after the other compactor finishes"
-        )
-    return True
-
-
-def _recover_additive_compaction(spark: SparkSession, state_path: str) -> None:
-    """Finish (or initially perform) a manifested compaction commit:
-    move every staged part file from the MANIFEST'S OWN staging dir
-    into the state directory, PROVE every manifest-listed staged part
-    is in place, only then delete the manifest-listed snapshot files,
-    then drop the manifest and every ``.compact.tmp*`` side directory
-    (the manifest's own plus any other attempt's pre-commit orphans —
-    staging dirs are per-attempt since ADVICE r14, so an unreferenced
-    one is always a crashed or superseded attempt). Idempotent — each
-    step skips work already done, so any number of crashed re-entries
-    converge. With no manifest present, only sweeps stale side
-    directories (a pre-commit crash: nothing visible happened, so
-    nothing to redo).
-
-    The staged-parts proof is the concurrent-compactor guard (review
-    r13): instance B's pre-commit orphan sweep here can race away
-    instance A's tmp dir between A's stage write and A's manifest
-    rename. A's manifest then commits with its merged data gone —
-    under the old recovery (delete snapshot unconditionally) that was
-    a permanent, silent undercount. Now: any manifest-listed staged
-    part missing from BOTH the tmp dir and the state dir ABORTS the
-    commit — manifest and tmp dropped, every snapshot file kept, the
-    state stays merely uncompacted and a re-run compacts it. Deletion
-    of data is gated on proof the same data is re-stated.
-    """
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    base = state_path.rstrip("/")
-    manifest = P(base + ".compact.manifest")
-    fs = manifest.getFileSystem(hconf)
-
-    def _tmp_dirs():
-        # every side staging artifact for this state path: data dirs
-        # (legacy shared name plus per-attempt uuid-suffixed ones) AND
-        # orphaned per-attempt manifest-staging files (a crash between
-        # create and rename leaves one; it references a staging dir
-        # this sweep also removes, so it can never be resurrected)
-        out = [
-            st.getPath()
-            for st in fs.globStatus(P(base + ".compact.tmp*")) or []
-        ]
-        out += [
-            st.getPath()
-            for st in fs.globStatus(P(base + ".compact.manifest.tmp*"))
-            or []
-        ]
-        return out
-
-    if not fs.exists(manifest):
-        for d in _tmp_dirs():
-            fs.delete(d, True)  # pre-commit orphans
-        return
-    ins = fs.open(manifest)
-    try:
-        data = bytes(ins.readAllBytes()).decode("utf-8")
-    finally:
-        ins.close()
-    try:
-        rec = json.loads(data)
-        staged, snapshot = rec["staged"], rec["snapshot"]
-        # per-attempt staging dir (ADVICE r14), recorded as a NAME and
-        # resolved as a sibling of the state dir; a JSON manifest from
-        # the r14 shared-dir code carries no "tmp" key — fall back to
-        # the shared name it staged into
-        if "tmp" in rec:
-            tmp_dir = P(P(base).getParent(), rec["tmp"])
-        else:
-            tmp_dir = P(base + ".compact.tmp")
-    except (ValueError, KeyError, TypeError):
-        # legacy manifest (pre-JSON: bare newline-joined snapshot
-        # paths, no staged-part record) left by a crash under the old
-        # code — must still recover, not wedge every future compaction
-        # on a parse error. Without staged names the presence proof
-        # can't run, so be conservative: with the tmp dir present,
-        # whatever staged parts exist are the merge — move them and
-        # treat them as the proof set; with the tmp dir gone the
-        # merged data is unprovable, so ABORT (keep every snapshot
-        # file; the state stays uncompacted but exact). Pre-JSON code
-        # always staged into the shared side dir.
-        snapshot = [ln for ln in data.splitlines() if ln]
-        tmp_dir = P(base + ".compact.tmp")
-        if not fs.exists(tmp_dir):
-            fs.delete(manifest, False)
-            return
-        staged = [
-            st.getPath().getName()
-            for st in fs.listStatus(tmp_dir)
-            if st.getPath().getName().endswith(".parquet")
-        ]
-    # (3) move staged parts in (skip any already moved)
-    if fs.exists(tmp_dir):
-        for st in fs.listStatus(tmp_dir):
-            name = st.getPath().getName()
-            if not name.endswith(".parquet"):
-                continue
-            dst = P(state_path.rstrip("/") + "/" + name)
-            if not fs.exists(dst):
-                fs.rename(st.getPath(), dst)
-    # (3b) the deletion gate: every staged part must now be in the
-    # state dir, or the merged data was lost pre-commit — abort
-    missing = [
-        n for n in staged
-        if not fs.exists(P(state_path.rstrip("/") + "/" + n))
-    ]
-    if missing:
-        # back out any staged parts already moved in: with the
-        # snapshot kept, a surviving merged part would DOUBLE the
-        # counts it re-states (the abort must be all-or-nothing)
-        for n in staged:
-            dst = P(state_path.rstrip("/") + "/" + n)
-            if fs.exists(dst):
-                fs.delete(dst, False)
-        fs.delete(manifest, False)
-        if fs.exists(tmp_dir):
-            fs.delete(tmp_dir, True)
-        return  # snapshot kept: uncompacted but exact; re-run compacts
-    # (4) delete exactly the manifested snapshot files
-    for f in snapshot:
-        if f:
-            fp = P(f)
-            if fs.exists(fp):
-                fs.delete(fp, False)
-    # (5) cleanup: the manifest, its own staging dir, and any other
-    # attempt's orphaned staging dirs (all unreferenced once the only
-    # manifest is gone)
-    fs.delete(manifest, False)
-    for d in _tmp_dirs():
-        fs.delete(d, True)
 
 
 def monitor_histogram(
@@ -2213,12 +2055,9 @@ def histogram_state(
     pass it so the no-data frame unions/joins cleanly against the
     real state that appears later.
     """
-    from pyspark.errors import AnalysisException
-
     gcols = list(group_cols)
-    try:
-        raw = spark.read.parquet(state_path)
-    except AnalysisException:
+    raw = _read_parquet_if_committed(spark, state_path)
+    if raw is None:
         fields = group_schema or ", ".join(f"{c} string" for c in gcols)
         schema = (fields + ", " if fields else "") + "bin int, cnt long"
         return spark.createDataFrame([], schema)
@@ -2233,24 +2072,18 @@ def compact_histogram_state(
     group_cols: tuple[str, ...] = (),
 ) -> None:
     """Maintenance for a ``monitor_histogram`` state table: rewrite the
-    accreted per-batch bin files as the sum-merged table, under the
-    same manifest-recovery commit as ``compact_hot_keys_state`` (bin
-    counts SUM — not idempotent — so the HLL append-then-delete
-    protocol would permanently double them on a mid-commit crash; see
-    that function's protocol note). The merge key is DERIVED from the
-    state schema (every non-cnt column), so a caller's group_cols can
-    no longer silently collapse counts across groups (review r13: the
-    old code trusted them as the merge key — calling with the default
-    () on a grouped monitor's state was irreversible data loss guarded
-    only by a docstring sentence); when supplied, group_cols are
-    validated against the schema and a mismatch raises.
+    accreted per-batch bin files as the sum-merged table through the
+    one compaction commit (``_compact_state``). The merge key is
+    DERIVED from the state schema (every non-cnt column), so a
+    caller's group_cols can never collapse counts across groups — the
+    default () on a grouped monitor's state would otherwise be
+    irreversible data loss; when supplied, group_cols are validated
+    against the schema and a mismatch raises.
     """
-    _recover_additive_compaction(spark, state_path)
-    if _stage_additive_compaction(
-        spark, state_path, sum_col="cnt",
+    _compact_state(
+        spark, state_path, _sum_merge,
         key_cols=(*group_cols, "bin") if group_cols else None,
-    ):
-        _recover_additive_compaction(spark, state_path)
+    )
 
 
 def monitor_value_sample(
@@ -2280,11 +2113,9 @@ def monitor_value_sample(
     HLL it needs less — sample membership is a pure function of
     ``md5(key_col)``, so a batch appended twice merges to the
     byte-identical sample (the dedup in the merge collapses it);
-    at-least-once delivery is semantically invisible. Same property,
-    same compactor protocol: ``compact_value_sample_state`` uses the
-    append-then-delete-snapshot commit (see
-    ``compact_distinct_count_state`` for why NOT an overwrite), safe
-    against a concurrently appending monitor because
+    at-least-once delivery is semantically invisible. Compaction
+    (``compact_value_sample_state``) re-takes the snapshot's sample,
+    which changes no answer because
     bottomk(bottomk(A) ∪ B) == bottomk(A ∪ B).
 
     Cost per batch: one narrow (group, h, v) projection + one
@@ -2327,14 +2158,11 @@ def value_sample_state(
     group columns as ``string`` unless ``group_schema`` supplies the
     real DDL (the ``histogram_state`` contract).
     """
-    from pyspark.errors import AnalysisException
-
     from cassandrastack_spark.operators.sketch import bottomk_retake
 
     gcols = list(group_cols)
-    try:
-        raw = spark.read.parquet(state_path)
-    except AnalysisException:
+    raw = _read_parquet_if_committed(spark, state_path)
+    if raw is None:
         gddl = group_schema or ", ".join(f"{g} string" for g in gcols)
         ddl = (gddl + ", " if gcols else "") + "h string, v double, k int"
         return spark.createDataFrame([], ddl)
@@ -2351,11 +2179,10 @@ def _check_sample_state_schema(
     data_cols: tuple[str, ...] = ("h", "v", "k"),
 ) -> None:
     """Refuse a group-column set that doesn't cover the state schema
-    (review r14 — the merge-key rule _stage_additive_compaction
-    enforces, applied to the sample states' readers AND compactors): a
+    (the merge-key rule ``_sum_merge`` enforces, applied to the sample
+    states' readers; their compactors derive the group columns): a
     bottom-k retake under MISSING group columns ranks every group in
-    one window and keeps only the globally-smallest k keys —
-    permanently halving each group's sample in the compactor's case.
+    one window and keeps only the globally-smallest k keys.
     Every non-``data_cols`` column of the state is a group column by
     construction (the monitors write nothing else); ``data_cols`` is
     ("h", "v", "k") for the uniform sample and
@@ -2389,74 +2216,19 @@ def _check_sample_state_k(
         )
 
 
-def _delete_snapshot_files(spark: SparkSession, files) -> None:
-    """The shared snapshot-delete tail of the append-then-delete
-    compactors — one copy of the FS loop, so a hardening (retry,
-    trash, listing fence) lands everywhere at once (review r16)."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for f in files:
-        fpath = jvm.org.apache.hadoop.fs.Path(f)
-        fpath.getFileSystem(hconf).delete(fpath, False)
-
-
-def _compact_sample_state(
-    spark: SparkSession,
-    state_path: str,
-    data_cols: tuple[str, ...],
-    retake_fn,
-    caller: str,
-) -> None:
-    """The shared append-then-delete-snapshot compactor for BOTH
-    sample-sketch monitors (uniform bottom-k and weighted reservoir) —
-    one copy of the commit protocol, so a future protocol fix cannot
-    diverge between the twins. Safe because each twin's merge is
-    idempotent (key dedup) and min-k is associative: a concurrent
-    append survives outside the snapshot, every read interleaving
-    min-k-merges to the same sample, and a crash between append and
-    delete leaves a correct, merely-uncompacted table. (The additive
-    manifest protocol is NOT needed here — that exists for sum-merged
-    states, where old + merged double-counts.) Group columns are
-    DERIVED from the state schema; mixed sample sizes refuse BEFORE
-    any write.
-    """
-    from pyspark.errors import AnalysisException
-
-    try:
-        raw = spark.read.parquet(state_path)
-    except AnalysisException:
-        return
-    snapshot = sorted(raw.inputFiles())
-    if len(snapshot) <= 1:
-        return  # nothing to compact
-    gcols = [c for c in raw.columns if c not in data_cols]
-    _check_sample_state_k(raw, state_path, caller)
-    merged = (
-        retake_fn(
-            spark.read.option("basePath", state_path).parquet(*snapshot),
-            gcols,
-        )
-        .select(*gcols, *data_cols)
-        .localCheckpoint(eager=True)  # materialize BEFORE any delete
-    )
-    merged.coalesce(1).write.mode("append").partitionBy("k").parquet(
-        state_path
-    )
-    _delete_snapshot_files(spark, snapshot)
-
-
 def compact_value_sample_state(spark: SparkSession, state_path: str) -> None:
     """Maintenance for a ``monitor_value_sample`` state table: rewrite
     the accreted per-batch sample files as the merged
-    ≤ k-rows-per-group sample. See ``_compact_sample_state`` for the
-    protocol and its safety argument (shared verbatim with the
-    weighted twin).
+    ≤ k-rows-per-group sample, in its ``k=`` layout, through the one
+    compaction commit (``_compact_state``). Group columns are DERIVED
+    from the state schema; mixed sample sizes refuse before any write.
     """
     from cassandrastack_spark.operators.sketch import bottomk_retake
 
-    _compact_sample_state(
-        spark, state_path, ("h", "v", "k"), bottomk_retake,
-        "compact_value_sample_state",
+    _compact_state(
+        spark, state_path, _sample_merge, ("k",),
+        data_cols=("h", "v", "k"), retake=bottomk_retake,
+        caller="compact_value_sample_state",
     )
 
 
@@ -2481,9 +2253,8 @@ def monitor_weighted_sample(
     ``monitor_value_sample``. The exponential key is a pure function
     of (key, weight) — no RNG — so at-least-once replay is
     byte-invisible (dedup on the key) and the marker guard is pure
-    thrift, the HLL argument. Same compactor protocol for the same
-    reason (min-k is associative + idempotent):
-    ``compact_weighted_sample_state``.
+    thrift, the HLL argument. ``compact_weighted_sample_state``
+    compacts it through the one commit (``_compact_state``).
 
     The weight must be STABLE per key (fix it at first ingest); a key
     re-ingested with a new weight is two rows and the dedup keeps an
@@ -2520,14 +2291,11 @@ def weighted_sample_state(
     state schema, or mixed ``k`` in one path, refuses loudly (the
     ``value_sample_state`` contracts).
     """
-    from pyspark.errors import AnalysisException
-
     from cassandrastack_spark.operators.sketch import weighted_sample_retake
 
     gcols = list(group_cols)
-    try:
-        raw = spark.read.parquet(state_path)
-    except AnalysisException:
+    raw = _read_parquet_if_committed(spark, state_path)
+    if raw is None:
         gddl = group_schema or ", ".join(f"{g} string" for g in gcols)
         ddl = (
             (gddl + ", " if gcols else "")
@@ -2546,14 +2314,15 @@ def compact_weighted_sample_state(
     spark: SparkSession, state_path: str
 ) -> None:
     """Maintenance for a ``monitor_weighted_sample`` state table — the
-    weighted twin of ``compact_value_sample_state``, on the SAME
-    shared ``_compact_sample_state`` protocol.
+    weighted twin of ``compact_value_sample_state``, through the same
+    commit and the same ``_sample_merge``.
     """
     from cassandrastack_spark.operators.sketch import weighted_sample_retake
 
-    _compact_sample_state(
-        spark, state_path, ("item", "e", "w", "k"), weighted_sample_retake,
-        "compact_weighted_sample_state",
+    _compact_state(
+        spark, state_path, _sample_merge, ("k",),
+        data_cols=("item", "e", "w", "k"), retake=weighted_sample_retake,
+        caller="compact_weighted_sample_state",
     )
 
 

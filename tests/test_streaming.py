@@ -1071,16 +1071,18 @@ def test_monitor_distinct_count_matches_batch_hll(spark, tmp_path):
 
 
 def test_compact_hll_state_survives_concurrent_append(spark, tmp_path):
-    """The compactor race the append-then-delete-snapshot protocol
-    exists for: a register file appended AFTER the compactor snapshots
-    the file list (the live monitor landing a batch mid-compaction)
-    must survive the commit — an overwrite-style compactor would
-    silently delete it, permanently losing that batch's distinct
-    items. Also pins that a crash between append and delete (both
-    halves present) still reads exactly."""
+    """The compactor race the snapshot-scoped commit exists for: a
+    register file appended AFTER the compactor snapshots the file list
+    (the live monitor landing a batch mid-compaction) must survive the
+    commit — an overwrite-style compactor would silently delete it,
+    permanently losing that batch's distinct items. The compaction is
+    staged and its manifest committed, the late file lands, then
+    recovery finishes the commit."""
     from cassandrastack_spark.operators.sketch import hll_build, hll_estimate
     from cassandrastack_spark.streaming.ops import (
-        _compact_hll_snapshot,
+        _hll_merge,
+        _recover_compaction,
+        _stage_compaction,
         distinct_count_state,
     )
 
@@ -1101,6 +1103,7 @@ def test_compact_hll_state_survives_concurrent_append(spark, tmp_path):
 
     snapshot = sorted(_glob.glob(f"{state_path}/p=12/*.parquet"))
     assert len(snapshot) == 2
+    assert _stage_compaction(spark, state_path, _hll_merge, ("p",))
     # the monitor lands a batch inside the compactor's window
     hll_build(late, "x", p=12).coalesce(1).write.mode(
         "append"
@@ -1109,7 +1112,7 @@ def test_compact_hll_state_survives_concurrent_append(spark, tmp_path):
     want = hll_estimate(
         hll_build(early.unionAll(late), "x", p=12)
     ).collect()[0]
-    _compact_hll_snapshot(spark, state_path, snapshot)
+    _recover_compaction(spark, state_path)
     got = distinct_count_state(spark, state_path).collect()[0]
     assert got == want  # the late batch's items survived the commit
     # snapshot files are gone; the late file and the merged file remain
@@ -1136,7 +1139,7 @@ def test_monitor_hot_keys_matches_batch_cm_and_compaction_is_crash_safe(
 
     from cassandrastack_spark.operators.sketch import cm_build, cm_estimate
     from cassandrastack_spark.streaming.ops import (
-        _stage_hot_keys_compaction,
+        _stage_compaction,
         compact_hot_keys_state,
         hot_keys_state,
         monitor_hot_keys,
@@ -1199,7 +1202,7 @@ def test_monitor_hot_keys_matches_batch_cm_and_compaction_is_crash_safe(
     # (d) crash window FIRST (state still has 2 files): stage + manifest,
     # then "die" — the next compact entry must finish the commit with
     # estimates unchanged (the naive protocol would double them here)
-    assert _stage_hot_keys_compaction(spark, state_path)
+    assert _stage_compaction(spark, state_path)
     compact_hot_keys_state(spark, state_path)
     assert estimates(
         hot_keys_state(spark, state_path, probes, "content")
@@ -1272,7 +1275,7 @@ def test_monitor_histogram_matches_batch_and_feeds_psi(spark, tmp_path):
         psi_from_histograms,
     )
     from cassandrastack_spark.streaming.ops import (
-        _stage_additive_compaction,
+        _stage_compaction,
         compact_histogram_state,
         histogram_state,
         monitor_histogram,
@@ -1331,7 +1334,7 @@ def test_monitor_histogram_matches_batch_and_feeds_psi(spark, tmp_path):
     assert len(spark.read.parquet(state).inputFiles()) == 2
 
     # crash window: stage + manifest, die, recover on next compact
-    assert _stage_additive_compaction(
+    assert _stage_compaction(
         spark, state, key_cols=("src", "bin"), sum_col="cnt"
     )
     compact_histogram_state(spark, state, ("src",))
@@ -1356,12 +1359,205 @@ def test_compactors_tolerate_never_written_state(spark, tmp_path):
     first non-empty batch — a missing state directory is nothing to
     compact, not an AnalysisException crashing the maintenance job."""
     from cassandrastack_spark.streaming.ops import (
+        compact_components_state,
+        compact_distinct_count_state,
         compact_histogram_state,
         compact_hot_keys_state,
+        compact_value_sample_state,
+        compact_weighted_sample_state,
     )
 
     compact_hot_keys_state(spark, str(tmp_path / "never_a"))
     compact_histogram_state(spark, str(tmp_path / "never_b"), ("src",))
+    compact_distinct_count_state(spark, str(tmp_path / "never_c"))
+    compact_value_sample_state(spark, str(tmp_path / "never_d"))
+    compact_weighted_sample_state(spark, str(tmp_path / "never_e"))
+    compact_components_state(spark, str(tmp_path / "never_f"))
+
+
+@pytest.mark.parametrize(
+    "kind",
+    [
+        "components",
+        "distinct_count",
+        "hot_keys",
+        "histogram",
+        "value_sample",
+        "weighted_sample",
+    ],
+)
+def test_compaction_crash_window_every_state_kind(
+    spark, tmp_path, monkeypatch, kind
+):
+    """Every monitor state compacts through one manifested commit. A
+    compactor that stages its merge, commits the manifest and then dies
+    is finished by the next compact_*_state call: the one file left is
+    that manifest's staged part and the answer is unchanged. A file the
+    live monitor appends after the snapshot survives the finished
+    commit."""
+    import glob as _glob
+    import json as _json
+    import os as _os
+
+    from cassandrastack_spark.functions.stats import histogram_fixed
+    from cassandrastack_spark.operators.sketch import (
+        bottomk_sample_build,
+        cm_build,
+        hll_build,
+        weighted_sample_build,
+    )
+    from cassandrastack_spark.streaming import ops
+
+    def rows(i):  # batch i: 40 events, overlapping the previous batch
+        return spark.range(30 * i, 30 * i + 40).select(
+            "id",
+            F.concat(F.lit("x"), F.col("id")).alias("x"),
+            (F.col("id") % 2).cast("string").alias("src"),
+            ((F.col("id") * 7) % 20 / 20.0).alias("score"),
+            (1.0 + F.col("id") % 5).alias("w"),
+        )
+
+    probes = spark.range(200).select(
+        F.concat(F.lit("x"), F.col("id")).alias("x")
+    )
+    # kind -> (batch i's state rows, partition columns, reader, compactor)
+    build, parts, read, compact = {
+        "components": (
+            # node 0 moves to a new component every batch: only its
+            # newest-epoch row may survive
+            lambda i: spark.createDataFrame(
+                [(0, i, i)] + [(10 * i + j, 10 * i, i) for j in (1, 2, 3)],
+                "node long, comp long, epoch long",
+            ),
+            (),
+            lambda p: ops.components_state(spark, p),
+            ops.compact_components_state,
+        ),
+        "distinct_count": (
+            lambda i: hll_build(rows(i), "x", p=8),
+            ("p",),
+            lambda p: ops.distinct_count_state(spark, p),
+            ops.compact_distinct_count_state,
+        ),
+        "hot_keys": (
+            lambda i: cm_build(rows(i), "x", width=64, depth=3),
+            (),
+            lambda p: ops.hot_keys_state(spark, p, probes, "x"),
+            ops.compact_hot_keys_state,
+        ),
+        "histogram": (
+            lambda i: histogram_fixed(
+                rows(i), "score", 0.0, 1.0, 5, group_cols=("src",)
+            ),
+            (),
+            lambda p: ops.histogram_state(spark, p, ("src",)),
+            ops.compact_histogram_state,
+        ),
+        "value_sample": (
+            lambda i: bottomk_sample_build(
+                rows(i), "score", "id", k=128, group_cols=["src"]
+            ),
+            ("k",),
+            lambda p: ops.value_sample_state(spark, p, ("src",)),
+            ops.compact_value_sample_state,
+        ),
+        "weighted_sample": (
+            lambda i: weighted_sample_build(
+                rows(i), "id", "w", k=128, group_cols=["src"]
+            ),
+            ("k",),
+            lambda p: ops.weighted_sample_state(spark, p, ("src",)),
+            ops.compact_weighted_sample_state,
+        ),
+    }[kind]
+    state, ref = str(tmp_path / "state"), str(tmp_path / "ref")
+
+    def append(i):  # one monitor batch, into the state and the reference
+        for path in (state, ref):
+            out = build(i).coalesce(1).write.mode("append")
+            if parts:
+                out = out.partitionBy(*parts)
+            out.parquet(path)
+
+    def files():
+        return sorted(_glob.glob(f"{state}/**/*.parquet", recursive=True))
+
+    def answer(path):
+        return sorted(map(tuple, read(path).collect()))
+
+    def compact_then_die():
+        with monkeypatch.context() as m:
+            m.setattr(ops, "_recover_compaction", lambda *a: None)
+            compact(spark, state)
+        return _json.loads(open(state + ".compact.manifest").read())
+
+    append(0)
+    append(1)
+    before = files()
+    rec = compact_then_die()
+    assert files() == before  # nothing visible happened yet
+    compact(spark, state)
+    assert files() == [_os.path.join(state, r) for r in rec["staged"]]
+    assert answer(state) == answer(ref)
+
+    append(2)
+    compact_then_die()
+    append(3)  # lands after the snapshot
+    compact(spark, state)
+    assert answer(state) == answer(ref)
+    assert len(files()) == 1
+    assert _glob.glob(state + ".compact*") == []
+
+
+def test_monitor_embedding_moments_null_batch_and_ragged_dims(
+    spark, tmp_path
+):
+    """The moments monitor runs through the shared marker-guarded sink:
+    a batch whose vectors are all null writes its marker and no state
+    file, and vectors of two lengths in one batch still raise."""
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    from cassandrastack_spark.streaming.ops import monitor_embedding_moments
+
+    schema = StructType([
+        StructField("vec_id", LongType()),
+        StructField("embedding", ArrayType(DoubleType())),
+    ])
+    d = tmp_path / "in"
+    d.mkdir()
+
+    def write(name, chunk):
+        pdf = pd.DataFrame(chunk, columns=["vec_id", "embedding"])
+        pq.write_table(
+            pa.Table.from_pandas(pdf, preserve_index=False, schema=pa.schema(
+                [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float64()))]
+            )),
+            str(d / name),
+        )
+
+    def run():
+        src = spark.readStream.schema(schema).parquet(str(d))
+        return monitor_embedding_moments(
+            src, str(tmp_path / "state"), checkpoint=str(tmp_path / "ckpt")
+        )
+
+    write("b1.parquet", [(1, None), (2, None)])
+    run().awaitTermination(120)
+    assert (tmp_path / "ckpt" / "cs_epochs" / "0").exists()
+    assert not (tmp_path / "state").exists()
+
+    write("b2.parquet", [(3, [0.1, 0.2, 0.3])])
+    write("b3.parquet", [(4, [0.1, 0.2, 0.3, 0.4])])
+    q = run()
+    with pytest.raises(Exception, match="ragged"):
+        q.awaitTermination(120)
+    assert not (tmp_path / "ckpt" / "cs_epochs" / "1").exists()
 
 
 def test_histogram_state_empty_frame_honors_group_schema(spark, tmp_path):
@@ -1466,7 +1662,7 @@ def test_additive_compaction_aborts_when_staged_parts_lost(spark, tmp_path):
 
     from cassandrastack_spark.functions.stats import histogram_fixed
     from cassandrastack_spark.streaming.ops import (
-        _stage_additive_compaction,
+        _stage_compaction,
         compact_histogram_state,
         histogram_state,
         monitor_histogram,
@@ -1524,7 +1720,7 @@ def test_additive_compaction_aborts_when_staged_parts_lost(spark, tmp_path):
     # r14) and the manifest records its own — resolve it from there
     import json as _json
 
-    assert _stage_additive_compaction(spark, state, sum_col="cnt")
+    assert _stage_compaction(spark, state, sum_col="cnt")
     rec0 = _json.loads(open(state + ".compact.manifest").read())
     shutil.rmtree(str(tmp_path / rec0["tmp"]))
     compact_histogram_state(spark, state, ("src",))
@@ -1552,7 +1748,7 @@ def test_additive_compaction_aborts_when_staged_parts_lost(spark, tmp_path):
         ).collect()
     )
     assert got() == want3
-    assert _stage_additive_compaction(spark, state, sum_col="cnt")
+    assert _stage_compaction(spark, state, sum_col="cnt")
     import os as _os
 
     manifest_path = state + ".compact.manifest"
@@ -1581,7 +1777,7 @@ def test_additive_compaction_derives_merge_key_from_schema(spark, tmp_path):
     supplied key set that doesn't cover the non-sum columns raises."""
     from cassandrastack_spark.functions.stats import histogram_fixed
     from cassandrastack_spark.streaming.ops import (
-        _stage_additive_compaction,
+        _stage_compaction,
         compact_histogram_state,
         histogram_state,
     )
@@ -1607,12 +1803,12 @@ def test_additive_compaction_derives_merge_key_from_schema(spark, tmp_path):
     # a key set that misses a schema column refuses loudly
     h.coalesce(1).write.mode("append").parquet(state)
     with pytest.raises(ValueError, match="do not cover"):
-        _stage_additive_compaction(
+        _stage_compaction(
             spark, state, sum_col="cnt", key_cols=("bin",)
         )
     # and a wrong sum column refuses too
     with pytest.raises(ValueError, match="not in state schema"):
-        _stage_additive_compaction(spark, state, sum_col="nope")
+        _stage_compaction(spark, state, sum_col="nope")
 
 
 def test_additive_compaction_stages_per_attempt_dirs(spark, tmp_path):
@@ -1630,8 +1826,8 @@ def test_additive_compaction_stages_per_attempt_dirs(spark, tmp_path):
 
     from cassandrastack_spark.functions.stats import histogram_fixed
     from cassandrastack_spark.streaming.ops import (
-        _recover_additive_compaction,
-        _stage_additive_compaction,
+        _recover_compaction,
+        _stage_compaction,
         histogram_state,
     )
 
@@ -1645,7 +1841,7 @@ def test_additive_compaction_stages_per_attempt_dirs(spark, tmp_path):
 
     # attempt A commits its manifest, which records ITS OWN unique
     # staging dir by name
-    assert _stage_additive_compaction(spark, state, sum_col="cnt")
+    assert _stage_compaction(spark, state, sum_col="cnt")
     rec_a = _json.loads(open(state + ".compact.manifest").read())
     assert rec_a["tmp"].startswith("astate.compact.tmp.")
     assert rec_a["tmp"] != "astate.compact.tmp"
@@ -1653,7 +1849,7 @@ def test_additive_compaction_stages_per_attempt_dirs(spark, tmp_path):
     # attempt B races in while A's manifest is live: it must abort
     # loudly, clean up its own staging, and leave A's untouched
     with pytest.raises(RuntimeError, match="concurrent compactor"):
-        _stage_additive_compaction(spark, state, sum_col="cnt")
+        _stage_compaction(spark, state, sum_col="cnt")
     side = sorted(
         _os.path.basename(p)
         for p in _glob.glob(state + ".compact.tmp*")
@@ -1662,7 +1858,7 @@ def test_additive_compaction_stages_per_attempt_dirs(spark, tmp_path):
 
     # recovery finishes A's commit exactly: merged answer, one file,
     # no side dirs left
-    _recover_additive_compaction(spark, state)
+    _recover_compaction(spark, state)
     got = sorted(
         (r.src, r.bin, r.cnt)
         for r in histogram_state(spark, state, ("src",)).collect()
@@ -1674,7 +1870,7 @@ def test_additive_compaction_stages_per_attempt_dirs(spark, tmp_path):
     # a stray per-attempt dir with no manifest is a pre-commit orphan:
     # the next recovery entry sweeps it
     _os.makedirs(state + ".compact.tmp.deadbeef")
-    _recover_additive_compaction(spark, state)
+    _recover_compaction(spark, state)
     assert _glob.glob(state + ".compact.tmp*") == []
     assert got == sorted(
         (r.src, r.bin, r.cnt)
@@ -1828,13 +2024,13 @@ def test_monitor_value_sample_matches_batch_sample(spark, tmp_path):
 
 
 def test_additive_compaction_recovers_legacy_manifest(spark, tmp_path):
-    """Review r14: pre-JSON manifests were bare newline-joined snapshot
-    path lists. A manifest left in place by a crash under the old code
-    must still recover after the format change — never wedge every
-    future compaction on a JSONDecodeError. Two legacy cases: with the
-    tmp dir present the staged parts ARE the merge (move them, finish
-    the commit); with the tmp dir gone the merge is unprovable, so the
-    commit aborts with every snapshot file kept."""
+    """A manifest that does not parse — here the pre-JSON format, a
+    bare newline-joined snapshot path list — must never wedge every
+    future compaction on a JSONDecodeError. It proves nothing, so the
+    commit aborts: every snapshot file is kept, the manifest and every
+    side directory (here the shared ``.compact.tmp`` that format staged
+    into) are dropped, and the compactor then compacts the state
+    normally. Two cases: with the side dir present and with it gone."""
     from cassandrastack_spark.functions.stats import histogram_fixed
     from cassandrastack_spark.streaming.ops import (
         compact_histogram_state,

@@ -6,10 +6,12 @@ with ``ast``). Blank lines, comment-only lines and docstring lines do
 not count; a multi-line token (a long string, a bracketed expression
 split over lines) counts every line it spans.
 
-Usage: python tools/code_lines.py PATH...
+Usage: python tools/code_lines.py PATH... | FILE::NAME...
 
 Prints one ``<count>  <path>`` line per file (directories are walked
 for ``*.py``) and, for more than one file, a ``total`` line.
+``FILE::NAME`` counts only the top-level function ``NAME`` of ``FILE``
+(its decorators included), by the same rules.
 """
 
 from __future__ import annotations
@@ -50,14 +52,27 @@ def _docstring_lines(tree: ast.AST) -> set[int]:
     return lines
 
 
-def code_lines(source: str) -> int:
-    """The number of code lines in ``source``."""
-    docs = _docstring_lines(ast.parse(source))
+def code_lines(source: str, name: str = "") -> int:
+    """The number of code lines in ``source``, or in its top-level
+    function ``name`` when one is given."""
+    tree = ast.parse(source)
     lines: set[int] = set()
     for tok in tokenize.generate_tokens(io.StringIO(source).readline):
         if tok.type not in _SKIP:
             lines.update(range(tok.start[0], tok.end[0] + 1))
-    return len(lines - docs)
+    lines -= _docstring_lines(tree)
+    if name:
+        funcs = [
+            n for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and n.name == name
+        ]
+        if not funcs:
+            raise SystemExit(f"no top-level function {name!r}")
+        node = funcs[-1]
+        first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+        lines = {n for n in lines if first <= n <= node.end_lineno}
+    return len(lines)
 
 
 def _files(paths: list[str]) -> list[str]:
@@ -74,13 +89,17 @@ def _files(paths: list[str]) -> list[str]:
 
 def main(argv: list[str]) -> int:
     if not argv:
-        print("usage: python tools/code_lines.py PATH...", file=sys.stderr)
+        print(
+            "usage: python tools/code_lines.py PATH... | FILE::NAME...",
+            file=sys.stderr,
+        )
         return 2
     total = 0
     files = _files(argv)
     for path in files:
-        with open(path, encoding="utf-8") as f:
-            n = code_lines(f.read())
+        file, _, name = path.partition("::")
+        with open(file, encoding="utf-8") as f:
+            n = code_lines(f.read(), name)
         total += n
         print(f"{n:>7}  {path}")
     if len(files) > 1:
